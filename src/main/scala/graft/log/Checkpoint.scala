@@ -664,15 +664,15 @@ object Checkpoint {
       .builder(new GroupReadSupport(), file.path)
       .withConf(conf)
       .build()
-    val actions = Vector.newBuilder[Action]
+    val lines = Vector.newBuilder[String]
     try {
       var g: Group = reader.read()
       while (g != null) {
-        actions += Action.parse(g.getString("json", 0))
+        lines += g.getString("json", 0)
         g = reader.read()
       }
     } finally reader.close()
-    DeltaLogEntry(actions.result())
+    DeltaLogEntry(LogReader.parseActions(lines.result()))
   }
 
   /** Load the log via the checkpoint fast path: the checkpoint becomes the
@@ -784,9 +784,10 @@ object Checkpoint {
   private[graft] def tailEntries(loc: Location, names: Seq[String],
       seed: SortedMap[Long, DeltaLogEntry], v: Long): SortedMap[Long, DeltaLogEntry] = {
     val rawVs = names.filter(DeltaLog.EntryFilenameRe.matches(_))
-      .map(_.split("\\.", 2)(0).toLong).filter(_ > v).toSet
+      .map(DeltaLog.versionOf).filter(_ > v).toSet
     val compacted = LogCompaction.ranges(names).filter(_._1 > v)
     var entries = seed
+    val raw = Vector.newBuilder[Long]
     val maxV = (rawVs ++ compacted.map(_._2)).foldLeft(v)(math.max)
     var cur = v + 1
     while (cur <= maxV) {
@@ -800,13 +801,13 @@ object Checkpoint {
           entries = entries.updated(e, entry)
           cur = e + 1
         case None =>
-          if (rawVs.contains(cur))
-            entries = entries.updated(cur, DeltaLogEntry.fromNdjson(
-              loc.child(DeltaLog.filenameForVersion(cur)).readString()))
+          if (rawVs.contains(cur)) raw += cur
           cur += 1
       }
     }
-    entries
+    val rawRead = raw.result()
+    entries ++ rawRead.zip(
+      LogReader.readEntries(loc, rawRead.map(DeltaLog.filenameForVersion)))
   }
 
   /** The newest RETAINED checkpoint at/below `v`, with its JSON tail —

@@ -675,22 +675,9 @@ object DeltaLog {
     * (reference delta_log/__init__.py:250-277).
     */
   def load(loc: Location, version: Option[Long] = None): DeltaLog = {
-    var entries = SortedMap.empty[Long, DeltaLogEntry]
-    if (loc.exists) {
-      val it = loc.listSorted().iterator
-      var done = false
-      while (it.hasNext && !done) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (EntryFilenameRe.matches(name)) {
-          val v = name.split("\\.", 2)(0).toLong
-          val entryLoc = loc.child(name)
-          entries = entries.updated(v, DeltaLogEntry.fromNdjson(entryLoc.readString()))
-          if (version.contains(v)) done = true
-        }
-      }
-    }
-    DeltaLog(loc, entries)
+    val names = commitNames(loc)
+    val upTo = version.map(v => names.indexWhere(versionOf(_) == v)).filter(_ >= 0)
+    read(loc, upTo.fold(names)(i => names.take(i + 1)))
   }
 
   /** JSON entries with version in `(after, until]` ONLY — the bounded
@@ -699,21 +686,22 @@ object DeltaLog {
     * commits): a source polling a 10⁴-commit table must not re-parse
     * every historical commit to admit a 2-version batch.
     */
-  def loadAfter(loc: Location, after: Long, until: Option[Long] = None): DeltaLog = {
-    var entries = SortedMap.empty[Long, DeltaLogEntry]
-    if (loc.exists) {
-      loc.listSorted().foreach { st =>
-        val name = st.getPath.getName
-        if (EntryFilenameRe.matches(name)) {
-          val v = name.split("\\.", 2)(0).toLong
-          if (v > after && until.forall(v <= _))
-            entries = entries.updated(v,
-              DeltaLogEntry.fromNdjson(loc.child(name).readString()))
-        }
-      }
-    }
-    DeltaLog(loc, entries)
-  }
+  def loadAfter(loc: Location, after: Long, until: Option[Long] = None): DeltaLog =
+    read(loc, commitNames(loc).filter { n =>
+      val v = versionOf(n)
+      v > after && until.forall(v <= _)
+    })
+
+  /** Commit file names in the log dir, in listing order. */
+  private def commitNames(loc: Location): Seq[String] =
+    if (!loc.exists) Seq.empty
+    else loc.listSorted().map(_.getPath.getName).filter(EntryFilenameRe.matches(_))
+
+  private[graft] def versionOf(name: String): Long = name.split("\\.", 2)(0).toLong
+
+  /** The named commits, read concurrently and folded in listing order. */
+  private def read(loc: Location, names: Seq[String]): DeltaLog =
+    DeltaLog(loc, SortedMap.from(names.map(versionOf).zip(LogReader.readEntries(loc, names))))
 
   /** DataType with field metadata removed at EVERY level — raw
     * `dataType.json` comparison would make a table whose NESTED fields

@@ -87,8 +87,10 @@ object GraftCatalog {
     val versions = dir.listSorted().flatMap(s => versionOf(s.getPath.getName))
     versions.lastOption match {
       case Some(v) =>
-        val m = parse(dir.child(f"$v%020d.json").readString())
-        (v, m)
+        // the listed head can be pruned before it is read when the head
+        // moves past the window in between; the new head is then listed
+        try (v, parse(dir.child(f"$v%020d.json").readString()))
+        catch { case _: java.io.FileNotFoundException => latest(spark) }
       case None =>
         val leg = legacyLoc(spark)
         val m =
@@ -162,8 +164,16 @@ object GraftCatalog {
     * JVM-locked: OCC is the ONLY mechanism, so an in-process concurrency
     * spec exercises exactly the cross-process path. An identity mutation
     * commits nothing.
+    *
+    * A create can also succeed on a RECYCLED number: a committer stalled
+    * between its read and its create while others moved the head more
+    * than [[PruneWindow]] versions on, and pruning deleted version v+1.
+    * The snapshot then lands below the head, where no reader looks, so
+    * the mutation is lost; that case is detected after the create and
+    * retried like a conflict. `beforeCommit` runs between the read and
+    * the create (specs use it to force that interleaving).
     */
-  private def mutate(spark: SparkSession)(
+  private[graft] def mutate(spark: SparkSession, beforeCommit: () => Unit = () => ())(
       f: Map[String, String] => Map[String, String]): Unit = {
     val dir = registryDir(spark)
     var attempt = 0
@@ -176,20 +186,37 @@ object GraftCatalog {
         val node = graft.log.Json.obj()
         next.toSeq.sortBy(_._1).foreach { case (k, p) => node.put(k, p) }
         val target = dir.child(f"${v + 1}%020d.json")
-        try {
-          target.createIfAbsent(node.toString)
+        beforeCommit()
+        val landed =
+          try { target.createIfAbsent(node.toString); !recycled(dir, v + 1) }
+          catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        if (landed) {
           cache = Some((dir.uri, v + 1, next))
           prune(dir, v + 1)
           done = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            attempt += 1
-            if (attempt > 50) throw new java.io.IOException(
-              s"catalog registry contention: 50 failed commits at ${dir.uri}")
+        } else {
+          attempt += 1
+          if (attempt > 50) throw new java.io.IOException(
+            s"catalog registry contention: 50 failed commits at ${dir.uri}")
         }
       }
     }
   }
+
+  /** Snapshots a commit keeps behind itself; older ones are pruned. */
+  private val PruneWindow = 4
+
+  /** True when `committed` was created on a number pruning had freed.
+    * Pruning deletes a version only once a commit more than
+    * [[PruneWindow]] versions above it exists, and the head is never
+    * pruned, so such a commit is still listed after the create. A genuine
+    * commit sees one only if that many others landed on top of it between
+    * its create and this listing; the retry then re-applies an idempotent
+    * name mutation to a state that already holds it.
+    */
+  private def recycled(dir: Location, committed: Long): Boolean =
+    dir.listSorted().flatMap(s => versionOf(s.getPath.getName))
+      .exists(_ > committed + PruneWindow)
 
   /** Keep a small trailing window of snapshots (readers only ever open
     * the latest; the window covers a reader that listed just before a
@@ -197,7 +224,7 @@ object GraftCatalog {
     */
   private def prune(dir: Location, committed: Long): Unit =
     try dir.listSorted().flatMap(s => versionOf(s.getPath.getName))
-      .filter(_ < committed - 4)
+      .filter(_ < committed - PruneWindow)
       .foreach(v => dir.child(f"$v%020d.json").delete(recursive = false))
     catch { case _: Throwable => () } // best-effort housekeeping
 

@@ -2,9 +2,12 @@ package graft
 
 import graft.log._
 import graft.storage.Location
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.collection.immutable.SortedMap
 
 /** Log-machinery unit tests against the golden delta-rs-written fixture
   * (reference tests/test_delta_log.py; fixture copied verbatim from the
@@ -185,4 +188,135 @@ class LogSpec extends AnyFunSuite {
     assert(reparsed == parsed)
     assert(reparsed.effectiveTimestamp == 1234567L)
   }
+
+  // ---- log replay reads commits concurrently: identity and failures ----
+
+  /** A table of 300 commits: appends, a remove every tenth commit, a
+    * schema change at 150, a checkpoint at 200 and a log compaction over
+    * [201, 260] — every kind of object a replay reads.
+    */
+  private def replayTable(): (String, Location) = {
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("graft-replay").toString
+    val loc = Location(root).child("_delta_log")
+    val schema = StructType(Seq(StructField("id", LongType)))
+    def add(v: Int, i: Int) = AddFile(path = s"f$v-$i.parquet",
+      partitionValues = Map.empty, size = 1L, modificationTime = 0L,
+      stats = None, dataChange = true)
+    var dlog = DeltaLog.load(loc)
+    dlog = dlog.commit(DeltaLogEntry.createTable(loc.uri, schema, Seq.empty, Seq(add(0, 0))))
+    for (v <- 1 until 300) {
+      dlog = dlog.commit(
+        if (v % 10 == 5)
+          DeltaLogEntry.deleteTable("id < 0", dlog.addActions.values.take(1),
+            Seq.empty, v - 1L, 0L, 1L)
+        else if (v == 150)
+          DeltaLogEntry.appendTable(Seq.empty, Seq(add(v, 0)),
+            Some(schema.add(StructField("note", StringType))))
+        else DeltaLogEntry.appendTable(Seq.empty, Seq(add(v, 0), add(v, 1)), None))
+      if (v == 200) Checkpoint.write(dlog, new Configuration())
+    }
+    LogCompaction.write(loc, 201L, 260L)
+    (root, loc)
+  }
+
+  /** The serial reference: every commit file, read and parsed one at a
+    * time in version order.
+    */
+  private def serialEntries(loc: Location): SortedMap[Long, DeltaLogEntry] = {
+    val dir = Paths.get(new java.net.URI(loc.uri))
+    val names = Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(_.matches("\\d+\\.json")).sorted
+    SortedMap.from(names.map(n => n.stripSuffix(".json").toLong ->
+      DeltaLogEntry.fromNdjson(new String(Files.readAllBytes(dir.resolve(n)), "UTF-8"))))
+  }
+
+  test("concurrent log replay equals a serial fold of the same commit files") {
+    val (root, loc) = replayTable()
+    val ref = serialEntries(loc)
+    assert(ref.keys.toSeq == (0L until 300L))
+    val full = DeltaLog.load(loc)
+    assert(full.entries == ref)
+    for (v <- Seq(0L, 1L, 149L, 150L, 200L, 233L, 299L)) {
+      val before = Location.readCount.get()
+      val upTo = DeltaLog.load(loc, Some(v))
+      assert(Location.readCount.get() - before == v + 1,
+        s"load up to $v must read exactly the commits 0..$v")
+      assert(upTo.entries == ref.rangeTo(v), s"load up to $v")
+      assert(DeltaTable.forPath(root, Some(v)).dlog.entries == ref.rangeTo(v),
+        s"time travel to $v")
+    }
+    // an absent target version reads (and keeps) every commit
+    assert(DeltaLog.load(loc, Some(1000L)).entries == ref)
+    for ((after, until) <- Seq((-1L, None), (150L, Some(151L)), (199L, Some(260L)), (280L, None)))
+      assert(DeltaLog.loadAfter(loc, after, until).entries ==
+        ref.filter { case (v, _) => v > after && until.forall(v <= _) },
+        s"loadAfter($after, $until)")
+    // the head open replays checkpoint 200 + compaction [201, 260] + raw
+    // 261..299; history re-replays the raw commits
+    val head = DeltaTable.forPath(root)
+    assert(head.dlog.entries.keys.toSeq == (200L +: 260L +: (261L until 300L)))
+    assert(head.version == 299L)
+    assert(head.dlog.addActions == full.addActions)
+    assert(head.schema == full.schema)
+    assert(head.history == full.history)
+  }
+
+  test("concurrent log replay: a bad commit fails with the serial exception") {
+    val (_, loc) = replayTable()
+    val dir = Paths.get(new java.net.URI(loc.uri))
+    def corrupt(v: Long, line: String): Unit =
+      Files.write(dir.resolve(DeltaLog.filenameForVersion(v)),
+        ("\n" + line).getBytes("UTF-8"), java.nio.file.StandardOpenOption.APPEND)
+    // a malformed line in commit 120 and an action-less object in 180:
+    // every reader surfaces the LOWEST failing version's own exception
+    corrupt(120L, "{\"add\": not json")
+    corrupt(180L, "{}")
+    val parseError = classOf[com.fasterxml.jackson.core.JsonParseException]
+    assert(intercept[Exception](DeltaLog.load(loc)).getClass == parseError)
+    assert(intercept[Exception](DeltaLog.load(loc, Some(150L))).getClass == parseError)
+    assert(DeltaLog.load(loc, Some(119L)).version == 119L)
+    assert(intercept[Exception](DeltaLog.loadAfter(loc, 150L)).getClass ==
+      classOf[java.util.NoSuchElementException])
+    assert(intercept[Exception](DeltaLog.loadAfter(loc, 100L, Some(200L))).getClass == parseError)
+  }
+
+  test("concurrent log replay: a commit deleted after listing fails as FileNotFound") {
+    val (_, fileLoc) = replayTable()
+    val dir = Paths.get(new java.net.URI(fileLoc.uri))
+    val conf = new Configuration()
+    conf.set("fs.vanish.impl", classOf[VanishingListFs].getName)
+    conf.setBoolean("fs.vanish.impl.disable.cache", true)
+    val loc = Location("vanish:" + dir.toString, conf)
+    def vanish(v: Long): Unit =
+      VanishingListFs.victim = Some(dir.resolve(DeltaLog.filenameForVersion(v)).toFile)
+    val notFound = classOf[java.io.FileNotFoundException]
+    try {
+      vanish(77L)
+      assert(intercept[Exception](DeltaLog.load(loc)).getClass == notFound)
+      vanish(85L)
+      assert(intercept[Exception](DeltaLog.loadAfter(loc, 70L, Some(90L))).getClass == notFound)
+      // a load that stops below the vanished commit never reads it
+      vanish(95L)
+      assert(DeltaLog.load(loc, Some(90L)).version == 90L)
+    } finally VanishingListFs.victim = None
+  }
+}
+
+/** Local disk under the `vanish:` scheme; deletes [[VanishingListFs.victim]]
+  * right after listing a directory — a commit removed between a replay's
+  * listing and its read.
+  */
+class VanishingListFs extends RawLocalFileSystem {
+  override def getScheme: String = "vanish"
+  override def getUri: java.net.URI = java.net.URI.create("vanish:///")
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val out = super.listStatus(p)
+    VanishingListFs.victim.foreach(_.delete())
+    out
+  }
+}
+
+object VanishingListFs {
+  @volatile var victim: Option[java.io.File] = None
 }

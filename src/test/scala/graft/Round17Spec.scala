@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * (A driver-side DV dead-set inline/local-broadcast fast path was also
   * built and pinned here, then MEASURED 2.6x slower on q76/q150 and no
-  * better at any probed cardinality — graft.tools.DvProbe — so it was
-  * reverted; the re-delete exactness test below survives because it holds
-  * on any dead-set resolution tier.)
+  * better at any probed cardinality, so it was reverted; the re-delete
+  * exactness test below survives because it holds on any dead-set
+  * resolution tier.)
   */
 class Round17Spec extends SparkSuite {
   import spark.implicits._

@@ -240,6 +240,29 @@ class TortureSpec extends SparkSuite {
     assert(snapshots <= 6, s"registry dir not pruned: $snapshots snapshots")
   }
 
+  test("a registrar stalled past the prune window retries instead of losing its name") {
+    // the interleaving behind the OCC registry test's lost names, forced:
+    // the stalled committer has read version v; six others then commit
+    // v+1..v+6, and the last one's prune deletes v+1, so the stalled
+    // create of v+1 succeeds on a recycled number below the head
+    import graft.sql.GraftCatalog
+    val others = (0 until 6).map(i => s"stallreg.other_$i")
+    var stalls = 0
+    GraftCatalog.mutate(spark, beforeCommit = () => {
+      stalls += 1
+      if (stalls == 1)
+        others.foreach(n => GraftCatalog.register(spark, n, s"/tmp/stallreg/$n"))
+    })(_ + ("stallreg.stalled" -> "/tmp/stallreg/stalled"))
+    try {
+      assert(stalls == 2, s"the stalled commit ran $stalls time(s); the recycled create must retry once")
+      GraftCatalog.invalidateCache()
+      val after = GraftCatalog.all(spark)
+      assert(after.get("stallreg.stalled").contains("/tmp/stallreg/stalled"),
+        "the stalled registration was lost")
+      assert(others.forall(after.contains), s"lost: ${others.filterNot(after.contains)}")
+    } finally (others :+ "stallreg.stalled").foreach(GraftCatalog.unregister(spark, _))
+  }
+
   test("legacy single-file catalog seeds the versioned registry") {
     import graft.sql.GraftCatalog
     // a pre-r14 warehouse has only _graft_catalog.json; reads must keep
