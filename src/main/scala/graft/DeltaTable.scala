@@ -266,9 +266,10 @@ final case class DeltaTable(
   }
 
   // ------------------------------------------------------------------
-  // DV-aware scans. Clean files keep the join-free whole-stage-codegen
-  // plan; files carrying a deletionVector ref anti-join their recorded
-  // dead rows (see sources/DeletionVectors.scala). Every internal read
+  // DV-aware scans. Clean files keep the plain scan; files carrying a
+  // deletionVector ref are meta-scanned under one row filter that drops
+  // their dead rows by row index inside the scan task, with no join and
+  // no broadcast (see sources/DeletionVectors.scala). Every internal read
   // of live data goes through these, so DELETE/UPDATE/MERGE/compact/CDF
   // all observe merge-on-read deletes.
   // ------------------------------------------------------------------
@@ -292,7 +293,7 @@ final case class DeltaTable(
     * (each row's absolute source-file URI) and [[DeltaScan.MetaRow]].
     * Phase-1 touched-file discovery keys on MetaPath instead of
     * `input_file_name()` because the latter evaluates empty on the probe
-    * side of shuffled joins — including the DV anti-join itself.
+    * side of shuffled joins.
     */
   private[graft] def scanAddsWithMeta(spark: SparkSession, adds: Seq[AddFile],
       extraDataCols: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame = {
@@ -304,10 +305,6 @@ final case class DeltaTable(
     else cleanDF.unionByName(dvScan(spark, dved, extraDataCols))
   }
 
-  /** DV'd files' surviving rows, with meta columns. Bulk anti-join on file
-    * basename when basenames are unique (always true for graft-written
-    * UUID files); exact per-file joins otherwise (imported-file collision).
-    */
   /** Candidate scan for dataChange=false REWRITES (OPTIMIZE/auto-compact/
     * REORG): with row tracking on, each surviving row carries its STABLE
     * id in the materialized row-id column — existing materialized values
@@ -338,20 +335,14 @@ final case class DeltaTable(
       .drop(DeltaScan.MetaPath, DeltaScan.MetaRow, "_rt_name", "_rt_base")
   }
 
+  /** DV'd files' surviving rows, with meta columns: the meta-scan under
+    * the in-scan dead-row filter.
+    */
   private def dvScan(spark: SparkSession, dved: Seq[AddFile],
-      extraDataCols: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame = {
-    val names = dved.map(a => pathName(a.path))
-    if (names.distinct.size == names.size)
-      DeletionVectors.dropDead(spark,
-        DeltaScan.snapshotDFWithMeta(spark, loc, dlog.schema, dlog.partitionColumns,
-          dved, conf, extraDataCols),
-        dved, loc, conf)
-    else
-      DeletionVectors.dropDeadPerFile(spark,
-        a => DeltaScan.snapshotDFWithMeta(spark, loc, dlog.schema,
-          dlog.partitionColumns, Seq(a), conf, extraDataCols),
-        dved, loc, conf)
-  }
+      extraDataCols: Seq[org.apache.spark.sql.types.StructField] = Nil): DataFrame =
+    DeltaScan.snapshotDFWithMeta(spark, loc, dlog.schema, dlog.partitionColumns,
+      dved, conf, extraDataCols)
+      .filter(DeletionVectors.liveRowFilter(dved, loc, conf))
 
   /** Live adds that MAY contain rows matching `pred`, per log-recorded
     * partition values and per-file min/max/nullCount stats — driver-side
@@ -3604,9 +3595,9 @@ final case class DeltaTable(
     * (`dataChange=false`) produce nothing, by design.
     *
     * Merge-on-read deletes are EXACT: a DV re-add of an already-live file
-    * emits `delete` rows — precisely the newly-dead rows, recovered as the
-    * set difference of the commit's total-per-file sidecar minus the
-    * pre-commit one (already-dead rows are never re-reported). Removes of
+    * emits `delete` rows — precisely the newly-dead rows: those the
+    * commit's total-per-file vector marks dead and the pre-commit one kept
+    * (already-dead rows are never re-reported). Removes of
     * DV'd files scan through the pre-commit vector, so their dead rows —
     * reported `delete` in earlier versions — don't reappear as
     * `remove_file`. File-path/ref state is replayed driver-side from
@@ -3614,7 +3605,6 @@ final case class DeltaTable(
     */
   def changesBetween(spark: SparkSession, fromVersion: Long,
       toVersion: Long, includeTimestamp: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.substring_index
     var liveRefs = Map.empty[String, Option[DeletionVectors.DvRef]]
     val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
@@ -3632,17 +3622,6 @@ final case class DeltaTable(
       if (!includeTimestamp) base
       else base.withColumn("_commit_timestamp",
         lit(new java.sql.Timestamp(commitTs(v))))
-    }
-
-    /** (file basename, row_index) key of every dead row of `refs`,
-      * restricted to the given basenames (file-count-scale semi-join, not
-      * an In literal).
-      */
-    def keyedDead(refs: Seq[DeletionVectors.DvRef], names: Seq[String]): DataFrame = {
-      import spark.implicits._
-      DeletionVectors.deadRows(spark, refs, loc, conf)
-        .select(substring_index(col("path"), "/", -1).as("_dv_name"), col("row_index"))
-        .join(broadcast(names.toDF("_dv_name")), Seq("_dv_name"), "left_semi")
     }
 
     // Rename/drop boundaries inside the requested range are REJECTED, not
@@ -3706,27 +3685,22 @@ final case class DeltaTable(
           DeletionVectors.refOf(a).isDefined && liveRefs.contains(a.path))
         if (plainAdds.nonEmpty) frames += tagged(scanAdds(spark, plainAdds), v, "insert")
         if (dvDelta.nonEmpty) {
-          val names = dvDelta.map(a => pathName(a.path))
-          val newRefs = dvDelta.flatMap(DeletionVectors.refOf(_))
-          val newKeys = keyedDead(newRefs, names)
-          val priorRefs = dvDelta.flatMap(a => liveRefs(a.path))
-          val newlyDead0 =
-            if (priorRefs.isEmpty) newKeys else newKeys.except(keyedDead(priorRefs, names))
-          // delta cardinality is known driver-side: gate the broadcast
-          // exactly like the scan-side anti-join does
-          val deltaDead =
-            newRefs.map(_.cardinality).sum - priorRefs.map(_.cardinality).sum
-          val newlyDead =
-            if (deltaDead <= DeletionVectors.BroadcastMaxDeadRows) broadcast(newlyDead0)
-            else newlyDead0
-          val raw = DeltaScan.snapshotDFWithMeta(spark, loc, dlog.schema,
-            dlog.partitionColumns, dvDelta, conf)
-          frames += tagged(
-            raw.join(newlyDead,
-                substring_index(col(DeltaScan.MetaPath), "/", -1) === col("_dv_name") &&
-                  col(DeltaScan.MetaRow) === col("row_index"),
-                "left_semi")
-              .drop(DeltaScan.MetaPath, DeltaScan.MetaRow), v, "delete")
+          // newly dead: rows the commit's vector marks dead and the file's
+          // prior vector (if any) kept — both verdicts are in-scan row
+          // filters over one meta-scan, so no join
+          val (reDeleted, firstDeleted) = dvDelta.partition(a => liveRefs(a.path).isDefined)
+          val priorAdds = reDeleted.map(a => DeletionVectors.withRef(a, liveRefs(a.path).get))
+          Seq(firstDeleted -> Nil, reDeleted -> priorAdds).foreach { case (files, prior) =>
+            if (files.nonEmpty) {
+              val deadNow = not(DeletionVectors.liveRowFilter(files, loc, conf))
+              frames += tagged(
+                DeltaScan.snapshotDFWithMeta(spark, loc, dlog.schema,
+                  dlog.partitionColumns, files, conf)
+                  .filter(if (prior.isEmpty) deadNow
+                    else deadNow && DeletionVectors.liveRowFilter(prior, loc, conf))
+                  .drop(DeltaScan.MetaPath, DeltaScan.MetaRow), v, "delete")
+            }
+          }
         }
         // removes scan through the file's PRE-commit vector. In a
         // merge-on-read DELETE entry a remove means the file's every

@@ -143,7 +143,7 @@ object QueryLib {
 
   /** lineitem with MoR deletes then REORG PURGE: every deletion vector is
     * rewritten away (dataChange=false), so the scan serves the same live
-    * rows from clean files with zero DV anti-join work.
+    * rows from clean files with no per-row dead-row filter.
     */
   def lineitemPurgedDir(spark: SparkSession, sfDir: String): String =
     cachedDir(sfDir, "lineitem_purged") { d =>

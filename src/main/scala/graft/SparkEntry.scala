@@ -208,7 +208,7 @@ object SparkEntry {
         .orderBy("unit_id")
     }),
     // REORG PURGE: the DV debt of q76's deletes rewritten away
-    // (dataChange=false) — same live rows, clean files, no anti-join
+    // (dataChange=false) — same live rows, clean files, no DV filter
     "q99_purge_scan" -> ((s, d) =>
       DeltaTable.forPath(QueryLib.lineitemPurgedDir(s, d)).toDF(s)
         .orderBy("l_orderkey", "l_linenumber")),

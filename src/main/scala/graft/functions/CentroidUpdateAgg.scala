@@ -26,13 +26,17 @@ import org.apache.spark.sql.types._
   * it computes sum/count over exactly the same contributions (elements
   * accumulate in the same per-partition row order; partials merge across
   * partitions just as avg's partial sums do), an empty or absent vector
-  * contributes nothing, a cell no vector elements landed in yields a
-  * NULL entry (the caller keeps its seed, matching the "no rows for this
-  * cell" case), and a (cell, pos) with no contributions yields 0.0
-  * (matching the caller's zero-filled dim array).
+  * contributes nothing, a NULL element contributes nothing (avg skips
+  * nulls), a cell no non-null element landed in yields a NULL entry (the
+  * caller keeps its seed, matching the "no rows for this cell" case), and
+  * a (cell, pos) with no contributions yields 0.0 (matching the caller's
+  * zero-filled dim array).
   *
   * Output: array of `centroids.length` entries; entry c is the new mean
-  * vector of cell c (length dim) or NULL if the cell is empty.
+  * vector of cell c or NULL if the cell is empty. Every entry has length
+  * dim: the longest of the seeds and the input vectors (posexplode keeps
+  * every position, so a vector longer than the seeds widens the means
+  * instead of being truncated).
   */
 final case class CentroidUpdateAgg(child: Expression,
     centroids: Array[Array[Double]],
@@ -42,7 +46,7 @@ final case class CentroidUpdateAgg(child: Expression,
   require(centroids.nonEmpty, "centroids must be non-empty")
 
   private val cells = centroids.length
-  private val dim = centroids.map(_.length).max
+  private val seedDim = centroids.map(_.length).max
 
   // row-invariant centroid norms, exactly as [[NearestCentroids]] computes
   // them (zero-norm centroids get 1.0 so the division is a no-op)
@@ -67,14 +71,21 @@ final case class CentroidUpdateAgg(child: Expression,
           s"centroid_update_agg expects array<double>, got $other")
     }
 
-  // layout: sums[cell * dim + pos] for the first cells*dim slots, then
-  // counts[cell * dim + pos] in the second half
+  // layout, position-major so a longer vector grows the buffer at its
+  // end: slot (pos * cells + cell) holds the sum at 2 * slot and the
+  // count at 2 * slot + 1; dim is implied by the buffer length
   override def createAggregationBuffer(): Array[Double] =
-    new Array[Double](2 * cells * dim)
+    new Array[Double](2 * cells * seedDim)
 
-  override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
+  private def dimOf(buf: Array[Double]): Int = buf.length / (2 * cells)
+
+  private def widened(buf: Array[Double], dim: Int): Array[Double] =
+    if (dimOf(buf) >= dim) buf else java.util.Arrays.copyOf(buf, 2 * cells * dim)
+
+  override def update(buf0: Array[Double], input: InternalRow): Array[Double] = {
     val v = child.eval(input)
-    if (v != null) {
+    if (v == null) buf0
+    else {
       val arr = v.asInstanceOf[ArrayData]
       // nearest cell: cosine numerator over centroid norm, argmax with
       // ties to the LOWER index — [[NearestCentroids.sims]] verbatim
@@ -91,37 +102,40 @@ final case class CentroidUpdateAgg(child: Expression,
         if (best < 0 || s > bestSim) { best = c; bestSim = s }
         c += 1
       }
-      val off = best * dim
-      val cntOff = cells * dim + off
-      val m = math.min(arr.numElements(), dim)
+      val m = arr.numElements()
+      val buf = widened(buf0, m)
       var i = 0
       while (i < m) {
-        buf(off + i) += arr.getDouble(i)
-        buf(cntOff + i) += 1.0
+        if (!arr.isNullAt(i)) {
+          val slot = 2 * (i * cells + best)
+          buf(slot) += arr.getDouble(i)
+          buf(slot + 1) += 1.0
+        }
         i += 1
       }
+      buf
     }
-    buf
   }
 
   override def merge(b1: Array[Double], b2: Array[Double]): Array[Double] = {
+    val out = widened(b1, dimOf(b2))
     var i = 0
-    while (i < b1.length) { b1(i) += b2(i); i += 1 }
-    b1
+    while (i < b2.length) { out(i) += b2(i); i += 1 }
+    out
   }
 
   override def eval(buf: Array[Double]): Any = {
+    val dim = dimOf(buf)
     val out = new Array[Any](cells)
     var c = 0
     while (c < cells) {
-      val off = c * dim
-      val cntOff = cells * dim + off
       var any = false
       val mean = new Array[Double](dim)
       var i = 0
       while (i < dim) {
-        val n = buf(cntOff + i)
-        if (n > 0) { any = true; mean(i) = buf(off + i) / n }
+        val slot = 2 * (i * cells + c)
+        val n = buf(slot + 1)
+        if (n > 0) { any = true; mean(i) = buf(slot) / n }
         i += 1
       }
       out(c) = if (any) new GenericArrayData(mean) else null

@@ -1,12 +1,26 @@
 package graft.sources
 
+import java.lang.ref.SoftReference
+import java.util.concurrent.ConcurrentHashMap
+
 import com.fasterxml.jackson.databind.JsonNode
 import graft.log.{AddFile, Json}
 import graft.storage.Location
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** Merge-on-read deletion vectors: a DELETE that marks rows dead in a
   * sidecar instead of rewriting data files.
@@ -26,19 +40,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    `extra("deletionVector") = {"sidecar": <dir>, "cardinality": N}`.
   *    The JSON `extra` field round-trips through log replay, checkpoints
   *    (raw-line format) and foreign-file import untouched.
-  *  - Scans anti-join only the DV'd files' rows against the dead set
-  *    (`DeltaTable.scanAdds`/`dvScan` — the path every internal read,
-  *    DELETE/UPDATE/MERGE/compact/CDF included, goes through); clean files
-  *    keep their join-free whole-stage-codegen plan. Dead-set size is known
-  *    driver-side from the recorded cardinalities, so the broadcast
-  *    decision needs no job. `compact()` purges vectors (its rewrite reads
+  *  - Tables with `delta.enableDeletionVectors` get delta-spec roaring
+  *    vectors instead (inline or `.bin`, see [[DeltaRef]]).
+  *  - Scans drop dead rows INSIDE the scan task (`DeltaTable.scanAdds`/
+  *    `dvScan` — the path every internal read, DELETE/UPDATE/MERGE/
+  *    compact/CDF included, goes through). The DV'd files' meta-scan
+  *    carries one deterministic [[DvKeep]] predicate over Spark's
+  *    `_metadata.file_path` / `_metadata.row_index` columns, built on the
+  *    driver from each DV'd file's descriptor ([[liveRowFilter]]). A task
+  *    loads a file's dead rows into a bitmap the first time it meets the
+  *    file and drops rows by row index before they leave the scan: no
+  *    decode job, no broadcast, no join. Clean files keep their
+  *    filter-free plan. `compact()` purges vectors (its rewrite reads
   *    through them); `vacuum()` keeps referenced sidecar dirs.
   *
-  * Row identity is `(file basename, parquet row index)` via Spark's
-  * `_metadata.file_path` / `_metadata.row_index` scan columns. Basenames
-  * are UUID-unique for graft-written files; scans verify uniqueness
-  * driver-side and fall back to exact per-file joins on the (rare)
-  * imported-file collision.
+  * Row identity is `(file, parquet row index)`. Sidecar rows name their
+  * file by the path it had when the sidecar was written, and a clone
+  * rewrites add paths absolute, so a scan matches sidecar rows by
+  * basename. That match is exact: one sidecar never holds two files with
+  * the same basename (`deleteMergeOnRead` requires it). A spec vector
+  * belongs to exactly one file by construction.
   */
 object DeletionVectors {
 
@@ -52,11 +73,6 @@ object DeletionVectors {
   val sidecarSchema: StructType = StructType(Seq(
     StructField("path", StringType, nullable = false),
     StructField("row_index", LongType, nullable = false)))
-
-  /** Above this many total dead rows the scan-side anti-join shuffles
-    * instead of broadcasting (~tens of MB serialized at the threshold).
-    */
-  val BroadcastMaxDeadRows = 2L * 1000 * 1000
 
   /** A file's deletion-vector reference — either graft's parquet sidecar
     * or a delta-spec descriptor (PROTOCOL.md "Deletion Vectors": roaring
@@ -121,7 +137,7 @@ object DeletionVectors {
 
   /** Resolve a delta descriptor's DV file path (storageType u/p). */
   def deltaDvPath(storageType: String, pathOrInlineDv: String,
-      tableRoot: Location, conf: Configuration): org.apache.hadoop.fs.Path =
+      tableRoot: Location, conf: Configuration): Path =
     storageType match {
       case "p" => Location.resolve(pathOrInlineDv, tableRoot, conf).path
       case "u" =>
@@ -142,7 +158,9 @@ object DeletionVectors {
     * refs decode in EXECUTORS (one task partition per slice of refs —
     * a 10⁵-file DV'd table must not funnel every bitmap through the
     * driver); their `path` is the owning add's recorded path, matching
-    * the sidecar rows' recording-time-path convention.
+    * the sidecar rows' recording-time-path convention. Scans do not go
+    * through here (see [[liveRowFilter]]); this serves the callers that
+    * need the dead rows themselves.
     */
   def deadRows(spark: SparkSession, refs: Iterable[DvRef], tableRoot: Location,
       conf: Configuration): DataFrame = {
@@ -155,46 +173,60 @@ object DeletionVectors {
     if (deltas.isEmpty) sidecarDf
     else {
       import spark.implicits._
-      import scala.jdk.CollectionConverters._
       val rootUri = tableRoot.uri
-      // Hadoop conf as a plain serializable map (covers custom schemes)
-      val confMap = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-      val descs = deltas.collect { case d: DeltaRef =>
-        (d.ownerPath, d.storageType, d.pathOrInlineDv,
-          d.offset.getOrElse(1L), d.sizeInBytes)
-      }
-      val deltaDf = spark.createDataset(descs)
-        .flatMap { case (owner, st, poi, off, size) =>
-          val blob: Array[Byte] =
-            if (st == "i") RoaringBitmaps.Z85.decode(poi)
-            else {
-              val hconf = new Configuration(false)
-              confMap.foreach { case (k, v) => hconf.set(k, v) }
-              val root = Location(rootUri, hconf)
-              val p = deltaDvPath(st, poi, root, hconf)
-              val fs = p.getFileSystem(hconf)
-              val in = fs.open(p)
-              try {
-                val version = in.readByte()
-                require(version == 1, s"unsupported DV file version $version at $p")
-                in.seek(off)
-                val sz = in.readInt() // big-endian (DataInput)
-                require(size <= 0 || sz == size,
-                  s"DV size mismatch at $p: descriptor $size, stored $sz")
-                val buf = new Array[Byte](sz)
-                in.readFully(buf)
-                val crc = in.readInt()
-                val c = new java.util.zip.CRC32()
-                c.update(buf)
-                require(crc == c.getValue.toInt,
-                  s"DV checksum mismatch at $p offset $off")
-                buf
-              } finally in.close()
-            }
-          RoaringBitmaps.decodeBlob(blob).toSeq.map(idx => (owner, idx))
+      val confMap = confToMap(conf)
+      val deltaDf = spark.createDataset(deltas.collect { case d: DeltaRef => d })
+        .mapPartitions { refs =>
+          lazy val hconf = confFromMap(confMap)
+          refs.flatMap(d =>
+            specDeadRows(d, rootUri, hconf).iterator.map(idx => (d.ownerPath, idx)))
         }.toDF("path", "row_index")
       sidecarDf.unionByName(deltaDf)
     }
+  }
+
+  /** Row indexes a delta-spec descriptor marks dead, ascending. Inline
+    * payloads decode from the descriptor itself; on-disk ones (storageType
+    * u/p) read the blob at `offset` of the `.bin`, checking the format
+    * version byte, the recorded size and the CRC.
+    */
+  def specDeadRows(d: DeltaRef, tableRootUri: String, conf: Configuration): Array[Long] = {
+    val blob: Array[Byte] =
+      if (d.storageType == "i") RoaringBitmaps.Z85.decode(d.pathOrInlineDv)
+      else {
+        val p = deltaDvPath(d.storageType, d.pathOrInlineDv,
+          Location(tableRootUri, conf), conf)
+        val off = d.offset.getOrElse(1L)
+        val in = p.getFileSystem(conf).open(p)
+        try {
+          val version = in.readByte()
+          require(version == 1, s"unsupported DV file version $version at $p")
+          in.seek(off)
+          val sz = in.readInt() // big-endian (DataInput)
+          require(d.sizeInBytes <= 0 || sz == d.sizeInBytes,
+            s"DV size mismatch at $p: descriptor ${d.sizeInBytes}, stored $sz")
+          val buf = new Array[Byte](sz)
+          in.readFully(buf)
+          val crc = in.readInt()
+          val c = new java.util.zip.CRC32()
+          c.update(buf)
+          require(crc == c.getValue.toInt, s"DV checksum mismatch at $p offset $off")
+          buf
+        } finally in.close()
+      }
+    RoaringBitmaps.decodeBlob(blob)
+  }
+
+  /** Hadoop conf as a plain serializable map (covers custom schemes). */
+  private def confToMap(conf: Configuration): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+  }
+
+  private[sources] def confFromMap(m: Map[String, String]): Configuration = {
+    val hconf = new Configuration(false)
+    m.foreach { case (k, v) => hconf.set(k, v) }
+    hconf
   }
 
   /** Sidecar/DV-file URIs referenced by any of `adds` (vacuum's live set);
@@ -225,59 +257,168 @@ object DeletionVectors {
       case _ => a
     }
 
-  /** Drop dead rows from a scan of DV'd files. `df` must carry
-    * `DeltaScan.MetaPath` / `DeltaScan.MetaRow`; the result keeps them.
-    *
-    * Fast path: one anti-join on (file basename, row index) — valid when
-    * the DV'd basenames are unique, which the caller has verified. The
-    * dead set is scoped to the scanned files' basenames BEFORE the join:
-    * a shared sidecar also holds rows of files outside this scan (e.g. a
-    * pruned scan of 2 of a commit's 1000 touched files), and without the
-    * scope those rows would bloat the broadcast — and, were basenames
-    * ever to collide across a sidecar, cross-kill live rows. (Collisions
-    * inside one sidecar cannot happen: `deleteMergeOnRead` refuses to
-    * write one, see its basename-uniqueness require.)
+  /** The predicate that keeps a DV'd file's live rows, for a meta-scan
+    * (carrying [[DeltaScan.MetaPath]] / [[DeltaScan.MetaRow]]) of exactly
+    * the files in `dved`. Each file is keyed by its canonical URI, the
+    * form `_metadata.file_path` takes after [[DvRowFilter]] decodes it,
+    * so two DV'd files that share a basename keep their own refs.
     */
-  def dropDead(spark: SparkSession, df: DataFrame, dved: Seq[AddFile],
-      tableRoot: Location, conf: Configuration): DataFrame = {
-    val refs = dved.flatMap(refOf(_))
-    if (refs.isEmpty) return df
-    import spark.implicits._
-    val totalDead = refs.map(_.cardinality).sum
-    val names = broadcast(
-      dved.map(a => new org.apache.hadoop.fs.Path(a.path).getName).toDF("_dv_name"))
-    val dead0 = deadRows(spark, refs, tableRoot, conf)
-      .select(substring_index(col("path"), "/", -1).as("_dv_name"),
-        col("row_index").as("_dv_idx"))
-      .join(names, Seq("_dv_name"), "left_semi")
-    val dead = if (totalDead <= BroadcastMaxDeadRows) broadcast(dead0) else dead0
-    df.join(dead,
-        substring_index(col(DeltaScan.MetaPath), "/", -1) === col("_dv_name") &&
-          col(DeltaScan.MetaRow) === col("_dv_idx"),
-        "left_anti")
+  def liveRowFilter(dved: Seq[AddFile], tableRoot: Location, conf: Configuration): Column = {
+    val refs = dved.flatMap(a => refOf(a).map(
+      Location.canonical(Location.resolve(a.path, tableRoot, conf).uri) -> _)).toMap
+    // inline vectors decode from the descriptor alone: ship no conf for them
+    val readsFiles = refs.values.exists {
+      case DeltaRef("i", _, _, _, _, _) => false
+      case _ => true
+    }
+    val filter = DvRowFilter(refs, tableRoot.uri,
+      if (readsFiles) confToMap(conf) else Map.empty)
+    ColumnShim.column(DvKeep(ColumnShim.expression(col(DeltaScan.MetaPath)),
+      ColumnShim.expression(col(DeltaScan.MetaRow)), filter))
+  }
+}
+
+/** What a [[DvKeep]] predicate carries to the executors: each scanned DV'd
+  * file's canonical URI → its descriptor, the table root the descriptors
+  * resolve against, and the Hadoop conf as a plain map (empty when every
+  * vector is inline).
+  */
+final case class DvRowFilter(refs: Map[String, DeletionVectors.DvRef],
+    tableRootUri: String, conf: Map[String, String]) {
+
+  @transient private lazy val hconf: Configuration = DeletionVectors.confFromMap(conf)
+
+  /** Dead rows of the file at `fileUri` (a `_metadata.file_path` value:
+    * URL-encoded, as Spark renders it), or null when none are dead.
+    */
+  private[sources] def deadOf(fileUri: String): Roaring64Bitmap = {
+    val path = new Path(new java.net.URI(fileUri))
+    val ref = refs.getOrElse(Location.canonical(path.toString),
+      throw new IllegalStateException(s"no deletion-vector descriptor for scanned file $fileUri"))
+    val dead = ref match {
+      case DeletionVectors.SidecarRef(sidecar, _) =>
+        val dir = Location.resolve(sidecar, Location(tableRootUri, hconf), hconf).uri
+        SidecarCache.rowsOf(dir, hconf).getOrElse(path.getName, null)
+      case d: DeletionVectors.DeltaRef =>
+        val bm = new Roaring64Bitmap
+        DeletionVectors.specDeadRows(d, tableRootUri, hconf).foreach(bm.addLong)
+        bm
+    }
+    if (dead == null || dead.isEmpty) null else dead
   }
 
-  /** Exact per-file variant for basename collisions AMONG the scanned
-    * DV'd files (each colliding file carries its own ref, committed by
-    * separate deletes): each file's rows anti-join only its own sidecar's
-    * entries for its basename. Basename — not exact log path — because a
-    * clone rewrites add paths absolute while sidecar rows keep the
-    * recording-time path; within one sidecar the basename is unique (the
-    * write-side invariant above), so the match is still exact.
-    */
-  def dropDeadPerFile(spark: SparkSession, dfFor: AddFile => DataFrame,
-      dved: Seq[AddFile], tableRoot: Location, conf: Configuration): DataFrame = {
-    require(dved.nonEmpty, "dropDeadPerFile needs at least one add")
-    dved.map { a =>
-      refOf(a) match {
-        case None => dfFor(a) // ref-less add: nothing dead, scan as-is
-        case Some(ref) =>
-          val name = new org.apache.hadoop.fs.Path(a.path).getName
-          val dead = deadRows(spark, Seq(ref), tableRoot, conf)
-            .filter(substring_index(col("path"), "/", -1) === lit(name))
-            .select(col("row_index").as("_dv_idx"))
-          dfFor(a).join(broadcast(dead), col(DeltaScan.MetaRow) === col("_dv_idx"), "left_anti")
+  // plans print this; the map itself can hold 10^5 entries
+  override def toString: String = s"${refs.size} DV'd files"
+}
+
+/** One scan task's state: the dead rows of the file it is reading. A
+  * task reads its files one after another, so the bitmap is looked up
+  * only when the file changes.
+  */
+final class DvCursor(filter: DvRowFilter) {
+  private var file: UTF8String = null
+  private var dead: Roaring64Bitmap = null
+
+  def keep(path: UTF8String, row: Long): Boolean = {
+    if (file == null || !file.equals(path)) {
+      dead = filter.deadOf(path.toString)
+      file = path.clone()
+    }
+    dead == null || !dead.contains(row)
+  }
+}
+
+/** `dv_keep(file_path, row_index)`: true for rows the file's deletion
+  * vector does not mark dead. Deterministic — a row's verdict depends on
+  * its (file, row index) alone — so it pushes below projections onto the
+  * scan like any row filter. State lives in a [[DvCursor]] per task (per
+  * generated-code instance under codegen).
+  */
+final case class DvKeep(path: Expression, row: Expression, filter: DvRowFilter)
+    extends BinaryExpression with Predicate {
+
+  override def left: Expression = path
+  override def right: Expression = row
+  override def nullable: Boolean = false
+  override def prettyName: String = "dv_keep"
+
+  @transient private lazy val cursor = new DvCursor(filter)
+
+  override def eval(input: InternalRow): Any =
+    cursor.keep(path.eval(input).asInstanceOf[UTF8String],
+      row.eval(input).asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dvFilter", filter)
+    val cur = ctx.addMutableState(classOf[DvCursor].getName, "dvCursor",
+      v => s"$v = new ${classOf[DvCursor].getName}($ref);")
+    val p = path.genCode(ctx)
+    val r = row.genCode(ctx)
+    ev.copy(code = code"""
+      |${p.code}
+      |${r.code}
+      |boolean ${ev.value} = $cur.keep(${p.value}, ${r.value});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): DvKeep = copy(path = newLeft, row = newRight)
+}
+
+/** Decoded sidecars, per JVM: sidecar URI → file basename → dead rows.
+  * One sidecar holds the rows of every file its commit touched, so each
+  * is decoded once per executor, not once per task (which would cost
+  * O(files × sidecar)). Sidecar directories are UUID-named and never
+  * rewritten, so an entry cannot go stale; entries sit behind soft
+  * references, so memory pressure may drop one and it is decoded again.
+  */
+private[sources] object SidecarCache {
+
+  private type Rows = Map[String, Roaring64Bitmap]
+
+  private final class Slot {
+    private var rows: SoftReference[Rows] = null
+    def get(load: => Rows): Rows = synchronized {
+      val hit = if (rows == null) null else rows.get
+      if (hit != null) hit
+      else {
+        val v = load
+        rows = new SoftReference(v)
+        v
       }
-    }.reduce(_.union(_))
+    }
+  }
+
+  private val slots = new ConcurrentHashMap[String, Slot]()
+
+  def rowsOf(dirUri: String, conf: Configuration): Rows =
+    slots.computeIfAbsent(dirUri, _ => new Slot).get(decode(new Path(dirUri), conf))
+
+  private def decode(dir: Path, conf: Configuration): Rows = {
+    val out = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
+    val parts = dir.getFileSystem(conf).listStatus(dir).map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    parts.foreach { part =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), part).withConf(conf).build()
+      try {
+        // consecutive rows mostly share a file: resolve the basename only
+        // when the path changes
+        var lastPath: Binary = null
+        var bm: Roaring64Bitmap = null
+        var g = reader.read()
+        while (g != null) {
+          val p = g.getBinary("path", 0)
+          if (lastPath == null || p != lastPath) {
+            val s = p.toStringUsingUTF8
+            bm = out.getOrElseUpdate(s.substring(s.lastIndexOf('/') + 1), new Roaring64Bitmap)
+            lastPath = p.copy()
+          }
+          bm.addLong(g.getLong("row_index", 0))
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+    out.valuesIterator.foreach(_.runOptimize())
+    out.toMap
   }
 }

@@ -28,7 +28,8 @@ object DeltaScan {
     * each row's source file) in meta-scans. Unlike `input_file_name()` —
     * which evaluates empty on the probe side of shuffled joins — this is a
     * real projected column that survives any downstream join/shuffle, so
-    * deletion-vector anti-joins and phase-1 touched-file discovery key on it.
+    * the deletion-vector row filter and phase-1 touched-file discovery key
+    * on it.
     */
   val MetaPath = "_graft_meta_path"
 

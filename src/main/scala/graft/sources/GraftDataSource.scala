@@ -27,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
   * stats skipping, zero listing) under the SESSION's Hadoop
   * configuration. Snapshots that need scan-side rewrites a bare relation
   * cannot express — active column mapping (physical→logical aliasing) or
-  * deletion vectors (anti-join) — are rejected with a pointer to
+  * deletion vectors (the in-scan dead-row filter) — are rejected with a pointer to
   * `DeltaTable.forPath(...).toDF`, never served wrong.
   *
   * The streaming sink supports Append (each micro-batch committed

@@ -140,7 +140,7 @@ final class MetadataOnlyAggregates(session: SparkSession)
   }
 
   /** Peel attribute-only Projects and deterministic Filters down to a
-    * graft log-backed relation. Any other operator (joins, DV anti-join,
+    * graft log-backed relation. Any other operator (joins,
     * column-mapping renames) disqualifies the rewrite.
     */
   private def unwrap(plan: LogicalPlan, filter: Option[Expression])

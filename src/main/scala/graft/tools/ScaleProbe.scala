@@ -106,13 +106,15 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val maxCopies = args.headOption.map(_.toInt).getOrElse(16)
-    // optional 2nd arg: comma list of sections (docs,text,ann,temporal,cc,dv,zipf)
+    // optional 2nd arg: comma list of sections (docs,text,ann,temporal,cc,dv,zipf);
+    // SPARK_GRAFT_CPUS sets the local core count (default 32)
     val sections = args.lift(1).map(_.split(",").toSet)
       .getOrElse(Set("docs", "text", "ann", "annindex", "inccluster",
         "semdedup", "temporal", "cc", "dv", "zipf", "hotkey", "specdv",
         "store", "kmv"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -648,6 +650,29 @@ object ScaleProbe {
       println(f"DVSCALE rows=$rows%9d cow_delete=$cow%6.2fs mor_delete=$mor%6.2fs " +
         f"dv_scan=$scan%6.2fs live=$live%9d")
       dvK *= 4
+    }
+    // Dead-row sweep: one MoR commit of k scattered dead rows over sf0.1
+    // lineitem, then the median of 3 `toDF(spark).count()` runs through
+    // the vectors — the read cost of deletion vectors as the dead set
+    // grows. `first` is the first of the 3 runs (the only one that finds
+    // no sidecar already decoded in this JVM).
+    if (sections("dv")) {
+      val n = li.count()
+      for (k <- Seq(1000, 4000, 16000, 64000, 128000, 256000)) {
+        val d = java.nio.file.Files.createTempDirectory("graft-probe-dvsweep-").toString
+        val t = graft.DeltaTable.forPath(d).write(li).deleteMergeOnRead(spark,
+          Some(pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(n)) < k))
+        val dead = t.dlog.addActions.values
+          .flatMap(graft.sources.DeletionVectors.refOf(_)).map(_.cardinality).sum
+        var live = 0L
+        val runs = (1 to 3).map { _ =>
+          val t0 = System.nanoTime()
+          live = t.toDF(spark).count()
+          (System.nanoTime() - t0) / 1e9
+        }
+        println(f"DVSWEEP dead=$dead%7d scan_p50=${runs.sorted.apply(1)}%6.3fs " +
+          f"first=${runs.head}%6.3fs live=$live%8d")
+      }
     }
 
     // Zipfian hot-key stress — the adversarial shape for the dedup family:

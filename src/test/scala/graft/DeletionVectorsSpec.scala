@@ -321,15 +321,118 @@ class DeletionVectorsSpec extends SparkSuite {
       lineitem.filter(not(col("l_returnflag") === "R" && col("l_quantity") < 10)))
   }
 
-  test("DV scan plan: clean tables stay join-free, DV'd files broadcast the dead set") {
+  test("DV scan plan: clean and DV'd scans are both join-free") {
     val d = tempDir("dv-plan")
     var t = DeltaTable.forPath(d).write(nation)
     val cleanPlan = t.toDF(spark).queryExecution.executedPlan.toString
     assert(!cleanPlan.contains("Join"), "clean scan must not contain a join")
     t = t.deleteMergeOnRead(spark, Some(col("n_nationkey") === 0))
     val dvPlan = t.toDF(spark).queryExecution.executedPlan.toString
-    assert(dvPlan.contains("BroadcastHashJoin") && dvPlan.contains("LeftAnti"),
-      s"DV scan should broadcast-anti-join the dead set:\n$dvPlan")
+    assert(!dvPlan.contains("Join") && !dvPlan.contains("BroadcastExchange") &&
+      !dvPlan.contains("Exchange hashpartitioning"),
+      s"DV scan should drop dead rows inside the scan:\n$dvPlan")
+  }
+
+  /** Reference for the in-scan filter: each live file scanned on its own
+    * and anti-joined on row index with its own ref's dead rows, read
+    * through `deadRows` and matched by basename within that ref.
+    */
+  private def referenceScan(t: DeltaTable): org.apache.spark.sql.DataFrame =
+    t.dlog.addActions.values.toSeq.map { a =>
+      val scan = DeltaScan.snapshotDFWithMeta(spark, t.loc, t.dlog.schema,
+        t.dlog.partitionColumns, Seq(a), t.conf)
+      DeletionVectors.refOf(a) match {
+        case None => scan
+        case Some(ref) =>
+          val name = new org.apache.hadoop.fs.Path(a.path).getName
+          val dead = DeletionVectors.deadRows(spark, Seq(ref), t.loc, t.conf)
+            .filter(substring_index(col("path"), "/", -1) === name)
+            .select(col("row_index").as("_dead"))
+          scan.join(dead, col(DeltaScan.MetaRow) === col("_dead"), "left_anti")
+      }
+    }.reduce(_.unionByName(_))
+
+  /** `toDF` and the meta-scan (row identity included) equal the reference. */
+  private def assertMatchesReference(t: DeltaTable): Unit = {
+    val ref = referenceScan(t)
+    assertSameRows(t.scanAddsWithMeta(spark, t.dlog.addActions.values.toSeq), ref)
+    assertSameRows(t.toDF(spark), ref.drop(DeltaScan.MetaPath, DeltaScan.MetaRow))
+  }
+
+  test("in-scan DV filter equals a per-file anti-join over deadRows") {
+    def refKinds(t: DeltaTable): Set[String] =
+      t.dlog.addActions.values.flatMap(DeletionVectors.refOf(_)).map {
+        case _: DeletionVectors.SidecarRef => "sidecar"
+        case r: DeletionVectors.DeltaRef => r.storageType
+      }.toSet
+
+    // sidecar vectors over several files, then a second delete that
+    // re-deletes already-DV'd files (their new sidecar is total per file)
+    var sc = DeltaTable.forPath(tempDir("dv-id-sidecar")).write(lineitem.repartition(4))
+    sc = sc.deleteMergeOnRead(spark, Some(col("l_quantity") > 40))
+    assert(refKinds(sc) == Set("sidecar"))
+    assertMatchesReference(sc)
+    sc = sc.deleteMergeOnRead(spark, Some(col("l_discount") === 0.0))
+    assertMatchesReference(sc)
+    // a clone re-points the refs at the source's sidecars
+    assertMatchesReference(sc.cloneTo(tempDir("dv-id-clone")))
+
+    // spec vectors: one file with a .bin ("u"), one with an inline ("i")
+    val ids = spark.range(0, 1000).toDF("id")
+    var sp = DeltaTable.forPath(tempDir("dv-id-spec")).write(ids.coalesce(1))
+      .setTableProperties(Map("delta.enableDeletionVectors" -> "true"))
+    sp = sp.write(spark.range(1000, 2000).toDF("id").coalesce(1))
+    sp = sp.deleteMergeOnRead(spark,
+      Some((col("id") < 1000 && col("id") % 10 === 0) || col("id") === 1500))
+    assert(refKinds(sp) == Set("u", "i"))
+    assertMatchesReference(sp)
+    sp = sp.deleteMergeOnRead(spark, Some(col("id") % 10 === 1))
+    assertMatchesReference(sp)
+    assertMatchesReference(sp.cloneTo(tempDir("dv-id-spec-clone")))
+
+    // two DV'd files sharing one basename, each with its own ref
+    val a = tempDir("dv-id-same-a")
+    val b = tempDir("dv-id-same-b")
+    nation.filter(col("n_regionkey") < 2).coalesce(1).write.parquet(s"$a/d")
+    nation.filter(col("n_regionkey") >= 2).coalesce(1).write.parquet(s"$b/d")
+    def renamed(dir: String): String = {
+      val part = new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
+      val to = new java.io.File(new java.io.File(dir).getParentFile, "same.parquet")
+      assert(part.renameTo(to))
+      to.toURI.toString
+    }
+    var same = DeltaTable.forPath(tempDir("dv-id-same"))
+      .importRefs(spark, Seq(renamed(s"$a/d"), renamed(s"$b/d")))
+    same = same.deleteMergeOnRead(spark, Some(col("n_nationkey") === 0)) // file a
+    same = same.deleteMergeOnRead(spark, Some(col("n_nationkey") === 3)) // file b
+    val sameRefs = same.dlog.addActions.values.flatMap(DeletionVectors.refOf(_)).toSeq
+    assert(sameRefs.size == 2 && sameRefs.distinct.size == 2, sameRefs.toString)
+    assertMatchesReference(same)
+    assert(same.toDF(spark).count() == nation.count() - 2)
+
+    // one DV'd file read by several scan tasks: small row groups, small splits
+    val split = tempDir("dv-id-split")
+    spark.conf.set("parquet.block.size", "8192")
+    val st = try DeltaTable.forPath(split).write(lineitem.coalesce(1))
+      finally spark.conf.unset("parquet.block.size")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+    try {
+      val stDv = st.deleteMergeOnRead(spark, Some(col("l_linenumber") === 1))
+      assert(stDv.dlog.addActions.size == 1)
+      val rowsPerTask = stDv.toDF(spark).rdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(rowsPerTask.count(_ > 0) > 1, s"the file should split: ${rowsPerTask.toSeq}")
+      assertMatchesReference(stDv)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+    // row ids ride the same filter: each survivor keeps baseRowId + position
+    val rt = DeltaTable.forPath(QueryLib.customerRowTrackedDir(spark, sfDir))
+    val bases = rt.dlog.addActions.values.toSeq
+      .flatMap(a => a.baseRowId.map(new org.apache.hadoop.fs.Path(a.path).getName -> _)).toMap
+    val baseOf = udf((p: String) => bases(p.substring(p.lastIndexOf('/') + 1)))
+    val withIds = referenceScan(rt)
+      .withColumn("_row_id", baseOf(col(DeltaScan.MetaPath)) + col(DeltaScan.MetaRow))
+      .drop(DeltaScan.MetaPath, DeltaScan.MetaRow)
+    assertSameRows(rt.toDFWithRowIds(spark), withIds)
   }
 
   test("mergeMergeOnRead ≡ copy-on-write merge, without rewriting target files") {

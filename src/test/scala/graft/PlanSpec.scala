@@ -55,17 +55,17 @@ class PlanSpec extends SparkSuite {
       s"projection must prune unused columns: $readSchema")
   }
 
-  test("DV scan: one broadcast anti-join, pushdown intact, no row shuffle") {
+  test("DV scan: in-scan row filter, pushdown intact, no join or shuffle") {
     val d = tempDir("plan-dv")
     var t = DeltaTable.forPath(d).write(QueryLib.raw(spark, sfDir, "lineitem"))
     t = t.deleteMergeOnRead(spark, Some(col("l_quantity") > 45))
     val plan = explainOf(
       t.toDF(spark).filter(col("l_discount") > 0.05)
         .select("l_orderkey", "l_discount"))
-    // the dead set rides a broadcast; data rows NEVER shuffle for a scan
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+    // dead rows drop inside the scan task: no join, no broadcast, and
+    // data rows NEVER shuffle for a scan
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"),
       plan.take(800))
-    assert(!plan.contains("SortMergeJoin"), plan.take(800))
     assert(!plan.contains("Exchange hashpartitioning"),
       "a DV scan must not shuffle data rows: " + plan.take(800))
     // predicate pushdown + column pruning still reach the parquet scan
@@ -75,7 +75,7 @@ class PlanSpec extends SparkSuite {
       s"projection must prune unused columns: $readSchema")
   }
 
-  test("SPEC-DV scan keeps the same plan: broadcast anti-join, pushdown, no row shuffle") {
+  test("SPEC-DV scan keeps the same plan: in-scan filter, pushdown, no join") {
     val d = tempDir("plan-dv-spec")
     var t = DeltaTable.forPath(d).write(QueryLib.raw(spark, sfDir, "lineitem"))
       .setTableProperties(Map("delta.enableDeletionVectors" -> "true"))
@@ -84,9 +84,9 @@ class PlanSpec extends SparkSuite {
       t.toDF(spark).filter(col("l_discount") > 0.05)
         .select("l_orderkey", "l_discount"))
     // resolving roaring-bitmap vectors must not change the scan's plan
-    // contract: dead rows broadcast, data rows never shuffle, pushdown
+    // contract: no join, no broadcast, data rows never shuffle, pushdown
     // and pruning intact
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"),
       plan.take(800))
     assert(!plan.contains("Exchange hashpartitioning"),
       "a spec-DV scan must not shuffle data rows: " + plan.take(800))

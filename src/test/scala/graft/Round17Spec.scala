@@ -23,7 +23,7 @@ class Round17Spec extends SparkSuite {
   import org.apache.spark.sql.graftshim.ColumnShim
 
   test("re-delete over a DV'd scan stays exact") {
-    // the rewrite path reads THROUGH dropDead: a second predicate delete
+    // the rewrite path reads THROUGH the vector: a second predicate delete
     // over DV'd files must see only live rows
     val nation = spark.read.parquet(s"$sfDir/nation.parquet")
     val d = tempDir("r17-dv-redelete")
@@ -63,6 +63,43 @@ class Round17Spec extends SparkSuite {
           rows.foreach(r => exp(r.getInt(1)) = r.getDouble(2))
           assert(got(c) != null && got(c).toSeq == exp.toSeq,
             s"cell $c: got ${got(c)}, expected ${exp.toSeq}")
+      }
+    }
+  }
+
+  test("CentroidUpdateAgg skips null elements and keeps positions past the seeds") {
+    // nulls inside vectors, and vectors longer than the 2-dim seeds
+    val vecs = Seq[(Long, Seq[java.lang.Double])](
+      (1L, Seq(1.0, null, 0.2)), (2L, Seq(0.9, 0.1, null)),
+      (3L, Seq(null, 1.0, 0.5, 0.7)), (4L, Seq(0.1, 0.8)),
+      (5L, Seq(0.7, 0.6, 0.3, 0.1, 0.9)), (6L, Seq(0.8, null)),
+      (7L, Seq(0.2, 0.9, null, null, 0.4))).toDF("id", "v")
+    val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(-1.0, -1.0))
+    val upd = ColumnShim.column(graft.functions.CentroidUpdateAgg(
+      ColumnShim.expression(col("v")), cents).toAggregateExpression())
+    val got = vecs.agg(upd.as("_m")).head()
+      .getSeq[scala.collection.Seq[Double]](0)
+    // reference: the posexplode + per-(cell, pos) avg formulation; avg
+    // skips nulls, and every position of the longest vector is kept
+    val dim = 5
+    val assigned = vecs.select(col("v"), element_at(
+      operators.Similarity.nearestCentroids(col("v"), cents, 1), 1).as("_cell"))
+    val ref = assigned.select(col("_cell"), posexplode(col("v")))
+      .groupBy("_cell", "pos").agg(avg("col").as("_m"))
+      .filter(col("_m").isNotNull).collect()
+      .groupBy(_.getInt(0))
+    assert(ref.keySet == Set(0, 1), ref.keySet.toString)
+    cents.indices.foreach { c =>
+      ref.get(c) match {
+        case None => assert(got(c) == null, s"cell $c: expected empty")
+        case Some(rows) =>
+          val exp = new Array[Double](dim)
+          rows.foreach(r => exp(r.getInt(1)) = r.getDouble(2))
+          assert(got(c) != null && got(c).length == dim,
+            s"cell $c: got ${got(c)}, expected ${exp.toSeq}")
+          got(c).zip(exp).foreach { case (g, e) =>
+            assert(math.abs(g - e) < 1e-12, s"cell $c: got ${got(c)}, expected ${exp.toSeq}")
+          }
       }
     }
   }
