@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Per-group Bloom filter over a pre-hashed 64-bit column (callers feed it
-  * `xxhash64(value)`, exactly like [[MinHashAgg]] takes shingle hashes).
+  * `xxhash64(value)`, exactly like [[MinHashBands]] takes shingle hashes).
   * One long-array bitset per group, OR-merged map-side — grouping by
   * source file builds every file's filter in a single pass over the table.
   *

@@ -40,8 +40,12 @@ object Dedup {
   private val persistedIndexes =
     new scala.collection.mutable.ArrayBuffer[DataFrame]()
 
+  /** Persist and register `df`, unless its plan is already cached (an
+    * earlier call built the same index): that entry is reused, not re-registered.
+    */
   private def trackPersist(df: DataFrame,
       level: org.apache.spark.storage.StorageLevel): DataFrame = {
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) return df
     val p = df.persist(level)
     persistedIndexes.synchronized { persistedIndexes += p }
     p
@@ -117,6 +121,15 @@ object Dedup {
     df.select(col(idCol).as("_id"),
       TextAnalysis.shingles(TextAnalysis.tokens(col(textCol)), n).as("_sh"))
 
+  /** The shingle-hash index both pair operators persist, so on one input
+    * the second reads the first one's cache: (`_id`, `_sh` = the doc's
+    * distinct word n-gram shingles, each as its 64-bit `xxhash64`).
+    */
+  private[graft] def shingleHashes(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    shingled(df, idCol, textCol, n)
+      .select(col("_id"), transform(col("_sh"), s => xxhash64(s)).as("_sh"))
+
   /** All pairs (a < b) with n-gram Jaccard >= `threshold`, via an inverted
     * shingle index: explode -> equi-join on shingle -> per-pair intersection
     * count -> |A∪B| from per-doc set sizes. Exact (100% recall) — the
@@ -138,19 +151,18 @@ object Dedup {
     // cached: the inverted index feeds BOTH sides of the self-join below
     // (and the doc-frequency guard when enabled) — without the cache the
     // shingling recomputes per consumer, a measured 7x on the pair stage.
-    // Registered in [[persistedIndexes]] (see the release contract there).
-    val sh = trackPersist(shingled(df, idCol, textCol, n),
+    // It is the shared [[shingleHashes]] index. Registered in [[persistedIndexes]] (see the release contract there).
+    val sh = trackPersist(shingleHashes(df, idCol, textCol, n),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // set size rides along the inverted index (8 bytes/row), so |A| and
     // |B| fall out of the pair aggregation itself — no size-lookup joins.
-    // The index keys are 64-bit shingle hashes, not the strings: narrower
-    // shuffle rows and long-key joins (a further ~30% on the self-join).
-    // A cross-doc hash collision would inflate one intersection count by
-    // 1; at 2^-64 per pair that is negligible against an 0.8 threshold
-    // even at 10^9 distinct shingles.
+    // The postings are the index's 64-bit shingle hashes, exploded as
+    // they are: narrower shuffle rows and long-key joins (~30% on the
+    // self-join against string keys). A cross-doc hash collision would
+    // inflate one intersection count by 1; at 2^-64 per pair that is
+    // negligible against an 0.8 threshold even at 10^9 distinct shingles.
     val inv0 = sh.select(col("_id"), size(col("_sh")).as("_n"),
-        explode(col("_sh")).as("_s0"))
-      .select(col("_id"), col("_n"), xxhash64(col("_s0")).as("_s"))
+        explode(col("_sh")).as("_s"))
     // singleton shingles (document frequency 1 — the vast majority in a
     // real corpus) can never produce a pair but would dominate the
     // self-join's shuffle volume. The document frequency is a
@@ -205,14 +217,6 @@ object Dedup {
       .select(col("a"), col("b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** MinHash signature: for each of `numHashes` hash functions, the min
-    * xxhash64 over the doc's shingles. Pure column algebra (transform over
-    * a hash-index sequence) — one pass, no shuffle.
-    */
-  def minHashSignature(shingleCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shingleCol, s => xxhash64(s, i))))
-
   /** MinHash + banded LSH near-dup pairs. Signature of `numHashes` minima
     * split into `bands`; docs sharing any band bucket become candidates
     * (equi-join on (band, bucketHash) — never a cross join); candidates are
@@ -223,40 +227,25 @@ object Dedup {
       n: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
     // shingle sets carried as 64-bit hashes end to end: the signature,
     // band join, AND the exact-Jaccard verify all operate on long arrays
     // (8 B/element vs ~25 B strings; array_intersect on longs). Set
-    // cardinalities are collision-exact to ~2^-64 per pair.
-    // registered in [[persistedIndexes]] (see the release contract there)
-    val sh = trackPersist(
-      shingled(df, idCol, textCol, n)
-        .select(col("_id"), transform(col("_sh"), s => xxhash64(s)).as("_sh")),
+    // cardinalities are collision-exact to ~2^-64 per pair. The shared
+    // [[shingleHashes]] index, registered in [[persistedIndexes]].
+    val sh = trackPersist(shingleHashes(df, idCol, textCol, n),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // signature minima via explode + partial aggregation: the combine
-    // happens map-side and the shuffle MATERIALIZES the 64 minima — without
-    // this barrier, projection collapse would inline the whole signature
-    // expression into each of the 16 band expressions (16x recompute), and
-    // at scale the agg shape moves 64 longs/doc instead of re-reading text.
-    // All numHashes minima live in ONE MinHashAgg buffer (bit-identical to
-    // numHashes separate min(xxhash64(_s, i)) aggregates, which hash every
-    // shingle 64x into 64 buffers — measured ~2x slower).
-    import org.apache.spark.sql.graftshim.ColumnShim
-    val tok = sh.select(col("_id"), explode(col("_sh")).as("_s"))
-    val sigAgg = ColumnShim.column(
-      graft.functions.MinHashAgg(ColumnShim.expression(col("_s")), numHashes)
-        .toAggregateExpression())
-    val sig = tok.groupBy("_id").agg(sigAgg.as("_sig"))
+    // signature and band keys are computed in the row from the cached
+    // hash array ([[graft.functions.MinHashBands]]) — no explode, no
+    // aggregate, no shuffle. Docs without shingles get no bands.
     // banded index and self-join stay NARROW (id, band, bucket); shingle
     // arrays are re-attached per candidate pair afterwards
     // NB: a singleton-bucket window filter (as in the inverted index
     // above) was MEASURED SLOWER here — band rows are fixed at
     // bands/doc and already narrow, so the per-partition window sort
     // costs more than the join probe it saves
-    val banded = sig.select(col("_id"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64((b * rows until (b + 1) * rows).map(i =>
-          element_at(col("_sig"), i + 1)): _*)): _*)))
+    import org.apache.spark.sql.graftshim.ColumnShim
+    val banded = sh.select(col("_id"), posexplode(ColumnShim.column(
+        graft.functions.MinHashBands(ColumnShim.expression(col("_sh")), numHashes, bands))))
       .withColumnRenamed("pos", "_band").withColumnRenamed("col", "_bucket")
     val cand = banded.as("x").join(banded.as("y"),
         col("x._band") === col("y._band") && col("x._bucket") === col("y._bucket") &&
@@ -281,9 +270,9 @@ object Dedup {
     * inside documents while unique prose survives.
     *
     * Scale shape inherits X3's: paragraph count replaces doc count; the
-    * explode is a row multiplier bounded by paragraphs-per-doc, the
-    * signature aggregate stays map-side-combined on the struct key, and
-    * the band self-join stays narrow. Pair order is (doc, para)
+    * explode is a row multiplier bounded by paragraphs-per-doc, each
+    * paragraph's band keys are computed in its row, and the band
+    * self-join stays narrow. Pair order is (doc, para)
     * lexicographic, so intra-document duplicates emit with a_doc == b_doc.
     *
     * @return (a_doc, a_para, b_doc, b_para, jaccard) with exact-verified
@@ -381,6 +370,12 @@ object Dedup {
       val m = obs.get
       (ck, (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long]))
     }
+    // a local checkpoint stays pinned until unpersisted (or driver GC):
+    // free each superseded edge list once nothing lazy reads it any more
+    def release(ck: DataFrame): Unit =
+      ck.queryExecution.logical.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(_.unpersist(blocking = false))
 
     var (e, sig) = checkpointWithSig(p
       .filter(col("_x") =!= col("_y"))
@@ -403,6 +398,7 @@ object Dedup {
       val spark = pairs.sparkSession
       import spark.implicits._
       val edges = e.select(col("u"), col("v")).as[(Long, Long)].collect()
+      release(e)
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x0: Long): Long = {
         var x = x0
@@ -471,12 +467,11 @@ object Dedup {
         .distinct()
       val (ck, nextSig) = checkpointWithSig(small)
       large.unpersist(blocking = false)
+      release(e)
       converged = nextSig == sig
       sig = nextSig
       e = ck
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"CC round=$round edges=${nextSig._1} converged=$converged")
     }
     // wrong labels are worse than no labels: a maxRounds bailout would
     // silently return PARTIALLY merged components (and duplicate rows per
@@ -492,6 +487,7 @@ object Dedup {
     val labels = nodes.join(e, nodes("id") === e("u"), "left")
       .select(nodes("id").as("node"), coalesce(e("v"), nodes("id")).as("component"))
       .localCheckpoint()
+    release(e)
     p.unpersist(blocking = false)
     labels
   }

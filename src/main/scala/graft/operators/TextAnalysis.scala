@@ -25,16 +25,21 @@ object TextAnalysis {
     * an index sequence — codegen-friendly, no explode until the caller
     * asks for one.
     *
+    * The token array is bound ONCE, as the variable `t` of a one-element
+    * `transform` (a let): Catalyst does no CSE inside lambdas, so a window
+    * lambda over `tokensCol` itself re-split the text per window, O(L²).
+    *
     * @param empty the typed empty-array literal for the sub-`n` guard
     *        (sequence(0, k) with k<0 would generate a DESCENDING range)
     */
   private def windowed(tokensCol: Column, n: Int, f: Column => Column,
       empty: Column): Column =
-    when(size(tokensCol) >= n,
-      array_distinct(transform(
-        sequence(lit(0), size(tokensCol) - n),
-        i => f(slice(tokensCol, i + lit(1), lit(n))))))
-      .otherwise(empty)
+    element_at(transform(array(tokensCol), t =>
+      when(size(t) >= n,
+        array_distinct(transform(
+          sequence(lit(0), size(t) - n),
+          i => f(slice(t, i + lit(1), lit(n))))))
+        .otherwise(empty)), 1)
 
   /** Probe access to the q85 window-hash array (tools.GenProbe). */
   private[graft] def windowedHashesForProbe(textCol: Column, k: Int): Column =

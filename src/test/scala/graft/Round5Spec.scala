@@ -7,7 +7,8 @@ import org.apache.spark.storage.StorageLevel
 
 /** Round-5 advisor regressions: cache hygiene on rejected writes,
   * SetTransaction last-writer-wins, replaceWhere nullability tightening,
-  * and NULL-key as-of join semantics.
+  * NULL-key as-of join semantics, and the MinHash band keys pinned to
+  * `min(xxhash64(_s, i))` columns.
   */
 class Round5Spec extends SparkSuite {
   import spark.implicits._
@@ -66,35 +67,54 @@ class Round5Spec extends SparkSuite {
   }
 
   test("MinHashAgg is bit-identical to the min(xxhash64(_s, i)) columns") {
+    // the pin kept its name when MinHashBands replaced the MinHashAgg
+    // aggregate: the band keys fold the same per-hash minima
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.graftshim.ColumnShim
-    val numHashes = 64
+    def bandsVsColumns(tok: DataFrame, numHashes: Int, bands: Int): Unit = {
+      val rows = numHashes / bands
+      val viaExpr = tok.groupBy("_id").agg(collect_list(col("_s")).as("_sh"))
+        .select(col("_id"), posexplode(ColumnShim.column(graft.functions.MinHashBands(
+          ColumnShim.expression(col("_sh")), numHashes, bands))))
+      val minCols = (0 until numHashes).map(i => min(xxhash64(col("_s"), lit(i))).as(s"_m$i"))
+      val viaCols = tok.groupBy("_id").agg(minCols.head, minCols.tail: _*)
+        .select(col("_id"), posexplode(array((0 until bands).map(b =>
+          xxhash64((b * rows until (b + 1) * rows).map(i => col(s"_m$i")): _*)): _*)))
+      assertSameRows(viaExpr, viaCols)
+    }
     val tok = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").as("_id"),
         explode(graft.operators.TextAnalysis.tokens(col("text"))).as("_t"))
       .select(col("_id"), xxhash64(col("_t")).as("_s"))
-    val viaAgg = tok.groupBy("_id").agg(ColumnShim.column(
-        graft.functions.MinHashAgg(ColumnShim.expression(col("_s")), numHashes)
-          .toAggregateExpression()).as("_sig"))
-      .select(col("_id"), posexplode(col("_sig")))
-    val minCols = (0 until numHashes).map(i =>
-      min(xxhash64(col("_s"), lit(i))).as(s"_m$i"))
-    val viaCols = tok.groupBy("_id").agg(minCols.head, minCols.tail: _*)
-      .select(col("_id"), posexplode(array((0 until numHashes).map(i =>
-        col(s"_m$i")): _*)))
-    assertSameRows(viaAgg, viaCols)
+    bandsVsColumns(tok, 64, 16)
+    bandsVsColumns(tok, 8, 8)
 
-    // null inputs too: XxHash64 skips null children, so a null row
+    // null elements too: XxHash64 skips null children, so a null
     // contributes hashInt(i, seed) exactly like the column form
-    val withNulls = Seq((1L, Some(7L)), (1L, None), (2L, None))
-      .toDF("_id", "_s")
-    val nAgg = withNulls.groupBy("_id").agg(ColumnShim.column(
-        graft.functions.MinHashAgg(ColumnShim.expression(col("_s")), 8)
-          .toAggregateExpression()).as("_sig"))
-      .select(col("_id"), posexplode(col("_sig")))
-    val nMinCols = (0 until 8).map(i => min(xxhash64(col("_s"), lit(i))).as(s"_m$i"))
-    val nCols = withNulls.groupBy("_id").agg(nMinCols.head, nMinCols.tail: _*)
-      .select(col("_id"), posexplode(array((0 until 8).map(i => col(s"_m$i")): _*)))
-    assertSameRows(nAgg, nCols)
+    // (collect_list drops nulls, so these arrays are built directly)
+    val withNulls = Seq((1L, Some(7L)), (1L, None), (2L, None)).toDF("_id", "_s")
+    val arrays = Seq((1L, Seq(Some(7L), None)), (2L, Seq(None))).toDF("_id", "_sh")
+    val nExpr = arrays.select(col("_id"), posexplode(ColumnShim.column(
+      graft.functions.MinHashBands(ColumnShim.expression(col("_sh")), 8, 2))))
+    val nMin = (0 until 8).map(i => min(xxhash64(col("_s"), lit(i))).as(s"_m$i"))
+    val nCols = withNulls.groupBy("_id").agg(nMin.head, nMin.tail: _*)
+      .select(col("_id"), posexplode(array((0 until 2).map(b =>
+        xxhash64((b * 4 until (b + 1) * 4).map(i => col(s"_m$i")): _*)): _*)))
+    assertSameRows(nExpr, nCols)
+
+    // the interpreted path agrees with the generated one; an empty set
+    // has no bands (the explode dropped it), a null array is null
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def interpreted(xs: Seq[java.lang.Long]) =
+      graft.functions.MinHashBands(Literal.create(xs, ArrayType(LongType)), 8, 2).eval()
+    val gen = nExpr.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val interp = interpreted(Seq(7L, null)).asInstanceOf[
+      org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
+    assert(interp.toSeq == Seq(gen((1L, 0)), gen((1L, 1))))
+    assert(interpreted(Seq.empty).asInstanceOf[
+      org.apache.spark.sql.catalyst.util.ArrayData].numElements() == 0)
+    assert(interpreted(null) == null)
   }
 
   test("asOfJoin never matches NULL keys (SQL join semantics)") {
