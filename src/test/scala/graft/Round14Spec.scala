@@ -183,23 +183,6 @@ class Round14Spec extends SparkSuite {
   // X212: metadata-only DELETE fast paths
   // ------------------------------------------------------------------
 
-  /** Spark jobs launched by `body` — 0 proves a pure driver-side log
-    * commit (no file was opened). Listener events are async; the grace
-    * sleep lets a stray JobStart land before the zero assertion.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) } finally
-      spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   test("TRUNCATE (no-predicate DELETE) is a zero-job pure log commit") {
     val nation = spark.read.parquet(s"$sfDir/nation.parquet")
     val d = tempDir("r14-trunc")

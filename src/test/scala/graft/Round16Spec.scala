@@ -16,36 +16,6 @@ import org.apache.spark.sql.functions._
 class Round16Spec extends SparkSuite {
   import spark.implicits._
 
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    // count ONLY this call's jobs: suites share the lazy SparkSession and
-    // sbt runs them in parallel threads, so a global job count could catch
-    // another suite's jobs inside the window. Job groups are thread-local
-    // and AQE's stage-materialization jobs inherit the submitting thread's
-    // local properties, so tagging by a unique group id is exact.
-    val group = s"r16-jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (j.properties != null &&
-            group == j.properties.getProperty("spark.jobGroup.id")) {
-          n.incrementAndGet(); ()
-        }
-      }
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "Round16Spec.jobsDuring", interruptOnCancel = false)
-    try {
-      body
-      org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(sc, 30000)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-    n.get
-  }
-
   test("CoW DELETE over DV'd files reports exact numDeleted from log stats") {
     val nation = spark.read.parquet(s"$sfDir/nation.parquet")
     val d = tempDir("r16-dv-del")

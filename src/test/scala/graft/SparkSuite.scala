@@ -19,6 +19,38 @@ trait SparkSuite extends AnyFunSuite {
   def tempDir(prefix: String = "graft-test"): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Spark jobs launched by `body` on the calling thread. Suites share the
+    * lazy SparkSession and sbt runs them in parallel threads, so a global
+    * job count could catch another suite's jobs inside the window. Job
+    * groups are thread-local and AQE's stage-materialization jobs inherit
+    * the submitting thread's local properties, so tagging by a unique
+    * group id is exact; 0 proves a pure driver-side log commit.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (j.properties != null &&
+            group == j.properties.getProperty("spark.jobGroup.id")) {
+          n.incrementAndGet(); ()
+        }
+      }
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "SparkSuite.jobsDuring", interruptOnCancel = false)
+    try {
+      body
+      org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(sc, 30000)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
   /** Order-insensitive multiset equality (reference comparison semantics,
     * tests/utils.py:101-108).
     */
