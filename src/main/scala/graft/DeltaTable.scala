@@ -7,7 +7,7 @@ import graft.stats.Statistics
 import graft.storage.Location
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, count, count_distinct, lit, not, struct, sum, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, count, count_distinct, lit, not, struct, when}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -291,7 +291,7 @@ final case class DeltaTable(
 
   /** Scan `adds` applying deletion vectors, keeping [[DeltaScan.MetaPath]]
     * (each row's absolute source-file URI) and [[DeltaScan.MetaRow]].
-    * Phase-1 touched-file discovery keys on MetaPath instead of
+    * Touched-file discovery ([[touchedFiles]]) keys on MetaPath instead of
     * `input_file_name()` because the latter evaluates empty on the probe
     * side of shuffled joins.
     */
@@ -802,255 +802,82 @@ final case class DeltaTable(
   }
 
   // ------------------------------------------------------------------
-  // DELETE — two-phase copy-on-write (reference xdlake/__init__.py:259-315,
-  // SURVEY.md §3.3): (1) find files owning matching rows; (2) rewrite only
-  // those files' kept rows; untouched files stay live.
+  // Row-level DML. DELETE, UPDATE, MERGE and REPLACE WHERE run one
+  // pipeline, the mutation shape of the Delta Lake paper (the reference's
+  // copy-on-write DELETE is xdlake/__init__.py:259-315, SURVEY.md §3.3):
+  //  1. candidates: live files stats-pruned driver-side by the predicate
+  //     ([[prunedAdds]]) or by the merge source's key bounds
+  //     ([[mergeSourceProfile]]);
+  //  2. touched files: one aggregate over the candidates' matching rows
+  //     ([[touchedFiles]]) that also returns the verb's row measure;
+  //  3. the one step where the two write strategies differ: copy-on-write
+  //     rewrites the touched files' kept rows ([[writeData]]);
+  //     merge-on-read marks the matched rows dead in a deletion vector and
+  //     rewrites nothing ([[morMarkWith]], which finds its own touched
+  //     files);
+  //  4. one commit ([[commitOrRebase]]) of the removes or DV re-adds, the
+  //     new files and any change-data files.
+  // Files without a matching row are never rewritten, and every scan
+  // reads through deletion vectors, so already-dead rows are neither
+  // matched nor copied.
   // ------------------------------------------------------------------
 
-  def delete(spark: SparkSession, where: Option[Column] = None,
-      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable = {
-    // delta-spark parity: `delta.enableDeletionVectors=true` makes DELETE
-    // take the merge-on-read path by default (write ∝ deleted rows, not
-    // touched files); truncate (no predicate) stays copy-on-write — a
-    // metadata-only remove beats writing an all-rows vector
-    if (where.isDefined && tableProperties
-        .get("delta.enableDeletionVectors").exists(_.trim.equalsIgnoreCase("true")))
-      return deleteMergeOnRead(spark, where, customMetadata)
-    assertPreWrite(removesData = true)
-    val pred = where.getOrElse(lit(true))
-    val adds = dlog.addActions
-
-    val addByCanonical: Map[String, AddFile] = adds.values.map { a =>
-      Location.canonical(Location.resolve(a.path, loc, conf).uri) -> a
-    }.toMap
-
-    // Phase 1: which files own rows matching the predicate? Candidate
-    // files are pre-pruned driver-side via partition values + min/max
-    // stats (files outside the predicate's range are never opened); the
-    // scan then reads only predicate columns with pushed filters.
-    val candidateAdds =
-      where.map(prunedAdds).getOrElse(adds.values.toSeq)
-
-    // Metadata-only fast path (delta-spark's partition delete,
-    // generalized): a candidate file PROVABLY all-match per log stats /
-    // partition values is dropped without ever being opened — at 100 TB
-    // a partition-predicate GDPR erasure is a pure log commit, not a
-    // table scan. With CDF on, a predicate delete's cdc files are
-    // authoritative for the whole commit and producing them requires
-    // reading the matched rows anyway, so the fast path stays off; a
-    // no-predicate TRUNCATE was already cdc-free (the feed reconstructs
-    // its removes as remove_file) and keeps that exact contract here.
-    val droppedAdds: Seq[AddFile] =
-      if (where.isEmpty) candidateAdds
-      else if (cdfEnabled) Seq.empty
-      else allMatchAdds(pred, candidateAdds)
-    if (droppedAdds.size == candidateAdds.size) {
-      val numDeleted = liveRowCount(spark, droppedAdds)
-      val predicateText = where.map(_.toString).getOrElse("true")
-      val entry = DeltaLogEntry.deleteTable(predicateText, droppedAdds,
-        Seq.empty, dlog.version, 0L, numDeleted).withExtraCommitInfo(customMetadata)
-      return commitOrRebase(entry, candidateAdds.map(_.path).toSet, Some(where))
-    }
-    val droppedPaths = droppedAdds.map(_.path).toSet
-    val scanCandidates = candidateAdds.filterNot(a => droppedPaths.contains(a.path))
-
-    val touchedCanonical: Set[String] =
-      scanAddsWithMeta(spark, scanCandidates)
-        .filter(pred)
-        .select(col(DeltaScan.MetaPath).as("f")).distinct()
-        .collect().map(r => Location.canonical(r.getString(0))).toSet
-
-    val touchedAdds = addByCanonical.view.filterKeys(touchedCanonical).values.toSeq
-
-    // Phase 2: rewrite kept rows of touched files only. Keep = rows where
-    // the predicate is NOT true (null-safe: null predicate keeps the row).
-    // The DV-aware scan drops prior-dead rows, so rewriting a DV'd file
-    // both applies this delete and purges its deletion vector.
-    var numCopied = 0L
-    var numDeleted = 0L
-    var cdc: Seq[AddCDCFile] = Seq.empty
-    val newAdds: Seq[AddFile] =
-      if (touchedAdds.isEmpty) Seq.empty
+  /** Step 2: the live files owning a row of `matched` (applied to the
+    * candidates' meta-scan) and the value of `measure` over those rows,
+    * in ONE aggregate job; an empty candidate set runs none. `also` joins
+    * the touched set unscanned (MERGE's not-matched-by-source clause).
+    */
+  private def touchedFiles(spark: SparkSession, candidates: Seq[AddFile],
+      matched: DataFrame => DataFrame, measure: Column,
+      also: Seq[AddFile] = Nil): (Seq[AddFile], Long) = {
+    def canonical(a: AddFile) = Location.canonical(Location.resolve(a.path, loc, conf).uri)
+    val (found, value) =
+      if (candidates.isEmpty) (Set.empty[String], 0L)
       else {
-        val touchedDF = scanAdds(spark, touchedAdds)
-        // live totals from log stats minus DV cardinality — the identical
-        // number a DV-aware count() scan of the touched files returns
-        // (liveRowCount scans only stat-less foreign files), without the
-        // extra full read of every touched file the count job cost
-        val totalTouched = liveRowCount(spark, touchedAdds)
-        val kept = touchedDF.filter(not(coalesce(pred, lit(false))))
-        // change data feed: the matched rows of touched files ARE the
-        // commit's exact deletes (including rows of fully-dead files).
-        // A no-predicate truncate stays cdc-free — delta's metadata-only
-        // delete — and the feed reconstructs it as remove_file; writing
-        // the whole table as cdc delete rows would double the cost of
-        // the cheapest possible commit.
-        if (cdfEnabled && where.isDefined) {
-          val dead = touchedDF.filter(coalesce(pred, lit(false)))
-            .withColumn("_change_type", lit("delete"))
-          cdc = writeChangeData(dead, dlog.versionToWrite)
-        }
-        val written = writeData(kept, dlog.versionToWrite, dlog.partitionColumns)
-        numCopied = written.flatMap(_.stats).map(parseNumRecords).sum
-        numDeleted = totalTouched - numCopied
-        written
+        val r = matched(scanAddsWithMeta(spark, candidates))
+          .agg(collect_set(col(DeltaScan.MetaPath)), measure).head()
+        (r.getSeq[String](0).map(Location.canonical).toSet, r.getLong(1))
       }
-
-    // stats-dropped files join the remove list and the deleted-rows
-    // metric without ever having been opened (cdf off on this branch)
-    val predicateText = where.map(_.toString).getOrElse("true")
-    val entry = DeltaLogEntry.deleteTable(predicateText,
-      touchedAdds ++ droppedAdds, newAdds, dlog.version, numCopied,
-      numDeleted + liveRowCount(spark, droppedAdds))
-      .withExtraCommitInfo(customMetadata)
-    commitOrRebase(DeltaLogEntry(entry.actions ++ cdc),
-      candidateAdds.map(_.path).toSet, Some(where))
+    val addByCanonical = dlog.addActions.values.map(a => canonical(a) -> a).toMap
+    (addByCanonical.view.filterKeys(found ++ also.map(canonical)).values.toSeq, value)
   }
 
-  /** Candidate adds PROVABLY all-match under `pred` (metadata-only
-    * delete): [[prunedAdds]]'s physical-name rewrite, opposite
-    * conservative direction — only files with complete evidence return.
+  /** Steps 2-3 copy-on-write, for the verbs that drop rows (DELETE,
+    * REPLACE WHERE): the touched files, their kept-row rewrites, the
+    * dropped-row count (step 2's `count(1)`) and, with `changeData`, the
+    * dropped rows written as `delete` change data.
     */
-  private def allMatchAdds(pred: Column, candidates: Seq[AddFile]): Seq[AddFile] = {
-    val sch = dlog.schema
-    val m = ColumnMapping.logicalToPhysical(sch)
-    DataSkipping.provablyAllMatch(candidates,
-      ColumnMapping.toPhysicalPredicate(pred, m),
-      ColumnMapping.physicalSchema(sch), dlog.partitionColumns)
+  private def rewriteWithout(spark: SparkSession, candidates: Seq[AddFile],
+      matched: Column, changeData: Boolean)
+      : (Seq[AddFile], Seq[AddFile], Long, Seq[AddCDCFile]) = {
+    val (touched, dropped) =
+      touchedFiles(spark, candidates, _.filter(matched), count(lit(1)))
+    if (touched.isEmpty) return (Seq.empty, Seq.empty, 0L, Seq.empty)
+    val touchedDF = scanAdds(spark, touched)
+    val cdc =
+      if (!changeData) Seq.empty
+      else writeChangeData(touchedDF.filter(matched)
+        .withColumn("_change_type", lit("delete")), dlog.versionToWrite)
+    (touched, writeData(touchedDF.filter(not(matched)), dlog.versionToWrite,
+      dlog.partitionColumns), dropped, cdc)
   }
 
-  /** LIVE rows of `adds` — log stats minus DV cardinality where
-    * numRecords is recorded; the (rare, foreign-written) stat-less files
-    * are counted with one DV-aware scan. Metric-grade: a count-only read
-    * of the stragglers still beats opening every file.
-    *
-    * Exactness for statted files depends on the WRITER-supplied
-    * numRecords/cardinality being accurate, which the delta protocol
-    * requires of stats it emits; a foreign file carrying a present-but-
-    * wrong numRecords skews only the operation metric derived here, never
-    * the table data (the pre-r14 count() scan was self-correcting on that
-    * point — the accepted trade for removing a full read of the touched
-    * set from every predicate DELETE / REPLACE WHERE).
-    */
-  private def liveRowCount(spark: SparkSession, adds: Seq[AddFile]): Long = {
-    val (statted, statless) =
-      adds.partition(a => a.stats.exists(s => numRecordsOpt(s).isDefined))
-    val fromStats = statted.map(a => parseNumRecords(a.stats.get) -
-      DeletionVectors.refOf(a).map(_.cardinality).getOrElse(0L)).sum
-    val scanned = if (statless.isEmpty) 0L else scanAdds(spark, statless).count()
-    fromStats + scanned
-  }
-
-  /** numRecords from a stats JSON — None when the field is absent (all
-    * Delta stats fields are optional for foreign writers) or the JSON is
-    * malformed; decision-critical paths must use this, not the 0-default.
-    */
-  private def numRecordsOpt(statsJson: String): Option[Long] =
-    try Json.longOpt(Json.mapper.readTree(statsJson), "numRecords")
-    catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Metric-only variant (sums over files we just wrote; never throws). */
-  private def parseNumRecords(statsJson: String): Long =
-    numRecordsOpt(statsJson).getOrElse(0L)
-
-  /** DELETE via merge-on-read deletion vectors: matching rows are marked
-    * dead in a `_graft_dv/` sidecar and the touched files are re-added with
-    * a `deletionVector` ref — no data file is rewritten. The write cost is
-    * proportional to the number of DELETED rows, not to the size of the
-    * files that contain them; at 100 TB that is the difference between a
-    * GDPR-erasure commit writing kilobytes and rewriting terabytes
-    * (the reference deletes copy-on-write only, xdlake/__init__.py:259-315).
-    * Scans, UPDATE, MERGE, compact and CDF all read through the vector;
-    * `compact()` purges it; `vacuum()` protects referenced sidecars.
-    *
-    * A file whose LAST live row dies is removed from the log outright, so
-    * a full-table merge-on-read delete degenerates to the copy-on-write
-    * one (empty table, no sidecar lookups left behind).
-    *
-    * No cdc files even under `delta.enableChangeDataFeed`: the change
-    * feed's DV-delta reconstruction already serves this commit's EXACT
-    * newly-dead rows (q78's contract), so cdc would duplicate those bytes
-    * for nothing — the per-commit authoritative rule permits either.
-    */
-  def deleteMergeOnRead(spark: SparkSession, where: Option[Column] = None,
-      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable = {
-    assertPreWrite(removesData = true)
-    val pred = where.getOrElse(lit(true))
-    val candidateAdds =
-      where.map(prunedAdds).getOrElse(dlog.addActions.values.toSeq)
-    val predicateText = where.map(_.toString).getOrElse("true")
-    // Metadata-only fast path, MoR flavor: a provably all-match file is
-    // removed OUTRIGHT without being opened — no point writing an
-    // all-live-rows vector for it. Feed-safe even with CDF on: the MoR
-    // entry's removes reconstruct their surviving rows as `delete`
-    // through the prior vector (changesBetween's morEntry channel),
-    // exactly like the scan-found fullDead removes. Files without a
-    // recorded numRecords stay on the scan path (the fullDead decision
-    // and the deleted-rows metric need the count).
-    val dropped = where.map(_ => allMatchAdds(pred, candidateAdds)
-        .filter(_.stats.exists(s => numRecordsOpt(s).isDefined)))
-      .getOrElse(Seq.empty)
-    val droppedPaths = dropped.map(_.path).toSet
-    val droppedLive = dropped.map(a => parseNumRecords(a.stats.get) -
-      DeletionVectors.refOf(a).map(_.cardinality).getOrElse(0L)).sum
-    // project the matched cache down to the two meta columns: DELETE never
-    // reads the payload, so a 100M-row erasure pins row-ids, not rows
-    val scanSet = candidateAdds.filterNot(a => droppedPaths.contains(a.path))
-    val (dvAdds, fullDead, numDeleted) =
-      if (scanSet.isEmpty) (Seq.empty[AddFile], Seq.empty[AddFile], 0L)
-      else morMark(spark, scanSet,
-        df => df.filter(coalesce(pred, lit(false)))
-          .select(col(DeltaScan.MetaPath), col(DeltaScan.MetaRow)))
-    // an unmatched predicate still commits (parity with copy-on-write)
-    commitOrRebase(DeltaLogEntry.deleteMergeOnReadTable(predicateText, dvAdds,
-        fullDead ++ dropped, dlog.version, numDeleted + droppedLive,
-        specDvRemoves(dvAdds))
-      .withExtraCommitInfo(customMetadata),
-      candidateAdds.map(_.path).toSet, Some(where))
-  }
-
-  /** Paired tombstones for a spec-DV table's re-adds: one RemoveFile per
-    * re-added path, carrying the SUPERSEDED add's deletionVector
-    * descriptor. Spec-compliant delta readers reconcile file actions by
-    * the (path, deletionVector.uniqueId) TUPLE — without the pairing the
-    * prior no-DV (or older-DV) add stays live in their replay alongside
-    * the new one, duplicating files and resurrecting deleted rows, which
-    * defeats the interop `delta.enableDeletionVectors=true` promises.
-    * Graft-native sidecar tables skip the pairing (their DVs are
-    * unreadable to foreign engines by design, and graft's own path-keyed
-    * replay needs no tombstone).
-    */
-  private def specDvRemoves(dvAdds: Seq[AddFile]): Seq[RemoveFile] =
-    if (dvAdds.nonEmpty &&
-        tableProperties.get("delta.enableDeletionVectors").contains("true"))
-      dvAdds.map(a => Action.removeFor(dlog.addActions(a.path)))
-    else Seq.empty
-
-  /** Shared merge-on-read mutation core: the rows `selectDead` keeps from
-    * a meta-scan of `candidateAdds` (scanned THROUGH existing vectors —
-    * already-dead rows are not re-recorded) are marked dead in ONE new
-    * total-per-file sidecar. Returns the DV re-adds, the removes for files
-    * whose every row is now dead, and the newly-dead row count —
-    * `(Nil, Nil, 0)` when nothing matched. The caller owns the commit.
-    */
-  private def morMark(spark: SparkSession, candidateAdds: Seq[AddFile],
-      selectDead: DataFrame => DataFrame): (Seq[AddFile], Seq[AddFile], Long) =
-    morMarkWith[Unit](spark, candidateAdds, selectDead, (_, _) => ()) match {
-      case (dvAdds, fullDead, numDead, _) => (dvAdds, fullDead, numDead)
-    }
-
-  /** [[morMark]] variant that also hands the caller the CACHED matched
-    * rows plus the dead count, so metrics or postimage writes reuse the
-    * one table pass instead of re-scanning — the matched set is small by
-    * MoR's contract (bulk mutations belong on the copy-on-write ops), so
-    * caching it is cheap. `selectDead` may project columns away as long
-    * as [[DeltaScan.MetaPath]]/[[DeltaScan.MetaRow]] survive (DELETE
-    * keeps only those two); `withMatched` runs while the cache is alive
-    * and its result is returned.
+  /** Step 3 merge-on-read: the rows `selectDead` keeps from a meta-scan of
+    * `candidateAdds` (scanned THROUGH existing vectors — already-dead rows
+    * are not re-recorded) are marked dead in ONE new total-per-file
+    * vector. Returns the DV re-adds, the removes for files whose every row
+    * is now dead, the newly-dead row count, and `withMatched` applied to
+    * the CACHED matched rows, so metrics or postimage writes reuse the one
+    * table pass — the matched set is small by MoR's contract (bulk
+    * mutations belong on copy-on-write), so caching it is cheap.
+    * `withMatched` runs only when a row matched; `selectDead` may project
+    * columns away as long as [[DeltaScan.MetaPath]]/[[DeltaScan.MetaRow]]
+    * survive. The caller owns the commit.
     */
   private def morMarkWith[T](spark: SparkSession, candidateAdds: Seq[AddFile],
       selectDead: DataFrame => DataFrame,
-      withMatched: (DataFrame, Long) => T): (Seq[AddFile], Seq[AddFile], Long, T) = {
+      withMatched: DataFrame => T): (Seq[AddFile], Seq[AddFile], Long, Option[T]) = {
+    if (candidateAdds.isEmpty) return (Seq.empty, Seq.empty, 0L, None)
     val addByPath = dlog.addActions
 
     // Matched rows are computed ONCE and cached; dead-row keys are keyed
@@ -1060,10 +887,7 @@ final case class DeltaTable(
     val names = candidateAdds.map(a => pathName(a.path))
     val uniqueNames = names.distinct.size == names.size
     val matched: DataFrame =
-      if (candidateAdds.isEmpty)
-        selectDead(scanAddsWithMeta(spark, Seq.empty))
-          .withColumn("_dv_path", lit(null).cast(org.apache.spark.sql.types.StringType))
-      else if (uniqueNames)
+      if (uniqueNames)
         selectDead(scanAddsWithMeta(spark, candidateAdds))
           .withColumn("_dv_path", lit(null).cast(org.apache.spark.sql.types.StringType))
       else
@@ -1093,8 +917,7 @@ final case class DeltaTable(
       // result is file-count-scale
       val newCounts: Map[String, Long] = newDead.groupBy("path").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (newCounts.isEmpty)
-        return (Seq.empty, Seq.empty, 0L, withMatched(matched, 0L))
+      if (newCounts.isEmpty) return (Seq.empty, Seq.empty, 0L, None)
       val touched = newCounts.keys.toSeq.sorted.map(addByPath(_))
       // WRITE-SIDE INVARIANT: one sidecar never holds two paths with the
       // same basename — every read path (bulk and per-file) matches dead
@@ -1210,9 +1033,172 @@ final case class DeltaTable(
           }
         }
 
-      (dvAdds, fullDead, numDeleted, withMatched(matched, numDeleted))
+      (dvAdds, fullDead, numDeleted, Some(withMatched(matched)))
     } finally matched.unpersist(blocking = false)
   }
+
+  /** Candidate adds PROVABLY all-match under `pred` (metadata-only
+    * delete): [[prunedAdds]]'s physical-name rewrite, opposite
+    * conservative direction — only files with complete evidence return.
+    */
+  private def allMatchAdds(pred: Column, candidates: Seq[AddFile]): Seq[AddFile] = {
+    val sch = dlog.schema
+    val m = ColumnMapping.logicalToPhysical(sch)
+    DataSkipping.provablyAllMatch(candidates,
+      ColumnMapping.toPhysicalPredicate(pred, m),
+      ColumnMapping.physicalSchema(sch), dlog.partitionColumns)
+  }
+
+  /** LIVE rows of `adds` — log stats minus DV cardinality where
+    * numRecords is recorded; the (rare, foreign-written) stat-less files
+    * are counted with one DV-aware scan. Metric-grade: a count-only read
+    * of the stragglers still beats opening every file.
+    *
+    * Exactness for statted files depends on the WRITER-supplied
+    * numRecords/cardinality being accurate, which the delta protocol
+    * requires of stats it emits; a foreign file carrying a present-but-
+    * wrong numRecords skews only the operation metric derived here, never
+    * the table data.
+    */
+  private def liveRowCount(spark: SparkSession, adds: Seq[AddFile]): Long = {
+    val (statted, statless) =
+      adds.partition(a => a.stats.exists(s => numRecordsOpt(s).isDefined))
+    val scanned = if (statless.isEmpty) 0L else scanAdds(spark, statless).count()
+    statsLiveRows(statted) + scanned
+  }
+
+  /** Live rows of `adds` per log stats alone (a stat-less file counts 0). */
+  private def statsLiveRows(adds: Seq[AddFile]): Long =
+    adds.map(a => a.stats.map(parseNumRecords).getOrElse(0L) -
+      DeletionVectors.refOf(a).map(_.cardinality).getOrElse(0L)).sum
+
+  /** Rows in files this engine just wrote (their footer numRecords). */
+  private def rowsIn(written: Seq[AddFile]): Long =
+    written.flatMap(_.stats).map(parseNumRecords).sum
+
+  /** numRecords from a stats JSON — None when the field is absent (all
+    * Delta stats fields are optional for foreign writers) or the JSON is
+    * malformed; decision-critical paths must use this, not the 0-default.
+    */
+  private def numRecordsOpt(statsJson: String): Option[Long] =
+    try Json.longOpt(Json.mapper.readTree(statsJson), "numRecords")
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Metric-only variant (never throws). */
+  private def parseNumRecords(statsJson: String): Long =
+    numRecordsOpt(statsJson).getOrElse(0L)
+
+  /** Paired tombstones for a spec-DV table's re-adds: one RemoveFile per
+    * re-added path, carrying the SUPERSEDED add's deletionVector
+    * descriptor. Spec-compliant delta readers reconcile file actions by
+    * the (path, deletionVector.uniqueId) TUPLE — without the pairing the
+    * prior no-DV (or older-DV) add stays live in their replay alongside
+    * the new one, duplicating files and resurrecting deleted rows, which
+    * defeats the interop `delta.enableDeletionVectors=true` promises.
+    * Graft-native sidecar tables skip the pairing (their DVs are
+    * unreadable to foreign engines by design, and graft's own path-keyed
+    * replay needs no tombstone).
+    */
+  private def specDvRemoves(dvAdds: Seq[AddFile]): Seq[RemoveFile] =
+    if (dvAdds.nonEmpty &&
+        tableProperties.get("delta.enableDeletionVectors").contains("true"))
+      dvAdds.map(a => Action.removeFor(dlog.addActions(a.path)))
+    else Seq.empty
+
+  def delete(spark: SparkSession, where: Option[Column] = None,
+      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable =
+    // delta-spark parity: `delta.enableDeletionVectors=true` makes DELETE
+    // take the merge-on-read path by default (write ∝ deleted rows, not
+    // touched files); truncate (no predicate) stays copy-on-write — a
+    // metadata-only remove beats writing an all-rows vector
+    deleteRows(spark, where, customMetadata, mergeOnRead = where.isDefined &&
+      tableProperties.get("delta.enableDeletionVectors").exists(_.trim.equalsIgnoreCase("true")))
+
+  /** DELETE via merge-on-read deletion vectors: matching rows are marked
+    * dead in a `_graft_dv/` sidecar and the touched files are re-added with
+    * a `deletionVector` ref — no data file is rewritten. The write cost is
+    * proportional to the number of DELETED rows, not to the size of the
+    * files that contain them; at 100 TB that is the difference between a
+    * GDPR-erasure commit writing kilobytes and rewriting terabytes
+    * (the reference deletes copy-on-write only, xdlake/__init__.py:259-315).
+    * Scans, UPDATE, MERGE, compact and CDF all read through the vector;
+    * `compact()` purges it; `vacuum()` protects referenced sidecars.
+    *
+    * A file whose LAST live row dies is removed from the log outright, so
+    * a full-table merge-on-read delete degenerates to the copy-on-write
+    * one (empty table, no sidecar lookups left behind).
+    *
+    * No cdc files even under `delta.enableChangeDataFeed`: the change
+    * feed's DV-delta reconstruction already serves this commit's EXACT
+    * newly-dead rows (q78's contract), so cdc would duplicate those bytes
+    * for nothing — the per-commit authoritative rule permits either.
+    */
+  def deleteMergeOnRead(spark: SparkSession, where: Option[Column] = None,
+      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable =
+    deleteRows(spark, where, customMetadata, mergeOnRead = true)
+
+  private def deleteRows(spark: SparkSession, where: Option[Column],
+      customMetadata: Map[String, JsonNode], mergeOnRead: Boolean): DeltaTable = {
+    assertPreWrite(removesData = true)
+    val pred = where.getOrElse(lit(true))
+    val matched = coalesce(pred, lit(false))
+    val candidates = where.map(prunedAdds).getOrElse(dlog.addActions.values.toSeq)
+    // Metadata-only fast path (delta-spark's partition delete,
+    // generalized): a candidate PROVABLY all-match per log stats /
+    // partition values is removed without ever being opened — at 100 TB a
+    // partition-predicate GDPR erasure is a pure log commit. A
+    // copy-on-write TRUNCATE drops every file and writes no cdc (the feed
+    // reconstructs its removes as remove_file). With CDF on, a
+    // copy-on-write predicate delete's cdc files are authoritative for the
+    // whole commit and need the matched rows read, so the path stays off.
+    // Merge-on-read is feed-safe (the feed reads a MoR entry's removes as
+    // `delete` rows through the prior vector) but keeps files without a
+    // recorded numRecords on the scan path: the fullDead decision and the
+    // metric need the count.
+    val dropped =
+      if (where.isEmpty) { if (mergeOnRead) Seq.empty else candidates }
+      else if (mergeOnRead)
+        allMatchAdds(pred, candidates).filter(_.stats.exists(s => numRecordsOpt(s).isDefined))
+      else if (cdfEnabled) Seq.empty
+      else allMatchAdds(pred, candidates)
+    val droppedPaths = dropped.map(_.path).toSet
+    val scanned = candidates.filterNot(a => droppedPaths.contains(a.path))
+    val droppedRows = liveRowCount(spark, dropped)
+    val predicateText = where.map(_.toString).getOrElse("true")
+    val entry =
+      if (mergeOnRead) {
+        // the matched cache keeps only the two meta columns: DELETE never
+        // reads the payload, so a 100M-row erasure pins row ids, not rows
+        val (dvAdds, fullDead, numDeleted, _) = morMarkWith[Unit](spark, scanned,
+          _.filter(matched).select(col(DeltaScan.MetaPath), col(DeltaScan.MetaRow)),
+          _ => ())
+        DeltaLogEntry.deleteMergeOnReadTable(predicateText, dvAdds, fullDead ++ dropped,
+          dlog.version, numDeleted + droppedRows, specDvRemoves(dvAdds))
+      } else {
+        val (touched, written, numDeleted, cdc) =
+          rewriteWithout(spark, scanned, matched, changeData = cdfEnabled)
+        DeltaLogEntry(DeltaLogEntry.deleteTable(predicateText, touched ++ dropped,
+          written, dlog.version, rowsIn(written), numDeleted + droppedRows).actions ++ cdc)
+      }
+    // an unmatched predicate still commits
+    commitOrRebase(entry.withExtraCommitInfo(customMetadata),
+      candidates.map(_.path).toSet, Some(where))
+  }
+
+  /** Set `set` columns to their new expressions on rows matching `where`;
+    * all other rows and columns are copied unchanged.
+    *
+    * Scale shape: candidates are pre-pruned driver-side by partition
+    * values + min/max stats before any Spark plan exists, the touched-file
+    * scan reads only predicate columns with pushed filters, and only the
+    * touched files are rewritten — an update matching 1 file out of 10^5
+    * rewrites 1 file. New values are evaluated per-row inside whole-stage
+    * codegen (`CASE WHEN pred THEN expr ELSE old END`).
+    */
+  def update(spark: SparkSession, where: Option[Column],
+      set: Map[String, Column],
+      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable =
+    updateRows(spark, where, set, customMetadata, mergeOnRead = false)
 
   /** Merge-on-read UPDATE: matching rows are marked dead via a deletion
     * vector and their post-SET versions append as new files — no touched
@@ -1224,55 +1210,161 @@ final case class DeltaTable(
     */
   def updateMergeOnRead(spark: SparkSession, where: Option[Column],
       set: Map[String, Column],
-      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable = {
+      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable =
+    updateRows(spark, where, set, customMetadata, mergeOnRead = true)
+
+  private def updateRows(spark: SparkSession, where: Option[Column],
+      set: Map[String, Column], customMetadata: Map[String, JsonNode],
+      mergeOnRead: Boolean): DeltaTable = {
     assertPreWrite(removesData = true)
     require(set.nonEmpty, "update requires at least one SET column")
-    val fields = dlog.schema.fields.map(f => f.name -> f.dataType).toMap
-    set.keys.foreach(k => require(fields.contains(k), s"no such column: $k"))
-    set.keys.foreach(k => require(!dlog.partitionColumns.contains(k),
-      s"cannot UPDATE partition column $k (delete + rewrite instead)"))
-    set.keys.foreach(k => require(!generatedColumns.contains(k),
-      s"cannot UPDATE generated column $k (update its sources instead)"))
-    val pred = where.getOrElse(lit(true))
-    val matchedPred = coalesce(pred, lit(false))
-    val candidateAdds =
-      where.map(prunedAdds).getOrElse(dlog.addActions.values.toSeq)
-
-    // postimages are computed from the cached matched rows — the table is
-    // scanned exactly once for mark + rewrite together
-    var cdc: Seq[AddCDCFile] = Seq.empty
-    val (dvAdds, fullDead, numUpdated, newAdds) =
-      morMarkWith[Seq[AddFile]](spark, candidateAdds, _.filter(matchedPred),
-        (m, n) =>
-          if (n == 0L) Seq.empty[AddFile]
-          else {
-            val updated = regenerate(m.select(dlog.schema.fields.toIndexedSeq.map { f =>
-              set.get(f.name) match {
-                case Some(v) =>
-                  v.cast(graft.log.DeltaLog.typeShape(f.dataType)).as(f.name)
-                case None    => col(f.name)
-              }
-            }: _*))
-            validateConstraints(updated)
-            // change data feed: same pre/postimage contract as the
-            // copy-on-write arm (m is cached — no extra table scan)
-            if (cdfEnabled) {
-              // m rides the mark-scan's meta columns — project them away
-              val pre = m.select(dlog.schema.fieldNames.toIndexedSeq.map(col): _*)
-                .withColumn("_change_type", lit("update_preimage"))
-              val post = updated.withColumn("_change_type", lit("update_postimage"))
-              cdc = writeChangeData(pre.unionByName(post), dlog.versionToWrite)
-            }
-            writeData(updated, dlog.versionToWrite, dlog.partitionColumns)
-          })
-
+    checkSet(set, dlog.partitionColumns.map(k =>
+        k -> s"cannot UPDATE partition column $k (delete + rewrite instead)").toMap ++
+      generatedColumns.keys.map(k =>
+        k -> s"cannot UPDATE generated column $k (update its sources instead)"))
+    val matched = coalesce(where.getOrElse(lit(true)), lit(false))
+    val candidates = where.map(prunedAdds).getOrElse(dlog.addActions.values.toSeq)
+    // CHECK constraints must hold for the post-update rows (untouched
+    // files were validated when written); with CDF on, the matched rows
+    // ARE the commit's exact changes — old values as update_preimage, new
+    // as update_postimage (delta's cdc shape; the feed's reconstruction
+    // fallback would report every unchanged row of a rewritten file)
+    def validatedWrite(rows: DataFrame, matchedRows: DataFrame): (Seq[AddFile], Seq[AddCDCFile]) = {
+      validateConstraints(rows)
+      val cdc =
+        if (!cdfEnabled) Seq.empty
+        else writeChangeData(matchedRows.withColumn("_change_type", lit("update_preimage"))
+          .unionByName(regenerate(matchedRows.select(setProjection(set, None): _*))
+            .withColumn("_change_type", lit("update_postimage"))), dlog.versionToWrite)
+      (writeData(rows, dlog.versionToWrite, dlog.partitionColumns), cdc)
+    }
     val predicateText = where.map(_.toString).getOrElse("true")
-    val entry = DeltaLogEntry.updateMergeOnReadTable(predicateText, dvAdds,
-        fullDead, newAdds, dlog.version, numUpdated, specDvRemoves(dvAdds))
-      .withExtraCommitInfo(customMetadata)
-    commitOrRebase(DeltaLogEntry(entry.actions ++ cdc),
-      candidateAdds.map(_.path).toSet, Some(where))
+    val entry =
+      if (mergeOnRead) {
+        // postimages come from the cached matched rows: the table is
+        // scanned once for mark and rewrite together
+        val (dvAdds, fullDead, numUpdated, added) = morMarkWith(spark, candidates,
+          _.filter(matched), { m =>
+            val pre = m.select(dlog.schema.fieldNames.toIndexedSeq.map(col): _*)
+            validatedWrite(regenerate(pre.select(setProjection(set, None): _*)), pre)
+          })
+        val (adds, cdc) = added.getOrElse((Seq.empty, Seq.empty))
+        DeltaLogEntry(DeltaLogEntry.updateMergeOnReadTable(predicateText, dvAdds,
+          fullDead, adds, dlog.version, numUpdated, specDvRemoves(dvAdds)).actions ++ cdc)
+      } else {
+        // numUpdated is step 2's count(1); the rewrite holds every live
+        // row of the touched files, so the rest of it was copied
+        val (touched, numUpdated) =
+          touchedFiles(spark, candidates, _.filter(matched), count(lit(1)))
+        val (written, cdc) =
+          if (touched.isEmpty) (Seq.empty, Seq.empty)
+          else {
+            val touchedDF = scanAdds(spark, touched)
+            validatedWrite(regenerate(touchedDF.select(setProjection(set, Some(matched)): _*)),
+              touchedDF.filter(matched))
+          }
+        DeltaLogEntry(DeltaLogEntry.updateTable(predicateText, touched, written,
+          dlog.version, numUpdated, rowsIn(written) - numUpdated).actions ++ cdc)
+      }
+    commitOrRebase(entry.withExtraCommitInfo(customMetadata),
+      candidates.map(_.path).toSet, Some(where))
   }
+
+  /** The SET checks shared by UPDATE and MERGE's matched-update clause:
+    * every SET column exists and none is `frozen` (column -> why not).
+    */
+  private def checkSet(set: Map[String, Column], frozen: Map[String, String]): Unit =
+    set.keys.foreach { k =>
+      require(dlog.schema.fieldNames.contains(k), s"unknown SET column: $k")
+      require(!frozen.contains(k), frozen(k))
+    }
+
+  /** The SET projection shared by UPDATE and MERGE's matched-update
+    * clause: every table column, each SET column replaced by its
+    * expression — only on the rows `onlyWhere` holds for (`CASE WHEN`),
+    * keeping `current(column)` elsewhere. Values are cast to the column's
+    * nullability-RELAXED shape: casting to a type with non-nullable
+    * nested fields is an analysis error for nullable inputs; NOT NULL is
+    * enforced by the row-level validateConstraints check instead.
+    */
+  private def setProjection(set: Map[String, Column], onlyWhere: Option[Column],
+      current: String => Column = col(_)): Seq[Column] =
+    dlog.schema.fields.toIndexedSeq.map { f =>
+      set.get(f.name).map(_.cast(DeltaLog.typeShape(f.dataType))) match {
+        case Some(v) => onlyWhere.fold(v)(when(_, v).otherwise(current(f.name))).as(f.name)
+        case None    => current(f.name).as(f.name)
+      }
+    }
+
+  /** One pass over the cached MERGE source, shared by all three MERGE
+    * forms: the row count, the duplicate-key check, and [min, max] of each
+    * key column whose type carries usable stats (numeric, string, date).
+    * Returns the row count and the candidate files those bounds allow —
+    * on a 100 TB table a bounded-key source (recent ids, one tenant's
+    * range) turns the touched-file scan from table-sized to range-sized.
+    * None when the source is empty or a bounded key is all NULL: no
+    * target row can match. NULL keys never equi-join and min/max ignore
+    * NULLs, so range pruning is exact; other key types do not prune.
+    */
+  private def mergeSourceProfile(src: DataFrame,
+      keyCols: Seq[String]): (Long, Option[Seq[AddFile]]) = {
+    val bounded = keyCols.filter(k => dlog.schema.find(_.name == k).exists(_.dataType match {
+      case _: org.apache.spark.sql.types.NumericType => true
+      case org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.DateType => true
+      case _ => false
+    }))
+    val aggs = Seq(count(lit(1)), count_distinct(struct(keyCols.map(col): _*))) ++
+      bounded.flatMap(k => Seq(org.apache.spark.sql.functions.min(col(k)),
+        org.apache.spark.sql.functions.max(col(k))))
+    val r = src.agg(aggs.head, aggs.tail: _*).head()
+    require(r.getLong(1) == r.getLong(0), "source has duplicate keys")
+    val lo = bounded.indices.map(i => 2 + 2 * i)
+    val candidates =
+      if (r.getLong(0) == 0L || lo.exists(r.isNullAt)) None
+      else if (bounded.isEmpty) Some(dlog.addActions.values.toSeq)
+      else Some(prunedAdds(bounded.zip(lo).map { case (k, i) =>
+        col(k) >= lit(r.get(i)) && col(k) <= lit(r.get(i + 1))
+      }.reduce(_ && _)))
+    (r.getLong(0), candidates)
+  }
+
+  /** Copy-on-write MERGE's candidate files for `src` (no pruning when no
+    * target row can match).
+    */
+  private[graft] def mergeCandidateAdds(spark: SparkSession, src: DataFrame,
+      keyCols: Seq[String]): Seq[AddFile] =
+    mergeSourceProfile(src, keyCols)._2.getOrElse(dlog.addActions.values.toSeq)
+
+  /** Upsert `source` into the table by equality on `keyCols`: target rows
+    * whose key appears in the source are REPLACED by the source row
+    * (whole-row update); source rows with no matching key are INSERTED.
+    * Source must not contain duplicate keys.
+    *
+    * `notMatchedBySourceDelete` adds delta-spark's third clause — WHEN NOT
+    * MATCHED BY SOURCE [AND condition] THEN DELETE: target rows whose key
+    * does NOT appear in the source (and that satisfy the optional
+    * condition) are deleted in the SAME commit, which is how sync-to-source
+    * / SCD-style pipelines retire rows the upstream dropped.
+    *
+    * Scale shape: touched files are found with a semi-join of the
+    * snapshot against the (usually broadcastable) distinct source keys —
+    * untouched files are never rewritten; touched files are rewritten
+    * without their matched rows; all source rows append as new files. One
+    * scan, no driver row materialization beyond the touched-file list. The
+    * not-matched-by-source clause necessarily widens the touched set to
+    * every file that may hold a deletable row — stats-pruned by the
+    * condition when one is given (delta-spark has the same asymmetry: the
+    * clause turns a source-sized merge into a target-sized one, which is
+    * why the condition matters at scale).
+    */
+  def merge(spark: SparkSession, source: DataFrame,
+      keyCols: Seq[String],
+      customMetadata: Map[String, JsonNode] = Map.empty,
+      schemaEvolution: Boolean = false,
+      notMatchedBySourceDelete: Boolean = false,
+      notMatchedBySourceCondition: Option[Column] = None): DeltaTable =
+    upsert(spark, source, keyCols, customMetadata, mergeOnRead = false,
+      schemaEvolution, notMatchedBySourceDelete, notMatchedBySourceCondition)
 
   /** Merge-on-read MERGE upsert: target rows whose key matches the source
     * are marked dead via a deletion vector — NO target file is rewritten —
@@ -1283,60 +1375,309 @@ final case class DeltaTable(
     * keys stops costing a near-full-table rewrite. CDF derives exact
     * `delete` rows (the replaced versions) + `insert` rows (the source)
     * from the entry's merge-on-read mode.
-    *
-    * Candidate files are pruned by the source's per-key min/max ranges
-    * before any scan: NULL keys never equi-join and min/max ignore NULLs,
-    * so range pruning is exact.
     */
   def mergeMergeOnRead(spark: SparkSession, source: DataFrame,
       keyCols: Seq[String],
-      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable = {
+      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable =
+    upsert(spark, source, keyCols, customMetadata, mergeOnRead = true)
+
+  private def upsert(spark: SparkSession, source: DataFrame, keyCols: Seq[String],
+      customMetadata: Map[String, JsonNode], mergeOnRead: Boolean,
+      schemaEvolution: Boolean = false, notMatchedBySourceDelete: Boolean = false,
+      notMatchedBySourceCondition: Option[Column] = None): DeltaTable = {
+    // a merge may update/delete matched target rows — removal-gated
     assertPreWrite(removesData = true)
     require(keyCols.nonEmpty, "merge requires key columns")
+    // the source plan is reused by several jobs (profile, touched-file
+    // discovery via its keys, data write) — cache so a 100 GB source is
+    // computed once, not once per job
     val src = source.cache()
     try {
-      // ONE source pass: row count, duplicate-key check, per-key min/max
-      val srcAggs = Seq(count(lit(1)),
-        count_distinct(struct(keyCols.map(col): _*))) ++
-        keyCols.flatMap(k => Seq(org.apache.spark.sql.functions.min(col(k)),
-          org.apache.spark.sql.functions.max(col(k))))
-      val srcRow = src.agg(srcAggs.head, srcAggs.tail: _*).head()
-      val srcTotal = srcRow.getLong(0)
-      require(srcRow.getLong(1) == srcTotal, "source has duplicate keys")
+      val (srcTotal, bounded) = mergeSourceProfile(src, keyCols)
       val keys = src.select(keyCols.map(col): _*).distinct()
+      val keyMatch: DataFrame => DataFrame = _.join(broadcast(keys), keyCols, "left_semi")
+      // matched distinct KEYS are the update metric: counting rows
+      // over-counts when the target holds duplicate rows per key (legal —
+      // only the source is checked) and could drive numInserted negative
+      val keyCount = count_distinct(struct(keyCols.map(col): _*))
 
-      val candidateAdds =
-        if (keyCols.indices.exists(i => srcRow.isNullAt(2 + 2 * i)))
-          Seq.empty[AddFile] // empty/all-NULL-key source matches nothing
-        else {
-          val rangePred = keyCols.zipWithIndex.map { case (k, i) =>
-            col(k) >= lit(srcRow.get(2 + 2 * i)) && col(k) <= lit(srcRow.get(3 + 2 * i))
-          }.reduce(_ && _)
-          prunedAdds(rangePred)
-        }
-
-      // matched distinct KEYS (merge's metric unit; numDead is physical
-      // rows and over-counts when the target holds duplicates per key)
-      // come from the cached matched rows — one target pass total
-      val (dvAdds, fullDead, numDead, numUpdated) =
-        morMarkWith[Long](spark, candidateAdds,
-          _.join(broadcast(keys), keyCols, "left_semi"),
-          (m, n) =>
-            if (n == 0L) 0L
-            else m.agg(count_distinct(struct(keyCols.map(col): _*))).head().getLong(0))
-
-      val sourceAligned = regenerate(src).select(dlog.schema.fieldNames.toIndexedSeq.map(col): _*)
-      validateConstraints(sourceAligned)
-      val sourceAdds = writeData(sourceAligned, dlog.versionToWrite, dlog.partitionColumns)
-      val numInserted = srcTotal - numUpdated
+      // schema evolution (delta's withSchemaEvolution): source-only
+      // columns join the table schema (nullable; fresh physical names on
+      // mapped tables), copied/kept rows null-backfill, and the evolved
+      // metadata rides the SAME merge commit — atomic like delta's
+      val evolved: StructType =
+        if (!schemaEvolution) dlog.schema
+        else ColumnMapping.annotateForWrite(Some(dlog.schema), mappingActive,
+          DeltaLog.mergeSchemas(dlog.schema, source.schema))
+      val schemaChanged = evolved.fieldNames.length != dlog.schema.fieldNames.length
+      val wMapping = ColumnMapping.logicalToPhysical(evolved)
+      def alignEvolved(df: DataFrame): DataFrame =
+        df.select(evolved.fields.toIndexedSeq.map(f =>
+          (if (df.columns.contains(f.name)) col(f.name)
+           else lit(null).cast(f.dataType)).as(f.name)): _*)
+      // all source rows land as new files (updates + inserts); CHECK
+      // constraints gate them like any other write (src is cached, so the
+      // validation job is a cache scan)
+      val sourceAligned =
+        if (schemaEvolution) alignEvolved(regenerate(src))
+        else regenerate(src).select(dlog.schema.fieldNames.toIndexedSeq.map(col): _*)
+      def writeSource(): Seq[AddFile] = {
+        validateConstraints(sourceAligned)
+        writeData(sourceAligned, dlog.versionToWrite, dlog.partitionColumns, wMapping)
+      }
       val predicate = keyCols.map(k => s"target.$k = source.$k").mkString(" AND ")
-      commitOrRebase(DeltaLogEntry.mergeMergeOnReadTable(predicate, dvAdds, fullDead,
-          sourceAdds, dlog.version, numUpdated, numInserted, numDead,
-          specDvRemoves(dvAdds))
-        .withExtraCommitInfo(customMetadata), candidateAdds.map(_.path).toSet,
-        Some(None))
+
+      val (entry, readPaths) =
+        if (mergeOnRead) {
+          val candidates = bounded.getOrElse(Seq.empty)
+          val (dvAdds, fullDead, numDead, matched) = morMarkWith(spark, candidates,
+            keyMatch, _.agg(keyCount).head().getLong(0))
+          val numUpdated = matched.getOrElse(0L)
+          (DeltaLogEntry.mergeMergeOnReadTable(predicate, dvAdds, fullDead, writeSource(),
+            dlog.version, numUpdated, srcTotal - numUpdated, numDead,
+            specDvRemoves(dvAdds)), candidates.map(_.path).toSet)
+        } else {
+          // the not-matched-by-source DELETE widens the touched set to
+          // every file that may own a deletable row; its optional
+          // condition stats-prunes that set like DELETE's candidates
+          val live = dlog.addActions.values.toSeq
+          val (touched, numUpdated) = touchedFiles(spark, bounded.getOrElse(live),
+            keyMatch, keyCount, also =
+              if (!notMatchedBySourceDelete) Seq.empty
+              else notMatchedBySourceCondition.map(prunedAdds).getOrElse(live))
+          val nmbsCond: Column =
+            notMatchedBySourceCondition.map(c => coalesce(c, lit(false)))
+              .getOrElse(lit(true))
+
+          // rewrite touched files without their matched rows (and, under
+          // the not-matched-by-source clause, without its deletable rows)
+          var numNmbsDeleted = 0L
+          val keptAdds: Seq[AddFile] =
+            if (touched.isEmpty) Seq.empty
+            else {
+              val notMatched = scanAdds(spark, touched).join(broadcast(keys), keyCols, "left_anti")
+              val kept =
+                if (notMatchedBySourceDelete) notMatched.filter(not(nmbsCond))
+                else notMatched
+              val written = writeData(if (schemaChanged) alignEvolved(kept) else kept,
+                dlog.versionToWrite, dlog.partitionColumns, wMapping)
+              if (notMatchedBySourceDelete)
+                numNmbsDeleted = notMatched.filter(nmbsCond).count()
+              written
+            }
+          val sourceAdds = writeSource()
+
+          // change data feed (delta's cdc): matched target rows are
+          // update_preimage, their replacing source rows update_postimage,
+          // unmatched source rows insert — exact row-level changes instead
+          // of the feed's file-level reconstruction
+          var cdc: Seq[AddCDCFile] = Seq.empty
+          if (cdfEnabled) {
+            val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+            if (touched.nonEmpty && notMatchedBySourceDelete) {
+              val deletable0 = scanAdds(spark, touched)
+                .join(broadcast(keys), keyCols, "left_anti").filter(nmbsCond)
+              val deletable =
+                if (schemaChanged) alignEvolved(deletable0) else deletable0
+              frames += deletable.withColumn("_change_type", lit("delete"))
+            }
+            if (touched.nonEmpty) {
+              val matchedTarget0 = keyMatch(scanAdds(spark, touched))
+              val matchedTarget =
+                if (schemaChanged) alignEvolved(matchedTarget0) else matchedTarget0
+              frames += matchedTarget.withColumn("_change_type", lit("update_preimage"))
+              val matchedKeys = matchedTarget.select(keyCols.map(col): _*).distinct()
+              frames += sourceAligned.join(broadcast(matchedKeys), keyCols, "left_semi")
+                .withColumn("_change_type", lit("update_postimage"))
+              frames += sourceAligned.join(broadcast(matchedKeys), keyCols, "left_anti")
+                .withColumn("_change_type", lit("insert"))
+            } else
+              frames += sourceAligned.withColumn("_change_type", lit("insert"))
+            cdc = writeChangeData(frames.reduce(_.unionByName(_)), dlog.versionToWrite)
+          }
+
+          // numTargetRowsRemoved is the row-based complement to the
+          // key-based update count: live rows of the touched files (stats
+          // minus DV cardinality, so rows earlier commits already deleted
+          // are not counted again) minus the rows copied
+          val numCopied = rowsIn(keptAdds)
+          val entry = DeltaLogEntry.mergeTable(predicate, touched,
+            keptAdds ++ sourceAdds, dlog.version, numUpdated, srcTotal - numUpdated,
+            numCopied, numTargetRowsRemoved = statsLiveRows(touched) - numCopied,
+            numTargetRowsDeleted = numNmbsDeleted)
+          val withMeta =
+            if (!schemaChanged) entry.actions
+            else dlog.latestMetadata.map(m =>
+              m.copy(schemaString = evolved.json) +: entry.actions)
+              .getOrElse(entry.actions)
+          (DeltaLogEntry(withMeta ++ cdc), live.map(_.path).toSet)
+        }
+      commitOrRebase(entry.withExtraCommitInfo(customMetadata), readPaths, Some(None))
     } finally src.unpersist()
   }
+
+  /** MERGE with delta-spark's clause surface for NARROW sources: matched
+    * target rows get a column-wise SET applied (instead of whole-row
+    * replacement — the CDC-feed shape where the source carries only the
+    * key plus changed columns), and unmatched source rows optionally
+    * INSERT via explicit value expressions (delta's
+    * `whenNotMatchedInsert(values)`; unnamed table columns null-fill).
+    *
+    * SET / insert expressions reference SOURCE columns as `s.<name>` and
+    * (for SET) target columns by their bare name — the same
+    * qualification delta's SQL MERGE uses.
+    *
+    * Scale shape identical to [[merge]]: touched files found by a
+    * semi-join against the (broadcastable) source keys, only those files
+    * rewritten, inserts appended as new files, one atomic commit.
+    *
+    * @param matchedUpdateCondition delta's `whenMatchedUpdate(condition)`:
+    *        the SET applies only to matched rows meeting it (evaluated
+    *        over the t/s join, like the delete condition); rows matched
+    *        but failing it copy through unchanged. `numRowsUpdated` still
+    *        reports matched keys — the file-rewrite granularity.
+    */
+  def mergeWhenMatchedUpdate(spark: SparkSession, source: DataFrame,
+      keyCols: Seq[String], set: Map[String, Column],
+      insertValues: Option[Map[String, Column]] = None,
+      matchedDeleteCondition: Option[Column] = None,
+      customMetadata: Map[String, JsonNode] = Map.empty,
+      matchedUpdateCondition: Option[Column] = None): DeltaTable = {
+    assertPreWrite(removesData = true)
+    require(keyCols.nonEmpty, "mergeWhenMatchedUpdate requires key columns")
+    // any single clause stands alone: SET-only, matched-DELETE-only (a
+    // keyed anti-delete), or INSERT-only (insert-if-absent); SQL MERGE
+    // statements arrive in all three degenerate shapes
+    require(set.nonEmpty || matchedDeleteCondition.isDefined ||
+      insertValues.isDefined,
+      "merge needs at least one clause: SET, matched DELETE, or NOT MATCHED INSERT")
+    checkSet(set, keyCols.map(_ -> "SET must not touch the merge keys").toMap)
+    val src = source.cache()
+    try {
+      val candidates = mergeSourceProfile(src, keyCols)._2
+        .getOrElse(dlog.addActions.values.toSeq)
+      val keys = src.select(keyCols.map(col): _*).distinct()
+      // an insert-only merge (no SET, no matched DELETE) never rewrites the
+      // target: matched keys are only the anti-join guard for the insert
+      val (touched, matchedKeys) =
+        if (set.isEmpty && matchedDeleteCondition.isEmpty) (Seq.empty[AddFile], 0L)
+        else touchedFiles(spark, candidates, _.join(broadcast(keys), keyCols, "left_semi"),
+          count_distinct(struct(keyCols.map(col): _*)))
+      val numUpdated = if (set.nonEmpty) matchedKeys else 0L
+      // a conditional UPDATE clause gates the SET inside the rewrite; rows
+      // that are matched but fail it copy through unchanged (numUpdated
+      // still reports matched keys — the file-level rewrite granularity)
+      val updCond: Column = matchedUpdateCondition
+        .map(c => coalesce(c, lit(false))).getOrElse(lit(true))
+
+      // rewrite touched files with the SET applied to matched rows
+      def applied(touchedDF: DataFrame): DataFrame = {
+        // target aliased "t", source "s": SET expressions qualify source
+        // columns as s.<name>; the rebuild reads target columns via t.<…>
+        // so a source carrying same-named value columns never ambiguates
+        val joined = touchedDF.alias("t")
+          .join(broadcast(src.withColumn("_graft_matched", lit(true)).alias("s")),
+            keyCols, "left")
+        val matched = coalesce(col("s._graft_matched"), lit(false))
+        // delta's whenMatchedDelete clause: a matched row meeting the
+        // condition (evaluated over the t/s join, so it can compare both
+        // sides) is DROPPED from the rewrite instead of updated
+        val kept = matchedDeleteCondition match {
+          case None => joined
+          case Some(c) => joined.filter(not(matched && coalesce(c, lit(false))))
+        }
+        kept.select(setProjection(set, Some(matched && updCond),
+          n => if (keyCols.contains(n)) col(n) else col(s"t.$n")): _*)
+      }
+      val newAdds: Seq[AddFile] =
+        if (touched.isEmpty) Seq.empty
+        else {
+          val rewritten = regenerate(applied(scanAdds(spark, touched)))
+          validateConstraints(rewritten)
+          writeData(rewritten, dlog.versionToWrite, dlog.partitionColumns)
+        }
+      // optional WHEN NOT MATCHED INSERT from explicit value expressions
+      var numInserted = 0L
+      var insertedRows: Option[DataFrame] = None
+      val insertAdds: Seq[AddFile] = insertValues match {
+        case None => Seq.empty
+        case Some(values) =>
+          // scale shape identical to merge(): the broadcast sides are
+          // bounded by the (small, cached) SOURCE. Matched source keys
+          // come from the stats-pruned candidate files semi-joined with
+          // the broadcast source keys — the target is streamed; then the
+          // anti-join's build side is that matched-key set (⊆ source
+          // keys). Broadcasting the TARGET's distinct keys instead would
+          // scan every live file and ship table-cardinality keys to the
+          // driver — an OOM at 100 TB.
+          val matchedKeys = scanAdds(spark, candidates)
+            .join(broadcast(keys), keyCols, "left_semi")
+            .select(keyCols.map(col): _*).distinct()
+          val unmatched = src.alias("s")
+            .join(broadcast(matchedKeys), keyCols, "left_anti")
+          val row = unmatched.select(dlog.schema.fields.toIndexedSeq.map { f =>
+            values.get(f.name)
+              .orElse(keyCols.find(_ == f.name).map(col))
+              .getOrElse(lit(null)).cast(f.dataType).as(f.name)
+          }: _*)
+          numInserted = row.count()
+          if (numInserted == 0) Seq.empty
+          else {
+            insertedRows = Some(row)
+            validateConstraints(row)
+            writeData(regenerate(row), dlog.versionToWrite, dlog.partitionColumns)
+          }
+      }
+
+      var cdc: Seq[AddCDCFile] = Seq.empty
+      // inserted rows are changes too (merge()'s feed has them; so must
+      // the clause path's)
+      if (cdfEnabled && touched.isEmpty) insertedRows.foreach { r =>
+        cdc = writeChangeData(r.withColumn("_change_type", lit("insert")),
+          dlog.versionToWrite)
+      }
+      if (cdfEnabled && touched.nonEmpty) {
+        // one t/s inner join partitions the matched rows into updated
+        // (pre+post pairs) and clause-deleted (delete rows only)
+        val joinedTS = scanAdds(spark, touched).alias("t")
+          .join(broadcast(src.alias("s")), keyCols, "inner")
+        val delCond = matchedDeleteCondition
+          .map(c => coalesce(c, lit(false))).getOrElse(lit(false))
+        def targets(df: DataFrame): DataFrame =
+          df.select(dlog.schema.fieldNames.toIndexedSeq.map(n =>
+            (if (keyCols.contains(n)) col(n) else col(s"t.$n")).as(n)): _*)
+        // rows matched but failing a conditional UPDATE copy through
+        // unchanged — they are not changes, so they emit no CDC rows
+        val updatedT = targets(joinedTS.filter(not(delCond) && updCond))
+        val del = targets(joinedTS.filter(delCond))
+          .withColumn("_change_type", lit("delete"))
+        val changes =
+          if (set.isEmpty) del // delete-only merge: no update images exist
+          else {
+            val pre = updatedT.withColumn("_change_type", lit("update_preimage"))
+            val post = applied(updatedT)
+              .withColumn("_change_type", lit("update_postimage"))
+            pre.unionByName(post).unionByName(del)
+          }
+        val withInserts = insertedRows
+          .map(r => changes.unionByName(
+            r.withColumn("_change_type", lit("insert"))))
+          .getOrElse(changes)
+        cdc = writeChangeData(withInserts, dlog.versionToWrite)
+      }
+
+      val predicate = keyCols.map(k => s"target.$k = source.$k").mkString(" AND ")
+      val numCopied = rowsIn(newAdds)
+      val removed = statsLiveRows(touched) - numCopied
+      val entry = DeltaLogEntry.mergeTable(predicate, touched,
+          newAdds ++ insertAdds, dlog.version, numUpdated, numInserted,
+          numCopied, numTargetRowsRemoved = removed,
+          numTargetRowsDeleted = if (matchedDeleteCondition.isDefined) removed else 0L)
+      commitOrRebase(DeltaLogEntry(entry.actions ++ cdc).withExtraCommitInfo(customMetadata),
+        dlog.addActions.keySet.toSet, Some(None))
+    } finally src.unpersist()
+  }
+
 
   // ------------------------------------------------------------------
   // CHECK constraints — write-time data-quality guards stored in table
@@ -2267,20 +2608,6 @@ final case class DeltaTable(
   // the reference only has whole-table overwrite).
   // ------------------------------------------------------------------
 
-  /** Atomically replace the rows matching `predicate` with `df`: the
-    * delete of the matching rows (copy-on-write, touched files only) and
-    * the append of the replacement land in ONE commit, so readers never
-    * see the gap a delete-then-append pair would expose.
-    *
-    * Every row of `df` must satisfy `predicate` (checked with one
-    * validation job) — the scoping contract that makes concurrent
-    * replaceWhere commits on disjoint predicates logically independent.
-    *
-    * Scale shape: phase 1 prunes candidate files driver-side via
-    * partition values + min/max stats; on a table partitioned by the
-    * predicate column this touches no data file at all (partition-level
-    * replacement, the classic backfill pattern).
-    */
   /** Dynamic partition overwrite (delta-spark's
     * `partitionOverwriteMode=dynamic`): atomically replace EXACTLY the
     * partitions the incoming frame lands rows in, leaving every other
@@ -2322,12 +2649,26 @@ final case class DeltaTable(
     commitOrRebase(entry, toRemove.map(_.path).toSet)
   }
 
+  /** Atomically replace the rows matching `predicate` with `df`: the
+    * delete of the matching rows (copy-on-write, touched files only) and
+    * the append of the replacement land in ONE commit, so readers never
+    * see the gap a delete-then-append pair would expose.
+    *
+    * Every row of `df` must satisfy `predicate` (checked with one
+    * validation job) — the scoping contract that makes concurrent
+    * replaceWhere commits on disjoint predicates logically independent.
+    *
+    * Scale shape: the row-level DML pipeline's candidates are pruned
+    * driver-side via partition values + min/max stats; on a table partitioned by the
+    * predicate column this touches no data file at all (partition-level
+    * replacement, the classic backfill pattern).
+    */
   def replaceWhere(spark: SparkSession, predicate: Column, df: DataFrame,
       customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable = {
     assertPreWrite(removesData = true)
     require(!dlog.isEmpty, "replaceWhere requires an existing table")
     // all cheap validation BEFORE the copy-on-write rewrite, so a bad
-    // replacement never pays for (and orphans) a phase-2 rewrite.
+    // replacement never pays for (and orphans) a copy-on-write rewrite.
     // Strict no-evolution contract: same field names and types as the
     // table (nullability may tighten — a non-nullable replacement value
     // in a nullable column is always safe); the committed metadata keeps
@@ -2361,587 +2702,16 @@ final case class DeltaTable(
          else s"or nulls in non-nullable table columns ${mustBeNullFree.mkString(",")}"))
     validateConstraints(aligned)
 
-    val adds = dlog.addActions
-    val addByCanonical: Map[String, AddFile] = adds.values.map { a =>
-      Location.canonical(Location.resolve(a.path, loc, conf).uri) -> a
-    }.toMap
-    val candidateAdds = prunedAdds(predicate)
-    val touchedCanonical: Set[String] =
-      scanAddsWithMeta(spark, candidateAdds)
-        .filter(predicate)
-        .select(col(DeltaScan.MetaPath).as("f")).distinct()
-        .collect().map(r => Location.canonical(r.getString(0))).toSet
-    val touchedAdds = addByCanonical.view.filterKeys(touchedCanonical).values.toSeq
-
-    var numCopied = 0L
-    var numDeleted = 0L
-    val keptAdds: Seq[AddFile] =
-      if (touchedAdds.isEmpty) Seq.empty
-      else {
-        val touchedDF = scanAdds(spark, touchedAdds)
-        // live totals from log stats (see delete()'s liveRowCount note):
-        // saves the count-job's full re-read of the touched files
-        val totalTouched = liveRowCount(spark, touchedAdds)
-        val kept = touchedDF.filter(not(coalesce(predicate, lit(false))))
-        val written = writeData(kept, dlog.versionToWrite, dlog.partitionColumns)
-        numCopied = written.flatMap(_.stats).map(parseNumRecords).sum
-        numDeleted = totalTouched - numCopied
-        written
-      }
+    val candidates = prunedAdds(predicate)
+    val (touched, keptAdds, numDeleted, _) = rewriteWithout(spark, candidates,
+      coalesce(predicate, lit(false)), changeData = false)
     val newAdds = writeData(aligned, dlog.versionToWrite, dlog.partitionColumns)
     val entry = DeltaLogEntry.replaceWhereTable(predicate.toString,
-        dlog.partitionColumns, touchedAdds, keptAdds ++ newAdds, dlog.version,
-        numDeleted, numCopied, Some(dlog.schema),
+        dlog.partitionColumns, touched, keptAdds ++ newAdds, dlog.version,
+        numDeleted, rowsIn(keptAdds), Some(dlog.schema),
         dlog.latestMetadata.map(_.configuration).getOrElse(Map.empty))
       .withExtraCommitInfo(customMetadata)
-    commitOrRebase(entry, candidateAdds.map(_.path).toSet, Some(Some(predicate)))
-  }
-
-  // ------------------------------------------------------------------
-  // UPDATE — copy-on-write in-place mutation. Same two-phase shape as
-  // DELETE (the reference's only row-level mutation, xdlake/__init__
-  // .py:259-315): files with no matching row are never rewritten.
-  // ------------------------------------------------------------------
-
-  /** Set `set` columns to their new expressions on rows matching `where`;
-    * all other rows and columns are copied unchanged.
-    *
-    * Scale shape: phase-1 candidates are pre-pruned driver-side by
-    * partition values + min/max stats before any Spark plan exists, the
-    * probe scan reads only predicate columns with pushed filters, and
-    * phase 2 rewrites ONLY the touched files — an update matching 1 file
-    * out of 10^5 rewrites 1 file. New values are evaluated per-row inside
-    * whole-stage codegen (`CASE WHEN pred THEN expr ELSE old END`).
-    */
-  def update(spark: SparkSession, where: Option[Column],
-      set: Map[String, Column],
-      customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable = {
-    assertPreWrite(removesData = true)
-    require(set.nonEmpty, "update requires at least one SET column")
-    val fields = dlog.schema.fields.map(f => f.name -> f.dataType).toMap
-    set.keys.foreach(k => require(fields.contains(k), s"unknown SET column: $k"))
-    set.keys.foreach(k => require(!dlog.partitionColumns.contains(k),
-      s"cannot UPDATE partition column $k (delete + rewrite instead)"))
-    set.keys.foreach(k => require(!generatedColumns.contains(k),
-      s"cannot UPDATE generated column $k (update its sources instead)"))
-    val pred = where.getOrElse(lit(true))
-    val adds = dlog.addActions
-
-    val addByCanonical: Map[String, AddFile] = adds.values.map { a =>
-      Location.canonical(Location.resolve(a.path, loc, conf).uri) -> a
-    }.toMap
-
-    val candidateAdds =
-      where.map(prunedAdds).getOrElse(adds.values.toSeq)
-    val touchedCanonical: Set[String] =
-      scanAddsWithMeta(spark, candidateAdds)
-        .filter(pred)
-        .select(col(DeltaScan.MetaPath).as("f")).distinct()
-        .collect().map(r => Location.canonical(r.getString(0))).toSet
-    val touchedAdds = addByCanonical.view.filterKeys(touchedCanonical).values.toSeq
-
-    var numUpdated = 0L
-    var numCopied = 0L
-    var cdc: Seq[AddCDCFile] = Seq.empty
-    val newAdds: Seq[AddFile] =
-      if (touchedAdds.isEmpty) Seq.empty
-      else {
-        val touchedDF = scanAdds(spark, touchedAdds)
-        // one job for both metric counts (null predicate = row not matched)
-        val counts = touchedDF.agg(count(lit(1)).as("_n"),
-          sum(when(coalesce(pred, lit(false)), 1L).otherwise(0L)).as("_m")).head()
-        numUpdated = counts.getLong(1)
-        numCopied = counts.getLong(0) - numUpdated
-        val matched = coalesce(pred, lit(false))
-        def applySet(df: DataFrame, condition: Column): DataFrame =
-          regenerate(df.select(dlog.schema.fields.toIndexedSeq.map { f =>
-            set.get(f.name) match {
-              case Some(v) =>
-                // cast to the nullability-RELAXED shape: casting to a type
-                // with non-nullable nested fields is an analysis error for
-                // nullable inputs; NOT NULL is enforced by the row-level
-                // validateConstraints check instead
-                when(condition, v.cast(graft.log.DeltaLog.typeShape(f.dataType)))
-                  .otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*))
-        val rewritten = applySet(touchedDF, matched)
-        // CHECK constraints must hold for the post-update rows (untouched
-        // files were validated when written)
-        validateConstraints(rewritten)
-        // change data feed: the matched rows ARE the commit's exact
-        // changes — old values as update_preimage, new as update_postimage
-        // (delta's cdc shape; the feed's reconstruction fallback would
-        // report every unchanged row of a rewritten file)
-        if (cdfEnabled && numUpdated > 0L) {
-          val matchedRows = touchedDF.filter(matched)
-          val pre = matchedRows.withColumn("_change_type", lit("update_preimage"))
-          val post = applySet(matchedRows, lit(true))
-            .withColumn("_change_type", lit("update_postimage"))
-          cdc = writeChangeData(pre.unionByName(post), dlog.versionToWrite)
-        }
-        writeData(rewritten, dlog.versionToWrite, dlog.partitionColumns)
-      }
-
-    val predicateText = where.map(_.toString).getOrElse("true")
-    val entry = DeltaLogEntry.updateTable(predicateText, touchedAdds, newAdds,
-      dlog.version, numUpdated, numCopied).withExtraCommitInfo(customMetadata)
-    commitOrRebase(DeltaLogEntry(entry.actions ++ cdc),
-      candidateAdds.map(_.path).toSet, Some(where))
-  }
-
-  // ------------------------------------------------------------------
-  // MERGE — copy-on-write upsert by key (op name reserved by the
-  // reference; delta-rs merge output is read back in its
-  // tests/test_compatibility.py:132-154).
-  // ------------------------------------------------------------------
-
-
-  /** Merge phase-1 candidate files, stats-pruned by the SOURCE's key
-    * range: with a single comparable merge key, only files whose min/max
-    * overlap `[min(source key), max(source key)]` can own matched rows —
-    * on a 100 TB table a bounded-key source (recent ids, one tenant's
-    * range) turns the phase-1 scan from table-sized to range-sized.
-    * Multi-key or non-comparable merges fall back to every live file
-    * (conservative, never wrong). The one-row min/max agg runs on the
-    * already-cached source.
-    */
-  /** The single merge-key column when its type supports stats-range
-    * pruning of the phase-1 candidate set; None for composite keys or
-    * unprunable types.
-    */
-  private[graft] def mergePrunableKey(keyCols: Seq[String]): Option[String] =
-    keyCols match {
-      case Seq(k) => dlog.schema(k).dataType match {
-        case _: org.apache.spark.sql.types.NumericType => Some(k)
-        case org.apache.spark.sql.types.StringType => Some(k)
-        case org.apache.spark.sql.types.DateType => Some(k)
-        case _ => None
-      }
-      case _ => None
-    }
-
-  /** Candidate adds for the given source key bounds (None = empty or
-    * all-null source: nothing prunes).
-    */
-  private[graft] def mergeCandidateAddsFromBounds(key: Option[String],
-      bounds: Option[(Any, Any)]): Seq[AddFile] = (key, bounds) match {
-    case (Some(k), Some((lo, hi))) => prunedAdds(col(k) >= lit(lo) && col(k) <= lit(hi))
-    case _ => dlog.addActions.values.toSeq
-  }
-
-  private[graft] def mergeCandidateAdds(spark: SparkSession, src: DataFrame,
-      keyCols: Seq[String]): Seq[AddFile] = {
-    val k = mergePrunableKey(keyCols)
-      .getOrElse(return dlog.addActions.values.toSeq)
-    val mm = src.agg(org.apache.spark.sql.functions.min(col(k)),
-      org.apache.spark.sql.functions.max(col(k))).head()
-    mergeCandidateAddsFromBounds(Some(k),
-      if (mm.isNullAt(0)) None else Some((mm.get(0), mm.get(1))))
-  }
-
-  /** Upsert `source` into the table by equality on `keyCols`: target rows
-    * whose key appears in the source are REPLACED by the source row
-    * (whole-row update); source rows with no matching key are INSERTED.
-    * Source must not contain duplicate keys.
-    *
-    * `notMatchedBySourceDelete` adds delta-spark's third clause — WHEN NOT
-    * MATCHED BY SOURCE [AND condition] THEN DELETE: target rows whose key
-    * does NOT appear in the source (and that satisfy the optional
-    * condition) are deleted in the SAME commit, which is how sync-to-source
-    * / SCD-style pipelines retire rows the upstream dropped.
-    *
-    * Scale shape: phase 1 discovers touched files with a semi-join of the
-    * snapshot against the (usually broadcastable) distinct source keys —
-    * untouched files are never rewritten; phase 2 rewrites only kept rows
-    * of touched files; inserts append as new files. One scan, no driver
-    * row materialization beyond the touched-file list. The
-    * not-matched-by-source clause necessarily widens the touched set to
-    * every file that may hold a deletable row — stats-pruned by the
-    * condition when one is given (delta-spark has the same asymmetry: the
-    * clause turns a source-sized merge into a target-sized one, which is
-    * why the condition matters at scale).
-    */
-  def merge(spark: SparkSession, source: DataFrame,
-      keyCols: Seq[String],
-      customMetadata: Map[String, JsonNode] = Map.empty,
-      schemaEvolution: Boolean = false,
-      notMatchedBySourceDelete: Boolean = false,
-      notMatchedBySourceCondition: Option[Column] = None): DeltaTable = {
-    // a merge may update/delete matched target rows — removal-gated
-    assertPreWrite(removesData = true)
-    require(keyCols.nonEmpty, "merge requires key columns")
-    // the source plan is reused by three jobs (uniqueness check, touched-file
-    // discovery via its keys, data write) — cache so a 100 GB source is
-    // computed once, not once per job
-    val src = source.cache()
-    try {
-      // ONE pass over the source: row count + distinct-key count
-      // (duplicate-key check) + the prunable key's min/max — the bounds
-      // previously cost mergeCandidateAdds a second full source
-      // aggregation job (guide §1.2: at a 100 GB source that pass is
-      // pure waste; the fused aggregate is free)
-      val pk = mergePrunableKey(keyCols)
-      val aggCols = Seq(count(lit(1)).as("_n"),
-        count_distinct(struct(keyCols.map(col): _*)).as("_k")) ++
-        pk.map(k => Seq(org.apache.spark.sql.functions.min(col(k)).as("_klo"),
-          org.apache.spark.sql.functions.max(col(k)).as("_khi")))
-          .getOrElse(Nil)
-      val srcAgg = src.agg(aggCols.head, aggCols.tail: _*).head()
-      val srcTotal = srcAgg.getLong(0)
-      require(srcAgg.getLong(1) == srcTotal, "source has duplicate keys")
-      val srcBounds: Option[(Any, Any)] =
-        if (pk.isDefined && !srcAgg.isNullAt(2))
-          Some((srcAgg.get(2), srcAgg.get(3)))
-        else None
-      val keys = src.select(keyCols.map(col): _*).distinct()
-
-      val adds = dlog.addActions
-      val addByCanonical: Map[String, AddFile] = adds.values.map { a =>
-        Location.canonical(Location.resolve(a.path, loc, conf).uri) -> a
-      }.toMap
-
-      // schema evolution (delta's withSchemaEvolution): source-only
-      // columns join the table schema (nullable; fresh physical names on
-      // mapped tables), copied/kept rows null-backfill, and the evolved
-      // metadata rides the SAME merge commit — atomic like delta's
-      val evolved: StructType =
-        if (!schemaEvolution) dlog.schema
-        else ColumnMapping.annotateForWrite(Some(dlog.schema), mappingActive,
-          DeltaLog.mergeSchemas(dlog.schema, source.schema))
-      val schemaChanged = evolved.fieldNames.length != dlog.schema.fieldNames.length
-      val wMapping = ColumnMapping.logicalToPhysical(evolved)
-      def alignEvolved(df: DataFrame): DataFrame =
-        df.select(evolved.fields.toIndexedSeq.map(f =>
-          (if (df.columns.contains(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name)): _*)
-
-      // phase 1, one job: files owning rows whose key matches a source key
-      // (the file path rides the scan as a projected _metadata column, so
-      // it survives the join) AND the matched distinct-key count.
-      // Counting KEYS, not rows,
-      // keeps the metrics right when the target holds duplicate rows per
-      // key (legal — only the source is checked): rows-based counting
-      // over-counted updates and could drive numInserted negative.
-      // phase-1 scan bounded by the source's key range (bounds rode the
-      // srcAgg job above) — files outside it cannot match
-      val p1Candidates = mergeCandidateAddsFromBounds(pk, srcBounds)
-      val p1 = scanAddsWithMeta(spark, p1Candidates)
-        .drop(DeltaScan.MetaRow)
-        .withColumnRenamed(DeltaScan.MetaPath, "_graft_file")
-        .join(broadcast(keys), keyCols, "left_semi")
-      val p1Row = p1.agg(collect_set(col("_graft_file")).as("_files"),
-        count_distinct(struct(keyCols.map(col): _*)).as("_mk")).head()
-      val matchedCanonical: Set[String] =
-        p1Row.getSeq[String](0).map(Location.canonical).toSet
-      val numUpdated = p1Row.getLong(1)
-      // not-matched-by-source DELETE widens the touched set to every file
-      // that may own a deletable row; the optional condition stats-prunes
-      // that set driver-side exactly like DELETE's phase 1
-      val nmbsCanonical: Set[String] =
-        if (!notMatchedBySourceDelete) Set.empty
-        else notMatchedBySourceCondition.map(prunedAdds)
-          .getOrElse(adds.values.toSeq)
-          .map(a => Location.canonical(Location.resolve(a.path, loc, conf).uri))
-          .toSet
-      val touchedCanonical = matchedCanonical ++ nmbsCanonical
-      val touchedAdds = addByCanonical.view.filterKeys(touchedCanonical).values.toSeq
-      val nmbsCond: Column =
-        notMatchedBySourceCondition.map(c => coalesce(c, lit(false)))
-          .getOrElse(lit(true))
-
-      // phase 2: rewrite touched files without their matched rows (and,
-      // under the not-matched-by-source clause, without its deletable rows)
-      var numCopied = 0L
-      var numNmbsDeleted = 0L
-      val keptAdds: Seq[AddFile] =
-        if (touchedAdds.isEmpty) Seq.empty
-        else {
-          val touchedDF = scanAdds(spark, touchedAdds)
-          val notMatched = touchedDF.join(broadcast(keys), keyCols, "left_anti")
-          val kept =
-            if (notMatchedBySourceDelete) notMatched.filter(not(nmbsCond))
-            else notMatched
-          val keptAligned = if (schemaChanged) alignEvolved(kept) else kept
-          val written = writeData(keptAligned, dlog.versionToWrite,
-            dlog.partitionColumns, wMapping)
-          numCopied = written.flatMap(_.stats).map(parseNumRecords).sum
-          if (notMatchedBySourceDelete)
-            numNmbsDeleted = notMatched.filter(nmbsCond).count()
-          written
-        }
-
-      // all source rows land as new files (updates + inserts); CHECK
-      // constraints gate them like any other write (src is cached, so
-      // the validation job is a cache scan)
-      val sourceAligned =
-        if (schemaEvolution) alignEvolved(regenerate(src))
-        else regenerate(src).select(dlog.schema.fieldNames.toIndexedSeq.map(col): _*)
-      validateConstraints(sourceAligned)
-      val sourceAdds = writeData(sourceAligned, dlog.versionToWrite,
-        dlog.partitionColumns, wMapping)
-      val numInserted = srcTotal - numUpdated
-
-      // change data feed (delta's cdc): matched target rows are
-      // update_preimage, their replacing source rows update_postimage,
-      // unmatched source rows insert — exact row-level changes instead of
-      // the feed's file-level reconstruction
-      var cdc: Seq[AddCDCFile] = Seq.empty
-      if (cdfEnabled) {
-        val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        if (touchedAdds.nonEmpty && notMatchedBySourceDelete) {
-          val deletable0 = scanAdds(spark, touchedAdds)
-            .join(broadcast(keys), keyCols, "left_anti").filter(nmbsCond)
-          val deletable =
-            if (schemaChanged) alignEvolved(deletable0) else deletable0
-          frames += deletable.withColumn("_change_type", lit("delete"))
-        }
-        if (touchedAdds.nonEmpty) {
-          val matchedTarget0 = scanAdds(spark, touchedAdds)
-            .join(broadcast(keys), keyCols, "left_semi")
-          val matchedTarget =
-            if (schemaChanged) alignEvolved(matchedTarget0) else matchedTarget0
-          frames += matchedTarget.withColumn("_change_type", lit("update_preimage"))
-          val matchedKeys = matchedTarget.select(keyCols.map(col): _*).distinct()
-          frames += sourceAligned.join(broadcast(matchedKeys), keyCols, "left_semi")
-            .withColumn("_change_type", lit("update_postimage"))
-          frames += sourceAligned.join(broadcast(matchedKeys), keyCols, "left_anti")
-            .withColumn("_change_type", lit("insert"))
-        } else
-          frames += sourceAligned.withColumn("_change_type", lit("insert"))
-        cdc = writeChangeData(frames.reduce(_.unionByName(_)), dlog.versionToWrite)
-      }
-
-      val predicate = keyCols.map(k => s"target.$k = source.$k").mkString(" AND ")
-      // row-based complement to the key-based update count: physical rows
-      // dropped from rewritten files (touched LIVE totals minus rows
-      // copied — stats count physical rows, so subtract each file's
-      // deletion-vector cardinality or rows already reported deleted in
-      // earlier commits would be re-counted as removed by this merge)
-      val touchedTotal = touchedAdds.map(a =>
-        a.stats.map(parseNumRecords).getOrElse(0L) -
-          DeletionVectors.refOf(a).map(_.cardinality).getOrElse(0L)).sum
-      val entry = DeltaLogEntry.mergeTable(predicate, touchedAdds,
-          keptAdds ++ sourceAdds, dlog.version, numUpdated, numInserted, numCopied,
-          numTargetRowsRemoved = touchedTotal - numCopied,
-          numTargetRowsDeleted = numNmbsDeleted)
-        .withExtraCommitInfo(customMetadata)
-      val withMeta =
-        if (!schemaChanged) entry.actions
-        else dlog.latestMetadata.map(m =>
-          m.copy(schemaString = evolved.json) +: entry.actions)
-          .getOrElse(entry.actions)
-      commitOrRebase(DeltaLogEntry(withMeta ++ cdc),
-        adds.keySet.toSet, Some(None))
-    } finally src.unpersist()
-  }
-
-  /** MERGE with delta-spark's clause surface for NARROW sources: matched
-    * target rows get a column-wise SET applied (instead of whole-row
-    * replacement — the CDC-feed shape where the source carries only the
-    * key plus changed columns), and unmatched source rows optionally
-    * INSERT via explicit value expressions (delta's
-    * `whenNotMatchedInsert(values)`; unnamed table columns null-fill).
-    *
-    * SET / insert expressions reference SOURCE columns as `s.<name>` and
-    * (for SET) target columns by their bare name — the same
-    * qualification delta's SQL MERGE uses.
-    *
-    * Scale shape identical to [[merge]]: touched files found by a
-    * semi-join against the (broadcastable) source keys, only those files
-    * rewritten, inserts appended as new files, one atomic commit.
-    *
-    * @param matchedUpdateCondition delta's `whenMatchedUpdate(condition)`:
-    *        the SET applies only to matched rows meeting it (evaluated
-    *        over the t/s join, like the delete condition); rows matched
-    *        but failing it copy through unchanged. `numRowsUpdated` still
-    *        reports matched keys — the file-rewrite granularity.
-    */
-  def mergeWhenMatchedUpdate(spark: SparkSession, source: DataFrame,
-      keyCols: Seq[String], set: Map[String, Column],
-      insertValues: Option[Map[String, Column]] = None,
-      matchedDeleteCondition: Option[Column] = None,
-      customMetadata: Map[String, JsonNode] = Map.empty,
-      matchedUpdateCondition: Option[Column] = None): DeltaTable = {
-    assertPreWrite(removesData = true)
-    require(keyCols.nonEmpty, "mergeWhenMatchedUpdate requires key columns")
-    // any single clause stands alone: SET-only, matched-DELETE-only (a
-    // keyed anti-delete), or INSERT-only (insert-if-absent); SQL MERGE
-    // statements arrive in all three degenerate shapes
-    require(set.nonEmpty || matchedDeleteCondition.isDefined ||
-      insertValues.isDefined,
-      "merge needs at least one clause: SET, matched DELETE, or NOT MATCHED INSERT")
-    set.keys.foreach(c => require(dlog.schema.fieldNames.contains(c),
-      s"SET references unknown column $c"))
-    require(set.keySet.intersect(keyCols.toSet).isEmpty,
-      "SET must not touch the merge keys")
-    val src = source.cache()
-    try {
-      // fused single source pass: counts + prunable-key bounds (same
-      // shape as merge() — the bounds otherwise cost a second source job)
-      val pk = mergePrunableKey(keyCols)
-      val aggCols = Seq(count(lit(1)).as("_n"),
-        count_distinct(struct(keyCols.map(col): _*)).as("_k")) ++
-        pk.map(k => Seq(org.apache.spark.sql.functions.min(col(k)).as("_klo"),
-          org.apache.spark.sql.functions.max(col(k)).as("_khi")))
-          .getOrElse(Nil)
-      val srcAgg = src.agg(aggCols.head, aggCols.tail: _*).head()
-      require(srcAgg.getLong(1) == srcAgg.getLong(0), "source has duplicate keys")
-      val srcBounds: Option[(Any, Any)] =
-        if (pk.isDefined && !srcAgg.isNullAt(2))
-          Some((srcAgg.get(2), srcAgg.get(3)))
-        else None
-      val keys = src.select(keyCols.map(col): _*).distinct()
-      val adds = dlog.addActions
-      val addByCanonical: Map[String, AddFile] = adds.values.map { a =>
-        Location.canonical(Location.resolve(a.path, loc, conf).uri) -> a
-      }.toMap
-      val p1Candidates = mergeCandidateAddsFromBounds(pk, srcBounds)
-      val p1Row = scanAddsWithMeta(spark, p1Candidates)
-        .drop(DeltaScan.MetaRow)
-        .withColumnRenamed(DeltaScan.MetaPath, "_graft_file")
-        .join(broadcast(keys), keyCols, "left_semi")
-        .agg(collect_set(col("_graft_file")).as("_files"),
-          count_distinct(struct(keyCols.map(col): _*)).as("_mk")).head()
-      val touchedCanonical =
-        p1Row.getSeq[String](0).map(Location.canonical).toSet
-      // an insert-only merge (no SET, no matched DELETE) never rewrites the
-      // target: matched keys are only the anti-join guard for the insert
-      val rewriteNeeded = set.nonEmpty || matchedDeleteCondition.isDefined
-      val numUpdated = if (set.nonEmpty) p1Row.getLong(1) else 0L
-      val touchedAdds =
-        if (rewriteNeeded)
-          addByCanonical.view.filterKeys(touchedCanonical).values.toSeq
-        else Seq.empty
-      // a conditional UPDATE clause gates the SET inside the rewrite; rows
-      // that are matched but fail it copy through unchanged (numUpdated
-      // still reports matched keys — the file-level rewrite granularity)
-      val updCond: Column = matchedUpdateCondition
-        .map(c => coalesce(c, lit(false))).getOrElse(lit(true))
-
-      // phase 2: rewrite touched files with the SET applied to matched rows
-      def applied(touchedDF: DataFrame): DataFrame = {
-        // target aliased "t", source "s": SET expressions qualify source
-        // columns as s.<name>; the rebuild reads target columns via t.<…>
-        // so a source carrying same-named value columns never ambiguates
-        val joined = touchedDF.alias("t")
-          .join(broadcast(src.withColumn("_graft_matched", lit(true)).alias("s")),
-            keyCols, "left")
-        val matched = coalesce(col("s._graft_matched"), lit(false))
-        // delta's whenMatchedDelete clause: a matched row meeting the
-        // condition (evaluated over the t/s join, so it can compare both
-        // sides) is DROPPED from the rewrite instead of updated
-        val kept = matchedDeleteCondition match {
-          case None => joined
-          case Some(c) => joined.filter(not(matched && coalesce(c, lit(false))))
-        }
-        kept.select(dlog.schema.fields.toIndexedSeq.map { f =>
-          val tgt = if (keyCols.contains(f.name)) col(f.name) else col(s"t.${f.name}")
-          set.get(f.name) match {
-            case Some(v) =>
-              // nullability-relaxed cast target — see update()'s applySet
-              when(matched && updCond,
-                  v.cast(graft.log.DeltaLog.typeShape(f.dataType)))
-                .otherwise(tgt).as(f.name)
-            case None => tgt.as(f.name)
-          }
-        }: _*)
-      }
-      var numCopied = 0L
-      val newAdds: Seq[AddFile] =
-        if (touchedAdds.isEmpty) Seq.empty
-        else {
-          val rewritten = regenerate(applied(scanAdds(spark, touchedAdds)))
-          validateConstraints(rewritten)
-          val written = writeData(rewritten, dlog.versionToWrite, dlog.partitionColumns)
-          numCopied = written.flatMap(_.stats).map(parseNumRecords).sum
-          written
-        }
-
-      // optional WHEN NOT MATCHED INSERT from explicit value expressions
-      var numInserted = 0L
-      var insertedRows: Option[DataFrame] = None
-      val insertAdds: Seq[AddFile] = insertValues match {
-        case None => Seq.empty
-        case Some(values) =>
-          // scale shape identical to merge(): the broadcast sides are
-          // bounded by the (small, cached) SOURCE. Matched source keys
-          // come from the stats-pruned candidate files semi-joined with
-          // the broadcast source keys — the target is streamed; then the
-          // anti-join's build side is that matched-key set (⊆ source
-          // keys). Broadcasting the TARGET's distinct keys instead would
-          // scan every live file and ship table-cardinality keys to the
-          // driver — an OOM at 100 TB.
-          val matchedKeys = scanAdds(spark, p1Candidates)
-            .join(broadcast(keys), keyCols, "left_semi")
-            .select(keyCols.map(col): _*).distinct()
-          val unmatched = src.alias("s")
-            .join(broadcast(matchedKeys), keyCols, "left_anti")
-          val row = unmatched.select(dlog.schema.fields.toIndexedSeq.map { f =>
-            values.get(f.name)
-              .orElse(keyCols.find(_ == f.name).map(col))
-              .getOrElse(lit(null)).cast(f.dataType).as(f.name)
-          }: _*)
-          numInserted = row.count()
-          if (numInserted == 0) Seq.empty
-          else {
-            insertedRows = Some(row)
-            validateConstraints(row)
-            writeData(regenerate(row), dlog.versionToWrite, dlog.partitionColumns)
-          }
-      }
-
-      var cdc: Seq[AddCDCFile] = Seq.empty
-      // inserted rows are changes too (merge()'s feed has them; so must
-      // the clause path's)
-      if (cdfEnabled && touchedAdds.isEmpty) insertedRows.foreach { r =>
-        cdc = writeChangeData(r.withColumn("_change_type", lit("insert")),
-          dlog.versionToWrite)
-      }
-      if (cdfEnabled && touchedAdds.nonEmpty) {
-        // one t/s inner join partitions the matched rows into updated
-        // (pre+post pairs) and clause-deleted (delete rows only)
-        val joinedTS = scanAdds(spark, touchedAdds).alias("t")
-          .join(broadcast(src.alias("s")), keyCols, "inner")
-        val delCond = matchedDeleteCondition
-          .map(c => coalesce(c, lit(false))).getOrElse(lit(false))
-        def targets(df: DataFrame): DataFrame =
-          df.select(dlog.schema.fieldNames.toIndexedSeq.map(n =>
-            (if (keyCols.contains(n)) col(n) else col(s"t.$n")).as(n)): _*)
-        // rows matched but failing a conditional UPDATE copy through
-        // unchanged — they are not changes, so they emit no CDC rows
-        val updatedT = targets(joinedTS.filter(not(delCond) && updCond))
-        val del = targets(joinedTS.filter(delCond))
-          .withColumn("_change_type", lit("delete"))
-        val changes =
-          if (set.isEmpty) del // delete-only merge: no update images exist
-          else {
-            val pre = updatedT.withColumn("_change_type", lit("update_preimage"))
-            val post = applied(updatedT)
-              .withColumn("_change_type", lit("update_postimage"))
-            pre.unionByName(post).unionByName(del)
-          }
-        val withInserts = insertedRows
-          .map(r => changes.unionByName(
-            r.withColumn("_change_type", lit("insert"))))
-          .getOrElse(changes)
-        cdc = writeChangeData(withInserts, dlog.versionToWrite)
-      }
-
-      val predicate = keyCols.map(k => s"target.$k = source.$k").mkString(" AND ")
-      val touchedTotal = touchedAdds.map(a =>
-        a.stats.map(parseNumRecords).getOrElse(0L) -
-          DeletionVectors.refOf(a).map(_.cardinality).getOrElse(0L)).sum
-      val entry = DeltaLogEntry.mergeTable(predicate, touchedAdds,
-          newAdds ++ insertAdds, dlog.version, numUpdated, numInserted,
-          numCopied, numTargetRowsRemoved = touchedTotal - numCopied,
-          numTargetRowsDeleted =
-            if (matchedDeleteCondition.isDefined) touchedTotal - numCopied else 0L)
-        .withExtraCommitInfo(customMetadata)
-      commitOrRebase(DeltaLogEntry(entry.actions ++ cdc),
-        adds.keySet.toSet, Some(None))
-    } finally src.unpersist()
+    commitOrRebase(entry, candidates.map(_.path).toSet, Some(Some(predicate)))
   }
 
   // ------------------------------------------------------------------
@@ -2957,14 +2727,12 @@ final case class DeltaTable(
     * partition group rewrites independently (one executor-side parquet
     * job), and untouched single-file partitions cost nothing.
     *
-    * @param sortBy optional clustering columns (Z-order-lite): rewritten
-    *        data is range-partitioned and sorted on them, making per-file
-    *        min/max stats disjoint so [[prunedAdds]] skips aggressively.
-    *        When set, ALL live files are rewritten (layout, not just
-    *        small-file count, is the point).
-    */
-  /** @param sortBy  clustering columns: linear range-sort rewrite, so
-    *                per-file stats are disjoint on the FIRST column
+    * @param sortBy  optional clustering columns (Z-order-lite): rewritten
+    *                data is range-partitioned and sorted on them, so
+    *                per-file min/max stats are disjoint on the FIRST column
+    *                and [[prunedAdds]] skips aggressively. When set, ALL
+    *                live files are rewritten (layout, not just small-file
+    *                count, is the point).
     * @param zOrder  when true with >= 2 sortBy columns, cluster by the
     *                Morton code of per-column rank buckets instead of the
     *                linear sort — per-file min/max stay selective for

@@ -52,9 +52,10 @@ class DmlCommitSpec extends SparkSuite {
   }.toMap
 
   /** A private copy of the kind's fixture (log paths are relative). */
-  private def fresh(kind: String): DeltaTable = {
-    val src = fixtures(kind)
-    val dst = Paths.get(tempDir(s"dml-case-$kind"))
+  private def fresh(kind: String): DeltaTable = copyOf(fixtures(kind))
+
+  private def copyOf(src: Path): DeltaTable = {
+    val dst = Paths.get(tempDir("dml-case"))
     val walk = Files.walk(src)
     try walk.forEach { p =>
       val target = dst.resolve(src.relativize(p).toString)
@@ -188,8 +189,41 @@ class DmlCommitSpec extends SparkSuite {
           s"$name: $k changed\n  pinned:   ${pin.getOrElse(k, "<none>")}\n  observed: $v" +
             s"\n  line: $name\t$actual")
       }
+      info(s"$jobs Spark jobs (pinned at most ${pin("jobs")})")
       assert(jobs <= pin("jobs").toInt,
         s"$name ran $jobs Spark jobs, pinned at most ${pin("jobs")}")
     }
+  }
+
+  test("copy-on-write UPDATE runs the touched-file scan and the rewrite only") {
+    val t = fresh("plain")
+    var t1: DeltaTable = null
+    val jobs = jobsDuring {
+      t1 = t.update(spark, Some(col("k") % 4 === 1), updateSet)
+    }
+    // the touched-file aggregate costs 2 AQE jobs and the rewrite 1; the
+    // matched-row count rides the touched-file step instead of a count job
+    assert(jobs <= 3, s"update ran $jobs Spark jobs; expected touched-file scan + rewrite")
+    val m = t1.history.head._2.operationMetrics
+    assert(m("num_updated_rows").asLong() == 10L, m.toString)
+    assert(m("num_copied_rows").asLong() == 10L, m.toString)
+  }
+
+  test("mergeMergeOnRead takes a struct-typed key like merge") {
+    val d = tempDir("dml-struct-key")
+    def keyed(df: DataFrame) =
+      df.select(struct(col("a"), (col("a") % 3).as("b")).as("id"), col("v"))
+    DeltaTable.forPath(d).write(
+      keyed((0 until 20).map(i => (i, s"v$i")).toDF("a", "v")).coalesce(2))
+    val source = keyed(Seq((2, "m2"), (5, "m5"), (30, "m30")).toDF("a", "v"))
+    val cow = copyOf(Paths.get(d)).merge(spark, source, Seq("id"))
+    val mor = copyOf(Paths.get(d)).mergeMergeOnRead(spark, source, Seq("id"))
+    assertSameRows(mor.toDF(spark), cow.toDF(spark))
+    assert(cow.toDF(spark).count() == 21L)
+    val (mc, mm) = (cow.history.head._2.operationMetrics, mor.history.head._2.operationMetrics)
+    Seq("num_updated_rows", "num_inserted_rows").foreach { k =>
+      assert(mc(k).asLong() == mm(k).asLong(), s"$k: merge $mc vs mergeMergeOnRead $mm")
+    }
+    assert(mm("num_updated_rows").asLong() == 2L && mm("num_inserted_rows").asLong() == 1L)
   }
 }
