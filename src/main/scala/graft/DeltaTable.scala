@@ -1328,8 +1328,8 @@ final case class DeltaTable(
     (r.getLong(0), candidates)
   }
 
-  /** Copy-on-write MERGE's candidate files for `src` (no pruning when no
-    * target row can match).
+  /** Copy-on-write MERGE's candidate files for `src`: the profile's, or
+    * every live file when the source can match no target row.
     */
   private[graft] def mergeCandidateAdds(spark: SparkSession, src: DataFrame,
       keyCols: Seq[String]): Seq[AddFile] =
@@ -1677,7 +1677,6 @@ final case class DeltaTable(
         dlog.addActions.keySet.toSet, Some(None))
     } finally src.unpersist()
   }
-
 
   // ------------------------------------------------------------------
   // CHECK constraints — write-time data-quality guards stored in table
