@@ -823,23 +823,24 @@ final case class DeltaTable(
   // ------------------------------------------------------------------
 
   /** Step 2: the live files owning a row of `matched` (applied to the
-    * candidates' meta-scan) and the value of `measure` over those rows,
-    * in ONE aggregate job; an empty candidate set runs none. `also` joins
-    * the touched set unscanned (MERGE's not-matched-by-source clause).
+    * candidates' meta-scan) and the value of each of `measures` over those
+    * rows, in ONE aggregate job; an empty candidate set runs none. `also`
+    * joins the touched set unscanned (MERGE's not-matched-by-source clause).
     */
   private def touchedFiles(spark: SparkSession, candidates: Seq[AddFile],
-      matched: DataFrame => DataFrame, measure: Column,
-      also: Seq[AddFile] = Nil): (Seq[AddFile], Long) = {
+      matched: DataFrame => DataFrame, measures: Seq[Column],
+      also: Seq[AddFile] = Nil): (Seq[AddFile], Seq[Long]) = {
     def canonical(a: AddFile) = Location.canonical(Location.resolve(a.path, loc, conf).uri)
-    val (found, value) =
-      if (candidates.isEmpty) (Set.empty[String], 0L)
+    val (found, values) =
+      if (candidates.isEmpty) (Set.empty[String], measures.map(_ => 0L))
       else {
         val r = matched(scanAddsWithMeta(spark, candidates))
-          .agg(collect_set(col(DeltaScan.MetaPath)), measure).head()
-        (r.getSeq[String](0).map(Location.canonical).toSet, r.getLong(1))
+          .agg(collect_set(col(DeltaScan.MetaPath)), measures: _*).head()
+        (r.getSeq[String](0).map(Location.canonical).toSet,
+          measures.indices.map(i => r.getLong(i + 1)))
       }
     val addByCanonical = dlog.addActions.values.map(a => canonical(a) -> a).toMap
-    (addByCanonical.view.filterKeys(found ++ also.map(canonical)).values.toSeq, value)
+    (addByCanonical.view.filterKeys(found ++ also.map(canonical)).values.toSeq, values)
   }
 
   /** Steps 2-3 copy-on-write, for the verbs that drop rows (DELETE,
@@ -850,8 +851,8 @@ final case class DeltaTable(
   private def rewriteWithout(spark: SparkSession, candidates: Seq[AddFile],
       matched: Column, changeData: Boolean)
       : (Seq[AddFile], Seq[AddFile], Long, Seq[AddCDCFile]) = {
-    val (touched, dropped) =
-      touchedFiles(spark, candidates, _.filter(matched), count(lit(1)))
+    val (touched, Seq(dropped)) =
+      touchedFiles(spark, candidates, _.filter(matched), Seq(count(lit(1))))
     if (touched.isEmpty) return (Seq.empty, Seq.empty, 0L, Seq.empty)
     val touchedDF = scanAdds(spark, touched)
     val cdc =
@@ -1254,8 +1255,8 @@ final case class DeltaTable(
       } else {
         // numUpdated is step 2's count(1); the rewrite holds every live
         // row of the touched files, so the rest of it was copied
-        val (touched, numUpdated) =
-          touchedFiles(spark, candidates, _.filter(matched), count(lit(1)))
+        val (touched, Seq(numUpdated)) =
+          touchedFiles(spark, candidates, _.filter(matched), Seq(count(lit(1))))
         val (written, cdc) =
           if (touched.isEmpty) (Seq.empty, Seq.empty)
           else {
@@ -1439,10 +1440,13 @@ final case class DeltaTable(
         } else {
           // the not-matched-by-source DELETE widens the touched set to
           // every file that may own a deletable row; its optional
-          // condition stats-prunes that set like DELETE's candidates
+          // condition stats-prunes that set like DELETE's candidates.
+          // The touched-file step also counts the matched ROWS: every
+          // other removed row of the touched files is one that clause
+          // deleted, so its metric needs no job of its own
           val live = dlog.addActions.values.toSeq
-          val (touched, numUpdated) = touchedFiles(spark, bounded.getOrElse(live),
-            keyMatch, keyCount, also =
+          val (touched, Seq(numUpdated, matchedRows)) = touchedFiles(spark,
+            bounded.getOrElse(live), keyMatch, Seq(keyCount, count(lit(1))), also =
               if (!notMatchedBySourceDelete) Seq.empty
               else notMatchedBySourceCondition.map(prunedAdds).getOrElse(live))
           val nmbsCond: Column =
@@ -1451,7 +1455,6 @@ final case class DeltaTable(
 
           // rewrite touched files without their matched rows (and, under
           // the not-matched-by-source clause, without its deletable rows)
-          var numNmbsDeleted = 0L
           val keptAdds: Seq[AddFile] =
             if (touched.isEmpty) Seq.empty
             else {
@@ -1459,11 +1462,8 @@ final case class DeltaTable(
               val kept =
                 if (notMatchedBySourceDelete) notMatched.filter(not(nmbsCond))
                 else notMatched
-              val written = writeData(if (schemaChanged) alignEvolved(kept) else kept,
+              writeData(if (schemaChanged) alignEvolved(kept) else kept,
                 dlog.versionToWrite, dlog.partitionColumns, wMapping)
-              if (notMatchedBySourceDelete)
-                numNmbsDeleted = notMatched.filter(nmbsCond).count()
-              written
             }
           val sourceAdds = writeSource()
 
@@ -1499,12 +1499,14 @@ final case class DeltaTable(
           // numTargetRowsRemoved is the row-based complement to the
           // key-based update count: live rows of the touched files (stats
           // minus DV cardinality, so rows earlier commits already deleted
-          // are not counted again) minus the rows copied
+          // are not counted again) minus the rows copied; the rows the
+          // not-matched-by-source clause deleted are those less the matched
           val numCopied = rowsIn(keptAdds)
+          val numRemoved = statsLiveRows(touched) - numCopied
           val entry = DeltaLogEntry.mergeTable(predicate, touched,
             keptAdds ++ sourceAdds, dlog.version, numUpdated, srcTotal - numUpdated,
-            numCopied, numTargetRowsRemoved = statsLiveRows(touched) - numCopied,
-            numTargetRowsDeleted = numNmbsDeleted)
+            numCopied, numTargetRowsRemoved = numRemoved,
+            numTargetRowsDeleted = if (notMatchedBySourceDelete) numRemoved - matchedRows else 0L)
           val withMeta =
             if (!schemaChanged) entry.actions
             else dlog.latestMetadata.map(m =>
@@ -1559,10 +1561,10 @@ final case class DeltaTable(
       val keys = src.select(keyCols.map(col): _*).distinct()
       // an insert-only merge (no SET, no matched DELETE) never rewrites the
       // target: matched keys are only the anti-join guard for the insert
-      val (touched, matchedKeys) =
-        if (set.isEmpty && matchedDeleteCondition.isEmpty) (Seq.empty[AddFile], 0L)
+      val (touched, Seq(matchedKeys)) =
+        if (set.isEmpty && matchedDeleteCondition.isEmpty) (Seq.empty[AddFile], Seq(0L))
         else touchedFiles(spark, candidates, _.join(broadcast(keys), keyCols, "left_semi"),
-          count_distinct(struct(keyCols.map(col): _*)))
+          Seq(count_distinct(struct(keyCols.map(col): _*))))
       val numUpdated = if (set.nonEmpty) matchedKeys else 0L
       // a conditional UPDATE clause gates the SET inside the rewrite; rows
       // that are matched but fail it copy through unchanged (numUpdated

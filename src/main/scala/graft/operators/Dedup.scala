@@ -338,18 +338,49 @@ object Dedup {
     *  - small-star: u and all its smaller neighbors point at their
     *    collective minimum (flattens local stars).
     *
+    * Small inputs never reach the rounds: one bounded collect of at most
+    * `smallGraphEdges + 1` pair rows decides, and an input of at most
+    * `smallGraphEdges` rows is labelled on the driver by union-find and
+    * returned as a driver-built local relation. That path persists and
+    * checkpoints nothing, so it leaves no cache behind; the distributed
+    * path returns a local checkpoint of the labels, which stays pinned
+    * until the caller unpersists its RDD or the frame is garbage-collected.
+    *
     * Returns (node, component): component = smallest node id in the
     * node's component. Nodes appearing in no pair are absent (callers
-    * treat them as their own singleton cluster).
+    * treat them as their own singleton cluster); a null node id gets a
+    * null component.
+    *
+    * @param smallGraphEdges the most input pair rows (before dedup and
+    *        self-pair removal) that are labelled on the driver; 0 forces
+    *        the distributed rounds.
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a",
       bCol: String = "b", maxRounds: Int = 32,
       smallGraphEdges: Long = 1L << 20): DataFrame = {
+    val p0 = pairs.select(col(aCol).cast("long").as("_x"), col(bCol).cast("long").as("_y"))
+    // SMALL-GRAPH FAST PATH: below `smallGraphEdges` pair rows the
+    // alternating-star machinery is pure scheduler overhead — each round
+    // is several synchronous jobs moving kilobytes — while a driver
+    // union-find over ≤2^20 pairs is a tens-of-ms fold. The decision is
+    // the collect itself: at most `smallGraphEdges + 1` rows come back,
+    // so the driver holds a bounded amount whichever way it goes, and an
+    // input that fits costs that one collect and nothing else — no
+    // distinct, no checkpoint, no join, nothing persisted. Anything
+    // larger takes the distributed rounds unchanged; there the collect,
+    // which computes the pairs once more, is the only extra cost (measured
+    // 0.5-0.8 s for 2^20 rows at 4 cores). Both paths produce the
+    // identical (node, min-of-component) labeling (ConnectedComponentsSpec
+    // pins equality, nulls and schema included).
+    if (smallGraphEdges > 0) {
+      val cap = math.min(smallGraphEdges, Int.MaxValue - 1L).toInt
+      val rows = p0.limit(cap + 1).collect()
+      if (rows.length <= cap) return componentsOnDriver(p0, rows)
+    }
     // the pair evidence is usually an expensive pipeline (a near-dup
     // self-join); persist it so the node list and round 0 share ONE
     // computation instead of re-running it per consumer
-    val p = pairs.select(col(aCol).cast("long").as("_x"), col(bCol).cast("long").as("_y"))
-      .persist()
+    val p = p0.persist()
     // one pass over the cached pair list (explode), not two unioned scans
     // — halves the task count of the node-list stage for free
     val nodes = p.select(explode(array(col("_x"), col("_y"))).as("id"))
@@ -381,48 +412,6 @@ object Dedup {
       .filter(col("_x") =!= col("_y"))
       .select(greatest(col("_x"), col("_y")).as("u"), least(col("_x"), col("_y")).as("v"))
       .distinct())
-    // SMALL-GRAPH FAST PATH: the canonical edge count is already known
-    // driver-side (it rode the materialization job as an observed
-    // metric, so the check costs nothing). Below `smallGraphEdges` the
-    // alternating-star machinery is pure scheduler overhead — each round
-    // is several synchronous jobs moving kilobytes — while a driver
-    // union-find over ≤2^20 16-byte canonical edges is a ≤16 MB,
-    // tens-of-ms fold. Anything larger takes the distributed rounds
-    // unchanged; the threshold is explicit and conservative against
-    // driver heap, and both paths produce the identical
-    // (node, min-of-component) labeling (Round11Spec pins equality).
-    // The node labeling itself stays DISTRIBUTED (broadcast join): the
-    // node list is not bounded by the edge count (self-pair-only inputs
-    // have nodes without canonical edges), so only edges ever collect.
-    if (sig._1 > 0 && sig._1 <= smallGraphEdges) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val edges = e.select(col("u"), col("v")).as[(Long, Long)].collect()
-      release(e)
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.contains(x)) x = parent(x)
-        var y = x0 // path compression
-        while (parent.contains(y)) { val n = parent(y); parent(y) = x; y = n }
-        x
-      }
-      // union-by-min: the smaller root becomes the parent, so every
-      // set's root IS its minimum — the distributed fixpoint's label
-      edges.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val labelDf = broadcast(
-        edges.iterator.flatMap(t => Iterator(t._1, t._2)).toArray.distinct
-          .map(n => (n, find(n))).toSeq.toDF("u", "v"))
-      val labels = nodes.join(labelDf, nodes("id") === labelDf("u"), "left")
-        .select(nodes("id").as("node"),
-          coalesce(labelDf("v"), nodes("id")).as("component"))
-        .localCheckpoint()
-      p.unpersist(blocking = false)
-      return labels
-    }
     var round = 0
     var converged = sig._1 == 0L
     while (!converged && round < maxRounds) {
@@ -490,6 +479,44 @@ object Dedup {
     release(e)
     p.unpersist(blocking = false)
     labels
+  }
+
+  /** [[connectedComponents]]' driver path over the collected `(_x, _y)`
+    * rows of `p`: union-find by minimum over the non-self pairs, then one
+    * label per distinct endpoint — self-pair-only nodes label themselves,
+    * a null node gets a null component — as a local relation with the
+    * distributed path's schema and nullability.
+    */
+  private def componentsOnDriver(p: DataFrame,
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent.contains(x)) x = parent(x)
+      var y = x0 // path compression
+      while (parent.contains(y)) { val n = parent(y); parent(y) = x; y = n }
+      x
+    }
+    val nodes = scala.collection.mutable.LongMap.empty[Unit]
+    var nullNode = false
+    rows.foreach { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) nullNode = true
+      if (!r.isNullAt(0)) nodes(r.getLong(0)) = ()
+      if (!r.isNullAt(1)) nodes(r.getLong(1)) = ()
+      if (!r.isNullAt(0) && !r.isNullAt(1) && r.getLong(0) != r.getLong(1)) {
+        // union-by-min: the smaller root becomes the parent, so every
+        // set's root IS its minimum — the distributed fixpoint's label
+        val ra = find(r.getLong(0)); val rb = find(r.getLong(1))
+        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      }
+    }
+    val labels = new java.util.ArrayList[org.apache.spark.sql.Row](nodes.size + 1)
+    nodes.foreachKey(n => labels.add(org.apache.spark.sql.Row(n, find(n))))
+    if (nullNode) labels.add(org.apache.spark.sql.Row(null, null))
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val nullable = p.schema.fields.exists(_.nullable)
+    p.sparkSession.createDataFrame(labels, StructType(Seq(
+      StructField("node", LongType, nullable), StructField("component", LongType, nullable))))
   }
 
   /** Near-dup pairs with Hamming distance <= `maxHamming` between SimHashes.

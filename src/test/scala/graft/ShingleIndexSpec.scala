@@ -200,10 +200,12 @@ class ShingleIndexSpec extends SparkSuite {
       val labelRdd = labels.queryExecution.logical.collectFirst {
         case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
       }
-      assert(added == labelRdd.toSet, s"smallGraphEdges=$small: persisted $added")
+      // the driver path returns a local relation: nothing is persisted
+      if (small > 0) assert(added.isEmpty, s"smallGraphEdges=$small: persisted $added")
+      else assert(added == labelRdd.toSet, s"smallGraphEdges=$small: persisted $added")
       assert(labels.select("component").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
       assert(labels.count() == 2001)
-      sc.getPersistentRDDs.get(labelRdd.get).foreach(_.unpersist(blocking = true))
+      labelRdd.flatMap(sc.getPersistentRDDs.get).foreach(_.unpersist(blocking = true))
     }
   }
 }
