@@ -231,7 +231,7 @@ object Bench {
 
     // same fixture + predicate for both delete flavors: the pair is the
     // write-amplification story (CoW rewrites every touched file; MoR
-    // writes a sidecar proportional to the deleted rows)
+    // writes deletion vectors proportional to the deleted rows)
     def deleteFixture(): DeltaTable = {
       val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
       DeltaTable.forPath(tmp()).write(lineitem.repartition(8))
@@ -248,9 +248,9 @@ object Bench {
       t.deleteMergeOnRead(spark, Some(col("l_quantity") < 2))
       (System.nanoTime() - t0) / 1e9
     }
-    // same fixture/predicate with delta.enableDeletionVectors=true: the
-    // vectors are delta-SPEC roaring bins — directly comparable to
-    // m06's graft-sidecar flavor
+    // same fixture/predicate with delta.enableDeletionVectors=true. m06
+    // and m09 write the same delta-spec vectors (the property only sets
+    // DELETE's default), so the two entries time the same work
     def onceDeleteSpecDv(): Double = {
       val t = deleteFixture()
         .setTableProperties(Map("delta.enableDeletionVectors" -> "true"))

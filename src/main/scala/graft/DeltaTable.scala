@@ -2,7 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.JsonNode
 import graft.log._
-import graft.sources.{BloomIndex, DataSkipping, DeletionVectors, DeltaScan}
+import graft.sources.{BloomIndex, DataSkipping, DeletionVectors, DeltaScan, DvRowFilter}
 import graft.stats.Statistics
 import graft.storage.Location
 import org.apache.hadoop.conf.Configuration
@@ -866,9 +866,14 @@ final case class DeltaTable(
   /** Step 3 merge-on-read: the rows `selectDead` keeps from a meta-scan of
     * `candidateAdds` (scanned THROUGH existing vectors — already-dead rows
     * are not re-recorded) are marked dead in ONE new total-per-file
-    * vector. Returns the DV re-adds, the removes for files whose every row
-    * is now dead, the newly-dead row count, and `withMatched` applied to
-    * the CACHED matched rows, so metrics or postimage writes reuse the one
+    * delta-spec vector. Matched rows are grouped by the file they came
+    * from, and the one task that owns a file's new dead rows ORs in the
+    * file's existing vector (either format, through [[DvRowFilter]]),
+    * decides from the file's `numRecords` whether every row is now dead,
+    * and otherwise encodes the vector inline or writes its `.bin`.
+    * Returns the DV re-adds, the removes for files whose every row is now
+    * dead, the newly-dead row count, and `withMatched` applied to the
+    * CACHED matched rows, so metrics or postimage writes reuse the one
     * table pass — the matched set is small by MoR's contract (bulk
     * mutations belong on copy-on-write), so caching it is cheap.
     * `withMatched` runs only when a row matched; `selectDead` may project
@@ -879,162 +884,81 @@ final case class DeltaTable(
       selectDead: DataFrame => DataFrame,
       withMatched: DataFrame => T): (Seq[AddFile], Seq[AddFile], Long, Option[T]) = {
     if (candidateAdds.isEmpty) return (Seq.empty, Seq.empty, 0L, None)
-    val addByPath = dlog.addActions
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    // each candidate keyed by the canonical URI its scanned rows' file
+    // path decodes to, so two files sharing a basename stay apart
+    val byKey: Map[String, AddFile] = candidateAdds.map(a =>
+      Location.canonical(Location.resolve(a.path, loc, conf).uri) -> a).toMap
+    val numRecords: Map[String, Long] =
+      byKey.flatMap { case (k, a) => a.stats.flatMap(numRecordsOpt).map(k -> _) }
+    val confMap = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val priors = DvRowFilter(
+      byKey.flatMap { case (k, a) => DeletionVectors.refOf(a).map(k -> _) }, loc.uri, confMap)
+    val rootUri = loc.uri
 
-    // Matched rows are computed ONCE and cached; dead-row keys are keyed
-    // back to the add's log path via a broadcast basename lookup
-    // (basenames are UUID-unique for graft writes); per-file scans on the
-    // rare imported-file basename collision tag the path as a literal.
-    val names = candidateAdds.map(a => pathName(a.path))
-    val uniqueNames = names.distinct.size == names.size
-    val matched: DataFrame =
-      if (uniqueNames)
-        selectDead(scanAddsWithMeta(spark, candidateAdds))
-          .withColumn("_dv_path", lit(null).cast(org.apache.spark.sql.types.StringType))
-      else
-        candidateAdds.map { a =>
-          selectDead(scanAddsWithMeta(spark, Seq(a)))
-            .withColumn("_dv_path", lit(a.path))
-        }.reduce(_.union(_))
-
+    val matched = selectDead(scanAddsWithMeta(spark, candidateAdds))
     matched.persist()
     try {
-      val newDead: DataFrame =
-        if (uniqueNames) {
-          import spark.implicits._
-          val lookup = broadcast(
-            candidateAdds.map(a => (pathName(a.path), a.path)).toDF("_dv_name", "path"))
-          matched.select(
-              org.apache.spark.sql.functions.substring_index(
-                col(DeltaScan.MetaPath), "/", -1).as("_dv_name"),
-              col(DeltaScan.MetaRow).as("row_index"))
-            .join(lookup, "_dv_name")
-            .select("path", "row_index")
-        } else
-          matched.select(col("_dv_path").as("path"),
-            col(DeltaScan.MetaRow).as("row_index"))
-
-      // per-file dead counts: one job (materializes the cache), driver
-      // result is file-count-scale
-      val newCounts: Map[String, Long] = newDead.groupBy("path").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (newCounts.isEmpty) return (Seq.empty, Seq.empty, 0L, None)
-      val touched = newCounts.keys.toSeq.sorted.map(addByPath(_))
-      // WRITE-SIDE INVARIANT: one sidecar never holds two paths with the
-      // same basename — every read path (bulk and per-file) matches dead
-      // rows by basename, which stays exact through clones ONLY under
-      // this invariant. Colliding imported files take copy-on-write.
-      val touchedNames = touched.map(a => pathName(a.path))
-      require(touchedNames.distinct.size == touchedNames.size,
-        "merge-on-read mutation touched files with colliding basenames " +
-          s"(imported files?): ${touchedNames.diff(touchedNames.distinct).distinct.mkString(",")}" +
-          " — use the copy-on-write op for this input")
-      val numDeleted = newCounts.values.sum
-      def totalDeadOf(a: AddFile): Long =
-        DeletionVectors.refOf(a).map(_.cardinality).getOrElse(0L) + newCounts(a.path)
-
-      // A file whose every row is now dead leaves the log instead of
-      // carrying a 100%-dead vector; its rows never enter the sidecar.
-      val (fullDead, stillLive) = touched.partition(a =>
-        a.stats.flatMap(numRecordsOpt).contains(totalDeadOf(a)))
-
-      val dvAdds =
-        if (stillLive.isEmpty) Seq.empty[AddFile]
-        else {
-          import spark.implicits._
-          // The newest sidecar is TOTAL per file: merge prior dead rows of
-          // re-deleted files in, so scans never need >1 sidecar lookup.
-          // Prior rows were recorded under the path the file had THEN —
-          // a clone rewrites relative paths absolute — so remap them by
-          // basename to the file's CURRENT log path (exact under the
-          // basename-uniqueness invariant just required).
-          val priorRefs = stillLive.flatMap(DeletionVectors.refOf(_))
-          val allDead =
-            if (priorRefs.isEmpty) newDead
+      // per touched file: (key, newly-dead rows, total dead rows, vector
+      // as (storageType, pathOrInlineDv, sizeInBytes) — None when the
+      // file is now fully dead); per-file row counts bound task memory
+      val written: Array[(String, Long, Long, Option[(String, String, Int)])] =
+        matched.select(col(DeltaScan.MetaPath), col(DeltaScan.MetaRow))
+          .as[(String, Long)]
+          .groupByKey(_._1)
+          .mapGroups { (fileUri, rows) =>
+            val key = DeletionVectors.fileKey(fileUri)
+            val dead = new org.roaringbitmap.longlong.Roaring64Bitmap
+            var added = 0L
+            rows.foreach { r => dead.addLong(r._2); added += 1 }
+            if (priors.refs.contains(key)) Option(priors.deadOf(fileUri)).foreach(dead.or)
+            val total = dead.getLongCardinality
+            if (numRecords.get(key).contains(total)) (key, added, total, None)
             else {
-              val nameToPath = broadcast(
-                stillLive.map(a => (pathName(a.path), a.path))
-                  .toDF("_dv_name", "_live_path"))
-              val prior = DeletionVectors.deadRows(spark, priorRefs, loc, conf)
-                .withColumn("_dv_name",
-                  org.apache.spark.sql.functions.substring_index(col("path"), "/", -1))
-                .join(nameToPath, "_dv_name")
-                .select(col("_live_path").as("path"), col("row_index"))
-              newDead.union(prior)
+              val blob = graft.sources.RoaringBitmaps.encodeBlob(dead.toArray)
+              if (blob.length <= DeltaTable.InlineDvMaxBytes) {
+                // tiny vector: INLINE descriptor (storageType "i") — at
+                // 10^6 single-digit-row erasures, one 50-byte .bin per
+                // file is a small-file disaster; the Z85 payload rides
+                // the log instead (padded to the codec's 4-byte block,
+                // real length in sizeInBytes)
+                val padded = java.util.Arrays.copyOf(blob, (blob.length + 3) / 4 * 4)
+                (key, added, total,
+                  Some(("i", graft.sources.RoaringBitmaps.Z85.encode(padded), blob.length)))
+              } else {
+                val uuid = java.util.UUID.randomUUID()
+                val hconf = new Configuration(false)
+                confMap.foreach { case (k, v) => hconf.set(k, v) }
+                val dst = Location(rootUri, hconf).child(s"deletion_vector_$uuid.bin")
+                val out = dst.fs.create(dst.path, false)
+                try {
+                  out.writeByte(1)            // format version
+                  out.writeInt(blob.length)   // big-endian frame size
+                  out.write(blob)
+                  val c = new java.util.zip.CRC32(); c.update(blob)
+                  out.writeInt(c.getValue.toInt)
+                } finally out.close()
+                (key, added, total,
+                  Some(("u", graft.sources.RoaringBitmaps.Z85.encodeUuid(uuid), blob.length)))
+              }
             }
-          // scope to still-live files via a file-count-scale semi-join (an
-          // isin() over 10^5 touched paths would be an expression-tree-
-          // scale In literal); dead-row volume scales with the delete, so
-          // the write stays distributed either way
-          val liveDF = broadcast(stillLive.map(_.path).toDF("path"))
-          val scoped = allDead.join(liveDF, Seq("path"), "left_semi")
-          if (tableProperties.get("delta.enableDeletionVectors").contains("true")) {
-            // delta-SPEC vectors (the property is delta's own MoR switch,
-            // so a table carrying it is expected to interop): one
-            // roaring-bitmap .bin per still-live file, written in the
-            // task that owns that file's dead rows — per-file row counts
-            // bound task memory, no driver funnel — referenced by a
-            // storageType="u" descriptor foreign delta readers resolve.
-            import scala.jdk.CollectionConverters._
-            val rootUri = loc.uri
-            val confMap = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-            val written: Map[String, (String, String, Int, Long)] =
-              scoped.select(col("path"), col("row_index"))
-                .as[(String, Long)]
-                .groupByKey(_._1)
-                .mapGroups { (path, rows) =>
-                  val idx = rows.map(_._2).toArray.sorted
-                  val blob = graft.sources.RoaringBitmaps.encodeBlob(idx)
-                  if (blob.length <= DeltaTable.InlineDvMaxBytes) {
-                    // tiny vector: INLINE descriptor (storageType "i") —
-                    // at 10^6 single-digit-row erasures, one 50-byte .bin
-                    // per file is a small-file disaster; the Z85 payload
-                    // rides the log instead (padded to the codec's 4-byte
-                    // block, real length in sizeInBytes)
-                    val padded = java.util.Arrays.copyOf(blob,
-                      (blob.length + 3) / 4 * 4)
-                    (path, ("i", graft.sources.RoaringBitmaps.Z85.encode(padded),
-                      blob.length, idx.length.toLong))
-                  } else {
-                    val uuid = java.util.UUID.randomUUID()
-                    val hconf = new Configuration(false)
-                    confMap.foreach { case (k, v) => hconf.set(k, v) }
-                    val root = Location(rootUri, hconf)
-                    val dst = root.child(s"deletion_vector_$uuid.bin")
-                    val out = dst.fs.create(dst.path, false)
-                    try {
-                      out.writeByte(1)            // format version
-                      out.writeInt(blob.length)   // big-endian frame size
-                      out.write(blob)
-                      val c = new java.util.zip.CRC32(); c.update(blob)
-                      out.writeInt(c.getValue.toInt)
-                    } finally out.close()
-                    (path, ("u", graft.sources.RoaringBitmaps.Z85.encodeUuid(uuid),
-                      blob.length, idx.length.toLong))
-                  }
-                }.collect().toMap
-            stillLive.map { a =>
-              val (st, poi, size, card) = written(a.path)
-              require(card == totalDeadOf(a),
-                s"DV cardinality mismatch for ${a.path}: bin $card, expected ${totalDeadOf(a)}")
-              DeletionVectors.withRef(a, DeletionVectors.DeltaRef(
-                st, poi, offset = if (st == "i") None else Some(1L),
-                sizeInBytes = size.toLong,
-                cardinality = card, ownerPath = a.path))
-            }
-          } else {
-            val sidecarRel = s"${DeletionVectors.DvDirName}/dv-${java.util.UUID.randomUUID()}"
-            // clustered by owning file so a scan-side broadcast build
-            // reads contiguous row groups
-            scoped
-              .repartition(col("path")).sortWithinPartitions("path", "row_index")
-              .write.parquet(Location.resolve(sidecarRel, loc, conf).uri)
-            stillLive.map(a => DeletionVectors.withRef(a,
-              DeletionVectors.DvRef(sidecarRel, totalDeadOf(a))))
-          }
-        }
+          }.collect()
+      if (written.isEmpty) return (Seq.empty, Seq.empty, 0L, None)
 
-      (dvAdds, fullDead, numDeleted, Some(withMatched(matched)))
+      written.foreach { case (key, added, total, _) =>
+        val prior = DeletionVectors.refOf(byKey(key)).map(_.cardinality).getOrElse(0L)
+        require(total == prior + added,
+          s"DV cardinality mismatch for ${byKey(key).path}: vector $total, expected ${prior + added}")
+      }
+      val dvAdds = written.toSeq.collect { case (key, _, total, Some((st, poi, size))) =>
+        val a = byKey(key)
+        DeletionVectors.withRef(a, DeletionVectors.DeltaRef(
+          st, poi, offset = if (st == "i") None else Some(1L),
+          sizeInBytes = size.toLong, cardinality = total, ownerPath = a.path))
+      }.sortBy(_.path)
+      val fullDead = written.toSeq.collect { case (key, _, _, None) => byKey(key) }.sortBy(_.path)
+      (dvAdds, fullDead, written.map(_._2).sum, Some(withMatched(matched)))
     } finally matched.unpersist(blocking = false)
   }
 
@@ -1089,22 +1013,15 @@ final case class DeltaTable(
   private def parseNumRecords(statsJson: String): Long =
     numRecordsOpt(statsJson).getOrElse(0L)
 
-  /** Paired tombstones for a spec-DV table's re-adds: one RemoveFile per
+  /** Paired tombstones for merge-on-read re-adds: one RemoveFile per
     * re-added path, carrying the SUPERSEDED add's deletionVector
     * descriptor. Spec-compliant delta readers reconcile file actions by
     * the (path, deletionVector.uniqueId) TUPLE — without the pairing the
     * prior no-DV (or older-DV) add stays live in their replay alongside
-    * the new one, duplicating files and resurrecting deleted rows, which
-    * defeats the interop `delta.enableDeletionVectors=true` promises.
-    * Graft-native sidecar tables skip the pairing (their DVs are
-    * unreadable to foreign engines by design, and graft's own path-keyed
-    * replay needs no tombstone).
+    * the new one, duplicating files and resurrecting deleted rows.
     */
   private def specDvRemoves(dvAdds: Seq[AddFile]): Seq[RemoveFile] =
-    if (dvAdds.nonEmpty &&
-        tableProperties.get("delta.enableDeletionVectors").contains("true"))
-      dvAdds.map(a => Action.removeFor(dlog.addActions(a.path)))
-    else Seq.empty
+    dvAdds.map(a => Action.removeFor(dlog.addActions(a.path)))
 
   def delete(spark: SparkSession, where: Option[Column] = None,
       customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable =
@@ -1116,18 +1033,20 @@ final case class DeltaTable(
       tableProperties.get("delta.enableDeletionVectors").exists(_.trim.equalsIgnoreCase("true")))
 
   /** DELETE via merge-on-read deletion vectors: matching rows are marked
-    * dead in a `_graft_dv/` sidecar and the touched files are re-added with
-    * a `deletionVector` ref — no data file is rewritten. The write cost is
-    * proportional to the number of DELETED rows, not to the size of the
-    * files that contain them; at 100 TB that is the difference between a
+    * dead in a delta-spec deletion vector (inline in the descriptor, or a
+    * `.bin` beside the data) and the touched files are re-added with a
+    * `deletionVector` descriptor — no data file is rewritten, whatever the
+    * table's properties. The write cost is proportional to the number of
+    * DELETED rows, not to the size of the files that contain them; at
+    * 100 TB that is the difference between a
     * GDPR-erasure commit writing kilobytes and rewriting terabytes
     * (the reference deletes copy-on-write only, xdlake/__init__.py:259-315).
     * Scans, UPDATE, MERGE, compact and CDF all read through the vector;
-    * `compact()` purges it; `vacuum()` protects referenced sidecars.
+    * `compact()` purges it; `vacuum()` protects referenced `.bin`s.
     *
     * A file whose LAST live row dies is removed from the log outright, so
     * a full-table merge-on-read delete degenerates to the copy-on-write
-    * one (empty table, no sidecar lookups left behind).
+    * one (empty table, no vectors left behind).
     *
     * No cdc files even under `delta.enableChangeDataFeed`: the change
     * feed's DV-delta reconstruction already serves this commit's EXACT
@@ -3585,21 +3504,18 @@ final case class DeltaTable(
         s"cannot RESTORE to version $restoreVersion: ${goneDv.size} deletion " +
           s"vector(s) it references no longer exist (vacuumed?), e.g. " +
           s"${goneDv.head}. A restore would commit references to deleted state")
-    // spec-DV tables pair each changed-action re-add with a remove naming
-    // the CURRENT add's descriptor — same tuple-reconciliation argument
-    // as the MoR mutations (specDvRemoves): without it, a foreign
-    // tuple-keyed reader keeps the post-restore-point (path, newDV) add
-    // live ALONGSIDE the restored (path, oldDV) one. Paired only when
-    // the descriptor actually differs: a commit must never carry an add
-    // AND a remove of the identical (path, dvId) tuple (same-tuple
-    // re-adds replace in place under delta reconciliation).
+    // pair each changed-action re-add with a remove naming the CURRENT
+    // add's descriptor — same tuple-reconciliation argument as the MoR
+    // mutations (specDvRemoves): without it, a foreign tuple-keyed
+    // reader keeps the post-restore-point (path, newDV) add live
+    // ALONGSIDE the restored (path, oldDV) one. Paired only when the
+    // descriptor actually differs: a commit must never carry an add AND
+    // a remove of the identical (path, dvId) tuple (same-tuple re-adds
+    // replace in place under delta reconciliation).
     def dvKey(a: AddFile): String = Checkpoint.descriptorId(a.extra)
-    val restorePairs =
-      if (!tableProperties.get("delta.enableDeletionVectors").contains("true"))
-        Seq.empty[RemoveFile]
-      else restoreAdds.flatMap(a =>
-        currAdds.get(a.path).filter(cur => dvKey(cur) != dvKey(a))
-          .map(cur => Action.removeFor(cur)))
+    val restorePairs = restoreAdds.flatMap(a =>
+      currAdds.get(a.path).filter(cur => dvKey(cur) != dvKey(a))
+        .map(cur => Action.removeFor(cur)))
     val entry = DeltaLogEntry.restoreTable(dlog.version, restoreVersion,
       prev.schema, prev.partitionColumns, removeAdds, restoreAdds,
       prev.latestMetadata.map(_.configuration).getOrElse(Map.empty),
@@ -3658,8 +3574,9 @@ final case class DeltaTable(
     * 1000 executors copying ~100 GB each are not. The driver ships only
     * the O(files) path list.
     *
-    * File layout: in-table relative paths are preserved (so DV sidecar
-    * basename joins keep working unchanged); zero-copy imported
+    * File layout: in-table relative paths are preserved (so the
+    * root-relative `.bin`s and legacy sidecars of the adds' vectors
+    * resolve unchanged under the clone's root); zero-copy imported
     * absolute refs are materialized under `imported-clone-<i>/` keeping
     * their basename — partition values stay log-authoritative, so the
     * physical layout is irrelevant to pruning.

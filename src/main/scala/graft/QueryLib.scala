@@ -91,7 +91,7 @@ object QueryLib {
 
   /** lineitem deleted via merge-on-read deletion vectors — same predicate
     * as the copy-on-write delete, then a SECOND MoR delete so the
-    * sidecar-merge (total-per-file) path is exercised end-to-end.
+    * prior-vector merge (total-per-file) path is exercised end-to-end.
     */
   def lineitemDvDeletedDir(spark: SparkSession, sfDir: String): String =
     cachedDir(sfDir, "lineitem_dv_delete") { d =>
@@ -128,8 +128,8 @@ object QueryLib {
           Map("n_regionkey" -> (col("n_regionkey") + lit(10))))
     }
 
-  /** DEEP clone of a DV'd supplier table: live bytes (and the sidecar)
-    * copied into a fresh version-0 table; the clone scan must serve the
+  /** DEEP clone of a DV'd supplier table: live bytes (and any `.bin`
+    * vector) copied into a fresh version-0 table; the clone scan must serve the
     * source's exact post-delete rows with no reference to the source dir.
     */
   def supplierDeepCloneDir(spark: SparkSession, sfDir: String): String =

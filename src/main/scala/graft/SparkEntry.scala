@@ -218,8 +218,8 @@ object SparkEntry {
       DeltaTable.forPath(QueryLib.nationCdcUpdatedDir(s, d))
         .changesBetween(s, 0L, 2L)
         .orderBy("_change_type", "n_nationkey")),
-    // deep clone: copied bytes + copied DV sidecar serve the source's
-    // exact post-delete rows from a fresh version-0 table
+    // deep clone: copied bytes + the copied deletion vectors serve the
+    // source's exact post-delete rows from a fresh version-0 table
     "q101_deep_clone_scan" -> ((s, d) =>
       DeltaTable.forPath(QueryLib.supplierDeepCloneDir(s, d)).toDF(s)
         .orderBy("s_suppkey")),
@@ -260,7 +260,7 @@ object SparkEntry {
       s.read.format("graft").load(dir).orderBy("c_custkey")
     }),
     // exact MoR change feed: v2's delete rows = newly-dead only (v1's
-    // dead rows must NOT re-appear) — sidecar set difference, oracled
+    // dead rows must NOT re-appear) — vector set difference, oracled
     "q78_dv_changes" -> ((s, d) =>
       DeltaTable.forPath(QueryLib.lineitemDvDeletedDir(s, d))
         .changesBetween(s, 1L, 2L)

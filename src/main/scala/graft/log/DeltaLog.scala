@@ -121,13 +121,10 @@ object DeltaLogEntry {
   }
 
   /** Merge-on-read DELETE entry: each touched file is RE-ADDED (same data
-    * file, a new deletionVector ref in `extra`). For graft-native sidecar
-    * tables no RemoveFile is needed: `addActions.updated` replaces the
-    * prior add in place and the entry stays minimal. For delta-SPEC DV
-    * tables the caller passes `dvRemoves` — one remove per re-add,
-    * carrying the SUPERSEDED add's deletionVector descriptor — because
-    * spec-compliant readers (delta-spark InMemoryLogReplay, kernel,
-    * delta-rs) reconcile file actions by the (path, dvUniqueId) TUPLE: a
+    * file, a new deletionVector ref in `extra`), and the caller passes
+    * `dvRemoves` — one remove per re-add, carrying the SUPERSEDED add's
+    * deletionVector descriptor — because spec-compliant readers
+    * (delta-spark InMemoryLogReplay, kernel, delta-rs) reconcile file actions by the (path, dvUniqueId) TUPLE: a
     * bare re-add would leave the prior no-DV/old-DV add live alongside
     * the new one, duplicating files and resurrecting deleted rows in
     * every foreign reader. Graft's own replay (removes-before-adds
@@ -137,7 +134,7 @@ object DeltaLogEntry {
   def deleteMergeOnReadTable(predicate: String, dvAdds: Seq[AddFile],
       fullDead: Iterable[AddFile], readVersion: Long,
       numDeletedRows: Long,
-      dvRemoves: Seq[RemoveFile] = Seq.empty): DeltaLogEntry = {
+      dvRemoves: Seq[RemoveFile]): DeltaLogEntry = {
     val metrics = ListMap[String, JsonNode](
       "mode" -> Json.text("merge-on-read"),
       "num_dv_files" -> Json.num(dvAdds.size.toLong),
@@ -168,7 +165,7 @@ object DeltaLogEntry {
   def updateMergeOnReadTable(predicate: String, dvAdds: Seq[AddFile],
       fullDead: Iterable[AddFile], adds: Seq[AddFile], readVersion: Long,
       numUpdated: Long,
-      dvRemoves: Seq[RemoveFile] = Seq.empty): DeltaLogEntry = {
+      dvRemoves: Seq[RemoveFile]): DeltaLogEntry = {
     val metrics = ListMap[String, JsonNode](
       "mode" -> Json.text("merge-on-read"),
       "num_added_files" -> Json.num(adds.size.toLong),
@@ -188,7 +185,7 @@ object DeltaLogEntry {
   def mergeMergeOnReadTable(predicate: String, dvAdds: Seq[AddFile],
       fullDead: Iterable[AddFile], sourceAdds: Seq[AddFile], readVersion: Long,
       numUpdated: Long, numInserted: Long, numDeadRows: Long,
-      dvRemoves: Seq[RemoveFile] = Seq.empty): DeltaLogEntry = {
+      dvRemoves: Seq[RemoveFile]): DeltaLogEntry = {
     val metrics = ListMap[String, JsonNode](
       "mode" -> Json.text("merge-on-read"),
       "num_added_files" -> Json.num(sourceAdds.size.toLong),

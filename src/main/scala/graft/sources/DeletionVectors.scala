@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** Merge-on-read deletion vectors: a DELETE that marks rows dead in a
-  * sidecar instead of rewriting data files.
+  * vector instead of rewriting data files.
   *
   * The reference deletes copy-on-write only (xdlake/__init__.py:192-224):
   * dropping one row from a 1 GB file rewrites the full gigabyte. At 100 TB
@@ -31,17 +31,22 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   * (GDPR erasure, targeted decontamination), which is why Delta, Iceberg
   * and Hudi all grew a merge-on-read path. Graft's variant:
   *
-  *  - A delete commit writes ONE sidecar parquet directory under
-  *    `_graft_dv/` holding `(path, row_index)` of every dead row of every
-  *    touched file (prior dead rows of a re-deleted file are merged in,
-  *    so the newest sidecar is total per file — a file never needs more
-  *    than one sidecar lookup at scan time).
+  *  - There is ONE write format, the delta protocol's: every merge-on-read
+  *    commit records a roaring-bitmap vector per touched file, inline in
+  *    the descriptor (storageType "i") or in a uuid-named `.bin` ("u"),
+  *    see [[DeltaRef]]. The newest vector is total per file (prior dead
+  *    rows of a re-deleted file are merged in), so a file never needs
+  *    more than one lookup at scan time.
   *  - Each touched `AddFile` is re-added (same data file, same stats) with
-  *    `extra("deletionVector") = {"sidecar": <dir>, "cardinality": N}`.
-  *    The JSON `extra` field round-trips through log replay, checkpoints
-  *    (raw-line format) and foreign-file import untouched.
-  *  - Tables with `delta.enableDeletionVectors` get delta-spec roaring
-  *    vectors instead (inline or `.bin`, see [[DeltaRef]]).
+  *    `extra("deletionVector")` = the descriptor, paired with a remove of
+  *    the superseded add. The JSON `extra` field round-trips through log
+  *    replay, checkpoints (raw-line format) and foreign-file import.
+  *  - Tables written by earlier builds may carry graft's parquet sidecar
+  *    instead: a directory under `_graft_dv/` holding `(path, row_index)`
+  *    of every dead row of every file its commit touched, referenced as
+  *    `{"sidecar": <dir>, "cardinality": N}` ([[SidecarRef]]). Nothing
+  *    writes one any more; scans, re-deletes, compaction, vacuum, clone
+  *    and restore still read them, until no table needs it.
   *  - Scans drop dead rows INSIDE the scan task (`DeltaTable.scanAdds`/
   *    `dvScan` — the path every internal read, DELETE/UPDATE/MERGE/
   *    compact/CDF included, goes through). The DV'd files' meta-scan
@@ -52,14 +57,14 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   *    file and drops rows by row index before they leave the scan: no
   *    decode job, no broadcast, no join. Clean files keep their
   *    filter-free plan. `compact()` purges vectors (its rewrite reads
-  *    through them); `vacuum()` keeps referenced sidecar dirs.
+  *    through them); `vacuum()` keeps referenced `.bin`s and sidecar dirs.
   *
-  * Row identity is `(file, parquet row index)`. Sidecar rows name their
-  * file by the path it had when the sidecar was written, and a clone
-  * rewrites add paths absolute, so a scan matches sidecar rows by
-  * basename. That match is exact: one sidecar never holds two files with
-  * the same basename (`deleteMergeOnRead` requires it). A spec vector
-  * belongs to exactly one file by construction.
+  * Row identity is `(file, parquet row index)`. A spec vector belongs to
+  * exactly one file by construction. Sidecar rows name their file by the
+  * path it had when the sidecar was written, and a clone rewrites add
+  * paths absolute, so a scan matches sidecar rows by basename; the
+  * builds that wrote sidecars never put two files with one basename in
+  * one sidecar.
   */
 object DeletionVectors {
 
@@ -74,13 +79,16 @@ object DeletionVectors {
     StructField("path", StringType, nullable = false),
     StructField("row_index", LongType, nullable = false)))
 
-  /** A file's deletion-vector reference — either graft's parquet sidecar
-    * or a delta-spec descriptor (PROTOCOL.md "Deletion Vectors": roaring
-    * bitmap blobs, storageType u/i/p) recorded by a foreign writer.
+  /** A file's deletion-vector reference — a delta-spec descriptor
+    * (PROTOCOL.md "Deletion Vectors": roaring bitmap blobs, storageType
+    * u/i/p) or, on tables written by earlier builds, graft's parquet
+    * sidecar.
     */
   sealed trait DvRef { def cardinality: Long }
 
-  /** Graft's native ref: a `(path, row_index)` parquet sidecar dir. */
+  /** Graft's legacy ref: a `(path, row_index)` parquet sidecar dir
+    * (read-only — no write path produces one).
+    */
   final case class SidecarRef(sidecar: String, cardinality: Long) extends DvRef
 
   /** Delta-spec descriptor. `ownerPath` is the referencing add's recorded
@@ -93,12 +101,6 @@ object DeletionVectors {
   final case class DeltaRef(storageType: String, pathOrInlineDv: String,
       offset: Option[Long], sizeInBytes: Long, cardinality: Long,
       ownerPath: String) extends DvRef
-
-  object DvRef {
-    /** Sidecar construction shorthand (the write path's spelling). */
-    def apply(sidecar: String, cardinality: Long): SidecarRef =
-      SidecarRef(sidecar, cardinality)
-  }
 
   def refOf(a: AddFile): Option[DvRef] =
     a.extra.get(ExtraKey).map { node =>
@@ -135,6 +137,13 @@ object DeletionVectors {
     a.copy(extra = a.extra + (ExtraKey -> (node: JsonNode)), dataChange = true)
   }
 
+  /** The key a scanned file's rows are matched to its descriptor by: the
+    * canonical URI of a `_metadata.file_path` value (URL-encoded, as
+    * Spark renders it), equal to the canonical resolved path of its add.
+    */
+  def fileKey(fileUri: String): String =
+    Location.canonical(new Path(new java.net.URI(fileUri)).toString)
+
   /** Resolve a delta descriptor's DV file path (storageType u/p). */
   def deltaDvPath(storageType: String, pathOrInlineDv: String,
       tableRoot: Location, conf: Configuration): Path =
@@ -158,9 +167,10 @@ object DeletionVectors {
     * refs decode in EXECUTORS (one task partition per slice of refs —
     * a 10⁵-file DV'd table must not funnel every bitmap through the
     * driver); their `path` is the owning add's recorded path, matching
-    * the sidecar rows' recording-time-path convention. Scans do not go
-    * through here (see [[liveRowFilter]]); this serves the callers that
-    * need the dead rows themselves.
+    * the sidecar rows' recording-time-path convention. Scans and writes
+    * do not go through here (see [[liveRowFilter]] and [[DvRowFilter]]);
+    * it is the plain-join reference the in-scan filter is checked
+    * against.
     */
   def deadRows(spark: SparkSession, refs: Iterable[DvRef], tableRoot: Location,
       conf: Configuration): DataFrame = {
@@ -291,9 +301,9 @@ final case class DvRowFilter(refs: Map[String, DeletionVectors.DvRef],
   /** Dead rows of the file at `fileUri` (a `_metadata.file_path` value:
     * URL-encoded, as Spark renders it), or null when none are dead.
     */
-  private[sources] def deadOf(fileUri: String): Roaring64Bitmap = {
+  private[graft] def deadOf(fileUri: String): Roaring64Bitmap = {
     val path = new Path(new java.net.URI(fileUri))
-    val ref = refs.getOrElse(Location.canonical(path.toString),
+    val ref = refs.getOrElse(DeletionVectors.fileKey(fileUri),
       throw new IllegalStateException(s"no deletion-vector descriptor for scanned file $fileUri"))
     val dead = ref match {
       case DeletionVectors.SidecarRef(sidecar, _) =>

@@ -17,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[graft.DeltaTable.changesBetween]] API.
   *
   * Merge-on-read deletes (deletion vectors) don't rewrite data files, so
-  * they cannot DUPLICATE rows here — and `_graft_dv/` sidecars are
-  * invisible to the stream (Spark's file index skips `_`-prefixed dirs) —
+  * they cannot DUPLICATE rows here — and their `.bin` vectors are
+  * invisible to the stream (only `*.parquet` files are read) —
   * but already-streamed rows later marked dead are NOT retracted and a
   * DV'd file's dead rows still stream on first discovery: this source is
   * for append-only ingest; DV-aware feeds go through `changesBetween`.
@@ -47,9 +47,9 @@ object DeltaStreamSource {
       // snapshot compacts history and would hide earlier removes
       val full = graft.log.DeltaLog.load(t.logLoc)
       full.entries.foreach { case (v, e) =>
-        // merge-on-read mutations emit NO removes (the touched file is
-        // re-added with a deletionVector ref) but their dead rows still
-        // stream — guard both shapes
+        // a merge-on-read mutation re-adds the touched file with a
+        // deletionVector ref, and its dead rows still stream — guard
+        // removes and DV re-adds alike
         val dved = e.adds.count(a => graft.sources.DeletionVectors.refOf(a).isDefined)
         if (e.removes.nonEmpty || dved > 0) {
           val op = e.commitInfos.headOption.map(_.operation).getOrElse("UNKNOWN")

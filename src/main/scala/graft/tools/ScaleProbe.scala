@@ -110,7 +110,7 @@ object ScaleProbe {
     // SPARK_GRAFT_CPUS sets the local core count (default 32)
     val sections = args.lift(1).map(_.split(",").toSet)
       .getOrElse(Set("docs", "text", "ann", "annindex", "inccluster",
-        "semdedup", "temporal", "cc", "dv", "zipf", "hotkey", "specdv",
+        "semdedup", "temporal", "cc", "dv", "zipf", "hotkey",
         "store", "kmv"))
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32)
     val spark = SparkSession.builder().master(s"local[$cpus]")
@@ -624,7 +624,8 @@ object ScaleProbe {
 
     // DELETE write cost as the table grows: copy-on-write rewrites every
     // touched file (≈ the whole table when deleted rows are scattered);
-    // merge-on-read writes a sidecar proportional to the deleted rows.
+    // merge-on-read writes one deletion vector per touched file, sized by
+    // that file's deleted rows.
     // The gap should WIDEN with table size — that is the 100 TB argument.
     val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
     var dvK = 1
@@ -654,8 +655,8 @@ object ScaleProbe {
     // Dead-row sweep: one MoR commit of k scattered dead rows over sf0.1
     // lineitem, then the median of 3 `toDF(spark).count()` runs through
     // the vectors — the read cost of deletion vectors as the dead set
-    // grows. `first` is the first of the 3 runs (the only one that finds
-    // no sidecar already decoded in this JVM).
+    // grows. `first` is the first of the 3 runs (the only one with cold
+    // JIT and file caches).
     if (sections("dv")) {
       val n = li.count()
       for (k <- Seq(1000, 4000, 16000, 64000, 128000, 256000)) {
@@ -943,28 +944,6 @@ object ScaleProbe {
       spark.sparkContext.removeSparkListener(listener)
     }
 
-    // Spec-DV resolution probe: the same MoR delete over a 64-file
-    // table, once with graft parquet sidecars and once with delta-spec
-    // roaring bins (one per file, decoded in executors) — records that
-    // the spec path's scan cost stays in the same regime as the native
-    // sidecar path at per-file vector granularity.
-    if (sections("specdv")) {
-      val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-      for ((tag, spec) <- Seq("sidecar" -> false, "spec_bins" -> true)) {
-        val dir = java.nio.file.Files.createTempDirectory("specdv-").toString
-        var t = graft.DeltaTable.forPath(dir).write(li.repartition(64))
-        if (spec) t = t.setTableProperties(
-          Map("delta.enableDeletionVectors" -> "true"))
-        t = t.deleteMergeOnRead(spark, Some(col("l_quantity") < 3))
-        val dead = t.dlog.addActions.values
-          .flatMap(graft.sources.DeletionVectors.refOf(_)).map(_.cardinality).sum
-        def scan(): Long = t.toDF(spark).count()
-        scan() // warm
-        val t0 = System.nanoTime(); val live = scan()
-        println(f"SPECDV $tag%-10s files=64 dead=$dead%7d live=$live%8d " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%6.2fs")
-      }
-    }
     spark.stop()
   }
 }

@@ -3,9 +3,10 @@ package graft
 import graft.sources.{DeletionVectors, DeltaScan}
 import org.apache.spark.sql.functions._
 
-/** Merge-on-read DELETE via deletion vectors: sidecar creation, DV-aware
+/** Merge-on-read DELETE via deletion vectors: vector creation, DV-aware
   * scans, interaction with copy-on-write ops, compaction purge, vacuum
-  * protection, time travel, clone.
+  * protection, time travel, clone, and tables whose vectors an earlier
+  * build wrote as `_graft_dv` parquet sidecars.
   */
 class DeletionVectorsSpec extends SparkSuite {
 
@@ -13,6 +14,30 @@ class DeletionVectorsSpec extends SparkSuite {
   private def lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
 
   private def dataFileCount(t: DeltaTable): Int = t.fileUris.size
+
+  /** A private copy of the committed legacy fixture: 40 rows `(k, p, v, x)`
+    * with `p = k % 2`, in 8 files of 5 rows, after an earlier build's
+    * merge-on-read delete of `k % 10 >= 8` put a `_graft_dv` sidecar
+    * vector on every file.
+    */
+  private def legacySidecarTable(): DeltaTable = DeltaTable.forPath(copyToTemp(
+    java.nio.file.Paths.get(getClass.getResource("/graft/legacy-sidecar-dv-table").toURI),
+    "dv-legacy"))
+
+  /** The fixture's 40 rows before its delete. */
+  private def legacyAllRows = {
+    val s = spark
+    import s.implicits._
+    (0 until 40).map(k => (k, k % 2, s"v$k", k * 1.5)).toDF("k", "p", "v", "x")
+  }
+
+  /** The fixture's live rows after `where` is deleted too. */
+  private def legacyRows(where: org.apache.spark.sql.Column = lit(false)) =
+    legacyAllRows.filter(col("k") % 10 < 8 && not(where))
+
+  private def sidecarRefs(t: DeltaTable): Seq[DeletionVectors.SidecarRef] =
+    t.dlog.addActions.values.toSeq.flatMap(DeletionVectors.refOf(_))
+      .collect { case r: DeletionVectors.SidecarRef => r }
 
   test("deleteMergeOnRead drops rows without rewriting data files") {
     val d = tempDir("dv-basic")
@@ -100,14 +125,14 @@ class DeletionVectorsSpec extends SparkSuite {
     assert(ck.filter(col("add.deletionVector.storageType") === "i").count() == 1L)
   }
 
-  test("re-delete merges prior dead rows: newest sidecar is total per file") {
+  test("re-delete merges prior dead rows: newest vector is total per file") {
     val d = tempDir("dv-redelete")
     var t = DeltaTable.forPath(d).write(nation)
     t = t.deleteMergeOnRead(spark, Some(col("n_regionkey") === 0))
     t = t.deleteMergeOnRead(spark, Some(col("n_regionkey") === 1))
     val expected = nation.filter(col("n_regionkey") =!= 0 && col("n_regionkey") =!= 1)
     assertSameRows(t.toDF(spark), expected)
-    // every DV'd add references exactly ONE sidecar whose cardinality is
+    // every DV'd add references exactly ONE vector whose cardinality is
     // the file's TOTAL dead count (prior + new merged in)
     val refs = t.dlog.addActions.values.flatMap(DeletionVectors.refOf(_)).toSeq
     assert(refs.nonEmpty)
@@ -125,7 +150,7 @@ class DeletionVectorsSpec extends SparkSuite {
     t = t.deleteMergeOnRead(spark, Some(col("n_regionkey") === 0))
     assert(dataFileCount(t) == 1, "all-dead file should be removed from the log")
     assert(t.dlog.addActions.values.forall(a => DeletionVectors.refOf(a).isEmpty),
-      "surviving file was untouched; no sidecar should be written")
+      "surviving file was untouched; no vector should be written")
     assertSameRows(t.toDF(spark), nation.filter(col("n_regionkey") > 0))
   }
 
@@ -204,9 +229,9 @@ class DeletionVectorsSpec extends SparkSuite {
   }
 
   test("RESTORE across a MoR delete resurrects the dead rows") {
-    // graft-sidecar flavor: the delete re-ADDS the same path with a DV
-    // ref, so restore must re-add the PRE-delete action for paths whose
-    // action changed, not just paths that disappeared
+    // the delete re-ADDS the same path with a DV ref, so restore must
+    // re-add the PRE-delete action for paths whose action changed, not
+    // just paths that disappeared
     val d = tempDir("dv-restore")
     var t = DeltaTable.forPath(d).write(nation)
     val v0 = t.version
@@ -214,6 +239,13 @@ class DeletionVectorsSpec extends SparkSuite {
     assert(t.toDF(spark).count() < nation.count())
     t = t.restore(v0)
     assertSameRows(t.toDF(spark), nation)
+
+    // a legacy sidecar table restores across its sidecar delete, and back
+    val lt = legacySidecarTable()
+    val vSidecar = lt.version
+    val pre = lt.restore(vSidecar - 1)
+    assertSameRows(pre.toDF(spark), legacyAllRows)
+    assertSameRows(pre.restore(vSidecar).toDF(spark), legacyRows())
 
     // spec flavor
     val d2 = tempDir("dv-restore-spec")
@@ -274,13 +306,35 @@ class DeletionVectorsSpec extends SparkSuite {
   }
 
   test("compact purges deletion vectors; vacuum protects live sidecars") {
-    val d = tempDir("dv-compact")
-    var t = DeltaTable.forPath(d).write(nation).write(nation)
-    t = t.deleteMergeOnRead(spark, Some(col("n_regionkey") === 4))
-    val expected = nation.union(nation).filter(col("n_regionkey") =!= 4)
+    // legacy sidecar vectors: vacuum with zero retention must NOT delete
+    // the referenced sidecar; once compaction purges the refs it may
+    val lt = legacySidecarTable()
+    assert(sidecarRefs(lt).size == 8)
+    lt.vacuum(retentionMs = 0L)
+    assertSameRows(DeltaTable.forPath(lt.loc.uri).toDF(spark), legacyRows())
+    val lc = lt.compact(spark)
+    assert(lc.dlog.addActions.values.forall(a => DeletionVectors.refOf(a).isEmpty),
+      "compaction should purge sidecar refs")
+    assertSameRows(lc.toDF(spark), legacyRows())
+    val reclaimed = lc.vacuum(retentionMs = 0L)
+    assert(reclaimed.exists(_.contains(DeletionVectors.DvDirName)),
+      s"expected sidecar reclaim, got $reclaimed")
+    assertSameRows(DeltaTable.forPath(lt.loc.uri).toDF(spark), legacyRows())
 
-    // vacuum with zero retention must NOT delete the referenced sidecar
+    // spec vectors: 100 dead rows per file are past the inline size, so
+    // each file's vector is a .bin on disk
+    def bins(dir: String): Seq[String] = new java.io.File(dir).listFiles().toSeq
+      .map(_.getName).filter(_.startsWith("deletion_vector_"))
+    val d = tempDir("dv-compact")
+    val ids = spark.range(0, 1000).toDF("id").coalesce(1)
+    var t = DeltaTable.forPath(d).write(ids).write(ids)
+    t = t.deleteMergeOnRead(spark, Some(col("id") % 10 === 0))
+    val expected = ids.union(ids).filter(col("id") % 10 =!= 0)
+    assert(bins(d).size == 2, bins(d).toString)
+
+    // vacuum with zero retention must NOT delete a referenced .bin
     t.vacuum(retentionMs = 0L)
+    assert(bins(d).size == 2, bins(d).toString)
     assertSameRows(t.toDF(spark), expected)
 
     t = t.compact(spark)
@@ -288,23 +342,39 @@ class DeletionVectorsSpec extends SparkSuite {
       "compaction should purge vectors")
     assertSameRows(t.toDF(spark), expected)
 
-    // now the sidecar is unreferenced: vacuum reclaims it
+    // now the .bins are unreferenced: vacuum reclaims them
     val deleted = t.vacuum(retentionMs = 0L)
-    assert(deleted.exists(_.contains(DeletionVectors.DvDirName)),
-      s"expected sidecar reclaim, got $deleted")
+    assert(deleted.count(_.contains("deletion_vector_")) == 2,
+      s"expected .bin reclaim, got $deleted")
+    assert(bins(d).isEmpty, bins(d).toString)
     assertSameRows(t.toDF(spark), expected)
   }
 
   test("clone re-points sidecar refs; MoR table survives cloning") {
-    val d = tempDir("dv-clone-src")
-    var t = DeltaTable.forPath(d).write(nation)
-    t = t.deleteMergeOnRead(spark, Some(col("n_nationkey") >= 20))
+    val t = legacySidecarTable()
     val c = t.cloneTo(tempDir("dv-clone-dst"))
-    assertSameRows(c.toDF(spark), nation.filter(col("n_nationkey") < 20))
-    // the clone is independently deletable (writes its own sidecar)
-    val c2 = c.deleteMergeOnRead(spark, Some(col("n_nationkey") === 0))
-    assertSameRows(c2.toDF(spark),
-      nation.filter(col("n_nationkey") < 20 && col("n_nationkey") =!= 0))
+    assertSameRows(c.toDF(spark), legacyRows())
+    // the clone's refs name the SOURCE's sidecar, absolutely
+    val srcSidecar = sidecarRefs(t).head.sidecar
+    assert(sidecarRefs(c).size == 8 &&
+      sidecarRefs(c).forall(r => r.sidecar.endsWith(srcSidecar) && r.sidecar != srcSidecar),
+      sidecarRefs(c).toString)
+    // the clone is independently deletable: its own spec vectors, the
+    // source sidecar's rows merged in
+    val c2 = c.deleteMergeOnRead(spark, Some(col("k") === 0))
+    assertSameRows(c2.toDF(spark), legacyRows(col("k") === 0))
+    assert(c2.dlog.addActions.values.flatMap(DeletionVectors.refOf(_)).exists {
+      case r: DeletionVectors.DeltaRef => r.cardinality == 2L
+      case _ => false
+    })
+    assertSameRows(t.toDF(spark), legacyRows())
+
+    // a deep clone copies the sidecar with the data: it reads on after
+    // the source is gone
+    val deep = t.deepCloneTo(spark, tempDir("dv-deep-clone-dst"))
+    assert(sidecarRefs(deep).size == 8)
+    t.loc.delete()
+    assertSameRows(DeltaTable.forPath(deep.loc.uri).toDF(spark), legacyRows())
   }
 
   test("MoR delete on a partitioned table prunes candidate files") {
@@ -366,15 +436,19 @@ class DeletionVectorsSpec extends SparkSuite {
         case r: DeletionVectors.DeltaRef => r.storageType
       }.toSet
 
-    // sidecar vectors over several files, then a second delete that
-    // re-deletes already-DV'd files (their new sidecar is total per file)
-    var sc = DeltaTable.forPath(tempDir("dv-id-sidecar")).write(lineitem.repartition(4))
-    sc = sc.deleteMergeOnRead(spark, Some(col("l_quantity") > 40))
+    // legacy sidecar vectors over 8 files, then a delete that re-deletes
+    // the p=1 files: their new spec vector holds the sidecar's rows too
+    var sc = legacySidecarTable()
     assert(refKinds(sc) == Set("sidecar"))
     assertMatchesReference(sc)
-    sc = sc.deleteMergeOnRead(spark, Some(col("l_discount") === 0.0))
+    sc = sc.deleteMergeOnRead(spark, Some(col("k") % 10 === 1))
+    assert(refKinds(sc) == Set("sidecar", "i"))
+    val merged = sc.dlog.addActions.values.toSeq.flatMap(DeletionVectors.refOf(_))
+      .collect { case r: DeletionVectors.DeltaRef => r.cardinality }
+    assert(merged == Seq.fill(4)(2L), merged.toString)
     assertMatchesReference(sc)
-    // a clone re-points the refs at the source's sidecars
+    assertSameRows(sc.toDF(spark), legacyRows(col("k") % 10 === 1))
+    // a clone re-points the refs at the source's sidecar and vectors
     assertMatchesReference(sc.cloneTo(tempDir("dv-id-clone")))
 
     // spec vectors: one file with a .bin ("u"), one with an inline ("i")
@@ -391,18 +465,8 @@ class DeletionVectorsSpec extends SparkSuite {
     assertMatchesReference(sp.cloneTo(tempDir("dv-id-spec-clone")))
 
     // two DV'd files sharing one basename, each with its own ref
-    val a = tempDir("dv-id-same-a")
-    val b = tempDir("dv-id-same-b")
-    nation.filter(col("n_regionkey") < 2).coalesce(1).write.parquet(s"$a/d")
-    nation.filter(col("n_regionkey") >= 2).coalesce(1).write.parquet(s"$b/d")
-    def renamed(dir: String): String = {
-      val part = new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
-      val to = new java.io.File(new java.io.File(dir).getParentFile, "same.parquet")
-      assert(part.renameTo(to))
-      to.toURI.toString
-    }
     var same = DeltaTable.forPath(tempDir("dv-id-same"))
-      .importRefs(spark, Seq(renamed(s"$a/d"), renamed(s"$b/d")))
+      .importRefs(spark, sameNamedNationFiles("dv-id-same"))
     same = same.deleteMergeOnRead(spark, Some(col("n_nationkey") === 0)) // file a
     same = same.deleteMergeOnRead(spark, Some(col("n_nationkey") === 3)) // file b
     val sameRefs = same.dlog.addActions.values.flatMap(DeletionVectors.refOf(_)).toSeq
@@ -433,6 +497,37 @@ class DeletionVectorsSpec extends SparkSuite {
       .withColumn("_row_id", baseOf(col(DeltaScan.MetaPath)) + col(DeltaScan.MetaRow))
       .drop(DeltaScan.MetaPath, DeltaScan.MetaRow)
     assertSameRows(rt.toDFWithRowIds(spark), withIds)
+  }
+
+  /** nation as two parquet files in different directories that share
+    * the basename `same.parquet` (regions 0-1 and 2-4), as URIs to import.
+    */
+  private def sameNamedNationFiles(prefix: String): Seq[String] =
+    Seq(col("n_regionkey") < 2, col("n_regionkey") >= 2).map { part =>
+      val dir = tempDir(prefix)
+      nation.filter(part).coalesce(1).write.parquet(s"$dir/d")
+      val written = new java.io.File(s"$dir/d").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val to = new java.io.File(dir, "same.parquet")
+      assert(written.renameTo(to))
+      to.toURI.toString
+    }
+
+  test("one MoR delete over two files sharing a basename writes a vector for each") {
+    val files = sameNamedNationFiles("dv-collide")
+    val where = col("n_nationkey") % 4 === 0
+    val mor = DeltaTable.forPath(tempDir("dv-collide-mor")).importRefs(spark, files)
+      .deleteMergeOnRead(spark, Some(where))
+    val cow = DeltaTable.forPath(tempDir("dv-collide-cow")).importRefs(spark, files)
+      .delete(spark, Some(where))
+    val vectors = mor.dlog.addActions.values.toSeq.flatMap(DeletionVectors.refOf(_))
+    assert(vectors.size == 2 && vectors.forall {
+      case r: DeletionVectors.DeltaRef => r.storageType == "i" || r.storageType == "u"
+      case _ => false
+    }, vectors.toString)
+    assert(vectors.map(_.cardinality).sum == nation.filter(where).count())
+    assertSameRows(mor.toDF(spark), cow.toDF(spark))
+    assertSameRows(DeltaTable.forPath(mor.loc.uri).toDF(spark), nation.filter(not(where)))
   }
 
   test("mergeMergeOnRead ≡ copy-on-write merge, without rewriting target files") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -14,8 +14,10 @@ import graft.sources.DeletionVectors
   * same small fixture under four table kinds:
   *
   *  - `plain`: 8 files (4 appends × partitions p=0/1), 5 rows each;
-  *  - `sidecar`: the plain table after a merge-on-read delete, so every
-  *    file already carries a `_graft_dv` sidecar vector;
+  *  - `sidecar`: the plain table after a merge-on-read delete of
+  *    `k % 10 >= 8`, as an earlier build wrote it, so every file already
+  *    carries a `_graft_dv` sidecar vector (the committed fixture
+  *    `legacy-sidecar-dv-table`; nothing writes sidecars any more);
   *  - `cdf`: `delta.enableChangeDataFeed=true`;
   *  - `specdv`: `delta.enableDeletionVectors=true` (delta-spec vectors,
   *    and DELETE routed to merge-on-read).
@@ -38,32 +40,27 @@ class DmlCommitSpec extends SparkSuite {
     ks.map(k => (k, k % 2, s"v$k", k * 1.5)).toDF("k", "p", "v", "x")
 
   private lazy val fixtures: Map[String, Path] = kinds.map { kind =>
-    val d = tempDir(s"dml-pin-$kind")
-    var t = DeltaTable.forPath(d).write(rows(0 until 10).coalesce(1),
-      partitionBy = Some(Seq("p")))
-    (1 until 4).foreach(b => t = t.write(rows(b * 10 until b * 10 + 10).coalesce(1)))
-    kind match {
-      case "plain"   => ()
-      case "sidecar" => t.deleteMergeOnRead(spark, Some(col("k") % 10 >= 8))
-      case "cdf"     => t.setTableProperties(Map("delta.enableChangeDataFeed" -> "true"))
-      case "specdv"  => t.setTableProperties(Map("delta.enableDeletionVectors" -> "true"))
+    if (kind == "sidecar")
+      kind -> Paths.get(getClass.getResource("/graft/legacy-sidecar-dv-table").toURI)
+    else {
+      val d = tempDir(s"dml-pin-$kind")
+      var t = DeltaTable.forPath(d).write(rows(0 until 10).coalesce(1),
+        partitionBy = Some(Seq("p")))
+      (1 until 4).foreach(b => t = t.write(rows(b * 10 until b * 10 + 10).coalesce(1)))
+      kind match {
+        case "plain"  => ()
+        case "cdf"    => t.setTableProperties(Map("delta.enableChangeDataFeed" -> "true"))
+        case "specdv" => t.setTableProperties(Map("delta.enableDeletionVectors" -> "true"))
+      }
+      kind -> Paths.get(d)
     }
-    kind -> Paths.get(d)
   }.toMap
 
   /** A private copy of the kind's fixture (log paths are relative). */
   private def fresh(kind: String): DeltaTable = copyOf(fixtures(kind))
 
-  private def copyOf(src: Path): DeltaTable = {
-    val dst = Paths.get(tempDir("dml-case"))
-    val walk = Files.walk(src)
-    try walk.forEach { p =>
-      val target = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(target)
-      else Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
-    } finally walk.close()
-    DeltaTable.forPath(dst.toString)
-  }
+  private def copyOf(src: Path): DeltaTable =
+    DeltaTable.forPath(copyToTemp(src, "dml-case"))
 
   private val srcKeys = Seq(2, 3, 17, 44, 45)
   private def wideSource: DataFrame =

@@ -105,14 +105,38 @@ class Round11Spec extends SparkSuite {
     assertSameRows(t.toDF(spark), DeltaTable.forPath(d).toDF(spark))
   }
 
-  test("native sidecar tables keep minimal MoR entries (no paired removes)") {
-    val d = tempDir("r11-native-minimal")
-    var t = DeltaTable.forPath(d).write(spark.range(0, 100).toDF("id"))
-    t = t.deleteMergeOnRead(spark, Some(col("id") < 10))
-    val entry = t.dlog.entries.last._2
-    assert(entry.removes.isEmpty,
-      "graft-native MoR delete should not emit tombstones (path-keyed replay)")
-    assert(entry.adds.forall(a => DeletionVectors.refOf(a).isDefined))
+  test("MoR verbs without delta.enableDeletionVectors write spec vectors and paired removes") {
+    val d = tempDir("r11-no-property")
+    import spark.implicits._
+    var t = DeltaTable.forPath(d).write(spark.range(0, 1000).toDF("id").coalesce(2))
+    assert(!t.tableProperties.contains("delta.enableDeletionVectors"))
+    val verbs: Seq[(String, DeltaTable => DeltaTable)] = Seq(
+      "deleteMergeOnRead" -> (_.deleteMergeOnRead(spark, Some(col("id") % 7 === 0))),
+      "updateMergeOnRead" -> (_.updateMergeOnRead(spark, Some(col("id") < 3),
+        Map("id" -> (col("id") + 5000)))),
+      "mergeMergeOnRead" -> (_.mergeMergeOnRead(spark, Seq(4L, 600L, 9000L).toDF("id"),
+        Seq("id"))))
+    verbs.foreach { case (verb, op) =>
+      t = op(t)
+      val entry = t.dlog.entries.last._2
+      val dvAdds = entry.adds.filter(a => DeletionVectors.refOf(a).isDefined)
+      assert(dvAdds.nonEmpty, verb)
+      // every descriptor is the delta wire format: inline or a .bin
+      dvAdds.flatMap(DeletionVectors.refOf(_)).foreach {
+        case r: DeletionVectors.DeltaRef =>
+          assert(r.storageType == "i" || r.storageType == "u", s"$verb: $r")
+        case other => fail(s"$verb wrote a non-spec vector: $other")
+      }
+      // each re-add pairs with a remove of the add it supersedes
+      assert(entry.removes.map(_.path).sorted == dvAdds.map(_.path).sorted, verb)
+      val live = specReplay(d)
+      assert(live.keys.map(_._1).toSeq.distinct.size == live.size,
+        s"$verb left a duplicated (path, dvId) pair")
+      assert(live.size == t.dlog.addActions.size, verb)
+    }
+    assert(!new java.io.File(d, DeletionVectors.DvDirName).exists,
+      "no merge-on-read verb may write a _graft_dv sidecar")
+    assertSameRows(DeltaTable.forPath(d).toDF(spark), t.toDF(spark))
   }
 
   test("inline DV descriptors omit offset; on-disk descriptors carry it") {

@@ -19,6 +19,21 @@ trait SparkSuite extends AnyFunSuite {
   def tempDir(prefix: String = "graft-test"): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** A copy of the directory tree at `src` in a new temp dir (a table
+    * whose log paths are relative opens there as its own table).
+    */
+  def copyToTemp(src: java.nio.file.Path, prefix: String): String = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dst = java.nio.file.Paths.get(tempDir(prefix))
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val target = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(target)
+      else Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
+    dst.toString
+  }
+
   /** Spark jobs launched by `body` on the calling thread. Suites share the
     * lazy SparkSession and sbt runs them in parallel threads, so a global
     * job count could catch another suite's jobs inside the window. Job

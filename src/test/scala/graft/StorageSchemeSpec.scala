@@ -148,5 +148,17 @@ class StorageSchemeSpec extends SparkSuite {
     // a fresh handle replays the DV through the scheme-generic resolver
     assertSameRows(DeltaTable.forPath(d, conf = hconf).toDF(spark),
       nation.filter(col("n_nationkey") >= 5))
+    // 100 dead rows are past the inline size: the vector is a .bin,
+    // written by the executor task through the mock filesystem
+    val ids = spark.range(0, 1000).toDF("id").coalesce(1)
+    val d2 = MockSchemeFileSystem.tempPath("mock-dv-bin")
+    val tb = DeltaTable.forPath(d2, conf = hconf).write(ids)
+      .deleteMergeOnRead(spark, Some(col("id") % 10 === 0))
+    val bins = tb.loc.fs.listStatus(tb.loc.path).map(_.getPath.toString)
+      .filter(_.contains("deletion_vector_"))
+    assert(bins.length == 1, bins.toSeq.toString)
+    MockSchemeFileSystem.assertAllMock(bins.toSeq)
+    assertSameRows(DeltaTable.forPath(d2, conf = hconf).toDF(spark),
+      ids.filter(col("id") % 10 =!= 0))
   }
 }

@@ -107,7 +107,7 @@ class TableSpec extends SparkSuite {
     var t = DeltaTable.forPath(src)
       .write(nation, partitionBy = Some(Seq("n_regionkey")))
       .setTableProperties(Map("custom.tag" -> "v1"))
-    // MoR delete so the clone must carry a DV sidecar too
+    // MoR delete so the clone must carry a deletion vector too
     t = t.deleteMergeOnRead(spark, Some(col("n_nationkey") === 3))
     val want = t.toDF(spark).collect().toSet
 
