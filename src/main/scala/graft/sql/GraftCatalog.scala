@@ -79,13 +79,16 @@ object GraftCatalog {
     case _ => None
   }
 
+  /** Snapshot versions present, ascending, from one listing of names. */
+  private def versions(dir: Location): Seq[Long] =
+    dir.listNames().flatMap(versionOf)
+
   /** Latest committed (version, snapshot); version -1 with the legacy
     * single-file content (or empty) when no versioned snapshot exists.
     */
   private def latest(spark: SparkSession): (Long, Map[String, String]) = {
     val dir = registryDir(spark)
-    val versions = dir.listSorted().flatMap(s => versionOf(s.getPath.getName))
-    versions.lastOption match {
+    versions(dir).lastOption match {
       case Some(v) =>
         // the listed head can be pruned before it is read when the head
         // moves past the window in between; the new head is then listed
@@ -124,8 +127,7 @@ object GraftCatalog {
     // when neither does. Without the legacy/absent arm every statement of
     // a registry-less session would re-read (or re-throw FileNotFound on)
     // the legacy path.
-    val top = dir.listSorted().flatMap(s => versionOf(s.getPath.getName))
-      .lastOption.getOrElse(-1L)
+    val top = versions(dir).lastOption.getOrElse(-1L)
     val stamp =
       if (top >= 0L) top
       else {
@@ -150,11 +152,8 @@ object GraftCatalog {
     mutate(spark)(_ + (k -> path))
 
   /** True when the name was present. */
-  def unregister(spark: SparkSession, k: String): Boolean = {
-    var present = false
-    mutate(spark) { m => present = m.contains(k); m - k }
-    present
-  }
+  def unregister(spark: SparkSession, k: String): Boolean =
+    mutate(spark)(_ - k).contains(k)
 
   /** OCC mutation: read latest snapshot, apply, commit version+1 via
     * atomic create-if-absent; a concurrent committer (ANY process) makes
@@ -171,26 +170,44 @@ object GraftCatalog {
     * The snapshot then lands below the head, where no reader looks, so
     * the mutation is lost; that case is detected after the create and
     * retried like a conflict. `beforeCommit` runs between the read and
-    * the create (specs use it to force that interleaving).
+    * the create, `afterCreate` between a successful create and its
+    * recycle check (specs use them to force those interleavings).
+    *
+    * Returns the snapshot the mutation was applied to: that of the first
+    * attempt whose create succeeded, else that of the attempt that found
+    * nothing to change. A create judged recycled may in fact have landed
+    * (more than [[PruneWindow]] others committed on top of it before the
+    * re-listing, which then looks the same), and its retry finds the
+    * mutation already applied: `unregister` would read the retry's
+    * snapshot as "the name was not there".
     */
-  private[graft] def mutate(spark: SparkSession, beforeCommit: () => Unit = () => ())(
-      f: Map[String, String] => Map[String, String]): Unit = {
+  private[graft] def mutate(spark: SparkSession, beforeCommit: () => Unit = () => (),
+      afterCreate: () => Unit = () => ())(
+      f: Map[String, String] => Map[String, String]): Map[String, String] = {
     val dir = registryDir(spark)
     var attempt = 0
+    var base = Option.empty[Map[String, String]]
     var done = false
     while (!done) {
       val (v, cur) = latest(spark)
       val next = f(cur)
-      if (next == cur) { cache = Some((dir.uri, v, cur)); done = true }
-      else {
+      if (next == cur) {
+        cache = Some((dir.uri, v, cur))
+        if (base.isEmpty) base = Some(cur)
+        done = true
+      } else {
         val node = graft.log.Json.obj()
         next.toSeq.sortBy(_._1).foreach { case (k, p) => node.put(k, p) }
         val target = dir.child(f"${v + 1}%020d.json")
         beforeCommit()
-        val landed =
-          try { target.createIfAbsent(node.toString); !recycled(dir, v + 1) }
+        val created =
+          try { target.createIfAbsent(node.toString); true }
           catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        if (landed) {
+        if (created) {
+          if (base.isEmpty) base = Some(cur)
+          afterCreate()
+        }
+        if (created && !recycled(dir, v + 1)) {
           cache = Some((dir.uri, v + 1, next))
           prune(dir, v + 1)
           done = true
@@ -201,6 +218,7 @@ object GraftCatalog {
         }
       }
     }
+    base.get
   }
 
   /** Snapshots a commit keeps behind itself; older ones are pruned. */
@@ -215,16 +233,14 @@ object GraftCatalog {
     * name mutation to a state that already holds it.
     */
   private def recycled(dir: Location, committed: Long): Boolean =
-    dir.listSorted().flatMap(s => versionOf(s.getPath.getName))
-      .exists(_ > committed + PruneWindow)
+    versions(dir).exists(_ > committed + PruneWindow)
 
   /** Keep a small trailing window of snapshots (readers only ever open
     * the latest; the window covers a reader that listed just before a
     * commit), delete the rest — the registry directory stays O(1) files.
     */
   private def prune(dir: Location, committed: Long): Unit =
-    try dir.listSorted().flatMap(s => versionOf(s.getPath.getName))
-      .filter(_ < committed - PruneWindow)
+    try versions(dir).filter(_ < committed - PruneWindow)
       .foreach(v => dir.child(f"$v%020d.json").delete(recursive = false))
     catch { case _: Throwable => () } // best-effort housekeeping
 

@@ -34,6 +34,25 @@ final class Location private (val path: Path, val fs: FileSystem) {
     if (!exists) Seq.empty
     else fs.listStatus(path).sortBy(_.getPath.getName).toSeq
 
+  /** Sorted child names. On the local filesystem these come from one
+    * directory read: Hadoop's local `listStatus` reads the names and then
+    * stats each one, dropping every name deleted in between, so a
+    * directory whose entries turn over while that loop runs can list
+    * empty though it never was (the catalog registry, which always holds
+    * its newest snapshots, listed none). Other schemes list keys in one
+    * call, through [[listSorted]].
+    */
+  def listNames(): Seq[String] = {
+    val scheme = Option(path.toUri.getScheme).getOrElse("file")
+    if (scheme == "file") {
+      val f = new java.io.File(path.toUri.getPath)
+      val names = f.list()
+      if (names != null) names.toSeq.sorted
+      else if (f.exists) throw new java.io.IOException(s"cannot list $uri")
+      else Seq.empty
+    } else listSorted().map(_.getPath.getName)
+  }
+
   /** Recursive listing of data files, skipping hidden/_-prefixed entries. */
   def listDataFilesRecursive(): Seq[FileStatus] = {
     def visible(p: Path): Boolean = {

@@ -105,7 +105,7 @@ class Round11Spec extends SparkSuite {
     assertSameRows(t.toDF(spark), DeltaTable.forPath(d).toDF(spark))
   }
 
-  test("MoR verbs without delta.enableDeletionVectors write spec vectors and paired removes") {
+  test("MoR verbs without delta.enableDeletionVectors write spec DVs and paired removes") {
     val d = tempDir("r11-no-property")
     import spark.implicits._
     var t = DeltaTable.forPath(d).write(spark.range(0, 1000).toDF("id").coalesce(2))

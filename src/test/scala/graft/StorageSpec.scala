@@ -44,6 +44,16 @@ class StorageSpec extends SparkSuite {
     assert(loc.readString() == """{"v":1}""", "loser must not clobber")
   }
 
+  test("listNames lists a directory's names, hidden ones too, on both scheme paths") {
+    val dir = tempDir("listnames")
+    Seq("b.json", "a.json", ".a.json.occ-1").foreach(n =>
+      java.nio.file.Files.write(new java.io.File(dir, n).toPath, "{}".getBytes("UTF-8")))
+    val want = Seq(".a.json.occ-1", "a.json", "b.json")
+    assert(Location(dir).listNames() == want)
+    assert(Location(s"mockfs://test$dir", mockConf).listNames() == want)
+    assert(Location(s"$dir/absent").listNames().isEmpty)
+  }
+
   test("full table lifecycle over a non-file scheme") {
     // Spark's executors resolve the scheme through the session hadoop conf
     spark.sparkContext.hadoopConfiguration

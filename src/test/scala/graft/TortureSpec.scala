@@ -263,6 +263,32 @@ class TortureSpec extends SparkSuite {
     } finally (others :+ "stallreg.stalled").foreach(GraftCatalog.unregister(spark, _))
   }
 
+  test("a create buried past the prune window before its recycle check keeps its answer") {
+    // the mirror image of the stalled registrar: the create lands on a
+    // fresh number, then five others commit on top of it before its
+    // recycle check lists the directory, which then looks the same as a
+    // recycled number. The retry finds the name already gone; what the
+    // call removed is still the snapshot its landed create was built on
+    import graft.sql.GraftCatalog
+    val others = (0 until 5).map(i => s"buriedreg.other_$i")
+    GraftCatalog.register(spark, "buriedreg.victim", "/tmp/buriedreg/victim")
+    var creates = 0
+    val base = GraftCatalog.mutate(spark, afterCreate = () => {
+      creates += 1
+      if (creates == 1)
+        others.foreach(n => GraftCatalog.register(spark, n, s"/tmp/buriedreg/$n"))
+    })(_ - "buriedreg.victim")
+    try {
+      assert(creates == 1, s"$creates creates; the retry must find the removal applied")
+      assert(base.contains("buriedreg.victim"),
+        "the landed removal was reported as finding no name (unregister would answer false)")
+      GraftCatalog.invalidateCache()
+      val after = GraftCatalog.all(spark)
+      assert(!after.contains("buriedreg.victim"), "the removal was lost")
+      assert(others.forall(after.contains), s"lost: ${others.filterNot(after.contains)}")
+    } finally others.foreach(GraftCatalog.unregister(spark, _))
+  }
+
   test("legacy single-file catalog seeds the versioned registry") {
     import graft.sql.GraftCatalog
     // a pre-r14 warehouse has only _graft_catalog.json; reads must keep
