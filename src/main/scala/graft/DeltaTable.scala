@@ -9,7 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, count, count_distinct, lit, not, struct, when}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Pluggable commit primitive (reference xdlake/__init__.py:425-442 keeps
   * the commit context overridable for external locking services).
@@ -809,7 +809,8 @@ final case class DeltaTable(
   //     ([[prunedAdds]]) or by the merge source's key bounds
   //     ([[mergeSourceProfile]]);
   //  2. touched files: one aggregate over the candidates' matching rows
-  //     ([[touchedFiles]]) that also returns the verb's row measure;
+  //     ([[touchedFiles]]) that also returns the verb's row measures
+  //     (MERGE's: the matched rows and their distinct keys);
   //  3. the one step where the two write strategies differ: copy-on-write
   //     rewrites the touched files' kept rows ([[writeData]]);
   //     merge-on-read marks the matched rows dead in a deletion vector and
@@ -817,27 +818,32 @@ final case class DeltaTable(
   //     files);
   //  4. one commit ([[commitOrRebase]]) of the removes or DV re-adds, the
   //     new files and any change-data files.
-  // Files without a matching row are never rewritten, and every scan
-  // reads through deletion vectors, so already-dead rows are neither
-  // matched nor copied.
+  // Every MERGE form runs in one executor ([[mergeClauses]]) over a clause
+  // list: its step 3 is one join of the touched rows with the broadcast
+  // source that tags each row copy, update or delete; its change data
+  // filters that same join, and its metrics come from step 2 and the
+  // written files, so after step 2 only touched files are read. Files
+  // without a matching row are never rewritten, and every scan reads
+  // through deletion vectors, so already-dead rows are neither matched
+  // nor copied.
   // ------------------------------------------------------------------
 
   /** Step 2: the live files owning a row of `matched` (applied to the
-    * candidates' meta-scan) and the value of each of `measures` over those
-    * rows, in ONE aggregate job; an empty candidate set runs none. `also`
-    * joins the touched set unscanned (MERGE's not-matched-by-source clause).
+    * candidates' meta-scan) and a row holding the value of each of
+    * `measures` over those rows, in ONE aggregate job; an empty candidate
+    * set runs none and measures nothing. `also` joins the touched set
+    * unscanned (MERGE's not-matched-by-source clause).
     */
   private def touchedFiles(spark: SparkSession, candidates: Seq[AddFile],
       matched: DataFrame => DataFrame, measures: Seq[Column],
-      also: Seq[AddFile] = Nil): (Seq[AddFile], Seq[Long]) = {
+      also: Seq[AddFile] = Nil): (Seq[AddFile], Option[Row]) = {
     def canonical(a: AddFile) = Location.canonical(Location.resolve(a.path, loc, conf).uri)
     val (found, values) =
-      if (candidates.isEmpty) (Set.empty[String], measures.map(_ => 0L))
+      if (candidates.isEmpty) (Set.empty[String], None)
       else {
         val r = matched(scanAddsWithMeta(spark, candidates))
-          .agg(collect_set(col(DeltaScan.MetaPath)), measures: _*).head()
-        (r.getSeq[String](0).map(Location.canonical).toSet,
-          measures.indices.map(i => r.getLong(i + 1)))
+          .agg(measures.head, measures.tail :+ collect_set(col(DeltaScan.MetaPath)): _*).head()
+        (r.getSeq[String](measures.size).map(Location.canonical).toSet, Some(r))
       }
     val addByCanonical = dlog.addActions.values.map(a => canonical(a) -> a).toMap
     (addByCanonical.view.filterKeys(found ++ also.map(canonical)).values.toSeq, values)
@@ -851,9 +857,10 @@ final case class DeltaTable(
   private def rewriteWithout(spark: SparkSession, candidates: Seq[AddFile],
       matched: Column, changeData: Boolean)
       : (Seq[AddFile], Seq[AddFile], Long, Seq[AddCDCFile]) = {
-    val (touched, Seq(dropped)) =
+    val (touched, measured) =
       touchedFiles(spark, candidates, _.filter(matched), Seq(count(lit(1))))
     if (touched.isEmpty) return (Seq.empty, Seq.empty, 0L, Seq.empty)
+    val dropped = measured.fold(0L)(_.getLong(0))
     val touchedDF = scanAdds(spark, touched)
     val cdc =
       if (!changeData) Seq.empty
@@ -1174,8 +1181,9 @@ final case class DeltaTable(
       } else {
         // numUpdated is step 2's count(1); the rewrite holds every live
         // row of the touched files, so the rest of it was copied
-        val (touched, Seq(numUpdated)) =
+        val (touched, measured) =
           touchedFiles(spark, candidates, _.filter(matched), Seq(count(lit(1))))
+        val numUpdated = measured.fold(0L)(_.getLong(0))
         val (written, cdc) =
           if (touched.isEmpty) (Seq.empty, Seq.empty)
           else {
@@ -1248,8 +1256,8 @@ final case class DeltaTable(
     (r.getLong(0), candidates)
   }
 
-  /** Copy-on-write MERGE's candidate files for `src`: the profile's, or
-    * every live file when the source can match no target row.
+  /** The candidate files [[mergeSourceProfile]] allows for `src`, or every
+    * live file when it allows none (MERGE itself then scans nothing).
     */
   private[graft] def mergeCandidateAdds(spark: SparkSession, src: DataFrame,
       keyCols: Seq[String]): Seq[AddFile] =
@@ -1267,10 +1275,9 @@ final case class DeltaTable(
     * / SCD-style pipelines retire rows the upstream dropped.
     *
     * Scale shape: touched files are found with a semi-join of the
-    * snapshot against the (usually broadcastable) distinct source keys —
-    * untouched files are never rewritten; touched files are rewritten
-    * without their matched rows; all source rows append as new files. One
-    * scan, no driver row materialization beyond the touched-file list. The
+    * snapshot against the (usually broadcastable) source keys — untouched
+    * files are never rewritten; touched files are rewritten without their
+    * matched rows; all source rows append as new files. The
     * not-matched-by-source clause necessarily widens the touched set to
     * every file that may hold a deletable row — stats-pruned by the
     * condition when one is given (delta-spark has the same asymmetry: the
@@ -1283,8 +1290,11 @@ final case class DeltaTable(
       schemaEvolution: Boolean = false,
       notMatchedBySourceDelete: Boolean = false,
       notMatchedBySourceCondition: Option[Column] = None): DeltaTable =
-    upsert(spark, source, keyCols, customMetadata, mergeOnRead = false,
-      schemaEvolution, notMatchedBySourceDelete, notMatchedBySourceCondition)
+    mergeClauses(spark, source, DeltaTable.MergeClauses(keyCols, wholeRow = true,
+      notMatchedBySourceDelete =
+        if (notMatchedBySourceDelete) Some(notMatchedBySourceCondition.getOrElse(lit(true)))
+        else None,
+      schemaEvolution = schemaEvolution), customMetadata)
 
   /** Merge-on-read MERGE upsert: target rows whose key matches the source
     * are marked dead via a deletion vector — NO target file is rewritten —
@@ -1299,143 +1309,8 @@ final case class DeltaTable(
   def mergeMergeOnRead(spark: SparkSession, source: DataFrame,
       keyCols: Seq[String],
       customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable =
-    upsert(spark, source, keyCols, customMetadata, mergeOnRead = true)
-
-  private def upsert(spark: SparkSession, source: DataFrame, keyCols: Seq[String],
-      customMetadata: Map[String, JsonNode], mergeOnRead: Boolean,
-      schemaEvolution: Boolean = false, notMatchedBySourceDelete: Boolean = false,
-      notMatchedBySourceCondition: Option[Column] = None): DeltaTable = {
-    // a merge may update/delete matched target rows — removal-gated
-    assertPreWrite(removesData = true)
-    require(keyCols.nonEmpty, "merge requires key columns")
-    // the source plan is reused by several jobs (profile, touched-file
-    // discovery via its keys, data write) — cache so a 100 GB source is
-    // computed once, not once per job
-    val src = source.cache()
-    try {
-      val (srcTotal, bounded) = mergeSourceProfile(src, keyCols)
-      val keys = src.select(keyCols.map(col): _*).distinct()
-      val keyMatch: DataFrame => DataFrame = _.join(broadcast(keys), keyCols, "left_semi")
-      // matched distinct KEYS are the update metric: counting rows
-      // over-counts when the target holds duplicate rows per key (legal —
-      // only the source is checked) and could drive numInserted negative
-      val keyCount = count_distinct(struct(keyCols.map(col): _*))
-
-      // schema evolution (delta's withSchemaEvolution): source-only
-      // columns join the table schema (nullable; fresh physical names on
-      // mapped tables), copied/kept rows null-backfill, and the evolved
-      // metadata rides the SAME merge commit — atomic like delta's
-      val evolved: StructType =
-        if (!schemaEvolution) dlog.schema
-        else ColumnMapping.annotateForWrite(Some(dlog.schema), mappingActive,
-          DeltaLog.mergeSchemas(dlog.schema, source.schema))
-      val schemaChanged = evolved.fieldNames.length != dlog.schema.fieldNames.length
-      val wMapping = ColumnMapping.logicalToPhysical(evolved)
-      def alignEvolved(df: DataFrame): DataFrame =
-        df.select(evolved.fields.toIndexedSeq.map(f =>
-          (if (df.columns.contains(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name)): _*)
-      // all source rows land as new files (updates + inserts); CHECK
-      // constraints gate them like any other write (src is cached, so the
-      // validation job is a cache scan)
-      val sourceAligned =
-        if (schemaEvolution) alignEvolved(regenerate(src))
-        else regenerate(src).select(dlog.schema.fieldNames.toIndexedSeq.map(col): _*)
-      def writeSource(): Seq[AddFile] = {
-        validateConstraints(sourceAligned)
-        writeData(sourceAligned, dlog.versionToWrite, dlog.partitionColumns, wMapping)
-      }
-      val predicate = keyCols.map(k => s"target.$k = source.$k").mkString(" AND ")
-
-      val (entry, readPaths) =
-        if (mergeOnRead) {
-          val candidates = bounded.getOrElse(Seq.empty)
-          val (dvAdds, fullDead, numDead, matched) = morMarkWith(spark, candidates,
-            keyMatch, _.agg(keyCount).head().getLong(0))
-          val numUpdated = matched.getOrElse(0L)
-          (DeltaLogEntry.mergeMergeOnReadTable(predicate, dvAdds, fullDead, writeSource(),
-            dlog.version, numUpdated, srcTotal - numUpdated, numDead,
-            specDvRemoves(dvAdds)), candidates.map(_.path).toSet)
-        } else {
-          // the not-matched-by-source DELETE widens the touched set to
-          // every file that may own a deletable row; its optional
-          // condition stats-prunes that set like DELETE's candidates.
-          // The touched-file step also counts the matched ROWS: every
-          // other removed row of the touched files is one that clause
-          // deleted, so its metric needs no job of its own
-          val live = dlog.addActions.values.toSeq
-          val (touched, Seq(numUpdated, matchedRows)) = touchedFiles(spark,
-            bounded.getOrElse(live), keyMatch, Seq(keyCount, count(lit(1))), also =
-              if (!notMatchedBySourceDelete) Seq.empty
-              else notMatchedBySourceCondition.map(prunedAdds).getOrElse(live))
-          val nmbsCond: Column =
-            notMatchedBySourceCondition.map(c => coalesce(c, lit(false)))
-              .getOrElse(lit(true))
-
-          // rewrite touched files without their matched rows (and, under
-          // the not-matched-by-source clause, without its deletable rows)
-          val keptAdds: Seq[AddFile] =
-            if (touched.isEmpty) Seq.empty
-            else {
-              val notMatched = scanAdds(spark, touched).join(broadcast(keys), keyCols, "left_anti")
-              val kept =
-                if (notMatchedBySourceDelete) notMatched.filter(not(nmbsCond))
-                else notMatched
-              writeData(if (schemaChanged) alignEvolved(kept) else kept,
-                dlog.versionToWrite, dlog.partitionColumns, wMapping)
-            }
-          val sourceAdds = writeSource()
-
-          // change data feed (delta's cdc): matched target rows are
-          // update_preimage, their replacing source rows update_postimage,
-          // unmatched source rows insert — exact row-level changes instead
-          // of the feed's file-level reconstruction
-          var cdc: Seq[AddCDCFile] = Seq.empty
-          if (cdfEnabled) {
-            val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-            if (touched.nonEmpty && notMatchedBySourceDelete) {
-              val deletable0 = scanAdds(spark, touched)
-                .join(broadcast(keys), keyCols, "left_anti").filter(nmbsCond)
-              val deletable =
-                if (schemaChanged) alignEvolved(deletable0) else deletable0
-              frames += deletable.withColumn("_change_type", lit("delete"))
-            }
-            if (touched.nonEmpty) {
-              val matchedTarget0 = keyMatch(scanAdds(spark, touched))
-              val matchedTarget =
-                if (schemaChanged) alignEvolved(matchedTarget0) else matchedTarget0
-              frames += matchedTarget.withColumn("_change_type", lit("update_preimage"))
-              val matchedKeys = matchedTarget.select(keyCols.map(col): _*).distinct()
-              frames += sourceAligned.join(broadcast(matchedKeys), keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_postimage"))
-              frames += sourceAligned.join(broadcast(matchedKeys), keyCols, "left_anti")
-                .withColumn("_change_type", lit("insert"))
-            } else
-              frames += sourceAligned.withColumn("_change_type", lit("insert"))
-            cdc = writeChangeData(frames.reduce(_.unionByName(_)), dlog.versionToWrite)
-          }
-
-          // numTargetRowsRemoved is the row-based complement to the
-          // key-based update count: live rows of the touched files (stats
-          // minus DV cardinality, so rows earlier commits already deleted
-          // are not counted again) minus the rows copied; the rows the
-          // not-matched-by-source clause deleted are those less the matched
-          val numCopied = rowsIn(keptAdds)
-          val numRemoved = statsLiveRows(touched) - numCopied
-          val entry = DeltaLogEntry.mergeTable(predicate, touched,
-            keptAdds ++ sourceAdds, dlog.version, numUpdated, srcTotal - numUpdated,
-            numCopied, numTargetRowsRemoved = numRemoved,
-            numTargetRowsDeleted = if (notMatchedBySourceDelete) numRemoved - matchedRows else 0L)
-          val withMeta =
-            if (!schemaChanged) entry.actions
-            else dlog.latestMetadata.map(m =>
-              m.copy(schemaString = evolved.json) +: entry.actions)
-              .getOrElse(entry.actions)
-          (DeltaLogEntry(withMeta ++ cdc), live.map(_.path).toSet)
-        }
-      commitOrRebase(entry.withExtraCommitInfo(customMetadata), readPaths, Some(None))
-    } finally src.unpersist()
-  }
+    mergeClauses(spark, source,
+      DeltaTable.MergeClauses(keyCols, wholeRow = true, mergeOnRead = true), customMetadata)
 
   /** MERGE with delta-spark's clause surface for NARROW sources: matched
     * target rows get a column-wise SET applied (instead of whole-row
@@ -1463,139 +1338,203 @@ final case class DeltaTable(
       insertValues: Option[Map[String, Column]] = None,
       matchedDeleteCondition: Option[Column] = None,
       customMetadata: Map[String, JsonNode] = Map.empty,
-      matchedUpdateCondition: Option[Column] = None): DeltaTable = {
+      matchedUpdateCondition: Option[Column] = None): DeltaTable =
+    mergeClauses(spark, source, DeltaTable.MergeClauses(keyCols, set = set,
+      updateCondition = matchedUpdateCondition, matchedDelete = matchedDeleteCondition,
+      insert = insertValues), customMetadata)
+
+  /** The one MERGE executor, behind [[merge]], [[mergeMergeOnRead]],
+    * [[mergeWhenMatchedUpdate]] and SQL MERGE, over the cached source:
+    *  1. the source profile and candidates ([[mergeSourceProfile]]);
+    *  2. one touched-file aggregate that also collects the matched rows'
+    *     count and distinct keys (a subset of the broadcast source keys);
+    *  3. one join of the touched rows with the broadcast source, which
+    *     tags each row; every write checks its rows ([[writeChecked]]);
+    *  4. change data from that join and the source, metrics from step 2
+    *     and the written files' stats: `num_inserted_rows` is source rows
+    *     minus matched keys, exact because the source keys are unique.
+    * Merge-on-read (whole-row only) marks the matched rows dead through
+    * [[morMarkWith]] instead of steps 2-3 and writes the whole source.
+    */
+  private[graft] def mergeClauses(spark: SparkSession, source: DataFrame,
+      c: DeltaTable.MergeClauses, customMetadata: Map[String, JsonNode] = Map.empty): DeltaTable = {
+    import scala.jdk.CollectionConverters._
+    // a merge may update/delete matched target rows — removal-gated
     assertPreWrite(removesData = true)
-    require(keyCols.nonEmpty, "mergeWhenMatchedUpdate requires key columns")
+    val keyCols = c.keys
+    require(keyCols.nonEmpty, "merge requires key columns")
     // any single clause stands alone: SET-only, matched-DELETE-only (a
     // keyed anti-delete), or INSERT-only (insert-if-absent); SQL MERGE
     // statements arrive in all three degenerate shapes
-    require(set.nonEmpty || matchedDeleteCondition.isDefined ||
-      insertValues.isDefined,
+    require(c.wholeRow || c.set.nonEmpty || c.matchedDelete.isDefined || c.insert.isDefined,
       "merge needs at least one clause: SET, matched DELETE, or NOT MATCHED INSERT")
-    checkSet(set, keyCols.map(_ -> "SET must not touch the merge keys").toMap)
+    require(c.wholeRow || !(c.mergeOnRead || c.schemaEvolution || c.notMatchedBySourceDelete.isDefined),
+      "merge-on-read, schema evolution and NOT MATCHED BY SOURCE need the whole-row form")
+    require(!c.wholeRow || (c.set.isEmpty && c.insert.isEmpty && c.updateCondition.isEmpty &&
+      c.matchedDelete.isEmpty), "the whole-row form takes no column-wise clause")
+    checkSet(c.set, keyCols.map(_ -> "SET must not touch the merge keys").toMap)
+    val updates = c.wholeRow || c.set.nonEmpty
+    val inserts = c.wholeRow || c.insert.isDefined
+    val deletes = c.matchedDelete.isDefined || c.notMatchedBySourceDelete.isDefined
+    // the source plan is reused by several jobs (profile, touched-file
+    // discovery via its keys, data write) — cache so a 100 GB source is
+    // computed once, not once per job
     val src = source.cache()
     try {
-      val candidates = mergeSourceProfile(src, keyCols)._2
-        .getOrElse(dlog.addActions.values.toSeq)
-      val keys = src.select(keyCols.map(col): _*).distinct()
-      // an insert-only merge (no SET, no matched DELETE) never rewrites the
-      // target: matched keys are only the anti-join guard for the insert
-      val (touched, Seq(matchedKeys)) =
-        if (set.isEmpty && matchedDeleteCondition.isEmpty) (Seq.empty[AddFile], Seq(0L))
-        else touchedFiles(spark, candidates, _.join(broadcast(keys), keyCols, "left_semi"),
-          Seq(count_distinct(struct(keyCols.map(col): _*))))
-      val numUpdated = if (set.nonEmpty) matchedKeys else 0L
-      // a conditional UPDATE clause gates the SET inside the rewrite; rows
-      // that are matched but fail it copy through unchanged (numUpdated
-      // still reports matched keys — the file-level rewrite granularity)
-      val updCond: Column = matchedUpdateCondition
-        .map(c => coalesce(c, lit(false))).getOrElse(lit(true))
-
-      // rewrite touched files with the SET applied to matched rows
-      def applied(touchedDF: DataFrame): DataFrame = {
-        // target aliased "t", source "s": SET expressions qualify source
-        // columns as s.<name>; the rebuild reads target columns via t.<…>
-        // so a source carrying same-named value columns never ambiguates
-        val joined = touchedDF.alias("t")
-          .join(broadcast(src.withColumn("_graft_matched", lit(true)).alias("s")),
-            keyCols, "left")
-        val matched = coalesce(col("s._graft_matched"), lit(false))
-        // delta's whenMatchedDelete clause: a matched row meeting the
-        // condition (evaluated over the t/s join, so it can compare both
-        // sides) is DROPPED from the rewrite instead of updated
-        val kept = matchedDeleteCondition match {
-          case None => joined
-          case Some(c) => joined.filter(not(matched && coalesce(c, lit(false))))
-        }
-        kept.select(setProjection(set, Some(matched && updCond),
-          n => if (keyCols.contains(n)) col(n) else col(s"t.$n")): _*)
-      }
-      val newAdds: Seq[AddFile] =
-        if (touched.isEmpty) Seq.empty
-        else {
-          val rewritten = regenerate(applied(scanAdds(spark, touched)))
-          validateConstraints(rewritten)
-          writeData(rewritten, dlog.versionToWrite, dlog.partitionColumns)
-        }
-      // optional WHEN NOT MATCHED INSERT from explicit value expressions
-      var numInserted = 0L
-      var insertedRows: Option[DataFrame] = None
-      val insertAdds: Seq[AddFile] = insertValues match {
-        case None => Seq.empty
-        case Some(values) =>
-          // scale shape identical to merge(): the broadcast sides are
-          // bounded by the (small, cached) SOURCE. Matched source keys
-          // come from the stats-pruned candidate files semi-joined with
-          // the broadcast source keys — the target is streamed; then the
-          // anti-join's build side is that matched-key set (⊆ source
-          // keys). Broadcasting the TARGET's distinct keys instead would
-          // scan every live file and ship table-cardinality keys to the
-          // driver — an OOM at 100 TB.
-          val matchedKeys = scanAdds(spark, candidates)
-            .join(broadcast(keys), keyCols, "left_semi")
-            .select(keyCols.map(col): _*).distinct()
-          val unmatched = src.alias("s")
-            .join(broadcast(matchedKeys), keyCols, "left_anti")
-          val row = unmatched.select(dlog.schema.fields.toIndexedSeq.map { f =>
-            values.get(f.name)
-              .orElse(keyCols.find(_ == f.name).map(col))
-              .getOrElse(lit(null)).cast(f.dataType).as(f.name)
-          }: _*)
-          numInserted = row.count()
-          if (numInserted == 0) Seq.empty
-          else {
-            insertedRows = Some(row)
-            validateConstraints(row)
-            writeData(regenerate(row), dlog.versionToWrite, dlog.partitionColumns)
-          }
-      }
-
-      var cdc: Seq[AddCDCFile] = Seq.empty
-      // inserted rows are changes too (merge()'s feed has them; so must
-      // the clause path's)
-      if (cdfEnabled && touched.isEmpty) insertedRows.foreach { r =>
-        cdc = writeChangeData(r.withColumn("_change_type", lit("insert")),
-          dlog.versionToWrite)
-      }
-      if (cdfEnabled && touched.nonEmpty) {
-        // one t/s inner join partitions the matched rows into updated
-        // (pre+post pairs) and clause-deleted (delete rows only)
-        val joinedTS = scanAdds(spark, touched).alias("t")
-          .join(broadcast(src.alias("s")), keyCols, "inner")
-        val delCond = matchedDeleteCondition
-          .map(c => coalesce(c, lit(false))).getOrElse(lit(false))
-        def targets(df: DataFrame): DataFrame =
-          df.select(dlog.schema.fieldNames.toIndexedSeq.map(n =>
-            (if (keyCols.contains(n)) col(n) else col(s"t.$n")).as(n)): _*)
-        // rows matched but failing a conditional UPDATE copy through
-        // unchanged — they are not changes, so they emit no CDC rows
-        val updatedT = targets(joinedTS.filter(not(delCond) && updCond))
-        val del = targets(joinedTS.filter(delCond))
-          .withColumn("_change_type", lit("delete"))
-        val changes =
-          if (set.isEmpty) del // delete-only merge: no update images exist
-          else {
-            val pre = updatedT.withColumn("_change_type", lit("update_preimage"))
-            val post = applied(updatedT)
-              .withColumn("_change_type", lit("update_postimage"))
-            pre.unionByName(post).unionByName(del)
-          }
-        val withInserts = insertedRows
-          .map(r => changes.unionByName(
-            r.withColumn("_change_type", lit("insert"))))
-          .getOrElse(changes)
-        cdc = writeChangeData(withInserts, dlog.versionToWrite)
-      }
-
+      val (srcTotal, bounded) = mergeSourceProfile(src, keyCols)
+      // no target row can match when the profile found no candidates
+      val candidates = bounded.getOrElse(Seq.empty)
+      // the profile proved the keys unique: no distinct needed
+      val keys = src.select(keyCols.map(col): _*)
+      val keyMatch: DataFrame => DataFrame = _.join(broadcast(keys), keyCols, "left_semi")
+      // matched distinct KEYS are the update metric: counting rows
+      // over-counts when the target holds duplicate rows per key (legal —
+      // only the source is checked) and could drive numInserted negative
+      val keyStruct = struct(keyCols.map(col): _*)
       val predicate = keyCols.map(k => s"target.$k = source.$k").mkString(" AND ")
-      val numCopied = rowsIn(newAdds)
-      val removed = statsLiveRows(touched) - numCopied
-      val entry = DeltaLogEntry.mergeTable(predicate, touched,
-          newAdds ++ insertAdds, dlog.version, numUpdated, numInserted,
-          numCopied, numTargetRowsRemoved = removed,
-          numTargetRowsDeleted = if (matchedDeleteCondition.isDefined) removed else 0L)
-      commitOrRebase(DeltaLogEntry(entry.actions ++ cdc).withExtraCommitInfo(customMetadata),
-        dlog.addActions.keySet.toSet, Some(None))
+
+      // schema evolution (delta's withSchemaEvolution): source-only
+      // columns join the table schema (nullable; fresh physical names on
+      // mapped tables), copied/kept rows null-backfill, and the evolved
+      // metadata rides the SAME merge commit — atomic like delta's
+      val evolved: StructType =
+        if (!c.schemaEvolution) dlog.schema
+        else ColumnMapping.annotateForWrite(Some(dlog.schema), mappingActive,
+          DeltaLog.mergeSchemas(dlog.schema, source.schema))
+      val schemaChanged = evolved.fieldNames.length != dlog.schema.fieldNames.length
+      val wMapping = ColumnMapping.logicalToPhysical(evolved)
+      def alignEvolved(df: DataFrame): DataFrame =
+        df.select(evolved.fields.toIndexedSeq.map(f =>
+          (if (df.columns.contains(f.name)) col(f.name)
+           else lit(null).cast(f.dataType)).as(f.name)): _*)
+      def targetSide(df: DataFrame): DataFrame = if (schemaChanged) alignEvolved(df) else df
+      // whole-row: the source rows as written (updates and inserts alike)
+      lazy val sourceRows =
+        if (c.schemaEvolution) alignEvolved(regenerate(src))
+        else regenerate(src).select(dlog.schema.fieldNames.toIndexedSeq.map(col): _*)
+
+      val (entry, readPaths) =
+        if (c.mergeOnRead) {
+          val (dvAdds, fullDead, numDead, matched) = morMarkWith(spark, candidates,
+            keyMatch, _.agg(count_distinct(keyStruct)).head().getLong(0))
+          val numUpdated = matched.getOrElse(0L)
+          (DeltaLogEntry.mergeMergeOnReadTable(predicate, dvAdds, fullDead,
+            writeChecked(sourceRows, wMapping), dlog.version, numUpdated,
+            srcTotal - numUpdated, numDead, specDvRemoves(dvAdds)), candidates.map(_.path).toSet)
+        } else {
+          // step 2. The not-matched-by-source DELETE widens the touched set
+          // to every file that may own a deletable row; its condition
+          // stats-prunes that set like DELETE's candidates. An insert-only
+          // merge rewrites nothing: it needs only the matched keys
+          val (found, measured) = touchedFiles(spark, candidates, keyMatch,
+            Seq(count(lit(1)), collect_set(keyStruct)),
+            also = c.notMatchedBySourceDelete.map(prunedAdds).getOrElse(Nil))
+          val touched = if (updates || deletes) found else Seq.empty
+          val matchedRows = measured.fold(0L)(_.getLong(0))
+          val keyRows = measured.fold(Seq.empty[Row])(_.getSeq[Row](1))
+          lazy val matchedKeys =
+            spark.createDataFrame(keyRows.asJava, keyRows.headOption.fold(keys.schema)(_.schema))
+          val numUpdated = if (updates) keyRows.size.toLong else 0L
+          val numInserted = if (inserts) srcTotal - keyRows.size else 0L
+
+          // step 3: one join of the touched rows with the broadcast source
+          // (the whole-row form joins its keys only), target aliased "t",
+          // source "s" — SET and condition expressions qualify source
+          // columns as s.<name> and may read target ones as t.<name>. Each
+          // row is matched-deleted, updated, deleted as not matched by
+          // source, or copied. Every frame below filters this one plan;
+          // conditions on target columns alone are pushed into its scan,
+          // where file stats prune it, as a separate rewrite would
+          val tagged = scanAdds(spark, touched).alias("t")
+            .join(broadcast((if (c.wholeRow) keys else src)
+              .withColumn("_graft_matched", lit(true)).alias("s")), keyCols, "left")
+          def holds(cond: Option[Column], absent: Boolean): Column =
+            cond.fold(lit(absent))(coalesce(_, lit(false)))
+          val matched = col("s._graft_matched").isNotNull
+          val matchDeleted = matched && holds(c.matchedDelete, absent = false)
+          val updated = matched && not(matchDeleted) && lit(updates) &&
+            holds(c.updateCondition, absent = true)
+          val sourceDeleted = not(matched) && holds(c.notMatchedBySourceDelete, absent = false)
+          val current: String => Column = n => if (keyCols.contains(n)) col(n) else col(s"t.$n")
+          def setApplied(df: DataFrame, where: Option[Column]): DataFrame = {
+            val rows = df.select(setProjection(c.set, where, current): _*)
+            if (c.set.isEmpty) rows else regenerate(rows)
+          }
+          def targetRows(df: DataFrame): DataFrame =
+            targetSide(df.select(dlog.schema.fieldNames.toIndexedSeq.map(n => current(n).as(n)): _*))
+          lazy val insertRows: DataFrame =
+            if (c.wholeRow) sourceRows.join(broadcast(matchedKeys), keyCols, "left_anti")
+            else regenerate(src.alias("s").join(broadcast(matchedKeys), keyCols, "left_anti")
+              .select(dlog.schema.fields.toIndexedSeq.map { f =>
+                c.insert.get.get(f.name).orElse(keyCols.find(_ == f.name).map(col))
+                  .getOrElse(lit(null)).cast(f.dataType).as(f.name)
+              }: _*))
+
+          // column-wise SET rows stay in their rewritten files; whole-row
+          // updates are written from the source with the inserts
+          val keptAdds =
+            if (touched.isEmpty) Seq.empty
+            else writeChecked(targetSide(setApplied(tagged.filter(
+              (if (c.wholeRow) not(matched) else not(matchDeleted)) &&
+                not(holds(c.notMatchedBySourceDelete, absent = false))), Some(updated))), wMapping)
+          val sourceAdds =
+            if (c.wholeRow) writeChecked(sourceRows, wMapping)
+            else if (numInserted > 0) writeChecked(insertRows, wMapping)
+            else Seq.empty
+
+          // step 4, change data feed (delta's cdc): exact row-level
+          // changes instead of the feed's file-level reconstruction.
+          // Updated rows are update_preimage, their new versions
+          // update_postimage; dropped target rows are delete, inserted
+          // source rows insert. Which frames come first shapes the
+          // change-data files: the union's first partition always writes one
+          val cdc =
+            if (!cdfEnabled) Seq.empty
+            else {
+              def change(df: DataFrame, kind: String) = df.withColumn("_change_type", lit(kind))
+              val inserted =
+                if (c.wholeRow || numInserted > 0) Seq(change(insertRows, "insert"))
+                else Seq.empty
+              val changes =
+                if (touched.isEmpty) inserted
+                else {
+                  val deleted =
+                    if (!deletes) Seq.empty
+                    else Seq(change(targetRows(tagged.filter(matchDeleted || sourceDeleted)),
+                      "delete"))
+                  val post =
+                    if (c.wholeRow) sourceRows.join(broadcast(matchedKeys), keyCols, "left_semi")
+                    else setApplied(tagged.filter(updated), None)
+                  val images =
+                    if (!updates) Seq.empty
+                    else Seq(change(targetRows(tagged.filter(updated)), "update_preimage"),
+                      change(post, "update_postimage"))
+                  deleted ++ images ++ inserted
+                }
+              if (changes.isEmpty) Seq.empty
+              else writeChangeData(changes.reduce(_.unionByName(_)), dlog.versionToWrite)
+            }
+
+          // num_target_rows_removed is the row-based complement to the
+          // key-based update count: live rows of the touched files (stats
+          // minus DV cardinality, so rows earlier commits already deleted
+          // are not counted again) minus the rows copied; the deleted
+          // rows are those less the whole-row form's replaced matches
+          val numCopied = rowsIn(keptAdds)
+          val numRemoved = statsLiveRows(touched) - numCopied
+          val numDeleted =
+            if (!deletes) 0L else numRemoved - (if (c.wholeRow) matchedRows else 0L)
+          val entry = DeltaLogEntry.mergeTable(predicate, touched, keptAdds ++ sourceAdds,
+            dlog.version, numUpdated, numInserted, numCopied,
+            numTargetRowsRemoved = numRemoved, numTargetRowsDeleted = numDeleted)
+          val withMeta =
+            if (!schemaChanged) entry.actions
+            else dlog.latestMetadata.map(m =>
+              m.copy(schemaString = evolved.json) +: entry.actions)
+              .getOrElse(entry.actions)
+          (DeltaLogEntry(withMeta ++ cdc), dlog.addActions.keySet.toSet)
+        }
+      commitOrRebase(entry.withExtraCommitInfo(customMetadata), readPaths, Some(None))
     } finally src.unpersist()
   }
 
@@ -2466,11 +2405,41 @@ final case class DeltaTable(
     commitMeta(DeltaLogEntry(bump ++ Vector(newMeta, info)))
   }
 
-  /** One validation job over the batch: throws naming the first violated
-    * constraint. Null predicate results count as violations (delta's
+  /** One validation job over the batch: throws naming a row's first
+    * violated check. Null predicate results count as violations (delta's
     * CHECK semantics require TRUE).
     */
-  private def validateConstraints(df: DataFrame): Unit = {
+  private def validateConstraints(df: DataFrame): Unit =
+    firstViolation(df).foreach { v =>
+      df.filter(v.isNotNull).select(v).head(1).foreach(r =>
+        throw new IllegalArgumentException(r.getString(0)))
+    }
+
+  /** [[writeData]] of `df` into this table's partitions, with the checks
+    * of [[firstViolation]] enforced by the write job itself: the task
+    * that meets a violating row throws, and the caller gets the same
+    * IllegalArgumentException [[validateConstraints]] raises, without a
+    * validation pass of its own over the frame. The check is
+    * nondeterministic, so the optimizer keeps it above the frame's own
+    * filters and never runs it on a row the write drops.
+    */
+  private def writeChecked(df: DataFrame, mapping: Map[String, String]): Seq[AddFile] =
+    try writeData(firstViolation(df).fold(df)(v => df.filter(DeltaTable.passes(v))),
+      dlog.versionToWrite, dlog.partitionColumns, mapping)
+    catch {
+      case e: Exception =>
+        throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+          case v: IllegalArgumentException
+              if Option(v.getMessage).exists(_.startsWith("write violates CHECK")) => v
+        }.getOrElse(e)
+    }
+
+  /** Per row of `df`, the message naming the first row-level check it
+    * fails (CHECK constraints, legacy column invariants, NOT NULL
+    * columns), or null when it passes them all; None when the table has
+    * no checks.
+    */
+  private def firstViolation(df: DataFrame): Option[Column] = {
     // CHECK constraints plus legacy column invariants (delta.invariants
     // field metadata) — both are write-time row predicates; enforcing
     // invariants is what makes foreign writer-v2 tables WRITABLE here
@@ -2505,22 +2474,14 @@ final case class DeltaTable(
           val pred = (guards :+ s"${quoted.last} IS NOT NULL").mkString(" OR ")
           s"NOT NULL on ${p.mkString(".")}" -> pred
         }
-    val cs = dlog.constraints ++
+    val checks = (dlog.constraints ++
       dlog.invariants.map { case (c, sql) => s"invariant on $c" -> sql } ++
-      notNull
-    if (cs.nonEmpty) {
-      val anyViolation = cs.values
-        .map(sql => not(coalesce(org.apache.spark.sql.functions.expr(sql), lit(false))))
-        .reduce(_ || _)
-      if (!df.filter(anyViolation).isEmpty) {
-        val culprit = cs.find { case (_, sql) =>
-          !df.filter(not(coalesce(org.apache.spark.sql.functions.expr(sql), lit(false)))).isEmpty
-        }
-        val (n, sql) = culprit.getOrElse(("?", "?"))
-        throw new IllegalArgumentException(
-          s"write violates CHECK constraint $n ($sql)")
-      }
-    }
+      notNull).toSeq
+    if (checks.isEmpty) None
+    else Some(checks.foldRight(lit(null).cast("string")) { case ((n, sql), rest) =>
+      when(not(coalesce(org.apache.spark.sql.functions.expr(sql), lit(false))),
+        lit(s"write violates CHECK constraint $n ($sql)")).otherwise(rest)
+    })
   }
 
   // ------------------------------------------------------------------
@@ -4226,6 +4187,38 @@ object DeltaTable {
     * bytes) while keeping log lines small.
     */
   val InlineDvMaxBytes: Int = 64
+
+  /** One MERGE statement's clauses, run by `DeltaTable.mergeClauses`. A
+    * matched row is deleted when `matchedDelete` holds, else updated when
+    * `updateCondition` holds (or is absent), else copied.
+    *
+    * @param wholeRow `UPDATE SET *` with `INSERT *`: each source row,
+    *        aligned to the table schema by name, replaces its match or is
+    *        inserted; excludes the column-wise clauses
+    * @param set column-wise SET: source columns as `s.<name>`, target
+    *        columns bare or as `t.<name>`; `insert` likewise, with unnamed
+    *        columns null-filled and the keys taken from the source
+    * @param notMatchedBySourceDelete its condition over target columns
+    *        (`lit(true)` when it has none)
+    */
+  private[graft] final case class MergeClauses(
+      keys: Seq[String],
+      wholeRow: Boolean = false,
+      set: Map[String, Column] = Map.empty,
+      updateCondition: Option[Column] = None,
+      matchedDelete: Option[Column] = None,
+      insert: Option[Map[String, Column]] = None,
+      notMatchedBySourceDelete: Option[Column] = None,
+      schemaEvolution: Boolean = false,
+      mergeOnRead: Boolean = false)
+
+  /** The task-side half of `writeChecked`: true for a row whose first
+    * violated check is null, else throws the violation.
+    */
+  private val passes = org.apache.spark.sql.functions.udf { (violation: String) =>
+    if (violation != null) throw new IllegalArgumentException(violation)
+    true
+  }.asNondeterministic()
 
   /** The clustering-spec tag a prior clustered OPTIMIZE stamped on this
     * add (rides in delta's `tags` field; absent on plain writes).

@@ -41,10 +41,6 @@ object TextAnalysis {
           i => f(slice(t, i + lit(1), lit(n))))))
         .otherwise(empty)), 1)
 
-  /** Probe access to the q85 window-hash array (tools.GenProbe). */
-  private[graft] def windowedHashesForProbe(textCol: Column, k: Int): Column =
-    windowed(tokens(textCol), k, w => xxhash64(w), array().cast("array<bigint>"))
-
   /** Word n-gram "shingles" (distinct), the unit of Jaccard similarity. */
   def shingles(tokensCol: Column, n: Int): Column =
     windowed(tokensCol, n, w => concat_ws(" ", w), array().cast("array<string>"))

@@ -27,10 +27,12 @@ final class MergeSpecHolder(
     val notMatched: Seq[MergeAction],
     val notMatchedBySource: Seq[MergeAction]) extends Serializable
 
-/** SQL `MERGE INTO graft.`/path`` routed to the clause engine
-  * ([[DeltaTable.merge]] for the whole-row `UPDATE SET * / INSERT *` form,
-  * [[DeltaTable.mergeWhenMatchedUpdate]] for column-wise clauses) — the one
-  * DML verb delta-spark users write as SQL more than any other.
+/** SQL `MERGE INTO graft.`/path`` run by the engine's one MERGE executor
+  * (`DeltaTable.mergeClauses`) — the one DML verb delta-spark users write
+  * as SQL more than any other. The statement becomes one clause list: the
+  * whole-row form for an unconditioned `UPDATE SET *` with `INSERT *` and
+  * no matched DELETE (it alone takes NOT MATCHED BY SOURCE and schema
+  * evolution), column-wise SET / DELETE / INSERT clauses otherwise.
   *
   * Spark's own parser produces the `MergeIntoTable` plan; the graft parser
   * intercepts it TOP-DOWN before path-table read resolution (like INSERT:
@@ -181,7 +183,8 @@ case class GraftMergeCommand(path: String, sourcePlan: LogicalPlan,
     require(nmbsDeletes.size <= 1,
       "at most one WHEN NOT MATCHED BY SOURCE clause")
 
-    // ---- whole-row route: UPDATE SET * / INSERT *, both unconditioned ----
+    // ---- the clause list: whole-row for unconditioned UPDATE SET * /
+    // INSERT * with no matched DELETE, column-wise otherwise ----
     val starUpdate = spec.matched.exists {
       case UpdateStarAction(None) => true
       case UpdateAction(None, _, true) => true
@@ -191,77 +194,69 @@ case class GraftMergeCommand(path: String, sourcePlan: LogicalPlan,
       case InsertStarAction(None) => true
       case _ => false
     }
-    if (starUpdate && starInsert && matchedDeletes.isEmpty) {
-      val nmbs = nmbsDeletes.headOption
-      // merge() itself aligns the source to the (possibly evolved) target
-      // schema by name — extra source columns drop, missing ones null-fill
-      t.merge(spark, srcDF,
-        keyCols, schemaEvolution = schemaEvolution,
-        notMatchedBySourceDelete = nmbs.isDefined,
-        notMatchedBySourceCondition =
-          nmbs.flatMap(_.condition).map(c => ColumnShim.column(bareTarget(c))))
-      return Seq.empty
-    }
-
-    // ---- column-wise clause route ----
-    require(nmbsDeletes.isEmpty, "WHEN NOT MATCHED BY SOURCE requires the " +
-      "whole-row UPDATE SET * / INSERT * merge form")
-    require(!schemaEvolution,
-      "WITH SCHEMA EVOLUTION requires the whole-row merge form")
-    val tFields = t.dlog.schema.fieldNames.toSeq
-
-    val updCond: Option[Column] = matchedUpdates.headOption
-      .flatMap(_._1).map(colOf(_, renames))
-    val setMap: Map[String, Column] = matchedUpdates.headOption match {
-      case None => Map.empty
-      case Some((_, Some(assignments), _)) =>
-        assignments.flatMap { a =>
-          val name = assignTarget(a)
-          if (keyCols.contains(name)) {
-            require(isKeyNoOp(name, a.value, renames),
-              s"SET must not change merge key $name")
-            None // the no-op t.k = s.k delta tolerates
-          } else Some(name -> colOf(a.value, renames))
-        }.toMap
-      case Some((_, None, _)) => // UPDATE SET * with a condition
-        tFields.filterNot(keyCols.contains).map { n =>
-          require(srcDF.columns.contains(n),
-            s"UPDATE SET * requires source column $n")
-          n -> col(s"s.$n")
-        }.toMap
-    }
-
-    // first-matching-clause-wins: an UPDATE textually before the DELETE
-    // shields rows its condition matches from deletion
-    val delCond: Option[Column] = matchedDeletes.headOption.flatMap {
-      case (cond, delIdx) =>
-        val base = cond.map(colOf(_, renames)).getOrElse(lit(true))
-        matchedUpdates.headOption match {
-          case Some((uCond, _, updIdx)) if updIdx < delIdx =>
-            uCond match {
-              case None => None // unconditioned UPDATE first: DELETE is dead
-              case Some(uc) =>
-                Some(base && not(coalesce(colOf(uc, renames), lit(false))))
-            }
-          case _ => Some(base)
+    val clauses =
+      if (starUpdate && starInsert && matchedDeletes.isEmpty)
+        // the engine aligns the source to the (possibly evolved) target
+        // schema by name — extra source columns drop, missing ones null-fill
+        DeltaTable.MergeClauses(keyCols, wholeRow = true,
+          notMatchedBySourceDelete = nmbsDeletes.headOption.map(_.condition
+            .map(c => ColumnShim.column(bareTarget(c))).getOrElse(lit(true))),
+          schemaEvolution = schemaEvolution)
+      else {
+        require(nmbsDeletes.isEmpty, "WHEN NOT MATCHED BY SOURCE requires the " +
+          "whole-row UPDATE SET * / INSERT * merge form")
+        require(!schemaEvolution,
+          "WITH SCHEMA EVOLUTION requires the whole-row merge form")
+        val tFields = t.dlog.schema.fieldNames.toSeq
+        val setMap: Map[String, Column] = matchedUpdates.headOption match {
+          case None => Map.empty
+          case Some((_, Some(assignments), _)) =>
+            assignments.flatMap { a =>
+              val name = assignTarget(a)
+              if (keyCols.contains(name)) {
+                require(isKeyNoOp(name, a.value, renames),
+                  s"SET must not change merge key $name")
+                None // the no-op t.k = s.k delta tolerates
+              } else Some(name -> colOf(a.value, renames))
+            }.toMap
+          case Some((_, None, _)) => // UPDATE SET * with a condition
+            tFields.filterNot(keyCols.contains).map { n =>
+              require(srcDF.columns.contains(n),
+                s"UPDATE SET * requires source column $n")
+              n -> col(s"s.$n")
+            }.toMap
         }
-    }
-
-    val insertValues: Option[Map[String, Column]] = inserts.headOption.map {
-      case a: InsertAction =>
-        a.assignments.map(as => assignTarget(as) -> colOf(as.value, renames)).toMap
-      case _: InsertStarAction =>
-        tFields.map { n =>
-          require(srcDF.columns.contains(n),
-            s"INSERT * requires source column $n")
-          n -> col(s"s.$n")
-        }.toMap
-      case other => throw new IllegalArgumentException(s"unsupported: $other")
-    }
-
-    t.mergeWhenMatchedUpdate(spark, srcDF, keyCols, setMap,
-      insertValues = insertValues, matchedDeleteCondition = delCond,
-      matchedUpdateCondition = updCond)
+        // first-matching-clause-wins: an UPDATE textually before the
+        // DELETE shields rows its condition matches from deletion
+        val delCond: Option[Column] = matchedDeletes.headOption.flatMap {
+          case (cond, delIdx) =>
+            val base = cond.map(colOf(_, renames)).getOrElse(lit(true))
+            matchedUpdates.headOption match {
+              case Some((uCond, _, updIdx)) if updIdx < delIdx =>
+                uCond match {
+                  case None => None // unconditioned UPDATE first: DELETE is dead
+                  case Some(uc) =>
+                    Some(base && not(coalesce(colOf(uc, renames), lit(false))))
+                }
+              case _ => Some(base)
+            }
+        }
+        val insertValues: Option[Map[String, Column]] = inserts.headOption.map {
+          case a: InsertAction =>
+            a.assignments.map(as => assignTarget(as) -> colOf(as.value, renames)).toMap
+          case _: InsertStarAction =>
+            tFields.map { n =>
+              require(srcDF.columns.contains(n),
+                s"INSERT * requires source column $n")
+              n -> col(s"s.$n")
+            }.toMap
+          case other => throw new IllegalArgumentException(s"unsupported: $other")
+        }
+        DeltaTable.MergeClauses(keyCols, set = setMap,
+          updateCondition = matchedUpdates.headOption.flatMap(_._1).map(colOf(_, renames)),
+          matchedDelete = delCond, insert = insertValues)
+      }
+    t.mergeClauses(spark, srcDF, clauses)
     Seq.empty
   }
 }

@@ -143,9 +143,71 @@ class MergeSpec extends SparkSuite {
       base.rdd.map { r => evals.add(1L); r }, base.schema)
     val n = base.count()
     evals.reset()
-    t0.merge(spark, counted, Seq("n_nationkey"))
+    val t1 = t0.merge(spark, counted, Seq("n_nationkey"))
     assert(evals.value == n,
       s"source rows evaluated ${evals.value} times for $n rows; expected one pass")
+    // the clause form too: SET on the matched keys, INSERT of the others
+    val wide = base.union(nation.filter(col("n_nationkey") < 3)
+      .withColumn("n_nationkey", col("n_nationkey") + 100))
+    val countedWide = spark.createDataFrame(
+      wide.rdd.map { r => evals.add(1L); r }, wide.schema)
+    val m = wide.count()
+    evals.reset()
+    val t2 = t1.mergeWhenMatchedUpdate(spark, countedWide, Seq("n_nationkey"),
+      set = Map("n_name" -> col("s.n_name")),
+      insertValues = Some(nation.columns.map(c => c -> col(s"s.$c")).toMap))
+    assert(evals.value == m,
+      s"clause-form source rows evaluated ${evals.value} times for $m rows; expected one pass")
+    assert(t2.toDF(spark).count() == nation.count() + 3)
+  }
+
+  test("whole-row merge and its column-wise spelling commit the same rows and change feed") {
+    val d = tempDir("merge-identity")
+    DeltaTable.forPath(d).write(nation.repartition(3))
+      .setTableProperties(Map("delta.enableChangeDataFeed" -> "true"))
+    // five matched keys with new names and regions, three new keys
+    val src = nation.filter(col("n_nationkey") < 5)
+      .withColumn("n_name", upper(concat(col("n_name"), lit("-m"))))
+      .withColumn("n_regionkey", col("n_regionkey") + 10)
+      .union(nation.filter(col("n_nationkey") < 3)
+        .withColumn("n_nationkey", col("n_nationkey") + 100))
+    val keys = Seq("n_nationkey")
+    val whole = DeltaTable.forPath(copyToTemp(java.nio.file.Paths.get(d), "merge-whole"))
+      .merge(spark, src, keys)
+    val byColumn = DeltaTable.forPath(copyToTemp(java.nio.file.Paths.get(d), "merge-by-col"))
+      .mergeWhenMatchedUpdate(spark, src, keys,
+        set = nation.columns.filterNot(keys.contains).map(c => c -> col(s"s.$c")).toMap,
+        insertValues = Some(nation.columns.map(c => c -> col(s"s.$c")).toMap))
+    assertSameRows(byColumn.toDF(spark), whole.toDF(spark))
+    val (mw, mc) = (whole.history.head._2.operationMetrics,
+      byColumn.history.head._2.operationMetrics)
+    Seq("num_updated_rows" -> 5L, "num_inserted_rows" -> 3L).foreach { case (k, n) =>
+      assert(mw(k).asLong() == n && mc(k).asLong() == n, s"$k: merge $mw vs clauses $mc")
+    }
+    def feed(t: DeltaTable) =
+      t.changesBetween(spark, t.version - 1, t.version)
+    assert(feed(whole).count() == 13L) // 5 pre + 5 post + 3 inserts
+    assertSameRows(feed(byColumn), feed(whole))
+  }
+
+  test("constraints gate the clause form: a violating SET or INSERT row commits nothing") {
+    val d = tempDir("merge-ck-clauses")
+    val t = DeltaTable.forPath(d).write(nation)
+      .addConstraint(spark, "small_region", "n_regionkey < 10")
+    val src = nation.filter(col("n_nationkey") < 3)
+      .select(col("n_nationkey"), lit(99).as("reg"))
+    val ex1 = intercept[IllegalArgumentException](
+      t.mergeWhenMatchedUpdate(spark, src, Seq("n_nationkey"),
+        set = Map("n_regionkey" -> col("s.reg"))))
+    assert(ex1.getMessage.contains("small_region"), ex1.getMessage)
+    val ex2 = intercept[IllegalArgumentException](
+      t.mergeWhenMatchedUpdate(spark, src.withColumn("n_nationkey", col("n_nationkey") + 100),
+        Seq("n_nationkey"), Map.empty,
+        insertValues = Some(Map("n_name" -> lit("new"), "n_regionkey" -> col("s.reg")))))
+    assert(ex2.getMessage.contains("small_region"), ex2.getMessage)
+    val after = DeltaTable.forPath(d)
+    assert(after.version == t.version, "a rejected merge must not commit")
+    assertSameRows(after.toDF(spark), nation)
   }
 
   test("merge metrics stay sane when the target has duplicate rows per key") {

@@ -25,6 +25,52 @@ class PlanSpec extends SparkSuite {
       "row-id derivation must not shuffle data rows:\n" + plan.take(1200))
   }
 
+  test("copy-on-write merge rewrites touched files against the broadcast source, no target shuffle") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange._
+    import scala.jdk.CollectionConverters._
+    def flatten(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec        => Seq(q.plan)
+        case r: ReusedExchangeExec    => Seq(r.child)
+        case other                    => other.children
+      }
+      p +: kids.flatMap(flatten)
+    }
+    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+    val d = tempDir("plan-merge")
+    val t = DeltaTable.forPath(d).write(nation.repartition(3))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[Seq[SparkPlan]]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(flatten(qe.executedPlan))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      t.merge(spark, nation.filter(col("n_nationkey") < 5)
+        .withColumn("n_name", lit("M")), Seq("n_nationkey"))
+      org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(spark.sparkContext, 30000)
+    } finally spark.listenerManager.unregister(listener)
+    // the write that reads table files is the touched-file rewrite (the
+    // source write reads the cached source); dml_mix's merge is this shape
+    val rewrites = plans.asScala.toSeq.filter(ps =>
+      ps.exists(_.isInstanceOf[DataWritingCommandExec]) &&
+        ps.exists(_.isInstanceOf[FileSourceScanExec]))
+    assert(rewrites.size == 1, s"expected one rewrite of touched files, got ${rewrites.size}")
+    val rewrite = rewrites.head
+    assert(rewrite.exists(_.isInstanceOf[joins.BroadcastHashJoinExec]) &&
+      rewrite.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      "the rewrite must join the source by broadcast:\n" + rewrite.head.treeString)
+    val shuffled = rewrite.collect {
+      case s: ShuffleExchangeExec if flatten(s).exists(_.isInstanceOf[FileSourceScanExec]) => s
+    }
+    assert(shuffled.isEmpty, "target rows must not shuffle:\n" + rewrite.head.treeString)
+  }
+
   test("importance weights: one token-count shuffle, totals broadcast") {
     val docs = QueryLib.delta(spark, sfDir, "documents")
     val plan = explainOf(operators.TextAnalysis.importanceWeights(
