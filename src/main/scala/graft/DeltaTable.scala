@@ -4004,7 +4004,9 @@ final case class DeltaTable(
     * cadence); the table property `delta.checkpointInterval` overrides
     * the handle's setting (delta parity — the producer of a hot table
     * tunes cadence once, every writer honors it); failures never fail
-    * the commit — a checkpoint is purely a replay accelerator.
+    * the commit — a checkpoint is purely a replay accelerator — but each
+    * one is logged as a WARN line naming the table and the exception, so
+    * a table left without checkpoints does not go unnoticed.
     */
   private def maybeCheckpoint(newLog: DeltaLog): DeltaLog = {
     val interval = newLog.latestMetadata
@@ -4015,7 +4017,11 @@ final case class DeltaTable(
       try {
         Checkpoint.write(newLog, conf)
         autoCleanupExpired(newLog)
-      } catch { case _: Exception => () }
+      } catch {
+        case e: Exception =>
+          DeltaTable.log.warn(s"auto-checkpoint of ${loc.uri} at version " +
+            s"${newLog.version} failed; the commit stands: $e")
+      }
     }
     newLog
   }
@@ -4043,8 +4049,10 @@ final case class DeltaTable(
     val cutoff = System.currentTimeMillis() - retention
     logLoc.listSorted().foreach { st =>
       val name = st.getPath.getName
+      // the checkpoint version's own commit stays: it carries the commit
+      // clock a fast-path load anchors on (see cleanupLog)
       if (DeltaLog.EntryFilenameRe.matches(name) &&
-          name.split("\\.", 2)(0).toLong <= ck &&
+          name.split("\\.", 2)(0).toLong < ck &&
           st.getModificationTime < cutoff)
         logLoc.fs.delete(st.getPath, false)
     }
@@ -4057,17 +4065,6 @@ final case class DeltaTable(
     this
   }
 
-  /** Metadata cleanup (delta's log-retention analogue, checkpoint-gated
-    * instead of time-gated): delete every JSON commit AT/BELOW the newest
-    * checkpoint, so opening a long-lived table lists a BOUNDED log —
-    * at 10⁵–10⁶ lifetime commits the listing itself, not the replay, is
-    * what dominates a table open against an object store. The checkpoint
-    * carries the full state, so reads, writes, CDF, and time travel from
-    * the checkpoint version on are unaffected; history below it becomes
-    * unavailable and every such ask fails loudly (never a silently-empty
-    * snapshot). The reference never deletes commits — this is the piece
-    * that makes its "log grows forever" model survive production scale.
-    */
   /** Write a LOG COMPACTION file for commits [start, end] (delta's
     * `<start>.<end>.compacted.json` minor compaction): snapshot opens
     * replaying that range read ONE reconciled object instead of
@@ -4085,9 +4082,21 @@ final case class DeltaTable(
     this
   }
 
+  /** Metadata cleanup (delta's log-retention analogue, checkpoint-gated
+    * instead of time-gated): delete every JSON commit BELOW the newest
+    * checkpoint, so opening a long-lived table lists a BOUNDED log — at
+    * 10⁵–10⁶ lifetime commits the listing itself, not the replay, is what
+    * dominates a table open against an object store. The checkpoint
+    * version's own commit stays (its commitInfo is the fast path's commit
+    * clock). The checkpoint carries the full state, so reads, writes, CDF,
+    * and time travel from the checkpoint version on are unaffected;
+    * history below it becomes unavailable and every such ask fails loudly
+    * (never a silently-empty snapshot). The reference never deletes
+    * commits — this is the piece that makes its "log grows forever" model
+    * survive production scale.
+    */
   def cleanupLog(): DeltaTable = {
     val ck = Checkpoint.lastCheckpointVersion(logLoc)
-      .orElse(Checkpoint.deltaLastCheckpointVersion(logLoc))
       .getOrElse(throw new IllegalStateException(
         "cleanupLog requires a checkpoint; call checkpoint() first"))
     // the checkpoint must actually REPLAY through this engine — and cover
@@ -4130,8 +4139,12 @@ final case class DeltaTable(
     val cutoff = System.currentTimeMillis() - retention
     logLoc.listSorted().foreach { st =>
       val name = st.getPath.getName
+      // every commit BELOW the checkpoint goes; the checkpoint version's
+      // own commit stays, because a delta checkpoint holds no commitInfo
+      // and a fast-path load reads the commit clock (the monotonic clamp's
+      // and timestampAsOf's anchor) from that file
       if (DeltaLog.EntryFilenameRe.matches(name) &&
-          name.split("\\.", 2)(0).toLong <= ck &&
+          name.split("\\.", 2)(0).toLong < ck &&
           (retention <= 0L || st.getModificationTime < cutoff))
         logLoc.fs.delete(st.getPath, false)
       // log-compaction files wholly below the checkpoint horizon expire
@@ -4158,6 +4171,8 @@ final case class DeltaTable(
 }
 
 object DeltaTable {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[DeltaTable])
 
   /** Configuration keys retired alongside a dropped feature (the drop
     * gates require the enabling flags to already be false/unset; stripping

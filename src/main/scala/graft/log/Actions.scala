@@ -298,7 +298,7 @@ final case class AddCDCFile(
 /** Table-state metadata owned by a named domain (delta's `domainMetadata`
   * action): the latest non-removed action per domain is part of snapshot
   * state (DeltaLog.domainMetadata), survives checkpointing like metaData
-  * does (Checkpoint.snapshotActions, both layouts), and a `removed=true`
+  * does (Checkpoint.snapshotActions), and a `removed=true`
   * tombstone deletes the domain on replay. Surface:
   * DeltaTable.{domainMetadata,setDomainMetadata,removeDomainMetadata};
   * foreign domains (e.g. delta-spark's clustering domain) round-trip
@@ -578,7 +578,13 @@ object Action {
   def parse(line: String): Action = {
     val root = Json.mapper.readTree(line)
     val name = root.fieldNames().next()
-    val b = root.get(name)
+    fromBody(name, root.get(name))
+  }
+
+  /** The action named `name` with body `b` (a commit line's single value,
+    * or one non-null column of a checkpoint row).
+    */
+  def fromBody(name: String, b: JsonNode): Action =
     name match {
       case "protocol"   => parseProtocol(b)
       case "metaData"   => parseMetadata(b)
@@ -590,10 +596,11 @@ object Action {
       case "domainMetadata" => parseDomainMetadata(b)
       case other        => RawAction(other, b.asInstanceOf[ObjectNode])
     }
-  }
 
   private def extraOf(b: JsonNode, known: Set[String]): Map[String, JsonNode] =
-    Json.fieldsOf(b).filterNot { case (k, _) => known(k) }
+    // most bodies hold known keys only: skip building a map for them
+    if (b.properties.stream.allMatch(e => known(e.getKey))) Map.empty
+    else Json.fieldsOf(b).filterNot { case (k, _) => known(k) }
 
   private def parseDomainMetadata(b: JsonNode): DomainMetadata =
     DomainMetadata(

@@ -1,38 +1,47 @@
 package graft.log
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 import graft.storage.Location
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader}
-import org.apache.parquet.schema.{MessageTypeParser, Types}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader, ParquetWriter}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordConsumer, RecordMaterializer}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.io.{ColumnIOFactory, OutputFile}
+import org.apache.parquet.schema.LogicalTypeAnnotation._
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, MessageTypeParser, Type, Types}
+import org.apache.spark.sql.types._
 
+import java.time.format.DateTimeFormatter
+import java.time.{Instant, LocalDate, LocalDateTime, OffsetDateTime, ZoneOffset}
 import scala.collection.immutable.SortedMap
+import scala.jdk.CollectionConverters._
 
 /** Log checkpoints: a parquet snapshot of the table state at version V, so
-  * opening a long-lived table replays ONE parquet file plus the JSON
+  * opening a long-lived table replays ONE checkpoint plus the JSON
   * entries after V instead of every commit since version 0.
   *
-  * This is the driver-side scale feature the reference lacks entirely: at
-  * 100 TB a table accumulates 10^4–10^6 commits, and listing + parsing
-  * every JSON file per table open dominates planning time.
+  * Format: delta's own checkpoint — one nullable struct column per action
+  * type (`add`, `remove`, `metaData`, …), one action per row — as a
+  * classic `%020d.checkpoint.parquet`, a multi-part
+  * `%020d.checkpoint.<i>.<n>.parquet` set past [[DeltaCheckpointPartSize]]
+  * actions, or a V2 UUID-named manifest plus `_sidecars/` files, found
+  * through `_last_checkpoint`. Any Delta-protocol engine replays it, and
+  * graft writes and reads it on the driver with parquet-mr: the parquet
+  * schema comes from [[deltaCheckpointSchema]] and rows map to and from
+  * each action's JSON body field by field, with no Spark job and no JSON
+  * text in between.
   *
-  * Format: one UTF-8 action-JSON line per row (the exact NDJSON objects
-  * the log stores), in `%020d.graft-checkpoint.parquet` beside the
-  * commits, discovered via `_graft_last_checkpoint`. The names are
-  * deliberately NOT delta's (`_last_checkpoint` / `N.checkpoint.parquet`):
-  * the row layout here is graft-native (a `json` column rather than
-  * delta's nested per-action structs), and a Delta-protocol engine that
-  * honored delta's pointer would fail to parse it and refuse to open a
-  * table it could otherwise read. With graft-specific names, foreign
-  * readers never see the checkpoint and fall back to plain JSON replay —
-  * cross-engine readability is preserved; only the replay speedup is
-  * graft-local.
-  *
-  * JSON commit files are never deleted, so time travel below the
-  * checkpoint falls back to full JSON replay.
+  * Earlier builds also wrote a graft-only layout (one `json` column,
+  * `%020d.graft-checkpoint.parquet`, `_graft_last_checkpoint`). It is read,
+  * never written: [[read]] opens a table whose newest checkpoint is one,
+  * and the keep-2 GC retires those files once two newer checkpoints exist.
   */
 object Checkpoint {
 
@@ -44,18 +53,23 @@ object Checkpoint {
   final class CorruptCheckpointException(msg: String)
       extends IllegalStateException(msg)
 
+  /** Pointer of the retired graft layout (read, never written). */
   val LastCheckpointFile = "_graft_last_checkpoint"
 
-  private val parquetSchema = MessageTypeParser.parseMessageType(
+  private val DeltaPointerFile = "_last_checkpoint"
+
+  /** Row layout of the retired graft checkpoint: one action JSON line per row. */
+  private[graft] val graftLayoutSchema = MessageTypeParser.parseMessageType(
     "message graft_checkpoint { required binary json (UTF8); }")
 
+  /** File name of a retired graft-layout checkpoint. */
   def checkpointFilename(v: Long): String = f"$v%020d.graft-checkpoint.parquet"
 
   /** Field-order-insensitive identity of a `deletionVector` descriptor
     * (graft sidecar or delta-spec fields alike) — the dv half of delta's
     * (path, dvUniqueId) reconciliation tuple. Raw node.toString depends
-    * on JSON field insertion order, which a delta-format checkpoint round
-    * trip reorders.
+    * on JSON field insertion order, which a checkpoint round trip
+    * reorders.
     */
   private[graft] def descriptorId(
       extra: Map[String, com.fasterxml.jackson.databind.JsonNode]): String =
@@ -69,9 +83,11 @@ object Checkpoint {
   /** Snapshot-state actions at the log's head: protocol, latest metadata,
     * the latest `txn` per streaming app (so idempotent sinks keep their
     * progress across the checkpoint fast path, as Delta checkpoints do),
-    * every live add (replay result, not history).
+    * live domain metadata, unexpired tombstones and every live add
+    * (replay result, not history). No commitInfo: the commit clock comes
+    * from the checkpoint version's own commit file ([[withHeadCommit]]).
     */
-  private def snapshotActions(dlog: DeltaLog): Seq[Action] = {
+  private[graft] def snapshotActions(dlog: DeltaLog): Seq[Action] = {
     val protocol = dlog.entries.valuesIterator
       .flatMap(_.actions.collect { case p: Protocol => p })
       .toSeq.lastOption.getOrElse(Protocol())
@@ -84,18 +100,6 @@ object Checkpoint {
       case t: Txn => txns = txns.updated(t.appId, t)
       case _ => ()
     })
-    // live domain metadata (latest non-removed per domain): part of
-    // snapshot state, so it must survive the checkpoint fast path and
-    // subsequent log cleanup exactly as metaData does
-    //
-    // the HEAD commitInfo also rides along (graft layout only — the
-    // delta-format emission drops it, see writeDeltaFormat): it keeps the
-    // monotonic-timestamp clamp armed and timestampAsOf anchored after a
-    // fast-path load whose JSON tail is empty — checkpoints otherwise
-    // retain no commit clock at all
-    val headCommit = dlog.entries.keys.toSeq.reverseIterator
-      .flatMap(v => dlog.entries(v).commitInfos.lastOption)
-      .nextOption()
     // UNEXPIRED remove tombstones are snapshot state (delta's checkpoint
     // spec): vacuum needs them to age stranded files after log cleanup.
     // Reconciliation is TUPLE-keyed like delta's — a tombstone is
@@ -106,9 +110,6 @@ object Checkpoint {
     // tuple replay of the checkpoint stays consistent. Tombstones at or
     // past `delta.deletedFileRetentionDuration` (default 7d) drop, like
     // delta's expired-tombstone cleanup.
-    // field-order-insensitive descriptor key: a delta-format checkpoint
-    // round trip reorders the descriptor's JSON fields (schema order vs
-    // write order), so a raw toString would split one tuple into two
     val dvId = Checkpoint.descriptorId _
     val liveTuples = dlog.addActions.values
       .map(a => (a.path, dvId(a.extra))).toSet
@@ -128,7 +129,7 @@ object Checkpoint {
       r.deletionTimestamp >= cutoff &&
         !liveTuples.contains((r.path, dvId(r.extra))))
     Seq(protocol, metadata) ++ txns.values ++ dlog.domainMetadata.values ++
-      tombstones ++ dlog.addActions.values ++ headCommit
+      tombstones ++ dlog.addActions.values
   }
 
   /** True when the table asks for delta V2 (UUID-manifest + sidecar)
@@ -143,152 +144,130 @@ object Checkpoint {
       .exists(_.trim.equalsIgnoreCase("v2"))) ||
       ProtocolGate.readerFeatures(dlog.currentProtocol).contains("v2Checkpoint")
 
-  /** Write the checkpoint for the log's current version and point
-    * the pointer file at it.
+  /** Write the checkpoint for the log's current version, point
+    * `_last_checkpoint` at it and drop superseded checkpoints. Every file
+    * appears by rename, so a reader never opens a half-written one, and
+    * the pointer is written after the last of them.
     */
   def write(dlog: DeltaLog, conf: Configuration,
       maxActionsPerPart: Int = DeltaCheckpointPartSize): Unit = {
     val v = dlog.version
+    val loc = dlog.loc
+    // one directory read on file: (Location.listNames): on a log of
+    // thousands of commits, listStatus's stat per entry costs about as
+    // much as writing the checkpoint
+    val names = loc.listNames()
     // idempotent: a checkpoint is a pure function of the version's
     // snapshot, so if another writer already checkpointed v there is
     // nothing to add — and REWRITING it would yank the file out from
     // under concurrent readers mid-scan (r13 torture finding)
-    val out = dlog.loc.child(checkpointFilename(v))
-    if (out.exists) return
+    if (names.exists(checkpointOf(_).exists(_._1 == v))) return
     val actions = snapshotActions(dlog)
-    // write-then-rename: the checkpoint must appear atomically — a
-    // reader following _graft_last_checkpoint must never open a
-    // half-written parquet
-    val tmp = dlog.loc.child(
-      s"_ckpt_tmp-${java.util.UUID.randomUUID().toString.take(8)}.parquet")
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(tmp.path, conf))
-      .withType(parquetSchema)
-      .withConf(conf)
-      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-      .build()
-    val factory = new SimpleGroupFactory(parquetSchema)
-    try actions.foreach { a =>
-      writer.write(factory.newGroup().append("json", a.toLine))
-    } finally writer.close()
-    if (out.exists || !out.fs.rename(tmp.path, out.path)) {
-      // lost a same-version race: the winner's copy is equivalent
-      tmp.delete()
-      return
+    val cfg = dlog.latestMetadata.map(_.configuration).getOrElse(Map.empty)
+    val stats =
+      if (cfg.get("delta.checkpoint.writeStatsAsStruct").contains("true")) statsStructType(dlog)
+      else None
+    val dropJson = stats.isDefined && cfg.get("delta.checkpoint.writeStatsAsJson").contains("false")
+    val schema = stats.fold(deltaCheckpointSchema)(st => StructType(deltaCheckpointSchema.map {
+      case f if f.name == "add" => f.copy(dataType = f.dataType.asInstanceOf[StructType].add("stats_parsed", st))
+      case f => f
+    }))
+    def rows(as: Seq[Action]): Seq[(String, JsonNode)] = as.map { a =>
+      val b = a.bodyNode
+      if (stats.isDefined && a.isInstanceOf[AddFile]) {
+        Option(b.get("stats")).filter(_.isTextual).foreach { s =>
+          try b.set[JsonNode]("stats_parsed", Json.mapper.readTree(s.asText))
+          catch { case _: Exception => () }
+        }
+        if (dropJson) b.remove("stats")
+      }
+      a.actionName -> b
     }
-    dlog.loc.child(LastCheckpointFile)
-      .writeString(s"""{"version":$v,"size":${actions.size}}""")
-    if (wantsV2(dlog)) writeDeltaFormatV2(dlog, actions, conf, maxActionsPerPart)
-    else writeDeltaFormat(dlog, actions, conf, maxActionsPerPart)
-    gcOldCheckpoints(dlog.loc, keep = 2, conf)
+    val pointer = s"""{"version":$v,"size":${actions.size}"""
+    val written =
+      if (wantsV2(dlog)) {
+        val (fileActs, stateActs) =
+          actions.partition(a => a.isInstanceOf[AddFile] || a.isInstanceOf[RemoveFile])
+        val sidecarDir = loc.child("_sidecars")
+        if (fileActs.nonEmpty) sidecarDir.mkdirs()
+        val sidecarSchema = StructType(schema.filter(f => f.name == "add" || f.name == "remove"))
+        val refs = LogReader.inOrder(fileActs.grouped(maxActionsPerPart).map { part => () =>
+          val name = f"$v%020d-${java.util.UUID.randomUUID()}.parquet"
+          writeFile(sidecarDir, name, sidecarSchema, rows(part), conf)
+          val st = sidecarDir.child(name).status
+          val ref = Json.obj().put("path", name).put("sizeInBytes", st.getLen)
+            .put("modificationTime", st.getModificationTime)
+          "sidecar" -> (ref: JsonNode)
+        }.toSeq)
+        val manifest = f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
+        writeFile(loc, manifest, v2ManifestSchema, rows(stateActs) ++
+          Seq("checkpointMetadata" -> Json.obj().put("version", v)) ++ refs, conf)
+        loc.child(DeltaPointerFile).writeString(pointer + "}")
+        Seq(manifest)
+      } else {
+        val parts = actions.grouped(maxActionsPerPart).toSeq
+        val n = parts.size
+        val partNames =
+          if (n == 1) Seq(f"$v%020d.checkpoint.parquet")
+          else (1 to n).map(i => f"$v%020d.checkpoint.$i%010d.$n%010d.parquet")
+        // parts (like sidecars) are independent files, so they write in
+        // parallel; the pointer publishes them together
+        LogReader.inOrder(parts.zip(partNames).map { case (part, name) =>
+          () => writeFile(loc, name, schema, rows(part), conf)
+        })
+        loc.child(DeltaPointerFile)
+          .writeString(pointer + (if (n > 1) s""","parts":$n}""" else "}"))
+        partNames
+      }
+    gcOldCheckpoints(loc, names ++ written, keep = 2)
   }
 
-  // ------------------------------------------------------------------
-  // Delta-protocol checkpoint emission: alongside the graft-native file,
-  // write `%020d.checkpoint.parquet` + `_last_checkpoint` in Delta's
-  // NESTED-STRUCT row layout (one sparse column per action type), so a
-  // Delta-protocol engine opening the table gets the same O(1) replay
-  // fast path a graft reader does instead of falling back to full JSON
-  // replay. The graft file stays authoritative for graft readers; this
-  // one exists purely for cross-engine consumers.
-  // ------------------------------------------------------------------
-
-  /** Delta's classic checkpoint schema (the columns delta-spark writes,
-    * including the table-features lists for reader-3/writer-7 protocols
-    * and the `deletionVector` add-field so MoR state survives the round
-    * trip). Built with Spark types so the emitted parquet has delta's
-    * exact nested shape.
+  /** Delta's classic checkpoint schema: the columns delta-spark writes,
+    * and the parquet schema [[messageType]] derives. Beyond the basics:
+    *  - the protocol's table-features lists, or a reader-3/writer-7 table
+    *    reads back as (3,7)-with-no-features;
+    *  - `deletionVector` on add AND remove: MoR state survives, and the
+    *    spec-DV remove+add pairing keeps its tombstones. Next to delta's
+    *    descriptor fields it carries graft's legacy `sidecar` ref, whose
+    *    storageType stays null, so a foreign reader fails LOUDLY on such
+    *    a file instead of resurrecting its deleted rows;
+    *  - rowTracking's `baseRowId` / `defaultRowCommitVersion`, the one
+    *    place a log-cleaned foreign reader finds each file's row ids.
     */
-  private[graft] def deltaCheckpointSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    val strMap = MapType(StringType, StringType, valueContainsNull = true)
-    // delta's dv fields for shape fidelity, PLUS graft's `sidecar` ref:
-    // graft DVs live in sidecar files with a graft-native layout, so
-    // storageType stays null — a foreign delta reader fails LOUDLY on a
-    // DV'd file (no storageType) instead of silently resurrecting its
-    // deleted rows, and graft's own delta-checkpoint read path restores
-    // the ref losslessly from `sidecar` + `cardinality`
-    val dv = StructType(Seq(
-      StructField("storageType", StringType),
-      StructField("pathOrInlineDv", StringType),
-      StructField("offset", IntegerType),
-      StructField("sizeInBytes", IntegerType),
-      StructField("cardinality", LongType),
-      StructField("sidecar", StringType)))
-    StructType(Seq(
-      StructField("txn", StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType),
-        StructField("lastUpdated", LongType)))),
-      StructField("add", StructType(Seq(
-        StructField("path", StringType),
-        StructField("partitionValues", strMap),
-        StructField("size", LongType),
-        StructField("modificationTime", LongType),
-        StructField("dataChange", BooleanType),
-        StructField("stats", StringType),
-        StructField("tags", strMap),
-        StructField("deletionVector", dv),
-        // rowTracking state (delta's checkpoint add schema): dropping
-        // these would strip every file's row-id range from the one place
-        // a log-cleaned foreign reader can still find it
-        StructField("baseRowId", LongType),
-        StructField("defaultRowCommitVersion", LongType)))),
-      StructField("remove", StructType(Seq(
-        StructField("path", StringType),
-        StructField("deletionTimestamp", LongType),
-        StructField("dataChange", BooleanType),
-        StructField("extendedFileMetadata", BooleanType),
-        StructField("partitionValues", strMap),
-        StructField("size", LongType),
-        // tombstones carry the dead add's DV descriptor (delta's remove
-        // checkpoint schema includes it): spec-DV mutations pair each
-        // re-add with a descriptor-carrying remove, and dropping the
-        // struct here would strip those tombstones at every checkpoint
-        StructField("deletionVector", dv),
-        StructField("baseRowId", LongType),
-        StructField("defaultRowCommitVersion", LongType)))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType),
-        StructField("name", StringType),
-        StructField("description", StringType),
-        StructField("format", StructType(Seq(
-          StructField("provider", StringType),
-          StructField("options", strMap)))),
-        StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType)),
-        StructField("configuration", strMap),
-        StructField("createdTime", LongType)))),
-      StructField("domainMetadata", StructType(Seq(
-        StructField("domain", StringType),
-        StructField("configuration", StringType),
-        StructField("removed", BooleanType)))),
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        // table-features protocols (reader 3 / writer 7) — e.g. after the
-        // deletionVectors feature bump — must keep their feature lists
-        // through the checkpoint, or a delta reader sees an invalid
-        // (3,7)-with-no-features protocol
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType)))))))
+  private[graft] lazy val deltaCheckpointSchema: StructType = {
+    val strMap = "MAP<STRING, STRING>"
+    val dv = "STRUCT<storageType: STRING, pathOrInlineDv: STRING, offset: INT, " +
+      "sizeInBytes: INT, cardinality: BIGINT, sidecar: STRING>"
+    StructType.fromDDL(
+      "txn STRUCT<appId: STRING, version: BIGINT, lastUpdated: BIGINT>, " +
+        s"add STRUCT<path: STRING, partitionValues: $strMap, size: BIGINT, " +
+        "modificationTime: BIGINT, dataChange: BOOLEAN, stats: STRING, " +
+        s"tags: $strMap, deletionVector: $dv, baseRowId: BIGINT, " +
+        "defaultRowCommitVersion: BIGINT>, " +
+        "remove STRUCT<path: STRING, deletionTimestamp: BIGINT, dataChange: BOOLEAN, " +
+        s"extendedFileMetadata: BOOLEAN, partitionValues: $strMap, size: BIGINT, " +
+        s"deletionVector: $dv, baseRowId: BIGINT, defaultRowCommitVersion: BIGINT>, " +
+        "metaData STRUCT<id: STRING, name: STRING, description: STRING, " +
+        s"format: STRUCT<provider: STRING, options: $strMap>, schemaString: STRING, " +
+        s"partitionColumns: ARRAY<STRING>, configuration: $strMap, createdTime: BIGINT>, " +
+        "domainMetadata STRUCT<domain: STRING, configuration: STRING, removed: BOOLEAN>, " +
+        "protocol STRUCT<minReaderVersion: INT, minWriterVersion: INT, " +
+        "readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>")
   }
 
   /** `delta.checkpoint.writeStatsAsStruct` / `writeStatsAsJson` (delta's
     * checkpoint stats layout properties): with stats-as-struct on, every
-    * `add` row of the delta-format checkpoint carries a TYPED
-    * `stats_parsed` struct (numRecords / minValues / maxValues /
-    * nullCount over the table's physical leaf columns) so a delta reader
-    * does data skipping straight off parquet column values instead of
-    * parsing 10⁵ JSON strings per plan; `writeStatsAsJson=false`
-    * additionally nulls the JSON string column (the struct becomes
-    * authoritative — delta's layout for wide-schema tables where
-    * double-stored stats dominate checkpoint size). The typed schema is
-    * the physical leaf schema, so column-mapped tables stat under
-    * physical names exactly like their JSON stats do.
+    * `add` row of the checkpoint carries a TYPED `stats_parsed` struct
+    * (numRecords / minValues / maxValues / nullCount over the table's
+    * physical leaf columns) so a delta reader does data skipping straight
+    * off parquet column values instead of parsing 10⁵ JSON strings per
+    * plan; `writeStatsAsJson=false` additionally nulls the JSON string
+    * column (the struct becomes authoritative — delta's layout for
+    * wide-schema tables where double-stored stats dominate checkpoint
+    * size). The typed schema is the physical leaf schema, so column-mapped
+    * tables stat under physical names exactly like their JSON stats do.
     */
-  private def statsStructType(dlog: DeltaLog): Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.spark.sql.types._
+  private def statsStructType(dlog: DeltaLog): Option[StructType] = {
     def statable(dt: DataType): Boolean = dt match {
       case _: NumericType | StringType | BooleanType | DateType => true
       case _: TimestampType | TimestampNTZType => true
@@ -328,133 +307,18 @@ object Checkpoint {
           minMaxShape(phys).map(StructField("maxValues", _)) ++
           nullShape(phys).map(StructField("nullCount", _)) ++
           // a foreign DV-writing engine's stats carry tightBounds; it
-          // must survive the struct round-trip (to_json drops nulls, so
-          // absent stays absent on restore)
+          // must survive the struct round-trip (absent stays absent)
           Seq(StructField("tightBounds", BooleanType)))
     }
   }
 
-  /** Apply the two stats-layout properties to a schema-parsed checkpoint
-    * frame (both classic parts and v2 sidecars go through here).
-    */
-  private def applyStatsColumns(dlog: DeltaLog,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.StructType
-    val cfg = dlog.latestMetadata.map(_.configuration).getOrElse(Map.empty)
-    val asStruct = cfg.get("delta.checkpoint.writeStatsAsStruct").contains("true")
-    if (!asStruct) return df
-    val dropJson = cfg.get("delta.checkpoint.writeStatsAsJson").contains("false")
-    statsStructType(dlog) match {
-      case None => df
-      case Some(st) =>
-        val addType = df.schema("add").dataType.asInstanceOf[StructType]
-        val rebuilt = struct(
-          (addType.fieldNames.toSeq.map { f =>
-            if (f == "stats" && dropJson) lit(null).cast("string").as("stats")
-            else col(s"add.$f").as(f)
-          } :+ from_json(col("add.stats"), st).as("stats_parsed")): _*)
-        df.withColumn("add", when(col("add").isNotNull, rebuilt))
-    }
-  }
-
-  /** Read-side inverse: a checkpoint (ours or a foreign delta writer's
-    * with `writeStatsAsJson=false`) whose adds carry only `stats_parsed`
-    * gets its JSON stats string reconstructed, so graft's stats pruning
-    * and metadata-only COUNT work unchanged on struct-stats tables.
-    */
-  private def restoreStatsJson(
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{StructField, StructType}
-    df.schema.fields.find(_.name == "add") match {
-      case Some(StructField(_, addType: StructType, _, _))
-          if addType.fieldNames.contains("stats_parsed") =>
-        val hasJson = addType.fieldNames.contains("stats")
-        val statsCol =
-          if (hasJson) coalesce(col("add.stats"), to_json(col("add.stats_parsed")))
-          else to_json(col("add.stats_parsed"))
-        val rebuilt = struct(
-          (addType.fieldNames.toSeq.filterNot(_ == "stats_parsed")
-            .filterNot(_ == "stats").map(n => col(s"add.$n").as(n)) :+
-            statsCol.as("stats")): _*)
-        df.withColumn("add", when(col("add").isNotNull, rebuilt))
-      case _ => df
-    }
-  }
-
-  /** Actions per part of the delta-format checkpoint. At 10⁵ live files
-    * a single coalesce(1) parquet is a driver-sized bottleneck to write
-    * and a single-task file to read; delta's classic MULTI-PART layout
-    * (`N.checkpoint.<i>.<n>.parquet`) writes parts in parallel and lets
-    * a reader fan out — row-to-part assignment is arbitrary per the
-    * spec, readers must consume all `n` parts.
+  /** Actions per part of a classic checkpoint (and per V2 sidecar): past
+    * it the checkpoint becomes delta's MULTI-PART layout
+    * (`N.checkpoint.<i>.<n>.parquet`), whose parts are written and read
+    * in parallel — row-to-part assignment is arbitrary per the spec,
+    * readers must consume all `n` parts.
     */
   private[graft] val DeltaCheckpointPartSize = 50000
-
-  private def writeDeltaFormat(dlog: DeltaLog, actions: Seq[Action],
-      conf: Configuration,
-      maxActionsPerPart: Int = DeltaCheckpointPartSize): Unit = {
-    import org.apache.spark.sql.{Encoders, SparkSession}
-    // only reachable with a live session (checkpoints are written from
-    // commit paths inside a Spark app); if none, skip — the graft
-    // checkpoint above is the authoritative fast path
-    val spark = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .getOrElse(return)
-    val v = dlog.version
-    // each action's NDJSON line is exactly one sparse row of the nested
-    // layout: {"add": {...}} parses into the `add` struct column, every
-    // other column null. Schema-driven parse, so graft-only `extra` keys
-    // are dropped rather than leaking into the delta file. commitInfo is
-    // graft-pointer-only state (the ICT clamp anchor): delta checkpoints
-    // never carry it, and an all-null row would be out of spec.
-    val lines = actions.filterNot(_.isInstanceOf[CommitInfo]).map(_.toLine)
-    val df = applyStatsColumns(dlog, spark.read.schema(deltaCheckpointSchema)
-      .json(spark.createDataset(lines)(Encoders.STRING)))
-    val wantParts =
-      math.max(1, math.ceil(actions.size.toDouble / maxActionsPerPart).toInt)
-    val staging = dlog.loc.child(
-      s"_delta_ckpt_staging-$v-${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      if (wantParts == 1) {
-        df.coalesce(1).write.mode("overwrite").parquet(staging.uri)
-        val part = staging.listDataFilesRecursive()
-          .filter(_.getPath.getName.endsWith(".parquet"))
-        require(part.size == 1, s"expected one staged checkpoint file, got ${part.size}")
-        val dest = dlog.loc.child(f"$v%020d.checkpoint.parquet")
-        // never delete-then-rewrite: a concurrent reader may be mid-scan
-        // of the winner's copy, which is equivalent content anyway
-        if (!dest.exists && !dest.fs.rename(part.head.getPath, dest.path)
-            && !dest.exists)
-          throw new java.io.IOException(
-            s"rename ${part.head.getPath} -> ${dest.path} failed")
-        dlog.loc.child("_last_checkpoint")
-          .writeString(s"""{"version":$v,"size":${actions.size}}""")
-      } else {
-        // round-robin repartition spreads the rows; the ACTUAL staged
-        // file count names the parts (a near-empty trailing partition
-        // may be dropped by the writer)
-        df.repartition(wantParts).write.mode("overwrite").parquet(staging.uri)
-        val parts = staging.listDataFilesRecursive()
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        val n = parts.size
-        require(n >= 1, "multi-part checkpoint staged zero files")
-        parts.zipWithIndex.foreach { case (st, i) =>
-          val dest = dlog.loc.child(
-            f"$v%020d.checkpoint.${i + 1}%010d.$n%010d.parquet")
-          if (!dest.exists && !dest.fs.rename(st.getPath, dest.path)
-              && !dest.exists)
-            throw new java.io.IOException(
-              s"rename ${st.getPath} -> ${dest.path} failed")
-        }
-        dlog.loc.child("_last_checkpoint")
-          .writeString(
-            s"""{"version":$v,"size":${actions.size},"parts":$n}""")
-      }
-    } finally staging.delete()
-  }
 
   /** Manifest schema for delta V2 checkpoints: the classic per-action
     * struct columns PLUS the two V2 bookkeeping actions —
@@ -464,204 +328,393 @@ object Checkpoint {
     * stay all-null (spec-legal — a reader must take file actions from
     * wherever they appear).
     */
-  private[graft] def v2ManifestSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    val strMap = MapType(StringType, StringType, valueContainsNull = true)
-    StructType(deltaCheckpointSchema.fields ++ Seq(
-      StructField("checkpointMetadata", StructType(Seq(
-        StructField("version", LongType),
-        StructField("tags", strMap)))),
-      StructField("sidecar", StructType(Seq(
-        StructField("path", StringType),
-        StructField("sizeInBytes", LongType),
-        StructField("modificationTime", LongType),
-        StructField("tags", strMap))))))
-  }
+  private[graft] lazy val v2ManifestSchema: StructType = deltaCheckpointSchema
+    .add("checkpointMetadata", StructType.fromDDL("version BIGINT, tags MAP<STRING, STRING>"))
+    .add("sidecar", StructType.fromDDL(
+      "path STRING, sizeInBytes BIGINT, modificationTime BIGINT, tags MAP<STRING, STRING>"))
 
-  /** Sidecar schema: file actions only, per the V2 spec. */
-  private def v2SidecarSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(deltaCheckpointSchema.fields.filter(f =>
-      f.name == "add" || f.name == "remove"))
-  }
+  // ------------------------------------------------------------------
+  // The codec: Spark-typed schema -> parquet schema; JSON action bodies
+  // -> parquet rows (write); parquet rows -> JSON action bodies (read).
+  // ------------------------------------------------------------------
 
-  /** Emit a delta V2 checkpoint: file actions split into sidecar parquet
-    * files under `_delta_log/_sidecars/` (≤ `maxActionsPerPart` each, so
-    * a reader fans out over them the way multi-part classic checkpoints
-    * fan out), and a UUID-named manifest
-    * `%020d.checkpoint.<uuid>.parquet` carrying the non-file state plus
-    * `checkpointMetadata` and one `sidecar` ref per file. Sidecars are
-    * named `<version>-<uuid>.parquet`: the version prefix is graft's own
-    * convention (spec only asks for unique names) and is what lets
-    * [[gcOldCheckpoints]] attribute and delete a superseded checkpoint's
-    * sidecars WITHOUT reading its manifest — foreign sidecars never match
-    * the prefix and are never touched.
+  /** The parquet form of a Spark schema, in Spark's own layout (3-level
+    * lists, `key_value` maps), so Spark and other engines read it back as
+    * the same types.
     */
-  private def writeDeltaFormatV2(dlog: DeltaLog, actions: Seq[Action],
-      conf: Configuration,
-      maxActionsPerPart: Int = DeltaCheckpointPartSize): Unit = {
-    import org.apache.spark.sql.{Encoders, SparkSession}
-    val spark = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .getOrElse(return)
-    val v = dlog.version
-    val (fileActs, stateActs) = actions
-      .filterNot(_.isInstanceOf[CommitInfo])
-      .partition(a => a.isInstanceOf[AddFile] || a.isInstanceOf[RemoveFile])
-    val sidecarDir = dlog.loc.child("_sidecars")
-    val staging = dlog.loc.child(
-      s"_delta_ckpt_staging-$v-${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      // ---- sidecars: file actions, schema-driven nested layout ----
-      val wantParts =
-        math.max(1, math.ceil(fileActs.size.toDouble / maxActionsPerPart).toInt)
-      val fileDf = applyStatsColumns(dlog, spark.read.schema(v2SidecarSchema)
-        .json(spark.createDataset(fileActs.map(_.toLine))(Encoders.STRING)))
-      (if (wantParts == 1) fileDf.coalesce(1) else fileDf.repartition(wantParts))
-        .write.mode("overwrite").parquet(staging.uri)
-      val staged = staging.listDataFilesRecursive()
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-      require(staged.nonEmpty, "v2 checkpoint staged zero sidecar files")
-      val sidecarRefs = staged.map { st =>
-        val name = f"$v%020d-${java.util.UUID.randomUUID()}.parquet"
-        val dest = sidecarDir.child(name)
-        if (!dest.fs.exists(sidecarDir.path)) dest.fs.mkdirs(sidecarDir.path)
-        if (!dest.fs.rename(st.getPath, dest.path))
-          throw new java.io.IOException(
-            s"rename ${st.getPath} -> ${dest.path} failed")
-        val fst = dest.fs.getFileStatus(dest.path)
-        s"""{"sidecar":{"path":"$name","sizeInBytes":${fst.getLen},""" +
-          s""""modificationTime":${fst.getModificationTime}}}"""
-      }
-      // ---- manifest: state + checkpointMetadata + sidecar refs ----
-      val manifestLines = stateActs.map(_.toLine) ++
-        Seq(s"""{"checkpointMetadata":{"version":$v}}""") ++ sidecarRefs
-      val mDf = spark.read.schema(v2ManifestSchema)
-        .json(spark.createDataset(manifestLines)(Encoders.STRING))
-      mDf.coalesce(1).write.mode("overwrite").parquet(staging.uri)
-      val part = staging.listDataFilesRecursive()
-        .filter(_.getPath.getName.endsWith(".parquet"))
-      require(part.size == 1, s"expected one staged manifest, got ${part.size}")
-      val dest = dlog.loc.child(
-        f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet")
-      if (!dest.fs.rename(part.head.getPath, dest.path))
-        throw new java.io.IOException(
-          s"rename ${part.head.getPath} -> ${dest.path} failed")
-      dlog.loc.child("_last_checkpoint")
-        .writeString(s"""{"version":$v,"size":${actions.size}}""")
-    } finally staging.delete()
+  private def messageType(st: StructType): MessageType =
+    new MessageType("spark_schema", st.fields.map(f =>
+      parquetType(f.name, f.dataType, Type.Repetition.OPTIONAL)): _*)
+
+  private def parquetType(name: String, dt: DataType, rep: Type.Repetition): Type = {
+    import PrimitiveTypeName._
+    def prim(p: PrimitiveTypeName, l: LogicalTypeAnnotation = null): Type = {
+      val b = Types.primitive(p, rep)
+      (if (l == null) b else b.as(l)).named(name)
+    }
+    dt match {
+      case s: StructType => Types.buildGroup(rep).addFields(s.fields.map(f =>
+        parquetType(f.name, f.dataType, Type.Repetition.OPTIONAL)): _*).named(name)
+      case m: MapType => Types.buildGroup(rep).as(mapType()).addField(
+        Types.repeatedGroup()
+          .addField(parquetType("key", m.keyType, Type.Repetition.REQUIRED))
+          .addField(parquetType("value", m.valueType, Type.Repetition.OPTIONAL))
+          .named("key_value")).named(name)
+      case a: ArrayType => Types.buildGroup(rep).as(listType()).addField(
+        Types.repeatedGroup()
+          .addField(parquetType("element", a.elementType, Type.Repetition.OPTIONAL))
+          .named("list")).named(name)
+      case StringType => prim(BINARY, stringType())
+      case LongType => prim(INT64)
+      case IntegerType => prim(INT32)
+      case ShortType => prim(INT32, intType(16, true))
+      case ByteType => prim(INT32, intType(8, true))
+      case BooleanType => prim(BOOLEAN)
+      case DoubleType => prim(DOUBLE)
+      case FloatType => prim(FLOAT)
+      case DateType => prim(INT32, dateType())
+      case TimestampType => prim(INT64, timestampType(true, TimeUnit.MICROS))
+      case TimestampNTZType => prim(INT64, timestampType(false, TimeUnit.MICROS))
+      case d: DecimalType => prim(BINARY, decimalType(d.scale, d.precision))
+      case other => throw new IllegalArgumentException(s"no checkpoint encoding for $other")
+    }
   }
 
-  private val CheckpointRe = "^(\\d+)\\.graft-checkpoint\\.parquet$".r
-  private val LegacyCheckpointRe = "^(\\d+)\\.checkpoint\\.parquet$".r
-  private val MultiPartCheckpointRe = "^(\\d+)\\.checkpoint\\.\\d+\\.\\d+\\.parquet$".r
+  /** Stats render timestamps at full microsecond precision (Statistics). */
+  private val tsFormatter =
+    DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").withZone(ZoneOffset.UTC)
+
+  /** The writer of one JSON leaf as its parquet value, or null when the
+    * value does not fit the declared type (the field is then written as
+    * null, as Spark's schema-driven JSON parse would).
+    */
+  private def leaf(dt: DataType, v: JsonNode): RecordConsumer => Unit = try dt match {
+    case StringType =>
+      val b = Binary.fromString(if (v.isContainerNode) v.toString else v.asText); _.addBinary(b)
+    case BooleanType if v.isBoolean => _.addBoolean(v.booleanValue)
+    case LongType if v.isNumber => _.addLong(v.longValue)
+    case IntegerType | ShortType | ByteType if v.isNumber => _.addInteger(v.intValue)
+    case DoubleType | FloatType =>
+      val d = if (v.isNumber) v.doubleValue else java.lang.Double.parseDouble(v.asText)
+      if (dt == FloatType) _.addFloat(d.toFloat) else _.addDouble(d)
+    case d: DecimalType if v.isNumber =>
+      val b = v.decimalValue.setScale(d.scale, java.math.RoundingMode.HALF_UP)
+      val bin = Binary.fromConstantByteArray(b.unscaledValue.toByteArray)
+      if (b.precision > d.precision) null else _.addBinary(bin)
+    case DateType =>
+      val day = LocalDate.parse(v.asText.take(10)).toEpochDay.toInt; _.addInteger(day)
+    case TimestampType | TimestampNTZType =>
+      val i = try OffsetDateTime.parse(v.asText).toInstant
+        catch { case _: Exception => LocalDateTime.parse(v.asText).toInstant(ZoneOffset.UTC) }
+      val us = Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
+      _.addLong(us)
+    case _ => null
+  } catch { case _: Exception => null }
+
+  /** Writes one action per row: the column named by the action gets its
+    * body, walked field by field along the Spark schema; absent, null and
+    * unknown body fields stay null.
+    */
+  private final class RowWriteSupport(schema: StructType)
+      extends WriteSupport[(String, JsonNode)] {
+    private var rc: RecordConsumer = _
+    private val index = schema.fieldNames.zipWithIndex.toMap
+
+    def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(messageType(schema),
+        java.util.Map.of("org.apache.spark.sql.parquet.row.metadata", schema.json))
+    def prepareForWrite(c: RecordConsumer): Unit = rc = c
+    def write(row: (String, JsonNode)): Unit = {
+      rc.startMessage()
+      val i = index(row._1)
+      field(row._1, i, schema(i).dataType, row._2)
+      rc.endMessage()
+    }
+
+    private def field(name: String, i: Int, dt: DataType, v: JsonNode): Unit =
+      if (v != null && !v.isNull) dt match {
+        case st: StructType if v.isObject => group(name, i) {
+          st.fields.iterator.zipWithIndex.foreach { case (f, j) => field(f.name, j, f.dataType, v.get(f.name)) }
+        }
+        case m: MapType if v.isObject => group(name, i)(repeated("key_value", v.fields.asScala.map { e =>
+          () => { field("key", 0, m.keyType, Json.text(e.getKey)); field("value", 1, m.valueType, e.getValue) }
+        }))
+        case a: ArrayType if v.isArray => group(name, i)(repeated("list",
+          v.elements.asScala.map(e => () => field("element", 0, a.elementType, e))))
+        case _: StructType | _: MapType | _: ArrayType => ()
+        case _ =>
+          val w = leaf(dt, v)
+          if (w != null) { rc.startField(name, i); w(rc); rc.endField(name, i) }
+      }
+
+    private def group(name: String, i: Int)(body: => Unit): Unit = {
+      rc.startField(name, i); rc.startGroup()
+      body
+      rc.endGroup(); rc.endField(name, i)
+    }
+
+    /** A map's or list's repeated child: one group per entry. */
+    private def repeated(name: String, entries: Iterator[() => Unit]): Unit =
+      if (entries.hasNext) {
+        rc.startField(name, 0)
+        entries.foreach { e => rc.startGroup(); e(); rc.endGroup() }
+        rc.endField(name, 0)
+      }
+  }
+
+  private final class RowWriterBuilder(file: OutputFile, schema: StructType)
+      extends ParquetWriter.Builder[(String, JsonNode), RowWriterBuilder](file) {
+    def self(): RowWriterBuilder = this
+    def getWriteSupport(conf: Configuration): WriteSupport[(String, JsonNode)] =
+      new RowWriteSupport(schema)
+  }
+
+  /** Write `rows` to `dir/name` through a temp file and a rename. An
+    * existing `name` is never replaced: it is another writer's copy of
+    * the same snapshot, and a reader may be mid-scan of it.
+    */
+  private def writeFile(dir: Location, name: String, schema: StructType,
+      rows: Seq[(String, JsonNode)], conf: Configuration): Unit = {
+    val tmp = dir.child(s"_ckpt_tmp-${java.util.UUID.randomUUID().toString.take(8)}.parquet")
+    val w = new RowWriterBuilder(HadoopOutputFile.fromPath(tmp.path, conf), schema)
+      .withConf(conf)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    try rows.foreach(w.write) finally w.close()
+    val dest = dir.child(name)
+    if (dest.exists || !dest.fs.rename(tmp.path, dest.path)) {
+      tmp.delete()
+      if (!dest.exists)
+        throw new java.io.IOException(s"rename ${tmp.path} -> ${dest.path} failed")
+    }
+  }
+
+  private val nodes = JsonNodeFactory.instance
+
+  /** A converter that hands each decoded value of `t` to `set`: structs
+    * become objects of their non-null fields, maps objects, lists arrays,
+    * and leaves the JSON values a commit holds (dates and timestamps as
+    * the strings Statistics writes).
+    */
+  private def converterFor(t: Type, set: JsonNode => Unit): Converter =
+    if (t.isPrimitive) {
+      val l = t.getLogicalTypeAnnotation
+      def decimal(unscaled: java.math.BigInteger): Unit = set(nodes.numberNode(new java.math.BigDecimal(
+        unscaled, l.asInstanceOf[DecimalLogicalTypeAnnotation].getScale)))
+      def ts(us: Long): Unit = set(Json.text(tsFormatter.format(Instant.ofEpochSecond(
+        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))))
+      val int96 = t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT96
+      new PrimitiveConverter {
+        override def addBinary(b: Binary): Unit =
+          if (int96) {
+            val bb = b.toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+            val nanos = bb.getLong
+            ts((bb.getInt - 2440588L) * 86400000000L + nanos / 1000L)
+          } else if (l.isInstanceOf[DecimalLogicalTypeAnnotation]) decimal(new java.math.BigInteger(b.getBytes))
+          else set(Json.text(b.toStringUsingUTF8))
+        override def addInt(v: Int): Unit = l match {
+          case _: DateLogicalTypeAnnotation => set(Json.text(LocalDate.ofEpochDay(v).toString))
+          case _: DecimalLogicalTypeAnnotation => decimal(java.math.BigInteger.valueOf(v))
+          case _ => set(nodes.numberNode(v))
+        }
+        override def addLong(v: Long): Unit = l match {
+          case t: TimestampLogicalTypeAnnotation =>
+            ts(if (t.getUnit == TimeUnit.MILLIS) v * 1000L else if (t.getUnit == TimeUnit.NANOS) v / 1000L else v)
+          case _: DecimalLogicalTypeAnnotation => decimal(java.math.BigInteger.valueOf(v))
+          case _ => set(Json.num(v))
+        }
+        override def addBoolean(v: Boolean): Unit = set(Json.bool(v))
+        override def addFloat(v: Float): Unit = set(nodes.numberNode(v))
+        override def addDouble(v: Double): Unit = set(Json.num(v))
+      }
+    } else {
+      val g = t.asGroupType
+      // a map or list decodes its repeated child as an array of
+      // {key, value} / {element} objects, then folds it
+      if (g.isRepetition(Type.Repetition.REPEATED)) new Fields(g, set)
+      else g.getLogicalTypeAnnotation match {
+        case _: MapLogicalTypeAnnotation => new Repeated(g, set, { entries =>
+          val o = Json.obj()
+          entries.forEach(e => Option(e.get("key")).foreach(k =>
+            o.set[JsonNode](k.asText, Option(e.get("value")).getOrElse(Json.nul))))
+          o
+        })
+        case _: ListLogicalTypeAnnotation => new Repeated(g, set, { items =>
+          val a = nodes.arrayNode()
+          items.forEach(i => a.add(if (!i.isObject) i else Option(i.get("element")).getOrElse(Json.nul)))
+          a
+        })
+        case _ => new Fields(g, set)
+      }
+    }
+
+  private final class Fields(g: GroupType, set: JsonNode => Unit) extends GroupConverter {
+    private var cur: ObjectNode = _
+    private val children = g.getFields.asScala.map(f =>
+      converterFor(f, n => cur.set[JsonNode](f.getName, n))).toArray
+    def getConverter(i: Int): Converter = children(i)
+    def start(): Unit = cur = Json.obj()
+    def end(): Unit = set(cur)
+  }
+
+  private final class Repeated(g: GroupType, set: JsonNode => Unit,
+      fold: ArrayNode => JsonNode) extends GroupConverter {
+    private var cur: ArrayNode = _
+    private val entry = converterFor(g.getType(0), n => cur.add(n))
+    def getConverter(i: Int): Converter = entry
+    def start(): Unit = cur = nodes.arrayNode()
+    def end(): Unit = set(fold(cur))
+  }
+
+  /** The (action name, body) rows of one checkpoint parquet file, or
+    * None for a pre-rename graft-layout file under a delta name: its
+    * footer, read here anyway, carries graft's one-`json`-column schema.
+    * Only action columns that hold a value are read: a column whose every
+    * leaf the footer statistics show all-null (`txn` or `remove` on most
+    * tables) is skipped, and so are `*_parsed` copies other than
+    * `add.stats_parsed` (which restores stats a writer left only in typed
+    * form). The `add` column, which holds nearly every row, decodes on a
+    * second reader in parallel with the rest.
+    */
+  private def readRows(file: Location, conf: Configuration): Option[Vector[(String, ObjectNode)]] = {
+    val input = HadoopInputFile.fromPath(file.path, conf)
+    // read options over the caller's conf: the no-conf overload builds a
+    // fresh Hadoop Configuration per open (~10 ms, more than the decode)
+    def open() = ParquetFileReader.open(input, HadoopReadOptions.builder(conf, file.path).build())
+    val first = open()
+    val footer = first.getFooter
+    val fileSchema = footer.getFileMetaData.getSchema
+    if (fileSchema == graftLayoutSchema) { first.close(); return None }
+    val chunks = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+    def allNull(col: String): Boolean = chunks.filter(_.getPath.toArray.head == col).forall { c =>
+      val st = c.getStatistics
+      st != null && st.isNumNullsSet && st.getNumNulls == c.getValueCount
+    }
+    val actionCols = fileSchema.getFields.asScala.toSeq
+      .filter(f => !f.isPrimitive && !allNull(f.getName)).map { f =>
+        val g = f.asGroupType
+        g.withNewFields(g.getFields.asScala.filterNot(c =>
+          c.getName.endsWith("_parsed") && !(f.getName == "add" && c.getName == "stats_parsed")).asJava)
+      }
+    val (adds, rest) = actionCols.partition(_.getName == "add")
+    val groups = Seq(rest, adds).filter(_.nonEmpty)
+    if (groups.isEmpty) { first.close(); return Some(Vector.empty) }
+    Some(LogReader.inOrder(groups.zipWithIndex.map { case (cols, i) =>
+      () => decode(if (i == 0) first else open(), fileSchema, cols)
+    }).flatten)
+  }
+
+  /** Decode the `cols` columns of every row group of `reader` (and close it). */
+  private def decode(reader: ParquetFileReader, fileSchema: MessageType,
+      cols: Seq[GroupType]): Vector[(String, ObjectNode)] =
+    try {
+      val requested = new MessageType(fileSchema.getName, cols.map(t => t: Type).asJava)
+      reader.setRequestedSchema(requested)
+      val rows = Vector.newBuilder[(String, ObjectNode)]
+      val root = new Fields(requested, _.fields.forEachRemaining(c =>
+        rows += (c.getKey -> c.getValue.asInstanceOf[ObjectNode])))
+      val materializer = new RecordMaterializer[AnyRef] {
+        def getCurrentRecord: AnyRef = null
+        def getRootConverter: GroupConverter = root
+      }
+      val io = new ColumnIOFactory().getColumnIO(requested, fileSchema)
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages, materializer)
+        var i = 0L
+        while (i < pages.getRowCount) { records.read(); i += 1 }
+        pages = reader.readNextRowGroup()
+      }
+      rows.result()
+    } finally reader.close()
+
+  /** Rows to actions. An add whose JSON stats are absent gets them back
+    * from `stats_parsed` (ours or a foreign writer's, under
+    * `writeStatsAsJson=false`), so stats pruning and metadata-only COUNT
+    * work unchanged on struct-stats tables.
+    */
+  private def toActions(rows: IndexedSeq[(String, ObjectNode)]): Vector[Action] = {
+    def toAction(name: String, body: ObjectNode): Action = {
+      if (name == "add") Option(body.remove("stats_parsed")).foreach { sp =>
+        if (body.get("stats") == null) body.put("stats", Json.mapper.writeValueAsString(sp))
+      }
+      Action.fromBody(name, body)
+    }
+    // in chunks on the log pool, as LogReader.parseActions does for lines
+    LogReader.inOrder(rows.grouped(4096).map(c => () => c.map(r => toAction(r._1, r._2))).toSeq)
+      .flatten
+  }
+
+  // ------------------------------------------------------------------
+  // Discovery, GC and the fast-path load.
+  // ------------------------------------------------------------------
+
+  private val GraftCheckpointRe = "^(\\d+)\\.graft-checkpoint\\.parquet$".r
+  private val ClassicCheckpointRe = "^(\\d+)\\.checkpoint\\.parquet$".r
+  private val MultiPartCheckpointRe = "^(\\d+)\\.checkpoint\\.\\d+\\.(\\d+)\\.parquet$".r
   private val V2ManifestRe =
     "^(\\d+)\\.checkpoint\\.[0-9a-fA-F]{8}-[0-9a-fA-F-]+\\.parquet$".r
 
-  /** True iff `name` is a parquet file with graft's one-json-column row
-    * layout — i.e. a checkpoint written by a pre-rename graft build under
-    * Delta's filename. A genuine Delta-protocol checkpoint (nested
-    * per-action structs) never matches.
-    */
-  private def isGraftLayout(loc: Location, name: String, conf: Configuration): Boolean =
-    try {
-      val in = HadoopInputFile.fromPath(loc.child(name).path, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try reader.getFooter.getFileMetaData.getSchema.equals(parquetSchema)
-      finally reader.close()
-    } catch { case _: Exception => false }
+  /** (version, graft layout?) of a checkpoint file name. */
+  private def checkpointOf(name: String): Option[(Long, Boolean)] = name match {
+    case GraftCheckpointRe(v) => Some(v.toLong -> true)
+    case ClassicCheckpointRe(v) => Some(v.toLong -> false)
+    case MultiPartCheckpointRe(v, _) => Some(v.toLong -> false)
+    case V2ManifestRe(v) => Some(v.toLong -> false)
+    case _ => None
+  }
 
-  /** Drop superseded checkpoint files, keeping the newest `keep` so a
-    * reader that just fetched the pointer never loses its file.
-    *
-    * Also removes checkpoints orphaned by the round-3 rename: earlier graft
-    * builds wrote `N.checkpoint.parquet` + `_last_checkpoint` (Delta's
-    * names) with graft's row layout, which breaks foreign readers that
-    * honor Delta's pointer. Those are deleted here — gated on the layout
-    * check, so a real Delta engine's checkpoint is never touched — and the
-    * legacy pointer goes with them once its target is gone (for a Delta
-    * reader a missing pointer just means JSON replay).
+  /** Drop superseded checkpoint files, keeping the newest `keep` versions
+    * across every layout, so a reader that just fetched a pointer never
+    * loses its file and time travel in [previous, latest) stays servable
+    * after log cleanup. A retired graft-layout checkpoint goes like any
+    * other, and its pointer with the last of them. Pre-rename graft files
+    * under delta's names carry a checkpoint's version too and go once
+    * superseded. `names` is the log listing the caller already holds.
     */
-  private def gcOldCheckpoints(loc: Location, keep: Int, conf: Configuration): Unit = {
-    var legacy = List.empty[String]
-    var multiPart = List.empty[String]
-    var v2 = List.empty[String]
-    val versions = loc.listSorted().flatMap { st =>
-      st.getPath.getName match {
-        case CheckpointRe(v) => Some(v.toLong)
-        case LegacyCheckpointRe(_) => legacy ::= st.getPath.getName; None
-        case MultiPartCheckpointRe(_) => multiPart ::= st.getPath.getName; None
-        case V2ManifestRe(_) => v2 ::= st.getPath.getName; None
-        case _ => None
-      }
-    }
-    versions.sorted.dropRight(keep).foreach { v =>
-      try loc.fs.delete(loc.child(checkpointFilename(v)).path, false)
-      catch { case _: Exception => () }
-    }
-    val removedLegacy = legacy.filter(isGraftLayout(loc, _, conf))
-    removedLegacy.foreach { name =>
-      try loc.fs.delete(loc.child(name).path, false)
-      catch { case _: Exception => () }
-    }
-    // genuine delta-layout checkpoints (the cross-engine emission above):
-    // keep the newest `keep`, drop superseded ones — same policy as the
-    // graft family, and never a file the live `_last_checkpoint` targets
-    val deltaByVersion: Map[Long, Seq[String]] =
-      (legacy.filterNot(removedLegacy.contains).flatMap(n =>
-        LegacyCheckpointRe.findFirstMatchIn(n).map(_.group(1).toLong -> n)) ++
-        multiPart.flatMap(n =>
-          MultiPartCheckpointRe.findFirstMatchIn(n).map(_.group(1).toLong -> n)) ++
-        v2.flatMap(n =>
-          V2ManifestRe.findFirstMatchIn(n).map(_.group(1).toLong -> n)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    deltaByVersion.keys.toSeq.sorted.dropRight(keep).foreach { v =>
-      deltaByVersion(v).foreach { name =>
-        try loc.fs.delete(loc.child(name).path, false)
-        catch { case _: Exception => () }
-      }
+  private def gcOldCheckpoints(loc: Location, names: Seq[String], keep: Int): Unit = {
+    def delete(l: Location): Unit =
+      try loc.fs.delete(l.path, false) catch { case _: Exception => () }
+    val byVersion = names.flatMap(n => checkpointOf(n).map(c => (c._1, n, c._2)))
+      .groupBy(_._1)
+    val dropped = byVersion.keys.toSeq.sorted.dropRight(keep)
+    dropped.foreach { v =>
+      byVersion(v).foreach(c => delete(loc.child(c._2)))
       // graft-written v2 sidecars carry the checkpoint version as a name
       // prefix, so a superseded checkpoint's sidecars are attributable
       // (and deletable) without reading its manifest; foreign sidecars
       // (bare-uuid names) never match and are left for their own engine
       val sidecarDir = loc.child("_sidecars")
-      if (deltaByVersion(v).exists(V2ManifestRe.matches(_)) && sidecarDir.exists) {
+      if (byVersion(v).exists(c => V2ManifestRe.matches(c._2)) && sidecarDir.exists) {
         val prefix = f"$v%020d-"
         try sidecarDir.listSorted()
           .filter(_.getPath.getName.startsWith(prefix))
-          .foreach(st => loc.fs.delete(st.getPath, false))
+          .foreach(st => delete(sidecarDir.child(st.getPath.getName)))
         catch { case _: Exception => () }
       }
     }
-    if (removedLegacy.nonEmpty) {
-      val ptr = loc.child("_last_checkpoint")
-      val target =
-        try Json.longOpt(Json.mapper.readTree(ptr.readString()), "version")
-        catch { case _: Exception => None }
-      val targetGone = target.exists { v =>
-        removedLegacy.contains(f"$v%020d.checkpoint.parquet")
-      }
-      if (targetGone)
-        try loc.fs.delete(ptr.path, false)
-        catch { case _: Exception => () }
-    }
+    val graftLeft = byVersion.exists { case (v, cs) => !dropped.contains(v) && cs.exists(_._3) }
+    if (!graftLeft && names.contains(LastCheckpointFile)) delete(loc.child(LastCheckpointFile))
   }
 
-  /** The checkpoint pointer, if present and parseable. */
-  def lastCheckpointVersion(loc: Location): Option[Long] = {
-    val ptr = loc.child(LastCheckpointFile)
-    if (!ptr.exists) None
-    else
-      try Json.longOpt(Json.mapper.readTree(ptr.readString()), "version")
-      catch { case _: Exception => None }
-  }
+  private def pointerVersion(loc: Location, file: String): Option[Long] =
+    try Json.longOpt(Json.mapper.readTree(loc.child(file).readString()), "version")
+    catch { case _: Exception => None }
 
-  /** Read the checkpoint at version `v` into a synthetic base entry. */
+  /** Version of the newest checkpoint a pointer names: `_last_checkpoint`
+    * or, on a table that still has one, the retired graft pointer —
+    * whichever is newer, so a stale graft pointer never wins.
+    */
+  def lastCheckpointVersion(loc: Location): Option[Long] =
+    (pointerVersion(loc, DeltaPointerFile) ++ pointerVersion(loc, LastCheckpointFile)).maxOption
+
+  /** Read a retired graft-layout checkpoint at version `v`: one action
+    * JSON line per row, the head commitInfo among them.
+    */
   def read(loc: Location, v: Long, conf: Configuration): DeltaLogEntry = {
-    val file = loc.child(checkpointFilename(v))
     val reader = ParquetReader
-      .builder(new GroupReadSupport(), file.path)
+      .builder(new GroupReadSupport(), loc.child(checkpointFilename(v)).path)
       .withConf(conf)
       .build()
     val lines = Vector.newBuilder[String]
@@ -675,30 +728,120 @@ object Checkpoint {
     DeltaLogEntry(LogReader.parseActions(lines.result()))
   }
 
+  /** Replay the delta-format checkpoint at version `v` (classic single
+    * file, multi-part or V2) into a synthetic base entry, on the driver.
+    * None when no replayable checkpoint exists at `v`.
+    */
+  private[graft] def readDeltaFormat(loc: Location, v: Long,
+      conf: Configuration): Option[DeltaLogEntry] =
+    readDelta(loc, v, loc.listNames(), conf)
+
+  private def readDelta(loc: Location, v: Long, names: Seq[String],
+      conf: Configuration): Option[DeltaLogEntry] = {
+    val prefix = f"$v%020d.checkpoint."
+    val atV = names.filter(_.startsWith(prefix))
+    // a single-file and a multi-part checkpoint may coexist at one
+    // version (different writers); each form is complete on its own, so
+    // prefer the single file and never mix the two in one read — mixing
+    // would double-count actions and break the part-count check below
+    val single = atV.filter(ClassicCheckpointRe.matches(_))
+    val multi = atV.collect { case n @ MultiPartCheckpointRe(_, total) => n -> total.toInt }
+    val v2 = atV.filter(V2ManifestRe.matches(_))
+    val rows =
+      if (single.nonEmpty) readRows(loc.child(single.head), conf)
+      else if (multi.nonEmpty) {
+        // multi-part completeness: `<i>.<n>` filenames declare the part
+        // count — replaying a subset would silently DROP table state, so
+        // a hole is a loud error, not a fallback
+        val declared = multi.map(_._2).distinct
+        if (declared.size != 1 || multi.size != declared.head)
+          throw new CorruptCheckpointException(
+            s"multi-part checkpoint at version $v is incomplete: " +
+              s"found ${multi.size} of ${declared.max} parts — the " +
+              "checkpoint is corrupt or partially deleted")
+        val parts = LogReader.inOrder(multi.map(p => () => readRows(loc.child(p._1), conf)))
+        if (parts.contains(None)) None else Some(parts.flatten.flatten)
+      } else v2.headOption.flatMap(readV2(loc, _, conf))
+    rows.map(toActions).filter(_.nonEmpty).map(DeltaLogEntry(_))
+  }
+
+  /** Rows of a delta V2 checkpoint: the UUID-named manifest carries
+    * protocol/metaData/txn/domainMetadata rows plus `checkpointMetadata`
+    * and `sidecar` actions; the file actions (add/remove) live in the
+    * referenced sidecar parquet files under `_delta_log/_sidecars/`.
+    * Inline file actions in the manifest (spec-legal) are kept too. The
+    * two bookkeeping actions are consumed here and excluded from table
+    * state. A referenced-but-missing sidecar is a LOUD corrupt-checkpoint
+    * error — replaying a subset would silently drop table state.
+    */
+  private def readV2(loc: Location, manifest: String,
+      conf: Configuration): Option[Vector[(String, ObjectNode)]] =
+    readRows(loc.child(manifest), conf).map { rows =>
+      val (refs, state) = rows.partition(_._1 == "sidecar")
+      val sidecars = refs.map { case (_, r) =>
+        loc.child("_sidecars").child(Json.strOpt(r, "path").getOrElse(
+          throw new CorruptCheckpointException(
+            s"v2 checkpoint $manifest has a sidecar action without a path")))
+      }
+      val fileRows = LogReader.inOrder(sidecars.map(s => () =>
+        try readRows(s, conf).getOrElse(Vector.empty)
+        catch {
+          case _: java.io.FileNotFoundException =>
+            throw new CorruptCheckpointException(
+              s"v2 checkpoint $manifest references missing sidecar file ${s.uri}")
+        }))
+      state.filterNot(_._1 == "checkpointMetadata") ++ fileRows.flatten
+    }
+
+  /** The delta-format checkpoint at `v` as a base entry, with the
+    * commitInfo of `v`'s own commit file when it survives (cleanupLog
+    * keeps it): a spec checkpoint carries no commitInfo, and without it
+    * the monotonic commit clamp and timestampAsOf would lose their anchor
+    * after a fast-path load whose JSON tail is empty.
+    */
+  private def withHeadCommit(loc: Location, v: Long, names: Seq[String],
+      conf: Configuration): Option[DeltaLogEntry] =
+    readDelta(loc, v, names, conf).map { e =>
+      val commit = DeltaLog.filenameForVersion(v)
+      val head =
+        if (!names.contains(commit)) Vector.empty
+        else try loc.child(commit).readString().linesIterator
+          .filter(_.contains("\"commitInfo\"")).map(Action.parse)
+          .collect { case c: CommitInfo => c }.toVector
+        catch { case _: Exception => Vector.empty }
+      DeltaLogEntry(e.actions ++ head)
+    }
+
+  /** The checkpoint at `v` in either layout, with its JSON tail. */
+  private def loadAt(loc: Location, v: Long, graft: Boolean, names: Seq[String],
+      conf: Configuration): Option[DeltaLog] =
+    (if (graft) Some(read(loc, v, conf)) else withHeadCommit(loc, v, names, conf))
+      .map(base => withTail(loc, v, base, names))
+
   /** Load the log via the checkpoint fast path: the checkpoint becomes the
-    * base entry at its version; only JSON entries AFTER it are parsed.
-    * Returns None when no usable checkpoint exists (caller falls back to
-    * full JSON replay). Graft's own checkpoint is preferred; absent one,
-    * a GENUINE delta-format checkpoint (e.g. a table delta-spark wrote
-    * and log-cleaned) is replayed via [[readDeltaFormat]] — the path that
-    * lets graft open a real delta table whose early JSON commits no
-    * longer exist.
+    * base entry at its version; only JSON entries AFTER it are parsed, and
+    * the log is listed once (one directory read on file:, see
+    * [[Location.listNames]]). The pointers the listing shows are read, and
+    * the newer one's checkpoint is tried first (the delta layout at equal
+    * versions). Returns None when no
+    * usable checkpoint exists (caller falls back to full JSON replay).
     */
   def loadFrom(loc: Location, conf: Configuration): Option[DeltaLog] = {
-    val graft = lastCheckpointVersion(loc).flatMap { v =>
-      try Some(withTail(loc, v, read(loc, v, conf), conf))
-      catch { case _: Exception => None }
-    }
-    graft.orElse(deltaLastCheckpointVersion(loc).flatMap { v =>
-      try readDeltaFormat(loc, v, conf).map(withTail(loc, v, _, conf))
+    val names = loc.listNames()
+    val pointed = Seq(DeltaPointerFile -> false, LastCheckpointFile -> true)
+      .filter(p => names.contains(p._1))
+      .flatMap { case (f, graft) => pointerVersion(loc, f).map(_ -> graft) }.sortBy(-_._1)
+    pointed.iterator.flatMap { case (v, graft) =>
+      try loadAt(loc, v, graft, names, conf)
       catch {
         // an unreadable/foreign checkpoint falls back to JSON replay;
         // a PROVABLY incomplete one must not — fail loudly instead
         case e: CorruptCheckpointException => throw e
         case _: Exception => None
       }
-    }).orElse(loadLatestByListing(loc, conf))
-      .orElse(loadFromCompacted(loc))
+    }.nextOption()
+      .orElse(loadLatestByListing(loc, names, conf))
+      .orElse(loadFromCompacted(loc, names))
   }
 
   /** Checkpointless acceleration: a LOG COMPACTION range anchored at
@@ -708,9 +851,7 @@ object Checkpoint {
     * (DeltaTable.withFullHistory's contiguity check), so granularity is
     * never silently lost.
     */
-  private def loadFromCompacted(loc: Location): Option[DeltaLog] = {
-    if (!loc.exists) return None
-    val names = loc.listSorted().map(_.getPath.getName)
+  private def loadFromCompacted(loc: Location, names: Seq[String]): Option[DeltaLog] =
     LogCompaction.ranges(names).filter(_._1 == 0L).sortBy(-_._2).iterator
       .flatMap { case (s, e) =>
         try {
@@ -719,60 +860,48 @@ object Checkpoint {
             SortedMap[Long, DeltaLogEntry](e -> base), e)))
         } catch { case _: Exception => None }
       }.nextOption()
-  }
+
+  /** Checkpoints named in a listing, newest first; at one version the
+    * delta layout before a retired graft file.
+    */
+  private def candidates(names: Seq[String]): Seq[(Long, Boolean)] =
+    names.flatMap(checkpointOf).distinct.sortBy { case (v, graft) => (-v, graft) }
 
   /** Pointerless discovery: `_last_checkpoint` is a HINT in the delta
     * spec (it can be stale or lost to eventual consistency / partial
     * copies) — a reader must still find checkpoints by LISTING the log,
     * or a log-cleaned table with a dropped pointer opens empty. Only
-    * candidates at the NEWEST checkpointed version are tried (graft
-    * layout preferred): silently serving an OLDER checkpoint when the
-    * newest is unreadable could present stale state, so that case falls
-    * through to the caller's (loud) JSON path instead.
+    * candidates at the NEWEST checkpointed version are tried: silently
+    * serving an OLDER checkpoint when the newest is unreadable could
+    * present stale state, so that case falls through to the caller's
+    * (loud) JSON path instead.
     */
-  private def loadLatestByListing(loc: Location,
+  private def loadLatestByListing(loc: Location, names: Seq[String],
       conf: Configuration): Option[DeltaLog] = {
-    if (!loc.exists) return None
-    val names = loc.listSorted().map(_.getPath.getName)
-    val graftRe = "^(\\d{20})\\.graft-checkpoint\\.parquet$".r
-    val deltaRe = "^(\\d{20})\\.checkpoint(\\.\\d+\\.\\d+)?\\.parquet$".r
-    val candidates =
-      (names.flatMap(n => graftRe.findFirstMatchIn(n).map(_.group(1).toLong -> true)) ++
-        (names.flatMap(n => deltaRe.findFirstMatchIn(n).map(_.group(1).toLong -> false)) ++
-          names.flatMap(n => V2ManifestRe.findFirstMatchIn(n).map(_.group(1).toLong -> false)))
-          .distinct)
-    if (candidates.isEmpty) return None
-    val top = candidates.map(_._1).max
-    candidates.filter(_._1 == top).sortBy(c => !c._2).iterator
-      .flatMap { case (cv, isGraft) =>
-        try {
-          if (isGraft) Some(withTail(loc, cv, read(loc, cv, conf), conf))
-          else readDeltaFormat(loc, cv, conf).map(withTail(loc, cv, _, conf))
-        } catch {
-          case e: CorruptCheckpointException =>
-            // a PROVABLY incomplete checkpoint found only by LISTING (the
-            // partial-copy scenario this path exists for) is recoverable
-            // whenever the JSON commits it summarizes still exist: fall
-            // back to full JSON replay then. Loud failure is reserved for
-            // the case where the checkpoint is the only possible source
-            // of truth (the log was cleaned below it).
-            val jsonVs = names.collect {
-              case n if DeltaLog.EntryFilenameRe.matches(n) =>
-                n.split("\\.", 2)(0).toLong
-            }.toSet
-            if ((0L to cv).forall(jsonVs.contains)) None else throw e
-          case _: Exception => None
-        }
-      }.nextOption()
+    val all = candidates(names)
+    all.takeWhile(_._1 == all.headOption.fold(-1L)(_._1)).iterator.flatMap { case (cv, graft) =>
+      try loadAt(loc, cv, graft, names, conf)
+      catch {
+        case e: CorruptCheckpointException =>
+          // a PROVABLY incomplete checkpoint found only by LISTING (the
+          // partial-copy scenario this path exists for) is recoverable
+          // whenever the JSON commits it summarizes still exist: fall
+          // back to full JSON replay then. Loud failure is reserved for
+          // the case where the checkpoint is the only possible source
+          // of truth (the log was cleaned below it).
+          val jsonVs = names.collect {
+            case n if DeltaLog.EntryFilenameRe.matches(n) => DeltaLog.versionOf(n)
+          }.toSet
+          if ((0L to cv).forall(jsonVs.contains)) None else throw e
+        case _: Exception => None
+      }
+    }.nextOption()
   }
 
   /** Checkpoint as the base entry at its version + every later JSON entry. */
   private def withTail(loc: Location, v: Long, base: DeltaLogEntry,
-      conf: Configuration): DeltaLog = {
-    val names = loc.listSorted().map(_.getPath.getName)
-    DeltaLog(loc, tailEntries(loc, names,
-      SortedMap[Long, DeltaLogEntry](v -> base), v))
-  }
+      names: Seq[String]): DeltaLog =
+    DeltaLog(loc, tailEntries(loc, names, SortedMap[Long, DeltaLogEntry](v -> base), v))
 
   /** Replay the JSON tail ABOVE `v` into `seed`, consuming a LOG
     * COMPACTION file (`s.e.compacted.json`) in place of its raw commits
@@ -815,152 +944,21 @@ object Checkpoint {
     * log-cleaned table. The keep-2 GC retains the previous checkpoint
     * exactly so versions in [previous, latest) stay servable after
     * cleanup; pointer files only name the newest, so candidates come
-    * from listing the checkpoint files themselves. Graft's layout is
-    * preferred over a same-version delta-format file; unreadable or
+    * from listing the checkpoint files themselves. Unreadable or
     * incomplete candidates are skipped (this is a best-effort recovery —
     * the caller errors loudly when nothing serves `v`).
     */
   def loadFromAtOrBefore(loc: Location, v: Long,
       conf: Configuration): Option[DeltaLog] = {
-    if (!loc.exists) return None
-    val names = loc.listSorted().map(_.getPath.getName)
-    val graftRe = "^(\\d{20})\\.graft-checkpoint\\.parquet$".r
-    val deltaRe = "^(\\d{20})\\.checkpoint(\\.\\d+\\.\\d+)?\\.parquet$".r
-    val candidates =
-      (names.flatMap(n => graftRe.findFirstMatchIn(n).map(_.group(1).toLong -> true)) ++
-        (names.flatMap(n => deltaRe.findFirstMatchIn(n).map(_.group(1).toLong -> false)) ++
-          names.flatMap(n => V2ManifestRe.findFirstMatchIn(n).map(_.group(1).toLong -> false)))
-          .distinct)
-        .filter(_._1 <= v)
-        .sortBy { case (cv, isGraft) => (-cv, !isGraft) }
-    candidates.iterator.flatMap { case (cv, isGraft) =>
-      try {
-        val base =
-          if (isGraft) Some(withTail(loc, cv, read(loc, cv, conf), conf))
-          else readDeltaFormat(loc, cv, conf).map(withTail(loc, cv, _, conf))
-        // the base must actually SERVE v: every commit in (cv, v] still
-        // present as JSON. A checkpoint whose tail was also cleaned can
-        // answer only its own version — returning it for a later v would
-        // silently serve the WRONG version's state.
-        base.filter(b => (cv + 1 to v).forall(b.entries.contains))
-      } catch { case _: Exception => None }
-    }.nextOption()
-  }
-
-  // ------------------------------------------------------------------
-  // Delta-protocol checkpoint READ: the inverse of the emission above.
-  // Supports classic single-file `N.checkpoint.parquet` and multi-part
-  // `N.checkpoint.<i>.<n>.parquet` checkpoints (delta's large-table
-  // split); v2 sidecar checkpoints are out of scope. Pre-rename graft
-  // builds wrote graft's one-json-column layout under delta's names —
-  // those are detected by layout and refused here (the graft pointer
-  // path above owns them).
-  // ------------------------------------------------------------------
-
-  /** Delta's `_last_checkpoint` pointer, if present and parseable. */
-  def deltaLastCheckpointVersion(loc: Location): Option[Long] = {
-    val ptr = loc.child("_last_checkpoint")
-    if (!ptr.exists) None
-    else
-      try Json.longOpt(Json.mapper.readTree(ptr.readString()), "version")
+    val names = loc.listNames()
+    candidates(names).filter(_._1 <= v).iterator.flatMap { case (cv, graft) =>
+      // the base must actually SERVE v: every commit in (cv, v] still
+      // present as JSON. A checkpoint whose tail was also cleaned can
+      // answer only its own version — returning it for a later v would
+      // silently serve the WRONG version's state.
+      try loadAt(loc, cv, graft, names, conf)
+        .filter(b => (cv + 1 to v).forall(b.entries.contains))
       catch { case _: Exception => None }
-  }
-
-  /** Replay a delta-format checkpoint at version `v` into a synthetic
-    * base entry. Each nested-struct row converts back to its canonical
-    * one-key NDJSON line (null columns dropped), which [[Action.parse]]
-    * already understands — add/remove/metaData/protocol/txn all round
-    * trip, including deletionVector refs (they land in the action's
-    * `extra` map exactly as a JSON commit's would).
-    */
-  private[graft] def readDeltaFormat(loc: Location, v: Long,
-      conf: Configuration): Option[DeltaLogEntry] = {
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .getOrElse(return None)
-    val partRe = (f"^$v%020d\\.checkpoint(\\.\\d+\\.\\d+)?\\.parquet$$").r
-    // delta V2 checkpoints (delta-spark 3.x default under the
-    // `v2Checkpoint` feature) are UUID-named manifests — the hyphens
-    // keep them disjoint from the classic `.<i>.<n>.` multipart form
-    val v2Re = (f"^$v%020d" + "\\.checkpoint\\.[0-9a-fA-F]{8}-[0-9a-fA-F-]+\\.parquet$").r
-    val names = loc.listSorted().map(_.getPath.getName)
-    val v2 = names.filter(v2Re.matches(_)).filterNot(isGraftLayout(loc, _, conf))
-    val all = names
-      .filter(partRe.matches(_))
-      .filterNot(isGraftLayout(loc, _, conf))
-    if (all.isEmpty && v2.nonEmpty) return readV2(spark, loc, v2.head)
-    if (all.isEmpty) return None
-    // a single-file and a multi-part checkpoint may coexist at one
-    // version (different writers); each form is complete on its own, so
-    // prefer the single file and never mix the two in one read — mixing
-    // would double-count actions and break the part-count check below
-    val multiRe = "\\.(\\d+)\\.(\\d+)\\.parquet$".r
-    val (multi, single) = all.partition(n => multiRe.findFirstIn(n).isDefined)
-    val parts = if (single.nonEmpty) single else multi
-    // multi-part completeness: `<i>.<n>` filenames declare the part
-    // count — replaying a subset would silently DROP table state, so a
-    // hole is a loud error, not a fallback
-    if (single.isEmpty) {
-      val declared = multi.flatMap(n =>
-        multiRe.findFirstMatchIn(n).map(_.group(2).toInt))
-      if (declared.toSet.size != 1 || multi.size != declared.head)
-        throw new CorruptCheckpointException(
-          s"multi-part checkpoint at version $v is incomplete: " +
-            s"found ${multi.size} of ${declared.max} parts — the " +
-            "checkpoint is corrupt or partially deleted")
-    }
-    val lines = restoreStatsJson(spark.read
-      .parquet(parts.map(loc.child(_).uri): _*))
-      .toJSON.collect() // O(actions) driver-side — metadata scale, same as the graft read
-    val actions = lines.iterator
-      .filter(l => l.nonEmpty && l != "{}")
-      .map(Action.parse)
-      .toVector
-    if (actions.isEmpty) None else Some(DeltaLogEntry(actions))
-  }
-
-  /** Replay a delta V2 checkpoint: the UUID-named manifest carries
-    * protocol/metaData/txn/domainMetadata rows plus `checkpointMetadata`
-    * and `sidecar` actions; the file actions (add/remove) live in the
-    * referenced sidecar parquet files under `_delta_log/_sidecars/`.
-    * Inline file actions in the manifest (spec-legal) are kept too. The
-    * two bookkeeping actions are consumed here and excluded from table
-    * state. A referenced-but-missing sidecar is a LOUD corrupt-checkpoint
-    * error — replaying a subset would silently drop table state.
-    */
-  private def readV2(spark: org.apache.spark.sql.SparkSession, loc: Location,
-      manifest: String): Option[DeltaLogEntry] = {
-    val rows = restoreStatsJson(spark.read.parquet(loc.child(manifest).uri))
-      .toJSON.collect()
-    val parsed = rows.iterator
-      .filter(l => l.nonEmpty && l != "{}")
-      .map(Action.parse)
-      .toVector
-    val sidecarNames = parsed.collect {
-      case r: RawAction if r.actionName == "sidecar" =>
-        Json.strOpt(r.body, "path").getOrElse(
-          throw new CorruptCheckpointException(
-            s"v2 checkpoint $manifest has a sidecar action without a path"))
-    }
-    val sidecarLocs = sidecarNames.map(loc.child("_sidecars").child(_))
-    val missing = sidecarLocs.filterNot(_.exists)
-    if (missing.nonEmpty)
-      throw new CorruptCheckpointException(
-        s"v2 checkpoint $manifest references missing sidecar file(s) " +
-          missing.map(_.uri).mkString(", "))
-    val sidecarActions =
-      if (sidecarLocs.isEmpty) Vector.empty
-      else restoreStatsJson(spark.read.parquet(sidecarLocs.map(_.uri): _*))
-        .toJSON.collect().iterator
-        .filter(l => l.nonEmpty && l != "{}")
-        .map(Action.parse)
-        .toVector
-    val state = parsed.filterNot {
-      case r: RawAction => r.actionName == "sidecar" ||
-        r.actionName == "checkpointMetadata"
-      case _ => false
-    }
-    val entry = DeltaLogEntry(state ++ sidecarActions)
-    if (entry.actions.isEmpty) None else Some(entry)
+    }.nextOption()
   }
 }

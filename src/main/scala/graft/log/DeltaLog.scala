@@ -610,8 +610,9 @@ final case class DeltaLog(loc: Location, entries: SortedMap[Long, DeltaLogEntry]
     // against the PARENT commit, and graft history is monotonic by this
     // very clamp) — O(1) per commit instead of a fold over every loaded
     // action. After a checkpoint fast-path load the base entry carries
-    // the head commitInfo (Checkpoint.snapshotActions), so the clamp
-    // stays armed even with an empty JSON tail.
+    // the commitInfo of the checkpoint version's own commit file, which
+    // cleanupLog keeps (Checkpoint.withHeadCommit), so the clamp stays
+    // armed even with an empty JSON tail.
     val parentTs = entries.keys.toSeq.reverseIterator
       .flatMap(pv => entries(pv).commitInfos.reverseIterator.map(_.effectiveTimestamp))
       .nextOption()

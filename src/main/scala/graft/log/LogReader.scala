@@ -5,11 +5,12 @@ import graft.storage.Location
 import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future}
 
 /** Concurrent log reading on the driver. Replaying a log means opening
-  * and parsing many small objects (one per commit, one line per
-  * checkpoint row); done one at a time that leaves every core but one
-  * idle. Both jobs run here on one shared pool of daemon threads, one per
-  * available core, and hand back their results in input order, so callers
-  * fold entries exactly as a serial loop would.
+  * and parsing many small objects (one per commit, one file per
+  * checkpoint part or sidecar); done one at a time that leaves every
+  * core but one idle. These jobs (and the writing of checkpoint parts)
+  * run here on one shared pool of daemon threads, one per available
+  * core, and hand back their results in input order, so callers fold
+  * entries exactly as a serial loop would.
   *
   * Failures keep the serial contract: the caller gets the exception of
   * the FIRST failing input, as its task threw it (not wrapped), and tasks
@@ -49,7 +50,7 @@ private[graft] object LogReader {
   /** Run the tasks on the pool (inline when there is only one) and
     * collect their results in task order.
     */
-  private def inOrder[T](tasks: Seq[() => T]): Vector[T] =
+  private[log] def inOrder[T](tasks: Seq[() => T]): Vector[T] =
     if (tasks.size <= 1) tasks.map(_()).toVector
     else {
       val futures: Seq[Future[T]] = tasks.map(t => pool.submit(new Callable[T] {

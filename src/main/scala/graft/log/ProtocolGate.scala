@@ -34,9 +34,9 @@ object ProtocolGate {
 
   /** Reader features this engine genuinely implements. `v2Checkpoint`
     * covers BOTH directions: Checkpoint.readV2 replays UUID-manifest +
-    * sidecar checkpoints, and Checkpoint.writeDeltaFormatV2 emits them
-    * (under `delta.checkpointPolicy=v2` or on a table already carrying
-    * the feature), so committing to a v2Checkpoint table stays in spec.
+    * sidecar checkpoints, and Checkpoint.write emits them (under
+    * `delta.checkpointPolicy=v2` or on a table already carrying the
+    * feature), so committing to a v2Checkpoint table stays in spec.
     */
   val SupportedReaderFeatures: Set[String] =
     Set("deletionVectors", "columnMapping", "timestampNtz", "v2Checkpoint",

@@ -18,7 +18,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
@@ -161,39 +161,6 @@ object DeletionVectors {
       case other =>
         throw new IllegalArgumentException(s"no DV file for storageType '$other'")
     }
-
-  /** Dead rows `(path, row_index)` of the given refs, deduplicated across
-    * sidecars (distinct refs may share a sidecar directory). Delta-spec
-    * refs decode in EXECUTORS (one task partition per slice of refs —
-    * a 10⁵-file DV'd table must not funnel every bitmap through the
-    * driver); their `path` is the owning add's recorded path, matching
-    * the sidecar rows' recording-time-path convention. Scans and writes
-    * do not go through here (see [[liveRowFilter]] and [[DvRowFilter]]);
-    * it is the plain-join reference the in-scan filter is checked
-    * against.
-    */
-  def deadRows(spark: SparkSession, refs: Iterable[DvRef], tableRoot: Location,
-      conf: Configuration): DataFrame = {
-    val (sidecars, deltas) = refs.toSeq.partition(_.isInstanceOf[SidecarRef])
-    val dirs = sidecars.collect { case SidecarRef(s, _) => s }.distinct
-      .map(s => Location.resolve(s, tableRoot, conf).uri)
-    val sidecarDf =
-      if (dirs.isEmpty) DeltaScan.emptyDF(spark, sidecarSchema)
-      else spark.read.schema(sidecarSchema).parquet(dirs: _*)
-    if (deltas.isEmpty) sidecarDf
-    else {
-      import spark.implicits._
-      val rootUri = tableRoot.uri
-      val confMap = confToMap(conf)
-      val deltaDf = spark.createDataset(deltas.collect { case d: DeltaRef => d })
-        .mapPartitions { refs =>
-          lazy val hconf = confFromMap(confMap)
-          refs.flatMap(d =>
-            specDeadRows(d, rootUri, hconf).iterator.map(idx => (d.ownerPath, idx)))
-        }.toDF("path", "row_index")
-      sidecarDf.unionByName(deltaDf)
-    }
-  }
 
   /** Row indexes a delta-spec descriptor marks dead, ascending. Inline
     * payloads decode from the descriptor itself; on-disk ones (storageType

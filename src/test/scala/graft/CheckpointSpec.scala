@@ -1,6 +1,9 @@
 package graft
 
 import graft.log.{Checkpoint, DeltaLog}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Log checkpoints: fast-path loads must equal full JSON replay, and
@@ -58,9 +61,13 @@ class CheckpointSpec extends SparkSuite {
     var t = DeltaTable.forPath(d).copy(checkpointInterval = 2)
     t = t.write(nation)
     (1 to 6).foreach(_ => t = t.write(nation)) // checkpoints at 2, 4, 6
-    val ckpts = new java.io.File(s"$d/_delta_log").listFiles()
-      .map(_.getName).filter(_.endsWith(".graft-checkpoint.parquet")).sorted
-    assert(ckpts.length == 2, ckpts.mkString(","))
+    val names = new java.io.File(s"$d/_delta_log").listFiles().map(_.getName)
+    val ckpts = names.filter(_.endsWith(".checkpoint.parquet")).sorted
+    assert(ckpts.toSeq == Seq(4L, 6L).map(v => f"$v%020d.checkpoint.parquet"),
+      ckpts.mkString(","))
+    // one layout: no graft-layout file or pointer is written
+    assert(!names.exists(n => n.endsWith(".graft-checkpoint.parquet") ||
+      n == Checkpoint.LastCheckpointFile), names.mkString(","))
     assert(Checkpoint.lastCheckpointVersion(t.logLoc).contains(6L))
     assert(DeltaTable.forPath(d).version == 6L)
   }
@@ -71,31 +78,32 @@ class CheckpointSpec extends SparkSuite {
     t = t.write(nation)
     (1 to 2).foreach(_ => t = t.write(nation)) // checkpoint at 2
     val logDir = new java.io.File(s"$d/_delta_log")
-    val graftCkpt = logDir.listFiles().map(_.getName)
-      .find(_.endsWith(".graft-checkpoint.parquet")).get
-    // simulate a pre-rename build: same row layout, Delta's names
-    // (REPLACE_EXISTING: the current build legitimately emits a
-    // delta-layout file under this name; a pre-rename build would have
-    // clobbered it with graft's layout)
-    val legacyName = graftCkpt.replace(".graft-checkpoint", ".checkpoint")
+    // simulate a pre-rename build: graft's one-json-column layout under
+    // Delta's name, clobbering the delta-layout file at 2
+    val legacyName = f"${2L}%020d.checkpoint.parquet"
+    val graftLayout = tempDir("ckpt-legacy-src")
+    LegacyGraftCheckpoint.write(DeltaTable.forPath(d).dlog, t.conf,
+      graft.storage.Location(graftLayout, t.conf))
     java.nio.file.Files.copy(
-      new java.io.File(logDir, graftCkpt).toPath,
+      new java.io.File(graftLayout, Checkpoint.checkpointFilename(2L)).toPath,
       new java.io.File(logDir, legacyName).toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // drop the genuine emission's checksum sidecar: the clobbered content
-    // no longer matches it (a pre-rename build had no such sidecar state)
     new java.io.File(logDir, s".$legacyName.crc").delete()
-    t.logLoc.child("_last_checkpoint").writeString(s"""{"version":2,"size":1}""")
-    // a FOREIGN checkpoint (different parquet layout) must never be touched
-    val foreignName = f"${0L}%020d.checkpoint.parquet"
+    // the reader refuses the graft layout under a delta name (from the
+    // footer it opens anyway) and the table opens from JSON replay
+    assert(Checkpoint.readDeltaFormat(t.logLoc, 2L, t.conf).isEmpty)
+    assert(DeltaTable.forPath(d).toDF(spark).count() == 3 * nation.count())
+    // a FOREIGN checkpoint (different parquet layout) inside the keep
+    // window must never be touched
+    val foreignName = f"${3L}%020d.checkpoint.parquet"
+    t = t.write(nation) // v3
     java.nio.file.Files.copy(
       new java.io.File(s"$sfDir/nation.parquet").toPath,
       new java.io.File(logDir, foreignName).toPath)
-    (1 to 2).foreach(_ => t = t.write(nation)) // next checkpoint triggers GC
+    t = t.write(nation) // v4: checkpoint, GC keeps versions {3, 4}
     val names = logDir.listFiles().map(_.getName).toSet
     assert(!names.contains(legacyName), "graft-layout legacy checkpoint should be GC'd")
-    // the stale legacy pointer is OVERWRITTEN by the delta-format emission
-    // (it now points at the fresh delta-layout checkpoint, not deleted)
+    // the stale pointer is OVERWRITTEN by the new checkpoint's
     val ptr = graft.log.Json.mapper.readTree(
       t.logLoc.child("_last_checkpoint").readString())
     assert(ptr.get("version").asLong() == 4L)
@@ -386,8 +394,10 @@ class CheckpointSpec extends SparkSuite {
     (0 to 10).foreach(_ => t = t.write(one)) // checkpoints at 5, 10
     t = t.cleanupLog()
     val logDir = new java.io.File(s"$d/_delta_log")
-    // every JSON commit <= 10 is gone; the log listing is BOUNDED
-    assert(!logDir.listFiles().exists(_.getName.matches("\\d+\\.json")))
+    // every JSON commit < 10 is gone; the log listing is BOUNDED. The
+    // checkpoint version's own commit stays: it is the commit clock
+    assert(logDir.listFiles().map(_.getName).filter(_.matches("\\d+\\.json"))
+      .toSeq == Seq(f"${10L}%020d.json"))
     assert(t.version == 10L)
     // reads, writes, versions keep working from the checkpoint base
     t = t.write(one) // version 11
@@ -431,7 +441,8 @@ class CheckpointSpec extends SparkSuite {
     // window removed: the explicit-call default (0) deletes below the ck
     val t2 = bad.unsetTableProperties(Seq("delta.logRetentionDuration"))
       .checkpoint().cleanupLog()
-    assert(!logDir.listFiles().exists(_.getName.matches("\\d+\\.json")))
+    assert(logDir.listFiles().map(_.getName).filter(_.matches("\\d+\\.json"))
+      .toSeq == Seq(f"${t2.version}%020d.json"))
     assert(t2.toDF(spark).count() == 4 * one.count())
   }
 
@@ -564,5 +575,165 @@ class CheckpointSpec extends SparkSuite {
     assert(fresh.prunedAdds(col("n_regionkey") === 0).size <
       fresh.prunedAdds(lit(true)).size)
     assertSameRows(fresh.toDF(spark), nation.union(nation))
+  }
+  /** Three small tables checkpointed in each layout: classic single
+    * file, multi-part (two actions per part) and V2 manifest + sidecars.
+    */
+  private def layoutTables(prefix: String): Seq[(String, DeltaTable)] =
+    Seq("classic" -> Map.empty[String, String], "multi" -> Map.empty[String, String],
+      "v2" -> Map("delta.checkpointPolicy" -> "v2")).map { case (kind, props) =>
+      var t = DeltaTable.forPath(tempDir(s"$prefix-$kind"))
+        .copy(checkpointInterval = 0).write(nation)
+      if (props.nonEmpty) t = t.setTableProperties(props)
+      t = t.write(nation.filter(col("n_nationkey") < 5).coalesce(1))
+      kind -> t
+    }
+
+  private def checkpointIn(kind: String, t: DeltaTable): Unit =
+    if (kind == "multi") Checkpoint.write(t.dlog, t.conf, maxActionsPerPart = 2)
+    else t.checkpoint()
+
+  test("session-less open: classic, multi-part and V2 checkpoints after cleanupLog") {
+    val tables = layoutTables("ckpt-nosession").map { case (kind, t) =>
+      checkpointIn(kind, t)
+      kind -> t.cleanupLog()
+    }
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try tables.foreach { case (kind, t) =>
+      assert(SparkSession.getActiveSession.isEmpty && SparkSession.getDefaultSession.isEmpty)
+      val log = Checkpoint.loadFrom(t.logLoc, t.conf)
+      assert(log.isDefined, s"$kind: no fast path without a session")
+      assert(log.get.version == t.version && log.get.entries.firstKey == t.version, kind)
+      assert(log.get.addActions.keySet == t.dlog.addActions.keySet, kind)
+      assert(log.get.addActions.values.flatMap(_.numRecords).sum == 30L, kind)
+    } finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  test("checkpoint() and a fast-path open run no Spark job; no graft layout written") {
+    layoutTables("ckpt-nojob").foreach { case (kind, t) =>
+      assert(jobsDuring(checkpointIn(kind, t)) == 0, kind)
+      val names = t.logLoc.listSorted().map(_.getPath.getName)
+      val here = names.filter(_.startsWith(f"${t.version}%020d.checkpoint."))
+      assert(if (kind == "multi") here.size >= 2 else here.size == 1, s"$kind: $names")
+      assert(!names.exists(n => n.endsWith(".graft-checkpoint.parquet") ||
+        n == Checkpoint.LastCheckpointFile), s"$kind: $names")
+      var re: DeltaTable = null
+      assert(jobsDuring { re = DeltaTable.forPath(t.loc.uri) } == 0, kind)
+      assert(re.dlog.entries.firstKey == t.version, kind)
+      assert(re.dlog.addActions.keySet == t.dlog.addActions.keySet, kind)
+    }
+  }
+
+  test("a table with a graft-layout checkpoint moves to the delta layout") {
+    val d = tempDir("ckpt-migrate")
+    var t = DeltaTable.forPath(d).copy(checkpointInterval = 0)
+    val one = nation.filter(col("n_nationkey") < 5).coalesce(1)
+    (0 to 10).foreach(_ => t = t.write(one))
+    LegacyGraftCheckpoint.write(t.dlog, t.conf) // as an earlier build left it
+    assert(Checkpoint.lastCheckpointVersion(t.logLoc).contains(10L))
+    assert(DeltaTable.forPath(d).dlog.entries.firstKey == 10L)
+    (11 to 20).foreach(_ => t = t.write(one))
+    t = t.checkpoint()
+    def names = t.logLoc.listSorted().map(_.getPath.getName)
+    val graftFiles = Seq(Checkpoint.checkpointFilename(10L), Checkpoint.LastCheckpointFile)
+    // the newer (delta) pointer wins; keep-2 counts 10 and 20 across layouts
+    assert(Checkpoint.lastCheckpointVersion(t.logLoc).contains(20L))
+    val re = DeltaTable.forPath(d)
+    assert(re.dlog.entries.firstKey == 20L && re.version == 20L)
+    assertSameRows(re.toDF(spark), t.toDF(spark))
+    assert(graftFiles.forall(names.contains), names)
+    // two newer checkpoints: the graft file and its pointer are retired
+    (21 to 30).foreach(_ => t = t.write(one))
+    t = t.checkpoint()
+    assert(!graftFiles.exists(names.contains), names)
+    assert(Seq(20L, 30L).forall(v => names.contains(f"$v%020d.checkpoint.parquet")), names)
+    assert(Checkpoint.lastCheckpointVersion(t.logLoc).contains(30L))
+    assert(DeltaTable.forPath(d).toDF(spark).count() == 31 * one.count())
+  }
+
+  test("a committed graft-layout checkpoint table opens through Checkpoint.read") {
+    // src/test/resources/graft/legacy-graft-checkpoint-table: 48 rows
+    // (k, p = k % 2, v) over 6 files, a merge-on-read delete of k % 10 = 3,
+    // a domain, a graft-layout checkpoint at 4 with the commits at and
+    // below it cleaned, then one more row at 5 — written by the last
+    // build that wrote the graft layout
+    val d = copyToTemp(java.nio.file.Paths.get(
+      getClass.getResource("/graft/legacy-graft-checkpoint-table").toURI), "legacy-graft")
+    val t = DeltaTable.forPath(d)
+    assert(Checkpoint.lastCheckpointVersion(t.logLoc).contains(4L))
+    val base = Checkpoint.read(t.logLoc, 4L, t.conf)
+    assert(base.adds.size == 6 && base.commitInfos.size == 1)
+    assert(t.version == 5L && t.dlog.entries.firstKey == 4L)
+    assert(t.partitionColumns == Seq("p"))
+    assert(t.domainMetadata == Map("legacy.fixture" -> """{"hwm":7}"""))
+    // the graft layout's head commitInfo keeps the commit clock
+    assert(t.history.map(_._1).toSet == Set(4L, 5L))
+    val df = t.toDF(spark)
+    assert(df.count() == 44L)
+    assert(df.agg(sum("k")).head().getLong(0) == 1113L)
+    assert(df.filter(col("k") % 10 === 3).count() == 0L)
+    // a checkpoint on top is in the delta layout and serves the same rows
+    t.checkpoint()
+    assert(Checkpoint.lastCheckpointVersion(t.logLoc).contains(5L))
+    val re = DeltaTable.forPath(d)
+    assert(re.dlog.entries.firstKey == 5L)
+    assertSameRows(re.toDF(spark), df)
+  }
+
+  test("a failed auto-checkpoint never fails the commit and logs one WARN") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.ckptfail.impl", classOf[CheckpointFailingFileSystem].getName)
+    val d = "ckptfail:" + tempDir("ckpt-fail")
+    val logger = org.apache.logging.log4j.LogManager.getLogger(classOf[DeltaTable])
+      .asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "ckpt-fail-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try {
+      var t = DeltaTable.forPath(d, conf = hconf).copy(checkpointInterval = 2)
+      (0 to 2).foreach(_ => t = t.write(nation)) // v2 crosses the interval
+      assert(t.version == 2L)
+      assert(Checkpoint.lastCheckpointVersion(t.logLoc).isEmpty)
+      assert(!t.logLoc.listSorted().exists(_.getPath.getName.contains("checkpoint")))
+      assert(DeltaTable.forPath(d, conf = hconf).toDF(spark).count() == 3 * nation.count())
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    val warns = seen.toArray.map(_.toString).filter(_.startsWith("WARN"))
+    assert(warns.length == 1, warns.mkString("\n"))
+    assert(warns.head.contains("ckptfail:") && warns.head.contains("version 2") &&
+      warns.head.contains("injected checkpoint write failure"), warns.head)
+  }
+}
+
+/** The `mock:` scheme, renamed `ckptfail:`, whose checkpoint temp files
+  * cannot be created: every checkpoint write fails, everything else works.
+  */
+class CheckpointFailingFileSystem extends MockSchemeFileSystem {
+  override def getScheme: String = "ckptfail"
+  override def getUri: java.net.URI = java.net.URI.create("ckptfail:///")
+  private def refuse(f: Path): Unit =
+    if (f.getName.startsWith("_ckpt_tmp-"))
+      throw new java.io.IOException("injected checkpoint write failure")
+  override protected def createOutputStream(f: Path, append: Boolean): java.io.OutputStream = {
+    refuse(f); super.createOutputStream(f, append)
+  }
+  override protected def createOutputStreamWithMode(f: Path, append: Boolean,
+      permission: FsPermission): java.io.OutputStream = {
+    refuse(f); super.createOutputStreamWithMode(f, append, permission)
   }
 }

@@ -403,9 +403,24 @@ class DeletionVectorsSpec extends SparkSuite {
       s"DV scan should drop dead rows inside the scan:\n$dvPlan")
   }
 
+  /** Dead rows `(path, row_index)` of one ref, read on the driver: the
+    * sidecar's parquet rows, or the spec vector's decoded row indexes
+    * under the owning add's recorded path.
+    */
+  private def deadRows(ref: DeletionVectors.DvRef,
+      t: DeltaTable): org.apache.spark.sql.DataFrame = ref match {
+    case DeletionVectors.SidecarRef(s, _) =>
+      spark.read.schema(DeletionVectors.sidecarSchema)
+        .parquet(graft.storage.Location.resolve(s, t.loc, t.conf).uri)
+    case d: DeletionVectors.DeltaRef =>
+      import spark.implicits._
+      DeletionVectors.specDeadRows(d, t.loc.uri, t.conf).toSeq
+        .map(i => (d.ownerPath, i)).toDF("path", "row_index")
+  }
+
   /** Reference for the in-scan filter: each live file scanned on its own
     * and anti-joined on row index with its own ref's dead rows, read
-    * through `deadRows` and matched by basename within that ref.
+    * through [[deadRows]] and matched by basename within that ref.
     */
   private def referenceScan(t: DeltaTable): org.apache.spark.sql.DataFrame =
     t.dlog.addActions.values.toSeq.map { a =>
@@ -415,7 +430,7 @@ class DeletionVectorsSpec extends SparkSuite {
         case None => scan
         case Some(ref) =>
           val name = new org.apache.hadoop.fs.Path(a.path).getName
-          val dead = DeletionVectors.deadRows(spark, Seq(ref), t.loc, t.conf)
+          val dead = deadRows(ref, t)
             .filter(substring_index(col("path"), "/", -1) === name)
             .select(col("row_index").as("_dead"))
           scan.join(dead, col(DeltaScan.MetaRow) === col("_dead"), "left_anti")
@@ -643,7 +658,7 @@ class DeletionVectorsSpec extends SparkSuite {
     // force at least one checkpoint at-or-after the DV commit
     t = t.write(nation.limit(0))
     assert(graft.storage.Location(s"$d/_delta_log", t.conf)
-      .child(graft.log.Checkpoint.LastCheckpointFile).exists,
+      .child("_last_checkpoint").exists,
       "expected a checkpoint to have been taken")
     // reopen head via the checkpoint fast path: ref must still be applied
     val reopened = DeltaTable.forPath(d)

@@ -198,8 +198,8 @@ class Round11Spec extends SparkSuite {
     assert(parts.head.delete())
     val ptr = new java.io.File(dir, "_last_checkpoint")
     if (ptr.exists) assert(ptr.delete())
-    val graftCkpt = dir.listFiles().filter(_.getName.endsWith(".graft-checkpoint.parquet"))
-    graftCkpt.foreach(f => assert(f.delete())) // force the delta-format path
+    // the multi-part set is the only checkpoint: no graft-layout twin
+    assert(!dir.listFiles().exists(_.getName.endsWith(".graft-checkpoint.parquet")))
     val reopened = DeltaTable.forPath(d)
     assert(reopened.toDF(spark).count() == 100L,
       "intact JSON must serve the table when the listed checkpoint is incomplete")
@@ -244,9 +244,11 @@ class Round11Spec extends SparkSuite {
 
     graft.log.Checkpoint.write(t.dlog, t.conf)
     val dir = new java.io.File(d, "_delta_log")
-    // force the delta-format read path: drop the graft layout + all JSON
-    dir.listFiles().filter(f => f.getName.endsWith(".graft-checkpoint.parquet") ||
-      f.getName.matches("\\d{20}\\.json")).foreach(f => assert(f.delete()))
+    // the delta-format checkpoint is the only one; drop all JSON so it
+    // alone serves the reopen
+    assert(!dir.listFiles().exists(_.getName.endsWith(".graft-checkpoint.parquet")))
+    dir.listFiles().filter(_.getName.matches("\\d{20}\\.json"))
+      .foreach(f => assert(f.delete()))
     val reopened = DeltaTable.forPath(d)
     assert(reopened.toDF(spark).count() == 899L)
     val tombstones = reopened.dlog.entries.head._2.removes

@@ -89,13 +89,17 @@ class Round9Spec extends SparkSuite {
       s"expected clamp to $headTs+1, got $stampedTs")
   }
 
-  test("graft checkpoint carries the head commitInfo; delta layout does not") {
+  test("fast-path base carries the head commitInfo; delta layout does not") {
     val d = tempDir("ci-ckpt-layouts")
     val t = DeltaTable.forPath(d).write(nation).write(nation).checkpoint()
-    val graftEntry = Checkpoint.read(t.logLoc, t.version,
-      spark.sparkContext.hadoopConfiguration)
-    assert(graftEntry.commitInfos.size == 1)
-    // the delta-format twin must NOT contain an all-null (commitInfo) row
+    // the fast-path base takes the head commitInfo from the checkpoint
+    // version's own commit file
+    val base = DeltaTable.forPath(d).dlog.entries(t.version)
+    assert(base.commitInfos.size == 1)
+    val head = t.dlog.entries(t.version).commitInfos.head
+    assert(base.commitInfos.head.effectiveTimestamp == head.effectiveTimestamp)
+    assert(base.commitInfos.head.operation == head.operation)
+    // the delta-format checkpoint must NOT contain an all-null (commitInfo) row
     val deltaEntry = Checkpoint.readDeltaFormat(t.logLoc, t.version,
       spark.sparkContext.hadoopConfiguration).get
     assert(deltaEntry.commitInfos.isEmpty)

@@ -85,7 +85,8 @@ class StorageSchemeSpec extends SparkSuite {
     (0 until 11).foreach(_ => t = t.write(one))
     assert(t.version == 10L)
     // the checkpoint parquet and pointer were written through the mock fs
-    assert(t.logLoc.child(Checkpoint.LastCheckpointFile).exists)
+    assert(t.logLoc.child(f"${10L}%020d.checkpoint.parquet").exists)
+    assert(t.logLoc.child("_last_checkpoint").exists)
     assert(Checkpoint.lastCheckpointVersion(t.logLoc).contains(10L))
     // reopen takes the checkpoint fast path and still reads everything
     val re = DeltaTable.forPath(d, conf = hconf)
