@@ -71,8 +71,7 @@ object Checkpoint {
     * on JSON field insertion order, which a checkpoint round trip
     * reorders.
     */
-  private[graft] def descriptorId(
-      extra: Map[String, com.fasterxml.jackson.databind.JsonNode]): String =
+  private[graft] def descriptorId(extra: Map[String, JsonNode]): String =
     extra.get("deletionVector").map { n =>
       Seq("storageType", "pathOrInlineDv", "offset", "sizeInBytes",
         "cardinality", "sidecar")
@@ -476,12 +475,14 @@ object Checkpoint {
   private def writeFile(dir: Location, name: String, schema: StructType,
       rows: Seq[(String, JsonNode)], conf: Configuration): Unit = {
     val tmp = dir.child(s"_ckpt_tmp-${java.util.UUID.randomUUID().toString.take(8)}.parquet")
-    val w = new RowWriterBuilder(HadoopOutputFile.fromPath(tmp.path, conf), schema)
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-      .build()
-    try rows.foreach(w.write) finally w.close()
+    try {
+      val w = new RowWriterBuilder(HadoopOutputFile.fromPath(tmp.path, conf), schema)
+        .withConf(conf)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+        .build()
+      try rows.foreach(w.write) finally w.close()
+    } catch { case e: Exception => scala.util.Try(tmp.delete()); throw e } // no stray temp file
     val dest = dir.child(name)
     if (dest.exists || !dest.fs.rename(tmp.path, dest.path)) {
       tmp.delete()
@@ -812,11 +813,13 @@ object Checkpoint {
       DeltaLogEntry(e.actions ++ head)
     }
 
-  /** The checkpoint at `v` in either layout, with its JSON tail. */
+  /** The checkpoint at `v` in either layout as the base entry at its
+    * version, with every later JSON entry on top.
+    */
   private def loadAt(loc: Location, v: Long, graft: Boolean, names: Seq[String],
       conf: Configuration): Option[DeltaLog] =
     (if (graft) Some(read(loc, v, conf)) else withHeadCommit(loc, v, names, conf))
-      .map(base => withTail(loc, v, base, names))
+      .map(base => DeltaLog(loc, tailEntries(loc, names, SortedMap(v -> base), v)))
 
   /** Load the log via the checkpoint fast path: the checkpoint becomes the
     * base entry at its version; only JSON entries AFTER it are parsed, and
@@ -897,11 +900,6 @@ object Checkpoint {
       }
     }.nextOption()
   }
-
-  /** Checkpoint as the base entry at its version + every later JSON entry. */
-  private def withTail(loc: Location, v: Long, base: DeltaLogEntry,
-      names: Seq[String]): DeltaLog =
-    DeltaLog(loc, tailEntries(loc, names, SortedMap[Long, DeltaLogEntry](v -> base), v))
 
   /** Replay the JSON tail ABOVE `v` into `seed`, consuming a LOG
     * COMPACTION file (`s.e.compacted.json`) in place of its raw commits

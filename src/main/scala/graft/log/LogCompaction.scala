@@ -26,7 +26,7 @@ import graft.storage.Location
   *    extension action must not be dropped by OUR maintenance.
   *
   * Readers use a compaction only when it exactly covers the versions
-  * they need ([[Checkpoint.withTail]]'s greedy walk and the
+  * they need ([[Checkpoint.tailEntries]]'s greedy walk and the
   * checkpointless head-load); time travel INTO the middle of a range
   * falls back to raw JSON replay, which stays authoritative.
   */

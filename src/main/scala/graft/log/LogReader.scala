@@ -14,18 +14,23 @@ import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Exec
   *
   * Failures keep the serial contract: the caller gets the exception of
   * the FIRST failing input, as its task threw it (not wrapped), and tasks
-  * not yet started are cancelled. Pool tasks only read and parse; they
-  * never submit to or wait on the pool, so concurrent callers cannot
-  * deadlock it.
+  * not yet started are cancelled. A task that fans out again (a
+  * checkpoint part decoding its column groups) runs its subtasks inline:
+  * a pool thread never waits on the pool, so nested and concurrent
+  * callers cannot deadlock it.
   */
 private[graft] object LogReader {
 
   private val threads = Runtime.getRuntime.availableProcessors
 
+  /** True on the pool's own threads. */
+  private val onPool = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+
   private lazy val pool: ExecutorService = {
     val seq = new java.util.concurrent.atomic.AtomicInteger()
     Executors.newFixedThreadPool(threads, { (r: Runnable) =>
-      val t = new Thread(r, s"graft-log-reader-${seq.incrementAndGet()}")
+      val t = new Thread(() => { onPool.set(true); r.run() },
+        s"graft-log-reader-${seq.incrementAndGet()}")
       t.setDaemon(true)
       t
     })
@@ -47,11 +52,11 @@ private[graft] object LogReader {
     inOrder(lines.grouped(chunk).map(c => () => c.map(Action.parse)).toSeq).flatten
   }
 
-  /** Run the tasks on the pool (inline when there is only one) and
-    * collect their results in task order.
+  /** Run the tasks on the pool (inline when there is only one, or when
+    * called from a pool task) and collect their results in task order.
     */
   private[log] def inOrder[T](tasks: Seq[() => T]): Vector[T] =
-    if (tasks.size <= 1) tasks.map(_()).toVector
+    if (tasks.size <= 1 || onPool.get) tasks.map(_()).toVector
     else {
       val futures: Seq[Future[T]] = tasks.map(t => pool.submit(new Callable[T] {
         def call(): T = t()

@@ -387,6 +387,27 @@ class CheckpointSpec extends SparkSuite {
     assert(names.exists(_.startsWith(f"${2L}%020d.checkpoint.")))
   }
 
+  test("concurrent opens of a multi-part checkpoint never deadlock the log pool") {
+    // the parts decode on the shared log pool, and the first part, which
+    // holds protocol and metaData rows beside adds, decodes its two column
+    // groups in parallel: a fan-out from a pool thread that once waited on
+    // the pool itself, so a few concurrent opens could leave every pool
+    // thread waiting
+    val d = tempDir("ckpt-parts-concurrent")
+    var t = DeltaTable.forPath(d).copy(checkpointInterval = 0)
+    (0 until 4).foreach(_ => t = t.write(nation.coalesce(1)))
+    Checkpoint.write(t.dlog, t.conf, maxActionsPerPart = 4) // [P, M, a, a], [a, a]
+    val want = t.dlog.addActions.keySet
+    val callers = java.util.concurrent.Executors.newFixedThreadPool(16)
+    try {
+      val opens = (0 until 16).map(_ => callers.submit(new java.util.concurrent.Callable[Seq[Set[String]]] {
+        def call(): Seq[Set[String]] =
+          (0 until 20).map(_ => Checkpoint.loadFrom(t.logLoc, t.conf).get.addActions.keySet)
+      }))
+      opens.foreach(f => assert(f.get(120, java.util.concurrent.TimeUnit.SECONDS).forall(_ == want)))
+    } finally callers.shutdownNow()
+  }
+
   test("cleanupLog bounds the log; below-horizon asks fail loudly") {
     val d = tempDir("ckpt-cleanup")
     var t = DeltaTable.forPath(d).copy(checkpointInterval = 5)
@@ -576,6 +597,7 @@ class CheckpointSpec extends SparkSuite {
       fresh.prunedAdds(lit(true)).size)
     assertSameRows(fresh.toDF(spark), nation.union(nation))
   }
+
   /** Three small tables checkpointed in each layout: classic single
     * file, multi-part (two actions per part) and V2 manifest + sidecars.
     */
@@ -707,7 +729,9 @@ class CheckpointSpec extends SparkSuite {
       (0 to 2).foreach(_ => t = t.write(nation)) // v2 crosses the interval
       assert(t.version == 2L)
       assert(Checkpoint.lastCheckpointVersion(t.logLoc).isEmpty)
-      assert(!t.logLoc.listSorted().exists(_.getPath.getName.contains("checkpoint")))
+      // nothing is left behind: no checkpoint, no temp file
+      assert(!t.logLoc.listSorted().map(_.getPath.getName)
+        .exists(n => n.contains("checkpoint") || n.contains("_ckpt_tmp-")))
       assert(DeltaTable.forPath(d, conf = hconf).toDF(spark).count() == 3 * nation.count())
     } finally {
       logger.removeAppender(capture)
@@ -721,19 +745,22 @@ class CheckpointSpec extends SparkSuite {
 }
 
 /** The `mock:` scheme, renamed `ckptfail:`, whose checkpoint temp files
-  * cannot be created: every checkpoint write fails, everything else works.
+  * take no bytes: every checkpoint write fails after creating its temp
+  * file, everything else works.
   */
 class CheckpointFailingFileSystem extends MockSchemeFileSystem {
   override def getScheme: String = "ckptfail"
   override def getUri: java.net.URI = java.net.URI.create("ckptfail:///")
-  private def refuse(f: Path): Unit =
-    if (f.getName.startsWith("_ckpt_tmp-"))
-      throw new java.io.IOException("injected checkpoint write failure")
-  override protected def createOutputStream(f: Path, append: Boolean): java.io.OutputStream = {
-    refuse(f); super.createOutputStream(f, append)
-  }
+  private def refusing(f: Path, out: java.io.OutputStream): java.io.OutputStream =
+    if (!f.getName.startsWith("_ckpt_tmp-")) out
+    else new java.io.FilterOutputStream(out) {
+      override def write(b: Int): Unit =
+        throw new java.io.IOException("injected checkpoint write failure")
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = write(0)
+    }
+  override protected def createOutputStream(f: Path, append: Boolean): java.io.OutputStream =
+    refusing(f, super.createOutputStream(f, append))
   override protected def createOutputStreamWithMode(f: Path, append: Boolean,
-      permission: FsPermission): java.io.OutputStream = {
-    refuse(f); super.createOutputStreamWithMode(f, append, permission)
-  }
+      permission: FsPermission): java.io.OutputStream =
+    refusing(f, super.createOutputStreamWithMode(f, append, permission))
 }
