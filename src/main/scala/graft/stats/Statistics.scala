@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import graft.log.Json
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -89,7 +90,11 @@ object Statistics {
     */
   def fromFooter(path: Path, conf: Configuration,
       keep: String => Boolean): Statistics = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    // read options over the caller's conf: the no-conf overload builds a
+    // fresh Hadoop Configuration (and parses its XML resources) per open,
+    // a 10-30 ms cost on every file a write produces
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val numRecords = blocks.map(_.getRowCount).sum
