@@ -898,7 +898,7 @@ final case class DeltaTable(
     val byKey: Map[String, AddFile] = candidateAdds.map(a =>
       Location.canonical(Location.resolve(a.path, loc, conf).uri) -> a).toMap
     val numRecords: Map[String, Long] =
-      byKey.flatMap { case (k, a) => a.stats.flatMap(numRecordsOpt).map(k -> _) }
+      byKey.flatMap { case (k, a) => a.numRecords.map(k -> _) }
     val confMap = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
     val priors = DvRowFilter(
       byKey.flatMap { case (k, a) => DeletionVectors.refOf(a).map(k -> _) }, loc.uri, confMap)
@@ -993,32 +993,19 @@ final case class DeltaTable(
     * the table data.
     */
   private def liveRowCount(spark: SparkSession, adds: Seq[AddFile]): Long = {
-    val (statted, statless) =
-      adds.partition(a => a.stats.exists(s => numRecordsOpt(s).isDefined))
+    val (statted, statless) = adds.partition(_.numRecords.isDefined)
     val scanned = if (statless.isEmpty) 0L else scanAdds(spark, statless).count()
     statsLiveRows(statted) + scanned
   }
 
   /** Live rows of `adds` per log stats alone (a stat-less file counts 0). */
   private def statsLiveRows(adds: Seq[AddFile]): Long =
-    adds.map(a => a.stats.map(parseNumRecords).getOrElse(0L) -
+    adds.map(a => a.numRecords.getOrElse(0L) -
       DeletionVectors.refOf(a).map(_.cardinality).getOrElse(0L)).sum
 
   /** Rows in files this engine just wrote (their footer numRecords). */
   private def rowsIn(written: Seq[AddFile]): Long =
-    written.flatMap(_.stats).map(parseNumRecords).sum
-
-  /** numRecords from a stats JSON — None when the field is absent (all
-    * Delta stats fields are optional for foreign writers) or the JSON is
-    * malformed; decision-critical paths must use this, not the 0-default.
-    */
-  private def numRecordsOpt(statsJson: String): Option[Long] =
-    try Json.longOpt(Json.mapper.readTree(statsJson), "numRecords")
-    catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Metric-only variant (never throws). */
-  private def parseNumRecords(statsJson: String): Long =
-    numRecordsOpt(statsJson).getOrElse(0L)
+    written.flatMap(_.numRecords).sum
 
   /** Paired tombstones for merge-on-read re-adds: one RemoveFile per
     * re-added path, carrying the SUPERSEDED add's deletionVector
@@ -1085,7 +1072,7 @@ final case class DeltaTable(
     val dropped =
       if (where.isEmpty) { if (mergeOnRead) Seq.empty else candidates }
       else if (mergeOnRead)
-        allMatchAdds(pred, candidates).filter(_.stats.exists(s => numRecordsOpt(s).isDefined))
+        allMatchAdds(pred, candidates).filter(_.numRecords.isDefined)
       else if (cdfEnabled) Seq.empty
       else allMatchAdds(pred, candidates)
     val droppedPaths = dropped.map(_.path).toSet
@@ -2872,7 +2859,7 @@ final case class DeltaTable(
     */
   def countRowsFromStats: Option[Long] = {
     val counts = dlog.addActions.values.toSeq.map(a =>
-      a.stats.flatMap(numRecordsOpt).map(_ -
+      a.numRecords.map(_ -
         DeletionVectors.refOf(a).map(_.cardinality).getOrElse(0L)))
     // a negative per-file count = inconsistent foreign stats: fall back
     if (counts.exists(c => c.isEmpty || c.exists(_ < 0L))) None
@@ -4046,18 +4033,21 @@ final case class DeltaTable(
     val protectV = cfg.get("delta.requireCheckpointProtectionBeforeVersion")
       .flatMap(_.toLongOption).getOrElse(0L)
     if (protectV > 0L && ck < protectV - 1) return // protected: skip quietly
-    val cutoff = System.currentTimeMillis() - retention
-    logLoc.listSorted().foreach { st =>
-      val name = st.getPath.getName
-      // the checkpoint version's own commit stays: it carries the commit
-      // clock a fast-path load anchors on (see cleanupLog)
-      if (DeltaLog.EntryFilenameRe.matches(name) &&
-          name.split("\\.", 2)(0).toLong < ck &&
-          st.getModificationTime < cutoff)
-        logLoc.fs.delete(st.getPath, false)
-    }
+    // the checkpoint version's own commit stays: it carries the commit
+    // clock a fast-path load anchors on (see cleanupLog)
+    sweepLog(Some(System.currentTimeMillis() - retention))(name =>
+      DeltaLog.EntryFilenameRe.matches(name) && DeltaLog.versionOf(name) < ck)
     Checksum.cleanup(logLoc, ck - 1)
   }
+
+  /** Delete the log files `selected` by name and older than `cutoff`
+    * (None: no window); only selected names are statted, and only for one. */
+  private def sweepLog(cutoff: Option[Long])(selected: String => Boolean): Unit =
+    logLoc.listNames().filter(selected).foreach { name =>
+      val f = logLoc.child(name)
+      try if (cutoff.forall(f.status.getModificationTime < _)) logLoc.fs.delete(f.path, false)
+      catch { case _: java.io.FileNotFoundException => () } // swept by another cleaner
+    }
 
   /** Write a checkpoint for the current version explicitly. */
   def checkpoint(): DeltaTable = {
@@ -4136,26 +4126,16 @@ final case class DeltaTable(
     val retention = tableProperties.get("delta.logRetentionDuration")
       .map(DeltaTable.parseRetentionInterval(_, "delta.logRetentionDuration"))
       .getOrElse(0L)
-    val cutoff = System.currentTimeMillis() - retention
-    logLoc.listSorted().foreach { st =>
-      val name = st.getPath.getName
+    sweepLog(Option.when(retention > 0L)(System.currentTimeMillis() - retention)) {
       // every commit BELOW the checkpoint goes; the checkpoint version's
       // own commit stays, because a delta checkpoint holds no commitInfo
       // and a fast-path load reads the commit clock (the monotonic clamp's
       // and timestampAsOf's anchor) from that file
-      if (DeltaLog.EntryFilenameRe.matches(name) &&
-          name.split("\\.", 2)(0).toLong < ck &&
-          (retention <= 0L || st.getModificationTime < cutoff))
-        logLoc.fs.delete(st.getPath, false)
+      case name if DeltaLog.EntryFilenameRe.matches(name) => DeltaLog.versionOf(name) < ck
       // log-compaction files wholly below the checkpoint horizon expire
       // with the commits they cover
-      name match {
-        case LogCompaction.NameRe(_, e)
-            if e.toLong <= ck &&
-              (retention <= 0L || st.getModificationTime < cutoff) =>
-          logLoc.fs.delete(st.getPath, false)
-        case _ => ()
-      }
+      case LogCompaction.NameRe(_, e) => e.toLong <= ck
+      case _ => false
     }
     // crc sidecars below the checkpoint go with their commits — except
     // the checkpoint version's own, which still validates fast-path opens
@@ -4249,7 +4229,7 @@ object DeltaTable {
       path: String,
       version: Option[Long] = None,
       logPath: Option[String] = None,
-      conf: Configuration = new Configuration(),
+      conf: Configuration = Location.defaultConf(),
       commitContext: CommitContext = CreateIfAbsentCommit): DeltaTable = {
     val loc = Location(path, conf)
     val logLoc = logPath.map(Location(_, conf)).getOrElse(loc.child("_delta_log"))
@@ -4323,7 +4303,7 @@ object DeltaTable {
     */
   def convert(spark: SparkSession, path: String,
       partitionBy: Seq[String] = Seq.empty,
-      conf: Configuration = new Configuration()): DeltaTable = {
+      conf: Configuration = Location.defaultConf()): DeltaTable = {
     val loc = Location(path, conf)
     require(loc.exists, s"no such directory: $path")
     val logLoc = loc.child("_delta_log")

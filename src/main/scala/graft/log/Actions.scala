@@ -1,5 +1,6 @@
 package graft.log
 
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -58,6 +59,29 @@ object Json {
 
   def strOpt(n: JsonNode, field: String): Option[String] =
     Option(n.get(field)).filterNot(_.isNull).map(_.asText)
+  /** A JSON object's top-level `field` as a long, in one streaming pass
+    * that skips other fields' children. Agrees with a tree parse's `asLong`
+    * of a number (last duplicate wins, floats truncate); None when absent,
+    * not a number, an integer outside the long range, or malformed. */
+  def topLevelLong(json: String, field: String): Option[Long] =
+    try {
+      val p = mapper.getFactory.createParser(json)
+      try {
+        var out: Option[Long] = None
+        if (p.nextToken() == JsonToken.START_OBJECT)
+          while (p.nextToken() == JsonToken.FIELD_NAME) {
+            val name = p.currentName
+            val t = p.nextToken()
+            if (name == field) out =
+              if (t == JsonToken.VALUE_NUMBER_FLOAT) Some(p.getDoubleValue.toLong)
+              else if (t == JsonToken.VALUE_NUMBER_INT &&
+                p.getNumberType != JsonParser.NumberType.BIG_INTEGER) Some(p.getLongValue)
+              else None
+            p.skipChildren()
+          }
+        if (p.currentToken == JsonToken.END_OBJECT) out else None
+      } finally p.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
   def longOpt(n: JsonNode, field: String): Option[Long] =
     Option(n.get(field)).filterNot(_.isNull).map(_.asLong)
   def boolOpt(n: JsonNode, field: String): Option[Boolean] =
@@ -233,15 +257,8 @@ final case class AddFile(
 
   /** numRecords from the stats JSON — the row-id allocator's file width.
     * None on malformed stats (a foreign writer's stats are advisory, never
-    * a reason to fail replay).
-    */
-  def numRecords: Option[Long] =
-    stats.flatMap { s =>
-      try {
-        val n = Json.mapper.readTree(s).get("numRecords")
-        if (n != null && n.isNumber) Some(n.asLong()) else None
-      } catch { case _: Exception => None }
-    }
+    * a reason to fail replay). Parsed once: warm handles share AddFiles. */
+  lazy val numRecords: Option[Long] = stats.flatMap(Json.topLevelLong(_, "numRecords"))
 }
 
 /** A logically-deleted file (reference actions.py:220-228). */

@@ -100,12 +100,10 @@ object Checksum {
 
   /** Delete crc files at/below `horizon` (same sweep as log cleanup). */
   def cleanup(loc: Location, horizon: Long): Unit =
-    loc.listSorted().foreach { st =>
-      st.getPath.getName match {
-        case FilenameRe(v) if v.toLong <= horizon =>
-          try loc.fs.delete(st.getPath, false)
-          catch { case _: Exception => () }
-        case _ => ()
-      }
+    loc.listNames().foreach {
+      case name @ FilenameRe(v) if v.toLong <= horizon =>
+        try loc.fs.delete(loc.child(name).path, false)
+        catch { case _: Exception => () }
+      case _ => ()
     }
 }

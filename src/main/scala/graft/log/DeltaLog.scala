@@ -690,10 +690,9 @@ object DeltaLog {
       v > after && until.forall(v <= _)
     })
 
-  /** Commit file names in the log dir, in listing order. */
+  /** Commit file names in the log dir, sorted, from one listing (no stats). */
   private def commitNames(loc: Location): Seq[String] =
-    if (!loc.exists) Seq.empty
-    else loc.listSorted().map(_.getPath.getName).filter(EntryFilenameRe.matches(_))
+    loc.listNames().filter(EntryFilenameRe.matches(_))
 
   private[graft] def versionOf(name: String): Long = name.split("\\.", 2)(0).toLong
 

@@ -34,13 +34,13 @@ final class Location private (val path: Path, val fs: FileSystem) {
     if (!exists) Seq.empty
     else fs.listStatus(path).sortBy(_.getPath.getName).toSeq
 
-  /** Sorted child names. On the local filesystem these come from one
-    * directory read: Hadoop's local `listStatus` reads the names and then
-    * stats each one, dropping every name deleted in between, so a
-    * directory whose entries turn over while that loop runs can list
-    * empty though it never was (the catalog registry, which always holds
-    * its newest snapshots, listed none). Other schemes list keys in one
-    * call, through [[listSorted]].
+  /** Sorted child names, empty for a missing directory. On the local
+    * filesystem these come from one directory read: Hadoop's local
+    * `listStatus` reads the names and then stats each one, dropping every
+    * name deleted in between, so a directory whose entries turn over can
+    * list empty though it never was (the catalog registry did). Checkpoint
+    * I/O, JSON replay and the log and crc cleanups list here and stat only
+    * the names they keep. Other schemes list through [[listSorted]].
     */
   def listNames(): Seq[String] = {
     val scheme = Option(path.toUri.getScheme).getOrElse("file")
@@ -132,7 +132,12 @@ object Location {
     */
   val readCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def apply(s: String, conf: Configuration = new Configuration()): Location = {
+  /** Hadoop's defaults, loaded once and never handed out: a copy per open
+    * skips re-parsing the XML resources (`addDefaultResource` reloads it). */
+  private lazy val loaded = new Configuration()
+  def defaultConf(): Configuration = new Configuration(loaded)
+
+  def apply(s: String, conf: Configuration = defaultConf()): Location = {
     val p = new Path(s)
     val fs = p.getFileSystem(conf)
     new Location(fs.makeQualified(p), fs)
